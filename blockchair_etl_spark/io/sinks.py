@@ -88,9 +88,14 @@ def materialize(
         path = f"{base_path}/{name}"
         w = writer_df.write.mode("overwrite")
         if config.partition_by:
-            w = w.partitionBy(*config.partition_by)
+            w.partitionBy(*config.partition_by).parquet(path)
+            # partition columns come back from directory names
+            return spark.read.parquet(path)
         w.parquet(path)
-        return spark.read.parquet(path)
+        # Parquet stores every column as nullable and a file source reads
+        # a given schema as nullable, so this is the footer schema without
+        # the schema-inference job a bare read runs.
+        return spark.read.schema(writer_df.schema).parquet(path)
     w = writer_df.write.mode("overwrite").format("parquet")
     if config.partition_by:
         w = w.partitionBy(*config.partition_by)

@@ -14,6 +14,7 @@ Mirrors the reference's extract/load surface with Spark-native scans:
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 from dataclasses import dataclass, field
@@ -22,7 +23,7 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..session import prepare_session
+from ..session import inheriting, prepare_session
 
 TESTDATA_TABLES = (
     "region",
@@ -157,44 +158,55 @@ def _file_key(p: str) -> str:
 
 
 def _find_bad_files(
-    spark: SparkSession, paths: list[str], schema: StructType
+    spark: SparkSession, routed: dict[str, list[str]], schemas: dict[str, StructType]
 ) -> dict[str, str]:
-    """→ {path: reason} for files with any unparseable row.
+    """→ {path: reason} for files of ``routed`` ({table: paths}) with any
+    unparseable row.
 
-    ONE Spark job for the whole candidate list: a PERMISSIVE scan with a
-    corrupt-record column, aggregated per `input_file_name()`. All files
-    parse in parallel across executor threads — at 10k+ daily files this
-    replaces 10k serial driver-side probe jobs. If the batch scan itself
-    dies (container-level failure — e.g. a truncated gzip aborts the
-    whole job before row-level tolerance applies), fall back to per-file
+    ONE plan for every table's files: a PERMISSIVE scan per table with a
+    corrupt-record column, the scans unioned and aggregated per
+    `input_file_name()`. All files parse in parallel across executor
+    threads — at 10k+ daily files this replaces 10k serial driver-side
+    probe jobs, and at any file count it costs one scan-and-aggregate
+    instead of one per table. If the batch scan itself dies
+    (container-level failure — e.g. a truncated gzip aborts the whole
+    job before row-level tolerance applies), fall back to per-file
     FAILFAST probes run concurrently, so one bad container still skips
     only itself.
     """
-    probe_schema = StructType(
-        list(schema.fields) + [StructField("_corrupt_record", StringType())]
-    )
-    reader = (
-        spark.read.option("sep", "\t")
-        .option("header", "true")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(probe_schema)
-    )
-    try:
+    routed = {t: paths for t, paths in routed.items() if paths}
+    if not routed:
+        return {}
+    scans = []
+    for table, paths in routed.items():
+        schema = schemas[table]
+        probe_schema = StructType(
+            list(schema.fields) + [StructField("_corrupt_record", StringType())]
+        )
         # The first data column must stay REFERENCED through the
         # aggregation (F.count below): Spark disallows scans whose only
         # referenced CSV column is the internal corrupt-record column,
         # and Catalyst's column pruning would otherwise strip a merely
-        # selected column back out.
-        first = schema.fields[0].name
-        bad_rows = (
-            reader.option("mode", "PERMISSIVE")
+        # selected column back out. The string cast lets tables whose
+        # first columns differ in type share one union.
+        scans.append(
+            spark.read.option("sep", "\t")
+            .option("header", "true")
+            .option("columnNameOfCorruptRecord", "_corrupt_record")
+            .option("mode", "PERMISSIVE")
+            .schema(probe_schema)
             .csv(paths)
             .select(
                 F.input_file_name().alias("__file"),
-                F.col(first).alias("__c0"),
+                F.col(schema.fields[0].name).cast("string").alias("__c0"),
                 F.col("_corrupt_record").isNotNull().cast("int").alias("__bad"),
             )
-            .groupBy("__file")
+        )
+    everything = [(p, schemas[t]) for t, paths in routed.items() for p in paths]
+    try:
+        union = functools.reduce(DataFrame.unionByName, scans)
+        bad_rows = (
+            union.groupBy("__file")
             .agg(F.max("__bad").alias("__bad"), F.count("__c0").alias("__n"))
             .filter(F.col("__bad") == 1)
             .collect()
@@ -202,21 +214,24 @@ def _find_bad_files(
         bad_keys = {_file_key(r["__file"]) for r in bad_rows}
         return {
             p: "malformed rows (corrupt-record scan)"
-            for p in paths
+            for p, _ in everything
             if _file_key(p) in bad_keys
         }
     except Exception:  # noqa: BLE001 — container-level failure: isolate per file
         from concurrent.futures import ThreadPoolExecutor
 
-        def probe(p: str) -> tuple[str, str | None]:
+        def probe(item: tuple[str, StructType]) -> tuple[str, str | None]:
+            p, schema = item
             try:
+                # the whole file, every column parsed: a file truncated
+                # past its first rows must fail here, not in the load
                 (
                     spark.read.option("sep", "\t")
                     .option("header", "true")
                     .option("mode", "FAILFAST")
                     .schema(schema)
                     .csv(p)
-                    .limit(100)
+                    .agg(F.max(F.hash(*schema.names)))
                     .collect()
                 )
                 return p, None
@@ -224,7 +239,7 @@ def _find_bad_files(
                 return p, str(e).splitlines()[0]
 
         with ThreadPoolExecutor(max_workers=8) as ex:
-            return {p: err for p, err in ex.map(probe, paths) if err}
+            return {p: err for p, err in ex.map(inheriting(spark, probe), everything) if err}
 
 
 def load_with_pattern_routing(
@@ -238,9 +253,9 @@ def load_with_pattern_routing(
     Semantics follow the reference's ``COPY INTO ... PATTERN=...
     ON_ERROR='skip_file'`` (`load_data_to_snowflake.sh:128-130`): a file
     whose contents fail to parse is skipped whole, the rest of the batch
-    still loads. Validation is one batched corrupt-record scan per TABLE
-    (see :func:`_find_bad_files`), never a per-file driver loop; the
-    data path is then one clean multi-file scan per table.
+    still loads. Validation is one batched corrupt-record scan over every
+    table's files (see :func:`_find_bad_files`), never a per-file driver
+    loop; the data path is then one clean multi-file scan per table.
     """
     routed: dict[str, list[str]] = {t: [] for t in table_patterns}
     owner: dict[str, str] = {}
@@ -251,10 +266,7 @@ def load_with_pattern_routing(
                 owner[f] = table
                 break
 
-    bad: dict[str, str] = {}
-    for table, paths in routed.items():
-        if paths:
-            bad.update(_find_bad_files(spark, paths, schemas[table]))
+    bad = _find_bad_files(spark, routed, schemas)
 
     report = LoadReport()
     for f in files:

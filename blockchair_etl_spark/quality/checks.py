@@ -4,7 +4,8 @@ executable zero-row checks.
 Reference: `transaction_tracing/models/staged/schema.yml:1-78` (`unique`,
 `not_null`, `dbt_utils.unique_combination_of_columns`) run by `dbt build`
 as SELECTs expecting zero rows. Same contract here: each check returns a
-violations DataFrame; `run_checks` evaluates a suite and reports.
+violations DataFrame; `run_checks` evaluates a suite and reports, through
+the one-action runner of quality/suite.py.
 
 At scale these are single-shuffle grouped counts; `not_null` is a
 scan-only filter with the predicate pushed to parquet.
@@ -77,20 +78,24 @@ def run_checks(
     tables: dict[str, DataFrame],
     suite: list[tuple] = REFERENCE_SUITE,
 ) -> list[CheckResult]:
-    """Evaluate a test suite; one count() job per check."""
-    results = []
+    """Evaluate a test suite as one Spark action; checks on tables not
+    in ``tables`` are skipped. Results keep the suite's order."""
+    from .suite import CheckSpec, run_config_suite  # suite.py imports this module
+
+    names, specs = [], []
     for table, kind, cols in suite:
         if table not in tables:
             continue
-        df = tables[table]
-        if kind == "unique":
-            v = unique_violations(df, cols)
-        elif kind == "not_null":
-            v = not_null_violations(df, cols)
+        names.append(f"{table}.{kind}.{cols}")
+        if kind in ("unique", "not_null"):
+            specs.append(CheckSpec(table, cols, kind, ()))
         else:
-            v = unique_combination_violations(df, list(cols) if isinstance(cols, list) else [cols])
-        results.append(CheckResult(name=f"{table}.{kind}.{cols}", violations=v.count()))
-    return results
+            combo = tuple(cols) if isinstance(cols, (list, tuple)) else (cols,)
+            specs.append(CheckSpec(table, "", "unique_combination_of_columns", combo))
+    if not specs:
+        return []
+    rows = run_config_suite(tables, specs).collect()
+    return [CheckResult(name=n, violations=r["n_violations"]) for n, r in zip(names, rows)]
 
 
 def accepted_values_violations(df: DataFrame, column: str, values: list) -> DataFrame:

@@ -11,9 +11,9 @@ quality/checks.py.
 Execution model: `run_config_suite` builds ONE report relation — every
 check becomes a single-row count aggregate and the rows are unioned —
 so the whole suite runs as one Spark action with shared scan reuse,
-instead of the one-count()-job-per-check loop of `run_checks` (kept for
-interactive use). At 100 TB that is the difference between one pass
-over each fact table and |suite| passes.
+not one count() per check. `quality.checks.run_checks` (the reference
+suite the DAG runs) is a thin adapter over it. At 100 TB that is the
+difference between one pass over each fact table and |suite| passes.
 
 Config sources: a Python dict, a JSON file, or a YAML file (PyYAML is
 present in this environment; the JSON path keeps the loader dependency-

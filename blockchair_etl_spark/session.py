@@ -17,7 +17,10 @@ Two entry points:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs (safe to apply to a live session).
@@ -96,3 +99,15 @@ def get_session(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return prepare_session(spark)
+
+
+def inheriting(spark: SparkSession, target: Callable[..., Any]) -> Callable[..., Any]:
+    """``target`` wrapped to run on a worker thread with the calling
+    thread's local properties (job group, job tags, scheduler pool), so
+    the jobs it launches are counted, cancelled and scheduled with the
+    caller's. Each call copies the properties once; give each thread its
+    own wrapper if the threads may set properties of their own. With
+    pinned threads off (PYSPARK_PIN_THREAD=false) there is nothing to
+    copy and ``target`` comes back as is."""
+    wrap = inheritable_thread_target(spark)
+    return target if wrap is spark else wrap(target)

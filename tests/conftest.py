@@ -13,7 +13,8 @@ SF001 = "/root/testdata/sf0.01"
 def spark():
     from blockchair_etl_spark.session import get_session
 
-    spark = get_session(app_name="blockchair-etl-spark-tests", master="local[8]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "8"
+    spark = get_session(app_name="blockchair-etl-spark-tests", master=f"local[{cpus}]")
     yield spark
     spark.stop()
 

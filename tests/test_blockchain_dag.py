@@ -260,6 +260,37 @@ def test_quality_suite(dag):
         assert r.passed, f"{r.name}: {r.violations} violations"
 
 
+def test_quality_suite_counts_planted_violations(dag):
+    # One duplicate row and one null-key row planted in every stg table:
+    # the one-action suite must report what each check counts on its own.
+    from pyspark.sql import functions as F
+
+    from blockchair_etl_spark.quality.checks import (
+        REFERENCE_SUITE,
+        not_null_violations,
+        unique_combination_violations,
+        unique_violations,
+    )
+
+    keys = {t: c for t, k, c in REFERENCE_SUITE if k == "not_null"}
+    planted = {}
+    for table, key in keys.items():
+        df = dag[table]
+        first = df.limit(1)
+        null_key = first.withColumn(key, F.lit(None).cast(df.schema[key].dataType))
+        planted[table] = df.unionByName(first).unionByName(null_key)
+    alone = {
+        "unique": unique_violations,
+        "not_null": not_null_violations,
+        "combo": lambda df, cols: unique_combination_violations(df, list(cols)),
+    }
+    expected = [alone[k](planted[t], c).count() for t, k, c in REFERENCE_SUITE]
+    results = run_checks(planted)
+    assert [r.name for r in results] == [f"{t}.{k}.{c}" for t, k, c in REFERENCE_SUITE]
+    assert [r.violations for r in results] == expected
+    assert all(n > 0 for n in expected), expected
+
+
 def test_cdd_reconciliation(dag):
     # FIXTURES.md: cdd identity holds on most rows, a few deliberately off
     si = dag["stg_inputs"]

@@ -237,6 +237,94 @@ def test_pattern_routing_probes_in_one_job(spark, tsv_files):
     assert len(jobs) <= 2, f"expected <=2 batched probe jobs for 4 files, got {len(jobs)}"
 
 
+_DUMP_VALUES = {
+    "long": lambda i: i,
+    "double": lambda i: i + 0.5,
+    "string": lambda i: f"s{i}",
+    "timestamp": lambda i: f"2025-08-12 00:00:{i % 60:02d}",
+}
+
+
+def _dump_rows(schema, n: int, start: int = 0) -> list[list]:
+    """``n`` well-formed dump rows for a raw table schema."""
+    return [
+        [_DUMP_VALUES[f.dataType.typeName()](start + i) for f in schema.fields]
+        for i in range(n)
+    ]
+
+
+def _jobs_of(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_pattern_routing_validates_a_day_in_one_plan(spark, tmp_path):
+    # One well-formed file per raw table plus one malformed one: every
+    # table's files are checked by ONE corrupt-record plan, not one per
+    # table, and only the malformed file is skipped.
+    good = [
+        str(write_gzip_tsv(
+            tmp_path / f"blockchair_bitcoin_{table}_20250812.tsv.gz",
+            schema.names, _dump_rows(schema, 3),
+        ))
+        for table, schema in RAW_SCHEMAS.items()
+    ]
+    rows = _dump_rows(RAW_SCHEMAS["inputs"], 3)
+    rows[1][0] = "not_a_number"
+    bad = str(write_gzip_tsv(
+        tmp_path / "blockchair_bitcoin_inputs_20250813.tsv.gz", RAW_SCHEMAS["inputs"].names, rows
+    ))
+    (routed, report), jobs = _jobs_of(
+        spark, "day-validation",
+        lambda: load_with_pattern_routing(spark, good + [bad], TABLE_FILE_PATTERNS, RAW_SCHEMAS),
+    )
+    assert len(jobs) <= 2, f"expected <=2 jobs to validate five tables, got {len(jobs)}"
+    assert [f for f, _ in report.skipped] == [bad]
+    assert report.loaded == good
+    assert {t: df.count() for t, df in routed.items()} == dict.fromkeys(RAW_SCHEMAS, 3)
+
+
+def test_pattern_routing_truncated_gzip_takes_per_file_fallback(spark, tmp_path):
+    # A truncated gzip kills the batch corrupt-record scan as a whole;
+    # the per-file FAILFAST probes must then skip that file alone, even
+    # when its first thousands of rows still decompress.
+    blocks = RAW_SCHEMAS["blocks"]
+    good = [
+        str(write_gzip_tsv(
+            tmp_path / f"blockchair_bitcoin_blocks_2025081{d}.tsv.gz",
+            blocks.names, _dump_rows(blocks, 5, start=10 * d),
+        ))
+        for d in (0, 1)
+    ]
+    tx = RAW_SCHEMAS["transactions"]
+    good.append(str(write_gzip_tsv(
+        tmp_path / "blockchair_bitcoin_transactions_20250810.tsv.gz", tx.names, _dump_rows(tx, 4)
+    )))
+    truncated = write_gzip_tsv(
+        tmp_path / "blockchair_bitcoin_blocks_20250812.tsv.gz", blocks.names, _dump_rows(blocks, 5000)
+    )
+    data = truncated.read_bytes()
+    truncated.write_bytes(data[: len(data) // 2])
+    (routed, report), jobs = _jobs_of(
+        spark, "truncated-validation",
+        lambda: load_with_pattern_routing(
+            spark, good + [str(truncated)], TABLE_FILE_PATTERNS, RAW_SCHEMAS
+        ),
+    )
+    assert [f for f, _ in report.skipped] == [str(truncated)]
+    assert report.loaded == good
+    # the failed batch job, then one probe per file (probes inherit the
+    # caller's job group)
+    assert len(jobs) >= 1 + len(good) + 1
+    assert routed["blocks"].count() == 10 and routed["transactions"].count() == 4
+
+
 def test_daily_partitions_and_retention(spark, tmp_path):
     base = str(tmp_path / "lake")
     for day in ["20250810", "20250811", "20250812"]:
