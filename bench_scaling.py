@@ -353,8 +353,9 @@ def _custom_runners(spark, repo: str, scale: int):
       corpus (the driver corpus's 31-term vocab can't exercise the df
       bound); scale multiplies n_docs, fixture generation is untimed.
     - trace_funds_3hop: the dashboard's deep-trace envelope — 3 hops
-      over the event-derived edge graph; the timed cost is dominated by
-      the one up-front edge repartition, so alpha ≈ 1 is the pass.
+      over the event-derived edge graph, one action per hop; each hop
+      broadcasts its small frontier against a full edge scan, so the
+      scans dominate and alpha ≈ 1 is the pass.
     - dedup_semantic_semdedup: the registry entry pins n_centroids=8
       for the SQL oracle, which is quadratic-in-waiting by construction
       (fixed cluster count = growing occupancy — the same trap the

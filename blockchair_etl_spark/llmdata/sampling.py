@@ -766,7 +766,10 @@ def kcenter_select(
                     # return the < k DISTINCT centers (r13 review)
                     radius_zero = True
                     break
-                bi = min(i for i, d in enumerate(dists) if d == dmax)
+                # ties break on the smallest id, as the one-row path's
+                # (__d DESC, id ASC) order does; pool position can
+                # disagree once folded distances tie
+                bi = min((i for i, d in enumerate(dists) if d == dmax), key=ids.__getitem__)
                 bvec = vecs[bi]
                 selected.append((ids[bi], bvec))
                 fresh = False

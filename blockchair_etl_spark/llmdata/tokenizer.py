@@ -118,7 +118,11 @@ def _merge_fold_all(syms: Column, merges: list[tuple[str, str]]) -> Column:
     The literal is ONE parsed expression (the lit_double_array
     precedent — F.lit per symbol costs a py4j round trip each); symbols
     outside the tokenizer's [a-z0-9]+ contract fall back to the
-    per-element builder rather than risking SQL-literal escaping."""
+    per-element builder rather than risking SQL-literal escaping. No
+    merges is the identity: an empty ``array()`` literal has no element
+    type for the fold's field accesses to resolve against."""
+    if not merges:
+        return syms
     if all(_SQL_SAFE_SYM.fullmatch(s) for l, r in merges for s in (l, r)):
         pairs = F.expr(
             "array("

@@ -28,6 +28,8 @@ loop counter.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, functions as F
 
 SCALE = 1_000_000_000_000  # rank 1.0 in fixed-point
@@ -80,7 +82,8 @@ def pagerank_fixed_point(
     # re-scans even with free cores) caches the narrow vertex set
     # once. Size estimation is best-effort: if the JVM call fails the
     # gate stays off, which only ever costs recompute, never
-    # correctness (persist does not change results).
+    # correctness (persist does not change results); a malformed
+    # threshold warns and keeps the 256 MB default.
     try:
         est_bytes = int(
             edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -92,12 +95,18 @@ def pagerank_fixed_point(
             est_bytes = 0
     except Exception:
         est_bytes = 0
-    min_bytes = int(
-        edges.sparkSession.conf.get(
-            "spark.blockchair.graph.vertexPersistMinBytes",
-            str(256 * 1024 * 1024),
-        )
+    min_bytes = 256 * 1024 * 1024
+    raw = edges.sparkSession.conf.get(
+        "spark.blockchair.graph.vertexPersistMinBytes", str(min_bytes)
     )
+    try:
+        min_bytes = int(raw)
+    except ValueError:
+        warnings.warn(
+            f"spark.blockchair.graph.vertexPersistMinBytes={raw!r} is not an "
+            f"integer; using the default {min_bytes} bytes",
+            stacklevel=2,
+        )
     if est_bytes >= min_bytes:
         vertices = tracked_persist(vertices)
 

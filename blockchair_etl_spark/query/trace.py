@@ -2,13 +2,19 @@
 
 Re-expresses the reference's recursive-CTE trace
 (`transaction_tracing/app.py:338-375`; worked example
-`transaction_tracing/README.md:24-57`) on Spark, which has no recursive
-CTE: a driver-side loop of frontier joins, exactly equivalent to the
-bounded-depth recursion —
+`transaction_tracing/README.md:24-57`) as a driver-side loop of frontier
+joins, exactly equivalent to the bounded-depth recursion —
 
     seed:  rows with source_address = X               (hop 1)
     step:  frontier ⋈ edges ON frontier.dst = edges.src  (hop h+1)
     total: UNION ALL of all hops
+
+Spark 4 also plans ``WITH RECURSIVE`` natively (the
+``trace_recursive_cte`` registry entry is that twin). The loop stays the
+production path because its guard is per hop: a frontier's row count is
+checked against ``max_frontier_rows`` before the next hop is built, while
+the recursive plan offers only the session-wide
+``spark.sql.cteRecursionRowLimit`` over the whole result.
 
 Faithful semantic details:
 
@@ -19,20 +25,27 @@ Faithful semantic details:
   warehouse reports recursive-join OOM (`app.py:380-383`);
   :func:`trace_funds_with_fallback` reproduces that.
 
-Scale design: each hop is one shuffle join keyed on src. The edge set is
-re-used every hop, so we hash-partition it on `src` once and persist;
-every subsequent hop's join co-locates on the same partitioning (no
-re-shuffle of the big side). Frontiers get `localCheckpoint` to truncate
-the growing lineage, and a per-hop row guard enforces the memory
-envelope instead of discovering OOM mid-stage.
+Scale design: a trace of H hops runs at most H actions. Each frontier
+but the last is materialized by an eager ``localCheckpoint``, which also
+truncates its lineage, and is counted on that same pass through
+``DataFrame.observe`` — the count feeds the row guard and stops the loop
+at the first empty frontier, since every later hop would be empty too.
+The edge set is never shuffled or cached up front: the frontier is a few
+rows, so the planner broadcasts it against a plain edge scan whenever the
+edges carry size statistics, as a parquet scan does. The union of all
+hops is checkpointed once more and the frontier checkpoints are then
+released, so a trace leaves one checkpoint behind.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..caching import release_local_checkpoint
+
+_OUT_COLS = ["src", "dst", "tx_hash", "tx_time"]
 
 
 class TraceBudgetExceeded(RuntimeError):
@@ -44,7 +57,6 @@ def trace_funds(
     source,
     max_hops: int = 1,
     max_frontier_rows: int | None = None,
-    reuse_edge_partitioning: bool = True,
 ) -> DataFrame:
     """Trace flows outward from ``source`` for up to ``max_hops`` hops.
 
@@ -55,66 +67,44 @@ def trace_funds(
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
 
-    out_cols = ["hop", "src", "dst", "tx_hash", "tx_time"]
-
-    step_edges = edges
-    persisted = []
-    frontier_ckpts: list[DataFrame] = []
-    if reuse_edge_partitioning and max_hops > 1:
-        # One shuffle up front; hops 2..N join on this partitioning.
-        step_edges = edges.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(step_edges)
-
-    frontier = (
-        step_edges.filter(F.col("src") == F.lit(source))
-        .withColumn("hop", F.lit(1))
-        .select(*out_cols)
+    frontier = edges.filter(F.col("src") == F.lit(source)).select(
+        F.lit(1).alias("hop"), *_OUT_COLS
     )
-    acc = frontier
-
+    done: list[DataFrame] = []  # materialized frontiers, hop 1 first
     for hop in range(2, max_hops + 1):
-        if max_frontier_rows is not None:
-            n = frontier.count()
-            if n > max_frontier_rows:
-                for df in persisted:
-                    df.unpersist()
-                # nothing is returned on this path — any frontier
-                # blocks the budget counts materialized go too
-                for df in frontier_ckpts:
-                    release_local_checkpoint(df)
-                raise TraceBudgetExceeded(
-                    f"hop {hop - 1} frontier has {n} rows > budget {max_frontier_rows}"
-                )
+        # one action checkpoints the frontier and counts it; read the
+        # count only after it returns (Observation.get blocks until then)
+        rows = Observation()
+        frontier = frontier.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
+        n = rows.get["n"]
+        done.append(frontier)
+        if max_frontier_rows is not None and n > max_frontier_rows:
+            # nothing is returned on this path: free every checkpoint
+            for df in done:
+                release_local_checkpoint(df)
+            raise TraceBudgetExceeded(
+                f"hop {hop - 1} frontier has {n} rows > budget {max_frontier_rows}"
+            )
+        if n == 0:
+            frontier = None
+            break
         # Path multiplicity preserved: one output row per (path, edge) pair.
         parents = frontier.select(F.col("dst").alias("parent_dst"))
-        frontier = (
-            step_edges.join(parents, F.col("src") == F.col("parent_dst"))
-            .withColumn("hop", F.lit(hop))
-            .select(*out_cols)
+        frontier = edges.join(parents, F.col("src") == F.col("parent_dst")).select(
+            F.lit(hop).alias("hop"), *_OUT_COLS
         )
-        # Truncate lineage so plan depth stays O(1) per hop, not O(hops).
-        frontier = frontier.localCheckpoint(eager=False)
-        frontier_ckpts.append(frontier)
-        acc = acc.unionByName(frontier)
 
-    if persisted:
-        # Materialize the accumulated result, then release the cached
-        # edge relation — otherwise every dashboard trace leaves a
-        # MEMORY_AND_DISK copy of the full edge set resident in executor
-        # storage. The eager checkpoint severs the result's lineage from
-        # the cache, so unpersisting cannot trigger recomputation later.
-        acc = acc.localCheckpoint(eager=True)
-        for df in persisted:
-            df.unpersist()
-        # ...and the per-hop frontier checkpoints (lazy; they
-        # materialized while acc's eager checkpoint computed) are now
-        # dead weight behind acc's own blocks — release them explicitly
-        # (DataFrame.unpersist never frees checkpoint blocks; r12,
-        # caching.release_local_checkpoint). Only acc's checkpoint
-        # remains, reclaimed when the caller drops the result.
-        for df in frontier_ckpts:
-            release_local_checkpoint(df)
-
+    parts = done if frontier is None else [*done, frontier]
+    if len(parts) == 1:
+        # one hop, or an empty first hop: nothing left to union
+        return parts[0]
+    acc = reduce(DataFrame.unionByName, parts).localCheckpoint(eager=True)
+    # DataFrame.unpersist never frees checkpoint blocks
+    # (caching.release_local_checkpoint); acc holds its own copy now
+    for df in done:
+        release_local_checkpoint(df)
     return acc
 
 

@@ -58,6 +58,23 @@ def test_pagerank_vertex_persist_gate(spark, tmp_path):
     assert gated_rows == default_rows
 
 
+def test_pagerank_malformed_persist_threshold_warns_and_ranks(spark):
+    """A non-integer vertex-persist threshold must not fail the query:
+    the gate warns and keeps its 256 MB default, so the ranks match the
+    unset-conf run."""
+    edges = spark.createDataFrame([(i, (i * 7 + 3) % 20) for i in range(40)], ["src", "dst"])
+    want = {r.vertex: r.rank_s for r in pagerank_fixed_point(edges, iterations=2).collect()}
+    key = "spark.blockchair.graph.vertexPersistMinBytes"
+    spark.conf.set(key, "abc")
+    try:
+        with pytest.warns(UserWarning, match="vertexPersistMinBytes"):
+            df = pagerank_fixed_point(edges, iterations=2)
+        got = {r.vertex: r.rank_s for r in df.collect()}
+    finally:
+        spark.conf.unset(key)
+    assert got == want
+
+
 def test_pagerank_deterministic_and_bounded(spark):
     edges = spark.createDataFrame(
         [(i, (i * 7 + 3) % 20) for i in range(40)] + [(i % 20, (i * 3) % 20) for i in range(40)],
@@ -94,10 +111,10 @@ def test_trace_budget_raises_at_documented_limit(spark):
 
 
 def test_trace_releases_frontier_checkpoints(spark):
-    """r12: on the reuse-edge-partitioning path, the per-hop frontier
-    checkpoints materialize while the result's eager checkpoint
-    computes and must then be released explicitly (DataFrame.unpersist
-    never frees checkpoint blocks) — a 3-hop dashboard trace may leave
+    """r12: the per-hop frontier checkpoints must be released
+    explicitly once the result's eager checkpoint holds the rows
+    (DataFrame.unpersist never frees checkpoint blocks) — a 3-hop
+    dashboard trace may leave
     only the ONE result checkpoint behind, not one block set per hop."""
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     edges = _fanout_edges(spark, fan=6)
@@ -109,6 +126,95 @@ def test_trace_releases_frontier_checkpoints(spark):
         if k not in before
     ]
     assert len(leaked) <= 1, leaked  # only the result's own checkpoint
+
+
+def _parquet_fanout(spark, tmp_path, fan: int = 6):
+    """The fan-out edges as a parquet scan, so the optimizer has the
+    size statistics the lake's tables have."""
+    path = str(tmp_path / "fanout_edges")
+    _fanout_edges(spark, fan=fan).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _trace_jobs(spark, group: str, **kw):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = trace_funds(**kw)
+    finally:
+        sc.setJobGroup("", "")
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_trace_runs_one_action_per_hop(spark, tmp_path):
+    """A 3-hop trace materializes two frontiers and the union, each on
+    one action: at most 5 jobs counting the broadcasts of the frontiers
+    (9 when the edge set was shuffled and persisted up front). A source
+    with no out-edges stops after its empty first hop: at most 2."""
+    edges = _parquet_fanout(spark, tmp_path)
+    out, jobs = _trace_jobs(
+        spark, "trace-3hop", edges=edges, source=0, max_hops=3, max_frontier_rows=1000
+    )
+    assert len(jobs) <= 5, jobs
+    assert out.count() == 6 + 36
+    out, jobs = _trace_jobs(
+        spark, "trace-no-out-edges", edges=edges, source=999, max_hops=3, max_frontier_rows=1000
+    )
+    assert len(jobs) <= 2, jobs
+    assert out.count() == 0
+
+
+def test_trace_runs_no_edge_shuffle_or_cache(spark, tmp_path):
+    """No query the trace runs hash-partitions the edge set on src or
+    reads it through the cache: the frontier is broadcast against a
+    plain edge scan."""
+    edges = _parquet_fanout(spark, tmp_path)
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def latest(n: int) -> list:
+        # the store is sorted by execution id and drops its oldest
+        # entries past spark.sql.ui.retainedExecutions, so read its tail
+        bus.waitUntilEmpty()
+        total = store.executionsCount()
+        tail = store.executionsList(max(total - n, 0), n)
+        return [tail.apply(i) for i in range(tail.size())]
+
+    before = max((e.executionId() for e in latest(1)), default=-1)
+    out = trace_funds(edges, source=0, max_hops=3, max_frontier_rows=1000)
+    plans = [e.physicalPlanDescription() for e in latest(20) if e.executionId() > before]
+    assert len(plans) >= 3  # two frontiers and the union
+    plans.append(out._jdf.queryExecution().toString())
+    for plan in plans:
+        assert "hashpartitioning(src#" not in plan
+        assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+
+
+def _unrolled_trace(edges, source, max_hops: int):
+    """The bounded recursion written out hop by hop, with no early stop."""
+    cols = ["src", "dst", "tx_hash", "tx_time"]
+    hop = edges.filter(F.col("src") == source).select(F.lit(1).alias("hop"), *cols)
+    acc = hop
+    for h in range(2, max_hops + 1):
+        parents = hop.select(F.col("dst").alias("parent_dst"))
+        hop = edges.join(parents, F.col("src") == F.col("parent_dst")).select(
+            F.lit(h).alias("hop"), *cols
+        )
+        acc = acc.unionByName(hop)
+    return acc
+
+
+def test_trace_early_stop_matches_unrolled(spark):
+    """Stopping at the first empty frontier changes nothing: source 1's
+    hop 2 is empty, source 0's hop 3 is, and a source with no edges
+    stops at hop 1; each equals the fully unrolled trace, rows and
+    schema."""
+    edges = _fanout_edges(spark, fan=6)
+    for source, hops in ((1, 3), (0, 4), (999, 3)):
+        got = trace_funds(edges, source=source, max_hops=hops, max_frontier_rows=1000)
+        want = _unrolled_trace(edges, source, hops)
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect()), (source, hops)
 
 
 def test_trace_fallback_degrades_to_one_hop(spark):

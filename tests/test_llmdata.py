@@ -3400,6 +3400,21 @@ def test_merge_fold_all_matches_python_fold_fuzz(spark):
         assert got[w] == _py_fold_merges(syms, merges), w
 
 
+def test_merge_fold_all_empty_merge_list_is_identity(spark):
+    """With no merges the fold returns the symbols unchanged; the SQL
+    fast path would build an untyped ``array()`` and fail analysis."""
+    from pyspark.sql import functions as F
+
+    from blockchair_etl_spark.llmdata.tokenizer import _merge_fold_all, _SYMS
+
+    df = spark.createDataFrame([("abca",), ("",)], "word string")
+    got = {
+        r.word: list(r.toks)
+        for r in df.select("word", _merge_fold_all(F.expr(_SYMS), []).alias("toks")).collect()
+    }
+    assert got == {"abca": ["a", "b", "c", "a"], "": [""]}
+
+
 def test_encode_words_releases_superseded_checkpoints(spark):
     """Advisor r11 + r12 review: the chunked path must unpersist each
     superseded localCheckpoint once its successor materializes — a
@@ -4864,3 +4879,20 @@ def test_kcenter_batched_rounds_match_unbatched(spark):
     )
     for br in (1, 2, 1024):
         assert kcenter_select(withnull, k=3, batch_rows=br) == [1, 3, 2]
+
+
+def test_kcenter_driver_pool_tie_breaks_on_min_id(spark):
+    """Two vectors whose distances tie exactly once the second center is
+    folded in, while their distances to the first center put the larger
+    id first in the collected pool: every batch size must pick the
+    smaller id, as one-row-per-round selection does."""
+    from blockchair_etl_spark.llmdata.sampling import kcenter_select
+
+    # to (0,0): id 3 -> 45 and id 2 -> 25, so the pool holds 3 before 2;
+    # after center (10,0) both sit at exactly 25
+    emb = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [10.0, 0.0]), (2, [4.0, 3.0]), (3, [6.0, 3.0])],
+        "vec_id bigint, embedding array<double>",
+    )
+    for br in (1, 1024):
+        assert kcenter_select(emb, k=3, batch_rows=br) == [0, 1, 2], br
