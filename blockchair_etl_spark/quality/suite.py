@@ -10,10 +10,14 @@ quality/checks.py.
 
 Execution model: `run_config_suite` builds ONE report relation — every
 check becomes a single-row count aggregate and the rows are unioned —
-so the whole suite runs as one Spark action with shared scan reuse,
-not one count() per check. `quality.checks.run_checks` (the reference
-suite the DAG runs) is a thin adapter over it. At 100 TB that is the
-difference between one pass over each fact table and |suite| passes.
+so the whole suite runs as one Spark action, not one count() per check.
+`quality.checks.run_checks` (the reference suite the DAG runs) is a
+thin adapter over it. One action is not one pass: no scan is shared.
+Each check is its own branch of the union and plans its own scan of its
+model plus up to two shuffles (its group-by or distinct, then its
+count); under AQE each shuffle stage is a job of its own, so the
+reference suite runs 16 jobs and 36 stages (skipped ones included) on
+a daily build.
 
 Config sources: a Python dict, a JSON file, or a YAML file (PyYAML is
 present in this environment; the JSON path keeps the loader dependency-
@@ -106,7 +110,8 @@ def run_config_suite(
     tables: dict[str, DataFrame], config_or_specs
 ) -> DataFrame:
     """→ one relation (model, column, test, n_violations, passed),
-    a single UNION-of-aggregates plan (one Spark action for the suite)."""
+    a single UNION-of-aggregates plan: one Spark action for the suite,
+    in which each check scans its model and shuffles on its own."""
     specs = (
         config_or_specs
         if isinstance(config_or_specs, list)

@@ -8,7 +8,10 @@ date detection :196-218, varchar tier walk :177-193, widening ratchet
 
 - Sampling runs through Spark (`limit(n)` over the TSV scan → Arrow →
   pandas), so the sample path scales to files of any size and any
-  storage — only ≤n rows ever reach the driver.
+  storage — only ≤n rows ever reach the driver. Each call infers one
+  file in one Spark job: the driver reads only the file's header line,
+  to count its fields, and the sample scan returns the header row
+  itself, parsed by Spark's CSV reader, as its first row.
 - Column types are a small algebra (`ColumnType`) with an explicit
   widening partial order; the ratchet replaces a stored schema only if
   the new one is wider on ≥1 column and narrower on none.
@@ -18,16 +21,21 @@ date detection :196-218, varchar tier walk :177-193, widening ratchet
 Decision tree per column, matching the reference's semantics:
 date/timestamp format match (DATE iff the format has no time part) →
 all-null → VARCHAR(default 64) → integer → float → boolean →
-VARCHAR(smallest tier ≥ max observed length).
+VARCHAR(smallest tier ≥ max observed length). An integer column whose
+values do not fit a BIGINT is a float. Parses that cannot succeed are
+skipped, never changing the result.
 """
 
 from __future__ import annotations
 
+import csv
 import json
 import re
 from dataclasses import dataclass
 
 import pandas as pd
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     BooleanType,
@@ -48,6 +56,11 @@ VARCHAR_TIERS = [
 ]
 DATE_FORMATS = ["%Y-%m-%d", "%Y/%m/%d", "%d-%m-%Y"]
 TIMESTAMP_FORMATS = ["%Y-%m-%d %H:%M:%S", "%Y-%m-%d %H:%M:%S.%f"]
+# Every format holds one of these separators as a literal, so a value
+# with none of them cannot parse.
+DATETIME_MARKS = re.compile("[-/]")
+# What Java's String.trim strips: Spark's CSV scan skips lines it empties.
+JAVA_TRIM = "".join(map(chr, range(33)))
 MAX_VARCHAR = 16_777_216  # length of an unbounded VARCHAR for ordering
 
 
@@ -119,8 +132,10 @@ def varchar_tier(max_length: int | None) -> int:
 def detect_datetime(series: pd.Series) -> ColumnType | None:
     """First matching format wins; DATE iff the format carries no
     hour/minute directive (generate_snowflake_ddl.py:196-218)."""
-    sample = series.dropna().astype(str).head(100)
+    sample = series.dropna().head(100).astype(str)
     if sample.empty:
+        return None
+    if not all(map(DATETIME_MARKS.search, sample)):
         return None
     for fmt in DATE_FORMATS + TIMESTAMP_FORMATS:
         try:
@@ -135,13 +150,13 @@ def detect_datetime(series: pd.Series) -> ColumnType | None:
 def infer_from_pandas(df: pd.DataFrame) -> Schema:
     """The per-column decision tree over a driver-side sample frame."""
     schema: Schema = []
-    for pos, col in enumerate(df.columns):
+    for pos, (col, s) in enumerate(df.items()):
         name = sanitize_column_name(str(col), pos)
-        s = df[col]
-        dt = detect_datetime(s)
+        values = s.dropna()
+        dt = detect_datetime(values.head(100))
         if dt is not None:
             ct = dt
-        elif s.isna().all():
+        elif values.empty:
             ct = ColumnType("varchar", DEFAULT_STRING_LENGTH)
         elif pd.api.types.is_integer_dtype(s.dtype):
             ct = ColumnType("integer")
@@ -150,36 +165,125 @@ def infer_from_pandas(df: pd.DataFrame) -> Schema:
         elif pd.api.types.is_bool_dtype(s.dtype):
             ct = ColumnType("boolean")
         else:
-            max_len = s.dropna().astype(str).str.len().max()
-            ct = ColumnType("varchar", varchar_tier(int(max_len) if pd.notna(max_len) else None))
+            ct = ColumnType("varchar", varchar_tier(max(map(len, values.astype(str)))))
         schema.append((name, ct))
     return schema
+
+
+def _safe_header(row: list[str | None], case_sensitive: bool) -> list[str]:
+    """Column names from a parsed header row, as Spark's CSV source makes
+    them (``CSVDataSource.makeSafeHeader``): a null or empty name becomes
+    ``_c{i}``, and each duplicated name gets its position appended;
+    duplicates are compared case-insensitively unless case_sensitive."""
+    key = (lambda v: v) if case_sensitive else str.lower
+    seen = [key(v) for v in row if v]
+    dups = {k for k in seen if seen.count(k) > 1}
+    return [
+        f"_c{i}" if not v else f"{v}{i}" if key(v) in dups else v
+        for i, v in enumerate(row)
+    ]
+
+
+def _header_line(spark: SparkSession, path: str) -> str | None:
+    """The line of one file that Spark's ``header=true`` takes for the
+    header, the first that is not all spaces, read on the driver through
+    Hadoop's FileSystem and codec factory: any storage and compression
+    Spark reads, and no Spark job."""
+    if re.search(r"[*?\[{]", path):
+        raise ValueError(f"expected one file, not a glob: {path}")
+    client = spark.sparkContext._gateway._gateway_client
+
+    def new(cls: str, *args):
+        # a JavaClass by its full name costs no lookup round trip per package
+        return JavaClass(cls, client)(*args)
+
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    hpath = new("org.apache.hadoop.fs.Path", path)
+    fs = hpath.getFileSystem(conf)
+    try:
+        status = fs.getFileStatus(hpath)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+            raise
+        raise FileNotFoundError(path) from e
+    if status.isDirectory():
+        raise ValueError(f"expected one file, not a directory: {path}")
+    stream = fs.open(hpath)
+    codec = new("org.apache.hadoop.io.compress.CompressionCodecFactory", conf).getCodec(hpath)
+    if codec is not None:
+        stream = codec.createInputStream(stream)
+    reader = new("java.io.BufferedReader", new("java.io.InputStreamReader", stream, "UTF-8"))
+    try:
+        while (line := reader.readLine()) is not None:
+            if line.strip(" "):
+                return line
+        return None
+    finally:
+        reader.close()
+
+
+def _narrowest(s: pd.Series) -> pd.Series:
+    """A string sample column re-parsed to the narrowest dtype, so the
+    dtype checks of the decision tree behave like the reference's
+    pd.read_csv; a column with a value that does not parse stays as is."""
+    values = s.dropna()
+    if values.empty or pd.isna(pd.to_numeric(values.iat[0], errors="coerce")):
+        return s
+    parsed = pd.to_numeric(values, errors="coerce")
+    if parsed.isna().any():
+        return s
+    if not pd.api.types.is_integer_dtype(parsed.dtype) and (
+        not (parsed % 1 == 0).all() or values.str.contains(r"[.eE]").any()
+    ):
+        return parsed.reindex(s.index)
+    if parsed.min() < -(2**63) or parsed.max() >= 2**63:
+        parsed = parsed.astype("float64")  # beyond BIGINT: integer → float widens
+    else:
+        parsed = parsed.astype("Int64")
+    return parsed.reindex(s.index)
+
+
+def read_sample(spark: SparkSession, path: str, sample_rows: int) -> pd.DataFrame:
+    """≤sample_rows rows of one TSV file (a directory or a glob raises
+    ValueError) as strings, named by its header, in one Spark job.
+
+    The driver reads only the header line, to count its fields. The
+    scan reads that many string columns with no header, so its first row
+    is the header as Spark's CSV parser reads it (a BOM stripped, quotes
+    and escapes as Spark treats them); the names come from that row, made
+    safe as Spark's ``header=true`` makes them. The scan skips every line
+    Java's trim empties, so a header line of tabs and control characters
+    is not its first row: that row is then the line ``header=true`` drops
+    from the data, and the names come from the header line's fields."""
+    header = _header_line(spark, path)
+    if header is None:
+        return pd.DataFrame()
+    fields = next(csv.reader([header.removeprefix("\ufeff")], delimiter="\t", quotechar='"'))
+    table = (
+        spark.read.option("sep", "\t")
+        .option("header", "false")
+        .schema(", ".join(f"_c{i} STRING" for i in range(len(fields))))
+        .csv(path)
+        .limit(sample_rows + 1)
+        .toArrow()
+    )
+    row0 = [c[0].as_py() for c in table.columns] if header.strip(JAVA_TRIM) else fields
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    sample = table.slice(1).to_pandas()
+    sample.columns = _safe_header(row0, case_sensitive)
+    return sample
 
 
 def infer_from_tsv(
     spark: SparkSession, path: str, sample_rows: int = 1_000_000
 ) -> Schema:
-    """Sample ≤sample_rows through a Spark TSV scan (all strings — the
-    decision tree, not the CSV parser, assigns types) and infer."""
-    raw = (
-        spark.read.option("sep", "\t")
-        .option("header", "true")
-        .option("inferSchema", "false")
-        .csv(path)
-        .limit(sample_rows)
-    )
-    pdf = raw.toPandas()
-    # pandas-typed sample: re-parse strings to the narrowest dtype so the
-    # dtype checks below behave like the reference's pd.read_csv.
-    for col in pdf.columns:
-        parsed = pd.to_numeric(pdf[col], errors="coerce")
-        if parsed.notna().sum() == pdf[col].notna().sum():
-            if (parsed.dropna() % 1 == 0).all() and not pdf[col].dropna().astype(
-                str
-            ).str.contains(r"[.eE]").any():
-                parsed = parsed.astype("Int64")
-            pdf[col] = parsed
-    return infer_from_pandas(pdf)
+    """Infer the schema of one TSV file from its header and ≤sample_rows
+    rows, sampled by :func:`read_sample` in one Spark job. The sample is
+    all strings: the decision tree, not the CSV parser, assigns types."""
+    sample = read_sample(spark, path, sample_rows)
+    for i in range(sample.shape[1]):
+        sample.isetitem(i, _narrowest(sample.iloc[:, i]))
+    return infer_from_pandas(sample)
 
 
 class SchemaSkip(Exception):

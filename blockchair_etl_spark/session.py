@@ -17,10 +17,12 @@ Two entry points:
 from __future__ import annotations
 
 import os
+import warnings
 from collections.abc import Callable
 from typing import Any
 
 from pyspark import inheritable_thread_target
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs (safe to apply to a live session).
@@ -60,22 +62,18 @@ def default_shuffle_partitions() -> int:
 
 
 def prepare_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime tuning to an existing session (idempotent)."""
-    for k, v in RUNTIME_CONFS.items():
+    """Apply runtime tuning to an existing session (idempotent). A conf
+    this deployment does not let a live session set (a static conf,
+    ``CANNOT_MODIFY_STATIC_CONFIG``) is skipped with a warning naming it:
+    every conf here is an optimization or compat shim, not a correctness
+    requirement (except nanosAsLong, which will surface loudly at read
+    time if missing)."""
+    confs = {**RUNTIME_CONFS, "spark.sql.shuffle.partitions": str(default_shuffle_partitions())}
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Conf not settable in this deployment — keep going; every
-            # conf here is an optimization or compat shim, not a
-            # correctness requirement (except nanosAsLong, which will
-            # surface loudly at read time if missing).
-            pass
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(default_shuffle_partitions())
-        )
-    except Exception:
-        pass
+        except AnalysisException as e:
+            warnings.warn(f"prepare_session: cannot set {k}: {e}", RuntimeWarning, stacklevel=2)
     return spark
 
 

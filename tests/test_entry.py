@@ -1,5 +1,7 @@
 """Driver-contract smoke tests for __spark_entry__."""
 
+import pytest
+
 import __spark_entry__ as entrymod
 
 
@@ -116,3 +118,28 @@ def test_rotation_is_oldest_first(monkeypatch):
     finally:
         monkeypatch.undo()
         qs._rotate_registry()
+
+
+def test_prepare_session_skips_static_conf_with_warning(spark, monkeypatch):
+    """A static conf cannot be set on a live session: prepare_session
+    warns with its name, does not raise, and still applies the rest."""
+    from blockchair_etl_spark import session
+
+    monkeypatch.setattr(session, "RUNTIME_CONFS", {
+        "spark.sql.warehouse.dir": "/nonexistent-warehouse",
+        **session.RUNTIME_CONFS,
+    })
+    keys = ("spark.sql.session.timeZone", "spark.sql.shuffle.partitions")
+    prev = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        with pytest.warns(RuntimeWarning, match="spark.sql.warehouse.dir"):
+            session.prepare_session(spark)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        partitions = str(session.default_shuffle_partitions())
+        assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+        assert spark.conf.get("spark.sql.warehouse.dir") != "/nonexistent-warehouse"
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)

@@ -1,9 +1,15 @@
 """Schema inference + widening ratchet (SURVEY §2 I1-I3)."""
 
+import gzip
+import re
+
 import pandas as pd
 import pytest
 
 from blockchair_etl_spark.schema.inference import (
+    DATE_FORMATS,
+    DATETIME_MARKS,
+    TIMESTAMP_FORMATS,
     ColumnType,
     SchemaRegistry,
     SchemaSkip,
@@ -13,6 +19,7 @@ from blockchair_etl_spark.schema.inference import (
     from_json,
     infer_from_pandas,
     infer_from_tsv,
+    read_sample,
     sanitize_column_name,
     to_json,
     to_struct_type,
@@ -42,6 +49,16 @@ def test_datetime_detection():
     assert detect_datetime(pd.Series(["02-03-2024"])) == ColumnType("date")
     assert detect_datetime(pd.Series(["hello"])) is None
     assert detect_datetime(pd.Series([None, None])) is None
+    # one value without a separator no format can parse: not a date
+    assert detect_datetime(pd.Series(["2024-01-02", "20240103"])) is None
+
+
+def test_every_datetime_format_holds_a_mark():
+    """detect_datetime skips the format tries when a sample value holds
+    no DATETIME_MARKS separator; that is sound only while every format
+    holds one as a literal."""
+    for fmt in DATE_FORMATS + TIMESTAMP_FORMATS:
+        assert DATETIME_MARKS.search(re.sub("%.", "", fmt)), fmt
 
 
 def test_decision_tree():
@@ -133,3 +150,97 @@ def test_registry_ratchet_persistence(tmp_path):
     assert reg2.get("t") == s2
     with pytest.raises(SchemaSkip):
         reg2.update("t", s1)
+
+
+def _write_gz(path, text: str):
+    with gzip.open(path, "wb") as f:
+        f.write(text.encode("utf-8"))
+    return str(path)
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_infer_from_tsv_runs_one_job(spark, tmp_path):
+    """The header row comes from the sample scan: no header-inference job
+    (a header=true read runs two: header inference, then the scan)."""
+    p = _write_gz(tmp_path / "t.tsv.gz", "id\tname\n1\ta\n2\tb\n")
+    assert _jobs(spark, "infer-one-file", lambda: infer_from_tsv(spark, p)) == 1
+    two = _jobs(spark, "header-true-scan", lambda: (
+        spark.read.option("sep", "\t").option("header", "true").csv(p).limit(10).toPandas()))
+    assert two == 2
+
+
+HEADERS = {
+    "plain": "id\tname\tfee",
+    "case_duplicates": "id\tID\tid",
+    "empty_name_and_duplicate": "id\t\tid",
+    "trailing_empty_name": "id\tname\t",
+    "leading_blank_lines": "\n  \n\r\nid\tname\tfee",
+    # header=true takes this line for the header and drops the next one
+    "tab_line_before_header": "\t\nid\tname\tfee",
+    "control_line_before_header": " \x01\t \nid\tname\tfee",
+    "bom": "\ufeffid\tname\tfee",
+    "doubled_quote": 'id\t"c""d"\tfee',
+    "quoted_tab": 'id\t"na\tme"\tfee',
+}
+
+
+@pytest.mark.parametrize("case_sensitive", ["false", "true"])
+@pytest.mark.parametrize("shape", sorted(HEADERS))
+def test_read_sample_matches_spark_header_true(spark, tmp_path, shape, case_sensitive):
+    """Names and rows equal Spark's own header=true read of the file."""
+    p = _write_gz(tmp_path / f"{shape}.tsv.gz", HEADERS[shape] + "\n1\tx\t0.5\n\n2\t\t1.5\n")
+    prev = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", case_sensitive)
+    try:
+        want = spark.read.option("sep", "\t").option("header", "true").csv(p).toPandas()
+        got = read_sample(spark, p, 100)
+    finally:
+        spark.conf.set("spark.sql.caseSensitive", prev)
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_infer_one_file_only(spark, tmp_path):
+    p = _write_gz(tmp_path / "t.tsv.gz", "id\n1\n")
+    with pytest.raises(ValueError, match="directory"):
+        infer_from_tsv(spark, str(tmp_path))
+    with pytest.raises(ValueError, match="glob"):
+        infer_from_tsv(spark, str(tmp_path / "*.tsv.gz"))
+    with pytest.raises(FileNotFoundError):
+        infer_from_tsv(spark, str(tmp_path / "missing.tsv.gz"))
+    assert infer_from_tsv(spark, p) == [("ID", ColumnType("integer"))]
+
+
+def test_infer_empty_and_header_only_files(spark, tmp_path):
+    assert infer_from_tsv(spark, _write_gz(tmp_path / "e.tsv.gz", "\n\n")) == []
+    got = infer_from_tsv(spark, _write_gz(tmp_path / "h.tsv.gz", "a\tb\n"))
+    assert got == [("A", ColumnType("varchar", 64)), ("B", ColumnType("varchar", 64))]
+
+
+def test_integers_beyond_bigint_infer_as_float(spark, tmp_path):
+    """pandas parses these to uint64 or float64; a BIGINT cannot hold
+    them, so the column is a float (integer -> float widens)."""
+    p = _write_gz(
+        tmp_path / "big.tsv.gz",
+        "over\thuge\tneg\tmax\tmin_null\n"
+        "9223372036854775808\t99999999999999999999\t-9223372036854775809\t"
+        "9223372036854775807\t-9223372036854775808\n"
+        "1\t2\t3\t4\t\n",
+    )
+    got = dict(infer_from_tsv(spark, p))
+    assert got == {
+        "OVER": ColumnType("float"),
+        "HUGE": ColumnType("float"),
+        "NEG": ColumnType("float"),
+        "MAX": ColumnType("integer"),
+        "MIN_NULL": ColumnType("integer"),
+    }
+    assert apply_ratchet(list(got.items()), [("OVER", ColumnType("integer"))])
