@@ -79,6 +79,14 @@ def tracked_count() -> int:
     return len(_TRACKED)
 
 
+def jvm_plan(df: DataFrame, stage: str = "analyzed"):
+    """The JVM logical plan behind ``df`` at ``stage`` (``"analyzed"``
+    or ``"optimizedPlan"``): the one call into Spark's private
+    ``QueryExecution`` API. A failing JVM call raises ``Py4JError``;
+    callers that fall back on it say so with a warning."""
+    return getattr(df._jdf.queryExecution(), stage)()
+
+
 def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
     """Free the block-manager blocks behind a ``localCheckpoint``-ed
     frame. ``DataFrame.unpersist()`` only clears CacheManager entries —
@@ -110,7 +118,7 @@ def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
     import warnings
 
     try:
-        plan = df._jdf.queryExecution().analyzed()
+        plan = jvm_plan(df)
         if plan.getClass().getSimpleName() == "LogicalRDD":
             lvl = plan.rdd().getStorageLevel()
             if lvl.useMemory() or lvl.useDisk() or lvl.useOffHeap():

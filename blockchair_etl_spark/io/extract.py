@@ -167,11 +167,14 @@ def load_download_config(
     )
 
 
+def _dump_name(cfg: DownloadConfig, data_type: str, day: date) -> str:
+    return f"blockchair_{cfg.coin}_{data_type}_{day.strftime('%Y%m%d')}.tsv.gz"
+
+
 def dump_url(cfg: DownloadConfig, data_type: str, day: date) -> str:
     """URL scheme of the daily dump feed
     (download_blockchair_data.py:306-311)."""
-    name = f"blockchair_{cfg.coin}_{data_type}_{day.strftime('%Y%m%d')}.tsv.gz"
-    url = f"{cfg.base_url}/{cfg.coin}/{data_type}/{name}"
+    url = f"{cfg.base_url}/{cfg.coin}/{data_type}/{_dump_name(cfg, data_type, day)}"
     if cfg.api_key:
         url += f"?key={cfg.api_key}"
     return url
@@ -218,8 +221,7 @@ def download_daily(
     day = day or (datetime.now().date() - timedelta(days=1))
     out: list[Path] = []
     for dt in cfg.data_types:
-        name = f"blockchair_{cfg.coin}_{dt}_{day.strftime('%Y%m%d')}.tsv.gz"
-        dest = Path(cfg.landing_dir) / cfg.coin / dt / name
+        dest = Path(cfg.landing_dir) / cfg.coin / dt / _dump_name(cfg, dt, day)
         if skip_existing and dest.exists():
             out.append(dest)
             continue

@@ -60,10 +60,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def events_between(
     spark: SparkSession, sf_dir: str, start_ts: str, end_ts: str
 ) -> DataFrame:

@@ -53,31 +53,6 @@ def exact_duplicate_groups(
     return g.filter(F.col("n_docs") > 1) if only_dups else g
 
 
-def distinct_tokens(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    return (
-        df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("token"))
-        .distinct()
-    )
-
-
-def _shingles_col_naive(text_col: str, n: int):
-    """n-token shingles as an array column (empty when doc has < n tokens).
-
-    QUARANTINED (underscore name): embeds the tokenizer inside the
-    per-index lambda, so Catalyst re-evaluates tokenization per shingle
-    — O(tokens²) per document. Kept only as documentation of the trap;
-    not part of the public scale-safe surface. Every pipeline uses
-    :func:`exploded_shingles`, which materializes tokens once per row
-    and is strictly linear.
-    """
-    return F.expr(
-        f"transform(sequence(1, greatest(size(filter(split(lower({text_col}), "
-        f"'[^a-z0-9]+'), x -> x != '')) - {n} + 1, 0)), "
-        f"i -> array_join(slice(filter(split(lower({text_col}), '[^a-z0-9]+'), "
-        f"x -> x != ''), i, {n}), ' '))"
-    )
-
-
 def exploded_shingles(
     df: DataFrame, text_col: str, id_col: str, n: int, distinct: bool = True
 ) -> DataFrame:

@@ -20,7 +20,6 @@ same bucket-join shape.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .stats import CorpusStats, lit_double_array
@@ -618,41 +617,3 @@ def brute_force_pairs_cosine(
         .select("id_a", "id_b", "cosine")
     )
 
-
-def cosine_topk_pandas_udf(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized alternative to :func:`cosine_topk`.
-
-    The expression-fold form keeps everything in codegen but evaluates
-    element-by-element; at high dimensionality (≥~1k dims) a
-    numpy-batched Pandas UDF wins by doing the dot products as BLAS
-    matrix-vector multiplies over whole Arrow batches. Same ranking
-    contract (score desc, id asc); scores are plain float64 (no
-    exact-decimal fold), so use the expression form when cross-run
-    bit-determinism matters more than throughput.
-
-    Self-contained closure: ships by value, no package import needed on
-    Python workers.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.sqrt(q @ q))
-
-    @pandas_udf("double")
-    def _cos(vecs: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        m = _np.vstack(vecs.to_numpy())  # (batch, dim) float32
-        m = m.astype(_np.float64)
-        dots = m @ q
-        norms = _np.sqrt((m * m).sum(axis=1)) * qn
-        return pd.Series(dots / norms)
-
-    scored = emb.select(F.col(id_col), _cos(F.col(vec_col)).alias("cosine"))
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)

@@ -51,10 +51,3 @@ def exact_sum(c: Column | str, scale: int = 6) -> Column:
     """
     return F.sum(_col(c).cast(f"decimal(18,{scale})")).cast("double")
 
-
-def exact_avg(c: Column | str, scale: int = 6) -> Column:
-    """Order-insensitive mean via exact decimal sum / exact count."""
-    col = _col(c)
-    return (
-        F.sum(col.cast(f"decimal(18,{scale})")).cast("double") / F.count(col)
-    )

@@ -5,8 +5,7 @@ shuffle every row. At 100 TB the sketch forms trade bounded error for
 O(1) state per group: HyperLogLog++ for cardinality
 (`approx_count_distinct`, rsd-tunable) and the Greenwald-Khanna /
 KLL-style quantile sketch (`percentile_approx`). These wrappers pin the
-engine's accuracy defaults and give the dashboard metrics (SURVEY §2 A2)
-their large-scale drop-ins; error bounds are asserted in
+engine's accuracy defaults; error bounds are asserted in
 tests/test_approx.py.
 """
 
@@ -70,26 +69,6 @@ def kmv_distinct(
         F.when(n_taken < k, n_taken.cast("double"))
         .otherwise(F.lit(float(k - 1)) * F.lit(space) / kth.cast("double"))
         .alias("distinct_estimate"),
-    )
-
-
-def approx_distinct_transactions(
-    fct_traces: DataFrame, start: str, end: str, rsd: float = DEFAULT_RSD
-) -> DataFrame:
-    """Sketch form of analytics.distinct_transaction_count (A2): same
-    query shape, HLL++ instead of an exact distinct shuffle."""
-    return fct_traces.filter(
-        F.col("tx_time").between(F.lit(start).cast("timestamp"), F.lit(end).cast("timestamp"))
-    ).agg(approx_distinct("transaction_hash").alias("total_transactions_approx"))
-
-
-def fee_quantiles(
-    fct_traces: DataFrame, probabilities: list[float] | None = None
-) -> DataFrame:
-    """Fee distribution sketch (dashboard trend companion)."""
-    probs = probabilities or [0.5, 0.9, 0.99]
-    return fct_traces.agg(
-        approx_quantiles("fee_btc", probs).alias("fee_btc_quantiles")
     )
 
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import warnings
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, functions as F
 
 SCALE = 1_000_000_000_000  # rank 1.0 in fixed-point
@@ -64,7 +65,7 @@ def pagerank_fixed_point(
     # (an eager unpersist here would land before any job runs, making
     # the cache a no-op and recomputing edd per iteration) and releases
     # it on the next harness/registry release_tracked() call.
-    from ..caching import tracked_persist
+    from ..caching import jvm_plan, tracked_persist
 
     # `vertices` is ALSO re-derived per use (the init projection plus
     # one left join per iteration — i+1 copies of the scan+distinct+
@@ -81,19 +82,23 @@ def pagerank_fixed_point(
     # the point where one cached pass clearly beats iterations+1
     # re-scans even with free cores) caches the narrow vertex set
     # once. Size estimation is best-effort: if the JVM call fails the
-    # gate stays off, which only ever costs recompute, never
+    # gate warns and stays off, which only ever costs recompute, never
     # correctness (persist does not change results); a malformed
     # threshold warns and keeps the 256 MB default.
     try:
-        est_bytes = int(
-            edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        est_bytes = int(jvm_plan(edges, "optimizedPlan").stats().sizeInBytes())
         if est_bytes >= (1 << 63) - 1:
             # Long.MaxValue is Spark's "no statistics" sentinel (e.g. a
             # LogicalRDD from createDataFrame) — treat unknown as small
             # rather than letting the sentinel force a persist
             est_bytes = 0
-    except Exception:
+    except Py4JError as exc:
+        warnings.warn(
+            f"edge size estimate failed ({type(exc).__name__}: {exc}); "
+            "the vertex persist stays off",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         est_bytes = 0
     min_bytes = 256 * 1024 * 1024
     raw = edges.sparkSession.conf.get(

@@ -567,246 +567,12 @@ def test_stream_interval_join_left_outer_flushes_unmatched(spark, tmp_path):
     assert got_pairs == want
 
 
-def test_transformwithstate_sessionize_matches_batch(spark, tmp_path):
-    """The transformWithStateInPandas sessionizer (named ValueState +
-    explicit event-time timers) must agree with the batch twin exactly
-    like the applyInPandasWithState operator does — fourth corner of
-    the sessionization cross-validation. Skips where protobuf (the
-    transformWithState state-server wire format) is not installed."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="UPSTREAM BLOCKER: transformWithState's Python worker talks "
-        "to the JVM state server in protobuf, and this CI image has no "
-        "protobuf wheel and no network to install one (pip/apt are "
-        "disallowed here). The processor logic itself IS tested — "
-        "test_tws_session_processor_logic_with_stub_handle and the "
-        "out-of-order tests drive SessionProcessor directly — and the "
-        "applyInPandasWithState twin runs the full engine path below. "
-        "On any image with `pip install protobuf` this test runs and "
-        "must pass.",
-    )
-    from blockchair_etl_spark.streaming.sessionize_tws import sessionize_stream_tws
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    events_dir = str(tmp_path / "ev_tws")
-    ev.select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "value"
-    ).write.parquet(events_dir)
-    schema = spark.read.parquet(events_dir).schema
-
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    q = (
-        sessionize_stream_tws(stream, watermark="1 hour")
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "out_tws"))
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination(240)
-    got = spark.read.parquet(str(tmp_path / "out_tws"))
-
-    batch = QUERIES["sessionize_events"].fn(spark, "/root/testdata/sf0.001")
-    max_ts = ev.agg(F.max("ts")).head()[0]
-    wm = max_ts - datetime.timedelta(hours=1)
-    flushed = batch.filter(
-        F.col("session_end") + F.expr("INTERVAL 30 MINUTE") < F.lit(wm)
-    )
-    got_keys = {
-        (r.user_id, r.session_start, r.n_events) for r in got.collect()
-    }
-    want_keys = {
-        (r.user_id, r.session_start, r.n_events) for r in flushed.collect()
-    }
-    assert want_keys, "fixture should contain flushed sessions"
-    assert want_keys <= got_keys
-    assert got.count() == got.dropDuplicates(["user_id", "session_start"]).count()
-    # and every emitted session matches the batch twin row-for-row
-    batch_keys = {
-        (r.user_id, r.session_start, r.n_events, r.total_value)
-        for r in batch.collect()
-    }
-    for r in got.collect():
-        assert (r.user_id, r.session_start, r.n_events, r.total_value) in batch_keys
-
-
-def test_tws_session_processor_logic_with_stub_handle():
-    """The SessionProcessor's session arithmetic, driven directly with a
-    stub state/handle (no streaming engine, no protobuf): in-batch gap
-    splits emit inline, the open session persists with a replaced
-    timer, and the expired-timer path flushes and clears."""
-    import pandas as pd
-
-    from blockchair_etl_spark.streaming.sessionize_tws import SessionProcessor
-
-    class StubState:
-        def __init__(self):
-            self.v = None
-        def exists(self):
-            return self.v is not None
-        def get(self):
-            return self.v
-        def update(self, v):
-            self.v = v
-        def clear(self):
-            self.v = None
-
-    class StubHandle:
-        def __init__(self):
-            self.state = StubState()
-            self.timers = []
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-        def registerTimer(self, ts):
-            self.timers.append(ts)
-        def deleteTimer(self, ts):
-            self.timers.remove(ts)
-
-    proc = SessionProcessor(gap_minutes=30)
-    h = StubHandle()
-    proc.init(h)
-
-    base = pd.Timestamp("2024-01-01 00:00:00")
-    gap = pd.Timedelta(minutes=31)
-    df = pd.DataFrame({
-        "ts": [base, base + pd.Timedelta(minutes=5), base + pd.Timedelta(minutes=5) + gap],
-        "value": [1.0, 2.0, 4.0],
-    })
-    out = pd.concat(list(proc.handleInputRows((7,), iter([df]), None)))
-    # first session (2 events) closed in-batch; third event stays open
-    assert len(out) == 1
-    assert out.iloc[0].n_events == 2 and out.iloc[0].total_value == 3.0
-    assert h.state.exists() and h.state.get()[2] == 1  # open session n=1
-    assert len(h.timers) == 1  # flush timer registered for the open one
-
-    # extending the session replaces the timer (no leak)
-    df2 = pd.DataFrame({"ts": [df.ts.iloc[2] + pd.Timedelta(minutes=1)], "value": [8.0]})
-    out2 = pd.concat(list(proc.handleInputRows((7,), iter([df2]), None)))
-    assert len(out2) == 0 and len(h.timers) == 1
-    assert h.state.get()[2] == 2
-
-    # timer expiry flushes and clears
-    out3 = pd.concat(list(proc.handleExpiredTimer((7,), None, None)))
-    assert len(out3) == 1 and out3.iloc[0].n_events == 2
-    assert out3.iloc[0].total_value == 12.0
-    assert not h.state.exists()
-
-
-def test_tws_out_of_order_event_does_not_regress_session_end():
-    """A late event in a LATER micro-batch (within watermark) with
-    t < the stored session end must fold into the session WITHOUT
-    moving the end (or the flush timer) backwards."""
-    import pandas as pd
-
-    from blockchair_etl_spark.streaming.sessionize_tws import SessionProcessor
-
-    class StubState:
-        def __init__(self):
-            self.v = None
-        def exists(self):
-            return self.v is not None
-        def get(self):
-            return self.v
-        def update(self, v):
-            self.v = v
-        def clear(self):
-            self.v = None
-
-    class StubHandle:
-        def __init__(self):
-            self.state = StubState()
-            self.timers = []
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-        def registerTimer(self, ts):
-            self.timers.append(ts)
-        def deleteTimer(self, ts):
-            self.timers.remove(ts)
-
-    proc = SessionProcessor(gap_minutes=30)
-    h = StubHandle()
-    proc.init(h)
-
-    base = pd.Timestamp("2024-01-01 00:00:00")
-    df1 = pd.DataFrame({"ts": [base, base + pd.Timedelta(minutes=10)], "value": [1.0, 2.0]})
-    list(proc.handleInputRows((7,), iter([df1]), None))
-    end_before = h.state.get()[1]
-    timer_before = h.timers[-1]
-
-    # late arrival: 5 min < the stored 10-min end
-    late = pd.DataFrame({"ts": [base + pd.Timedelta(minutes=5)], "value": [4.0]})
-    out = pd.concat(list(proc.handleInputRows((7,), iter([late]), None)))
-    assert len(out) == 0  # merged, not split
-    start, end, n, total, timer_ms = h.state.get()
-    assert end == end_before  # end NOT regressed
-    assert n == 3 and total == 7.0
-    assert h.timers[-1] == timer_before  # flush timer unchanged
-
-
-def test_tws_late_event_lowers_session_start_or_splits():
-    """Batch-parity for EARLY late events (r6 advice): an event within
-    gap BEFORE the stored session start lowers session_start (min, the
-    mirror of the max-end rule); one more than gap before the stored
-    start can never merge (nearest session event is `start`), so it
-    must come out as its own earlier session — not be folded into the
-    stored one as the pre-r7 max(end, t) arithmetic did."""
-    import pandas as pd
-
-    from blockchair_etl_spark.streaming.sessionize_tws import SessionProcessor
-
-    class StubState:
-        def __init__(self):
-            self.v = None
-        def exists(self):
-            return self.v is not None
-        def get(self):
-            return self.v
-        def update(self, v):
-            self.v = v
-        def clear(self):
-            self.v = None
-
-    class StubHandle:
-        def __init__(self):
-            self.state = StubState()
-            self.timers = []
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-        def registerTimer(self, ts):
-            self.timers.append(ts)
-        def deleteTimer(self, ts):
-            self.timers.remove(ts)
-
-    proc = SessionProcessor(gap_minutes=30)
-    h = StubHandle()
-    proc.init(h)
-
-    base = pd.Timestamp("2024-01-01 02:00:00")
-    df1 = pd.DataFrame({"ts": [base, base + pd.Timedelta(minutes=10)], "value": [1.0, 2.0]})
-    list(proc.handleInputRows((7,), iter([df1]), None))
-    start_before, end_before = h.state.get()[0], h.state.get()[1]
-
-    # within gap before the stored START: merge and LOWER the start
-    early = pd.DataFrame({"ts": [base - pd.Timedelta(minutes=20)], "value": [4.0]})
-    out = pd.concat(list(proc.handleInputRows((7,), iter([early]), None)))
-    assert len(out) == 0
-    start, end, n, total, _timer = h.state.get()
-    assert start == start_before - 20 * 60 * 1_000_000  # start lowered
-    assert end == end_before and n == 3 and total == 7.0
-
-    # more than gap before the (new) start: a SEPARATE earlier session
-    lone = pd.DataFrame({"ts": [base - pd.Timedelta(minutes=80)], "value": [8.0]})
-    out2 = pd.concat(list(proc.handleInputRows((7,), iter([lone]), None)))
-    assert len(out2) == 1 and out2.iloc[0].n_events == 1
-    assert out2.iloc[0].total_value == 8.0
-    s2 = h.state.get()
-    assert (s2[0], s2[1], s2[2]) == (start, end, 3)  # stored one untouched
-
-
 def test_apiws_late_event_lowers_session_start_or_splits():
-    """Same early-late-event batch parity for the
-    applyInPandasWithState twin."""
+    """Batch parity for EARLY late events in the applyInPandasWithState
+    sessionizer: an event within gap BEFORE the stored session start
+    lowers session_start (min, the mirror of the max-end rule); one more
+    than gap before the stored start can never merge (nearest session
+    event is `start`), so it comes out as its own earlier session."""
     import pandas as pd
 
     from blockchair_etl_spark.streaming.sessionize import _sessionize_group
@@ -850,8 +616,10 @@ def test_apiws_late_event_lowers_session_start_or_splits():
 
 
 def test_apiws_out_of_order_event_does_not_regress_session_end():
-    """Same late-event rule for the applyInPandasWithState twin, driven
-    directly through the group function with a stub GroupState."""
+    """An out-of-order event inside the open session merges without
+    regressing session_end or moving the flush timeout; driven directly
+    through the applyInPandasWithState group function with a stub
+    GroupState."""
     import pandas as pd
 
     from blockchair_etl_spark.streaming.sessionize import _sessionize_group

@@ -75,6 +75,45 @@ def test_pagerank_malformed_persist_threshold_warns_and_ranks(spark):
     assert got == want
 
 
+def test_pagerank_size_estimate_failure_warns_and_keeps_gate_off(
+    spark, tmp_path, monkeypatch
+):
+    """When the JVM plan call behind the edge-size estimate fails, the
+    vertex persist stays off even under a threshold that would turn it
+    on, the ranks match the normal run, and the fallback warns."""
+    from py4j.protocol import Py4JError
+
+    import blockchair_etl_spark.caching as caching
+
+    spark.createDataFrame(
+        [(i, (i * 7 + 3) % 20) for i in range(40)], ["src", "dst"]
+    ).write.mode("overwrite").parquet(str(tmp_path / "edges"))
+    edges = spark.read.parquet(str(tmp_path / "edges"))
+
+    def run():
+        df = pagerank_fixed_point(edges, iterations=2)
+        rows = {r.vertex: r.rank_s for r in df.collect()}
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        caching.release_tracked()
+        return rows, plan.count("InMemoryTableScan")
+
+    want_rows, want_inmem = run()
+
+    def broken_plan(df, stage="analyzed"):
+        raise Py4JError("plan API unavailable")
+
+    monkeypatch.setattr(caching, "jvm_plan", broken_plan)
+    key = "spark.blockchair.graph.vertexPersistMinBytes"
+    spark.conf.set(key, "1")
+    try:
+        with pytest.warns(RuntimeWarning, match="edge size estimate failed"):
+            got_rows, got_inmem = run()
+    finally:
+        spark.conf.unset(key)
+    assert got_rows == want_rows
+    assert got_inmem == want_inmem
+
+
 def test_pagerank_deterministic_and_bounded(spark):
     edges = spark.createDataFrame(
         [(i, (i * 7 + 3) % 20) for i in range(40)] + [(i % 20, (i * 3) % 20) for i in range(40)],

@@ -12,6 +12,7 @@ from blockchair_etl_spark.io.extract import (
     ConfigError,
     DownloadConfig,
     clean_old_files,
+    download_daily,
     download_file,
     dump_url,
     load_download_config,
@@ -53,25 +54,26 @@ def test_parse_dump_filename():
     assert parse_dump_filename("random.csv") is None
 
 
+class FakeResp:
+    def __init__(self, data):
+        self.data = [data, b""]
+
+    def read(self, n):
+        return self.data.pop(0)
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *a):
+        return False
+
+
 def test_dump_url_and_download_retry(tmp_path):
     cfg = DownloadConfig(api_key="k")
     url = dump_url(cfg, "blocks", date(2025, 8, 12))
     assert url.endswith("bitcoin/blocks/blockchair_bitcoin_blocks_20250812.tsv.gz?key=k")
 
     calls = {"n": 0}
-
-    class FakeResp:
-        def __init__(self, data):
-            self.data = [data, b""]
-
-        def read(self, n):
-            return self.data.pop(0)
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
 
     def flaky_opener(url, timeout):
         calls["n"] += 1
@@ -98,6 +100,35 @@ def test_dump_url_and_download_retry(tmp_path):
             download_file(url, tmp_path / "g.gz", _opener=dead_opener)
     finally:
         ex.BACKOFF_MIN_SECS = orig_min
+
+
+def test_download_daily_lands_one_file_per_type(tmp_path):
+    """Stage 1 as one call: one dump URL fetched per data type into
+    landing/<coin>/<type>/, and with skip_existing a file already
+    landed is returned without opening its URL."""
+    cfg = DownloadConfig(landing_dir=str(tmp_path / "landing"))
+    day = date(2025, 8, 12)
+    urls = []
+
+    def opener(url, timeout):
+        urls.append(url)
+        return FakeResp(url.encode())
+
+    got = download_daily(cfg, day, _opener=opener)
+    assert got == [
+        tmp_path / "landing" / "bitcoin" / t / f"blockchair_bitcoin_{t}_20250812.tsv.gz"
+        for t in ("blocks", "transactions", "inputs", "outputs")
+    ]
+    assert urls == [dump_url(cfg, t, day) for t in cfg.data_types]
+    assert [p.read_bytes() for p in got] == [u.encode() for u in urls]
+
+    def refusing_opener(url, timeout):
+        raise AssertionError(f"opened {url} although the file is landed")
+
+    got[0].write_bytes(b"landed earlier")
+    blocks_only = DownloadConfig(landing_dir=cfg.landing_dir, data_types=("blocks",))
+    assert download_daily(blocks_only, day, _opener=refusing_opener) == [got[0]]
+    assert got[0].read_bytes() == b"landed earlier"
 
 
 def test_retention_sweep_landing(tmp_path):

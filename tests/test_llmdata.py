@@ -2155,15 +2155,6 @@ def test_incremental_minhash_dedup(spark, docs):
     assert "ResolvedHint" in updated._jdf.queryExecution().analyzed().toString()
 
 
-def test_pandas_udf_cosine_matches_expression_fold(spark, emb):
-    qv = [float(v) for v in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    expr_rows = sim.cosine_topk(emb, qv, k=10).collect()
-    udf_rows = sim.cosine_topk_pandas_udf(emb, qv, k=10).collect()
-    assert [r.vec_id for r in udf_rows] == [r.vec_id for r in expr_rows]
-    for a, b in zip(udf_rows, expr_rows):
-        assert abs(a.cosine - b.cosine) < 1e-9
-
-
 def test_repetition_stats_edge_cases(spark):
     from blockchair_etl_spark.llmdata.text import repetition_stats
 

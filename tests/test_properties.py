@@ -163,71 +163,6 @@ def test_sketch_hash_spark_matches_python(spark):
             assert rows[k][f"c{i}"] == _py_pos(k, a, b, CMS_PRIME, 256)
 
 
-# --- dump-source date pruning: pruning must equal brute-force filtering ---
-
-import datetime as _dt
-import os as _os
-import tempfile as _tempfile
-
-from pyspark.sql.datasource import (
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    LessThan,
-    LessThanOrEqual,
-)
-from pyspark.sql.types import StructType
-
-_EMPTY_DIR = _tempfile.mkdtemp(prefix="dump_prune_prop_")
-
-_dates = st.dates(
-    min_value=_dt.date(2020, 1, 1), max_value=_dt.date(2025, 12, 31)
-)
-_ops = st.sampled_from(
-    [EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual]
-)
-_date_filters = st.lists(
-    st.tuples(_ops, _dates).map(lambda t: t[0](("dump_date",), t[1])),
-    max_size=4,
-)
-
-
-def _sat(op, file_date, bound):
-    if isinstance(op, EqualTo):
-        return file_date == bound
-    if isinstance(op, GreaterThan):
-        return file_date > bound
-    if isinstance(op, GreaterThanOrEqual):
-        return file_date >= bound
-    if isinstance(op, LessThan):
-        return file_date < bound
-    return file_date <= bound
-
-
-@settings(max_examples=200, deadline=None)
-@given(_date_filters, st.lists(_dates, min_size=0, max_size=8, unique=True))
-def test_dump_reader_pruning_equals_brute_force(filters, file_dates):
-    from blockchair_etl_spark.io.datasource import BlockchairDumpReader
-
-    reader = BlockchairDumpReader(
-        StructType.fromDDL("hash string"), {"path": _EMPTY_DIR}
-    )
-    reader.files = [
-        (f"/x/blockchair_btc_tx_{d.strftime('%Y%m%d')}.tsv.gz", d.strftime("%Y%m%d"))
-        for d in sorted(file_dates)
-    ]
-    leftover = list(reader.pushFilters(list(filters)))
-    # every date filter is consumed (none re-evaluated by Spark)
-    assert leftover == []
-    kept = {p.yyyymmdd for p in reader.partitions() if p.path}
-    want = {
-        d.strftime("%Y%m%d")
-        for d in file_dates
-        if all(_sat(f, d, f.value) for f in filters)
-    }
-    assert kept == want
-
-
 # ---------------------------------------------------------------------------
 # Round-6 selection operators: budget-selection and split-leakage
 # invariants over arbitrary corpora.
