@@ -1005,11 +1005,19 @@ def minhash_cross_pairs(
     loop; a store seeded with never-connected identical docs would
     need one bootstrap pass of minhash_pairs_from_store over it."""
 
+    # Each side carries its signature as ONE array column. Sixteen
+    # per-column renames (m_i AS b_i) over a store whose bands/sig_key
+    # columns are expressions of every m_i made the optimizer's
+    # constraint propagation double its constraint set once per rename:
+    # planning the capped probe took 15-45 s at any input size. Indexed
+    # element reads keep the match count codegen'd.
+    sig_cols = [F.col(f"m{i}") for i in range(num_hashes)]
+
     def banded(s: DataFrame, prefix: str) -> DataFrame:
         return s.select(
             F.col("doc").alias(f"{prefix}_doc"),
             F.posexplode("bands").alias("band_idx", "band_key"),
-            *[F.col(f"m{i}").alias(f"{prefix}{i}") for i in range(num_hashes)],
+            F.array(*sig_cols).alias(f"{prefix}_sig"),
         )
 
     a = banded(new_store, "a")
@@ -1025,41 +1033,35 @@ def minhash_cross_pairs(
         )
         # a store-borne sig_key column (the write-once narrow-scan
         # optimization — see minhash_pairs_from_store's IO note) rides
-        # the banded explode; derive inline from the m-columns otherwise
+        # the banded explode; derive inline from the signature otherwise
+        # (concat_ws over the array joins the same strings as over the
+        # m-columns)
         if "sig_key" in store.columns:
             keyed = store.select(
                 F.col("doc").alias("b_doc"),
                 F.col("sig_key").alias("__sig_key"),
                 F.posexplode("bands").alias("band_idx", "band_key"),
-                *[F.col(f"m{i}").alias(f"b{i}") for i in range(num_hashes)],
+                F.array(*sig_cols).alias("b_sig"),
             )
         else:
             keyed = b.select(
-                "*",
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.col(f"b{i}") for i in range(num_hashes)]
-                    )
-                ).alias("__sig_key"),
+                "*", F.md5(F.concat_ws("|", F.col("b_sig"))).alias("__sig_key")
             )
         marked = keyed.join(
             F.broadcast(big_keys), ["band_idx", "band_key"], "left"
         )
         small = marked.filter(F.col("__big").isNull()).drop("__big", "__sig_key")
-        # min() per column is deterministic here: every column is
-        # constant within a (band, signature) group except b_doc
+        # min() per column is deterministic here: the signature is
+        # constant within a (band, signature) group, only b_doc varies
         reps = (
             marked.filter(F.col("__big").isNotNull())
             .groupBy("band_idx", "band_key", "__sig_key")
-            .agg(
-                F.min("b_doc").alias("b_doc"),
-                *[F.min(f"b{i}").alias(f"b{i}") for i in range(num_hashes)],
-            )
+            .agg(F.min("b_doc").alias("b_doc"), F.min("b_sig").alias("b_sig"))
             .drop("__sig_key")
         )
         b = small.unionByName(reps.select(*small.columns))
     matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        F.when(F.col("a_sig")[i] == F.col("b_sig")[i], 1).otherwise(0)
         for i in range(num_hashes)
     )
     return (

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.storagelevel import StorageLevel
 
 from .ivf import seed_centroids, train_ivf_centroids
 from .stats import lit_double_array, lit_double_array2d
@@ -169,20 +170,31 @@ def train_pq_codebooks(
 ) -> np.ndarray:
     """Per-subspace Lloyd k-means, reusing ivf.train_ivf_centroids on
     the sliced subvector relation — m independent small trainings, each
-    with the ivf driver-traffic bound (O(ksub) rows per round)."""
+    with the ivf driver-traffic bound (O(ksub) rows per round).
+
+    The m trainings run a seed count and collect plus two jobs per
+    round each, so an unmaterialized input is re-derived by every one
+    of them — for a residual_frame input that is the coarse
+    exact-decimal argmin, recomputed ~30 times at m=4 (measured 121 s
+    vs 14 s over 500 × 64-dim vectors). The two columns the trainings
+    read are persisted once and freed when the codebooks are built."""
     dsub = _check_geometry(dim, m)
+    src = emb.select(id_col, vec_col).persist(StorageLevel.MEMORY_AND_DISK)
     books = []
-    for j in range(m):
-        sub = emb.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), j * dsub + 1, dsub).alias(vec_col),
-        )
-        books.append(
-            train_ivf_centroids(
-                sub, n_centroids=ksub, iterations=iterations,
-                id_col=id_col, vec_col=vec_col,
+    try:
+        for j in range(m):
+            sub = src.select(
+                F.col(id_col),
+                F.slice(F.col(vec_col), j * dsub + 1, dsub).alias(vec_col),
             )
-        )
+            books.append(
+                train_ivf_centroids(
+                    sub, n_centroids=ksub, iterations=iterations,
+                    id_col=id_col, vec_col=vec_col,
+                )
+            )
+    finally:
+        src.unpersist()
     return np.stack(books)
 
 
