@@ -1,606 +1,40 @@
 #!/usr/bin/env python3
-"""Headline-query benchmark.
+"""Headline-query benchmark, and the timing loop bench_scaling.py shares.
 
-Runs the engine's headline queries at $SPARK_GRAFT_SF_DIR (default
+Times the engine's headline entries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints the
-per-query timings as several short self-describing JSON chunk lines
-({"metric": "headline_queries_chunk", ...}) followed by ONE compact
-scalar summary line ({"metric": "headline_total_wall", "value":
-total_sec, ...}) — the summary comes LAST so the driver's stdout tail
-capture always keeps it (see the r8 note below).
+per-entry timings. ``python bench.py --compare OLD.json NEW.json``
+compares two records instead (see compare_records).
 
-Each query executes its full plan into the no-op sink (distributed
-execution, no driver collect) — wall time measures scan → shuffle →
-aggregate work, not result serialization. Per-query time is the MEDIAN
-of $SPARK_GRAFT_BENCH_RUNS (default 3) runs: run 1 absorbs codegen +
-parquet-footer warmup (~1-2 s on the heavy queries), and run-to-run
-variance on a shared box is ±15%, so a single sample can't support
-round-over-round comparisons.
+Methodology, and why:
 
-METHODOLOGY CHANGE (r6): plan-level persists are now RELEASED between
-runs (caching.release_tracked), so every run — and therefore the
-median — measures the full COLD plan. Before r6, run 1's persisted
-intermediates (minhash signatures, corpus-prep stages, incremental
-stores) stayed cached and runs 2-3 hit them, so the reported medians
-for those ~10 queries understated the one-shot cost by 2-10x (e.g.
-corpus_prep_v2 0.97s reported vs 10.7s cold; dedup_minhash_lsh 0.98s
-vs 4.4s). r5→r6 deltas on persisting queries are this accounting fix,
-not regressions; r6 is the honest baseline going forward.
-
-r7 ATTRIBUTION of the three r6 non-persisting outliers (each measured
-isolated: fresh session, 5 runs, no dedup neighbors, same box):
-- graph_triangle_count: 0.69-0.79 s isolated vs 0.94 s in-sequence —
-  fully recovers to the r5 level, so the r6 reading was in-sequence
-  neighbor contention from the (now-cold) dedup queries sharing the
-  session, not a regression.
-- q21_sole_late_supplier (~1.39 s isolated) and
-  q9_profit_by_nation_year (~0.86 s isolated): reproduce ~30% above r5
-  even isolated. Their query bodies and every shared plan path are
-  byte-identical since r5 (git-verified) and the 49-query common-cohort
-  median moved only +3%, so this is not an engine change: the driver
-  regenerates /root/testdata each round, and these two are the most
-  join-selectivity-sensitive plans in the headline set (multi-semi/anti
-  join on lineitem). Treat their r6/r7 numbers as the baseline for the
-  current data generation.
-
-r8 ATTRIBUTION of the r7 token-budget regressions (r7 verdict #2):
-corpus_token_budget +88% and corpus_prep_v3_pipeline +44% in r7 were
-the price of the unconditional id-band hardening in
-quality_budget_select: phase 2 always ran its (score, band)
-aggregation + window, and the doc relation was joined TWICE (once
-against band_cum, once against score_cum — two doc-side shuffles).
-r8 fix: (a) banding is now gated in-plan on n div ndv(score) from the
-same broadcast scalars aggregation (approx_count_distinct rides the
-budget/min/max pass), so high-cardinality scores — both these
-queries — skip the inert band work; (b) the two tiny cumulative
-relations merge first and hit the docs in ONE join. Measured isolated
-(fresh session, 5 runs, median, same box, old vs new code on the same
-data generation): corpus_token_budget 1.565 -> 1.243 s (-21%),
-corpus_prep_v3_pipeline 1.910 -> 1.303 s (-32%). Both runtime paths
-remain bit-identical to the single-window oracle (pytest
-test_quality_budget_adaptive_band_paths_identical + the coarse-score
-property test, which now forces the banded path with
-band_threshold_rows=0).
-
-r9 ATTRIBUTION of quality_gopher_gate (+28% in r8, 0.35->0.45 s,
-r8 verdict "What's wrong" #1): the one concrete hypothesis — the gate
-lacking the fanout_parallel widening its sibling repetition_stats got —
-was TESTED and REJECTED by isolated A/B (fresh session, 5 runs, median,
-r9 data generation): unwidened 0.526 s vs widened 0.693 s (+32% WORSE).
-The sf0.1 corpus is one 584 KB parquet file, so the gate runs its whole
-compute single-threaded in ~0.5 s — too cheap to amortize the full-text
-payload shuffle the widening adds; repetition_stats qualified because
-its single-threaded cost was 4.16 s. The widening stays off
-(gopher_quality_gate docstring records the rule refinement:
-per-partition compute must exceed the payload-shuffle cost, not merely
-dominate the scan). The r8 +28% itself sits inside the documented >30%
-run-to-run spread on sub-0.5 s queries across data generations — noise,
-not a regression; the isolated unwidened median (0.526) is the r9
-baseline.
-
-r9 SHAPE A/B of corpus_prep_v4_pipeline (before first bench record):
-the first composition persisted a model_kept stage between the
-classifier and the Gopher gate (filter -> materialize -> gate), which
-re-materialized the full normalized text a second time. The classifier
-and the gate are both per-row predicates on the same relation, so they
-evaluate independently and intersect in ONE join round. Measured
-isolated (fresh session, 5 runs, median, same data generation):
-staged 6.588 s -> intersected 4.430 s (-33%), output bit-identical to
-the oracle on both shapes. BENCH_DETAIL.json records the intersected
-shape.
-
-r9 ATTRIBUTION of dedup_best_quality_survivors (r8 watch item: 3.18 s
-after +11% in r8): r9 readings 3.24 / 3.53 in-sequence (two serialized
-full-bench runs, same code), 3.962 isolated (fresh session, 5 runs,
-median; samples 3.5-4.3). Every file in its path (dedup.py,
-clusters.py, text.py code) is byte-identical since r8 modulo
-docstrings (git-verified a1b1757..HEAD), and the isolated reading
-EXCEEDS the in-sequence ones — the ordering noise-dominated queries
-show, not a plan change. The LSH -> verify -> CC -> window chain runs
-~10 driver-iterated jobs whose per-job scheduling overhead is the
-documented spread source for this family (±15% across identical runs
-here). Baseline for the r9 data generation: ~3.5 s.
-
-r9 CC LOCAL-FINISH A/B (after the first r9 bench record): the
-connected-components loop costs ~4 shuffle stages per round regardless
-of graph size, and the near-dup edge sets at bench scale are tiny (97k
-directed edges for media, ~7 rounds to converge = ~5 s of pure
-scheduling tax). connected_clusters now counts the persisted edge
-relation (work round 0 paid anyway) and, at <= 2M edges, resolves
-components in ONE executor-side union-find task (mapInPandas, Kiveris
-et al. SoCC'14 "finish small graphs locally"); the distributed
-pointer-doubling loop is unchanged and remains the >2M-edge path.
-Measured warm-session, median-of-3, vs the committed r9
-BENCH_DETAIL.json readings: media_dedup_survivors 6.756 -> 2.867
-(-58%), dedup_corpus_survivors 3.536 -> 2.143 (-39%),
-dedup_best_quality_survivors 3.529 -> 2.872 (-19%),
-dedup_connected_clusters 2.722 -> 2.675 (flat — its cost is the
-MinHash pair generation, not the loop). Output bit-identical on both
-paths (parity + union-find-reference pytest).
-
-r9 FINAL-RECORD note (end-of-round serialized rerun, total 89.48 s vs
-the mid-round record's 89.58 s): the sampling/prep family read +40-70%
-above the mid-round record in-sequence (corpus_prep_v2 1.28 -> 2.21,
-corpus_token_budget 0.66 -> 1.02, sample_cluster_balanced 0.64 -> 0.94,
-sample_leakage_safe_split 0.36 -> 0.53). A/B'd isolated (fresh session,
-5 runs, median, SAME data generation, old commit via worktree vs HEAD):
-HEAD is equal-or-faster on 3 of 4 (prep_v2 1.93 -> 1.72,
-cluster_balanced 0.87 -> 0.80, leakage_safe 0.50 -> 0.46; token_budget
-0.81 -> 0.98, inside the sub-second spread band). No code in their
-paths changed — the mid-round record was taken in a quieter box state;
-the end-of-round record is the honest r9 baseline. The survivor-family
-drops in the same rerun (media -58%, corpus -49%, cc -30%) are the CC
-local-finish landing after the mid-round record, matching its A/B
-above.
-
-r9 SPREAD evidence (same code, same data, serialized runs hours
-apart): the full 77-query headline read 89.5, then 96.5, then 103.4 s
-across the session — a monotonic ~8% box drift with no code change
-between runs. Round-over-round totals carry at least this much
-environment noise; per-query attribution (isolated 5-run A/B) remains
-the only comparison this repo treats as evidence.
-
-r9 FULL-SWEEP finding (SPARK_GRAFT_BENCH_ALL=1, runs=2, final r9 code,
-165 timed queries, 358 s total): one outlier — dedup_bow_cosine at
-157 s, dwarfing everything else. Expected, not a regression: that
-entry runs the exact UNBOUNDED pair form (its oracle is every pair at
-cos >= 0.99) on the driver corpus whose 31-term vocabulary gives the
-df bound nothing to prune, so the term-keyed self-join is effectively
-quadratic there — the documented adversarial fixture that motivated
-the Zipf-vocab bench (dedup_bow_cosine_zipf, 3.0 s, where max_df
-prunes as designed). Norm-ratio prefiltering cannot tighten the exact
-form (cosine is scale-invariant, so norm ratios do not bound it); the
-deployed 100 TB shape remains df-bounded candidates + exact rescore.
-Every other non-headline entry read under 9 s, the slowest being the
-two recall-instrumentation entries that carry brute-force ground
-truth by design.
-
-r10 BOX-SPEED CANARY (methodology): every record now carries
-"canary_pre_sec" / "canary_post_sec" — the median-of-3 wall time of a
-FIXED, data-independent, CPU-bound workload
-(spark.range(4B).sum(xxhash64(id)), one shuffle-free whole-stage
-codegen scan over all local[*] cores) measured immediately after
-session warmup and again after the last timed query. The canary reads
-no files and allocates no caches, so its time moves ONLY with box
-state (CPU contention from neighbors, thermal/cgroup throttling).
-Interpretation rule for cross-record comparisons: a per-query move
-with a flat canary ratio is evidence of a real plan/code change; a
-move that tracks the canary ratio is the box. The r8->r9 driver
-records diverged 37% on byte-identical code with only circumstantial
-environment evidence (the three >2x movers below) — the canary makes
-that attribution falsifiable going forward. No backfill: the record
-starts at r10.
-
-r10 ATTRIBUTION of the three >2x r8->r9 driver-record movers
-(text_chunking 0.54->2.12, winsorize_values 0.35->0.98,
-text_line_dedup 1.14->2.38; r9 verdict "What's wrong" #1): measured
-isolated (fresh session per query, 5 runs, median, r10 data
-generation, canary-bracketed): text_chunking 0.843 s (samples
-0.62-1.16), winsorize_values 0.650 s (0.52-0.77), text_line_dedup
-1.922 s (1.64-2.33). All three sit 1.2-2.5x BELOW their r9 driver
-readings on code whose text family is byte-identical since r8
-(git-verified: last text.py change is the r9 gopher-gate attribution
-commit, docstring-only for these paths). The decisive new evidence is
-the canary itself: across these three back-to-back sessions the FIXED
-CPU-only canary read 0.39-1.09 s — a 2.8x spread on a workload that
-cannot regress by code — and the slowest query reading (line_dedup,
-canary_pre 1.09) coincided with the slowest box state. Box-state
-drift of the disputed magnitude is directly observed on this machine;
-the r9 driver readings were taken during exactly such a window (the
-committed same-code BENCH_DETAIL.json already read text_chunking 0.59
-vs the driver's 2.12 on identical code+data). Closed: box state, not
-regressions; future records carry the canary so this attribution is a
-ratio check instead of a forensic exercise.
-
-r10 SPREAD record (two serialized same-code 78-query runs, ~25 min
-apart): totals 80.37 -> 95.45 s (+19%) while the canary read
-0.634/0.562 then 0.650/0.641 (+8% at most). Reading: roughly half the
-total spread tracks raw box speed (canary), the rest is scheduling
-jitter concentrated in the multi-job driver-iterated dedup family —
-consistent with every prior round's spread note. Both records carry
-the canary, so the DRIVER's r10 record can now be normalized against
-whichever box state it lands in; the committed BENCH_DETAIL.json is
-the second (slower) run, the conservative same-code baseline.
-
-r8 ATTRIBUTION of corpus_shuffle_shards (+39% in r7, small absolute):
-measured isolated on the r8 data generation at 0.179 s, within noise
-of its r6 0.146 s reading (run-to-run spread on sub-0.2 s queries
-exceeds 30% on a shared box); no code in its path changed in r7
-(git-verified) — in-sequence neighbor contention, not a regression.
-
-r11 CANARY-NORMALIZED COMPARISON (methodology, r10 verdict #2): from
-r10 on, every record carries canary_pre/post_sec, so cross-record
-per-query comparison is now a RATIO CHECK instead of a forensic
-exercise. The recorded procedure (implemented as
-`python bench.py --compare OLD.json NEW.json`, both BENCH_DETAIL-shape
-records):
-  1. canary_ratio = median(new canary pre/post) /
-     median(old canary pre/post) — the box-speed change between the
-     two records.
-  2. For each common query, normalized_ratio = (new_t / old_t) /
-     canary_ratio — the per-query move with the box-speed change
-     divided out.
-  3. The common-cohort MEDIAN of normalized ratios is the
-     round-over-round verdict (code drift if it moves past ~±10%);
-     individual queries are flagged only when their NORMALIZED ratio
-     leaves [1/1.25, 1.25] — a raw mover whose normalized ratio is
-     flat was the box, full stop.
-  4. Only flagged survivors earn the isolated 5-run canary-bracketed
-     A/B. Data-generation drift (the driver regenerates /root/testdata
-     each round) still rides the normalized numbers — the canary
-     measures CPU speed, not selectivity — so join-selectivity-
-     sensitive flags (q21/q9 family) are checked against the data
-     drift note before any A/B.
-r11 CLOSURE of the four r10 watch-list movers (ann_knn_join 2.23->3.12,
-dedup_incremental_embedding 1.32x, dedup_incremental_minhash 1.32x,
-dedup_bow_cosine_zipf 1.27x in the r9->r10 driver records; r10 verdict
-"What's wrong" #1): the FIRST canary-normalized cross-record
-comparison (--compare, driver r10 record canary 0.907/0.586 vs the
-r11 session record canary 0.851/0.594) read canary_ratio 0.968 —
-box CPU speed essentially flat — with normalized common-cohort median
-0.876 over 78 queries and ZERO queries flagged on the slow side. All
-four watch-list movers reverted to at-or-below their committed
-same-code baselines with no change to their timed plans (ann_knn_join
-3.124 -> 1.722, normalized 0.57; dedup_incremental_minhash 2.212 ->
-1.341, 0.63; dedup_incremental_embedding 2.749 -> 1.816, 0.68;
-dedup_bow_cosine_zipf 3.275 -> 2.747, 0.84 — inside the band).
-CLOSED as box state, the same shape as the three r9 movers that
-reverted in r10. Residual methodology note: the broad ~12% normalized
-speedup on a flat canary shows the canary captures CPU speed but not
-SCHEDULER contention (it is one job; the multi-job dedup family is
-where the spread concentrates) — the normalized median is therefore a
-lower bound on environment noise, and the flag band stays at 1.25x.
-
-r12 SCHED-NORMALIZED COMPARISON (first use of sched_closed, r11
-verdict #2): driver r11 record (canary 0.702/0.613, sched 2.172/1.409)
-vs the r12 session record (canary 0.932/0.593 — a 1.57x IN-RECORD
-swing, the box degraded mid-run; sched 1.454/1.249): canary_ratio
-1.16, normalized common-cohort median 1.031 over 80 queries — r12
-code is flat round-over-round. quality_gopher_gate (r11 "What's
-wrong" #1, 1.41x raw with text.py untouched) CLOSED exactly as
-predicted: 0.688 -> 0.503 s, sched_normalized 0.969 — dead flat once
-the scheduler component divides out; the closure used the new
-sched_closed path (flagged fast-side by the CPU canary, absolute
-delta 0.185 s inside the 0.7 s sched-canary swing). The 12 slow-side
-normalized movers all have r12-untouched code paths (q9/q18/q21 are
-the documented data-drift family — the driver regenerated testdata
-between the records); isolated canary-bracketed 5-run A/Bs on the
-worst three: q9 0.982 s (vs 1.254 in-sweep), text_tfidf_topk 1.149
-(vs 1.278), dedup_embedding_lsh_blocked 2.119 (vs 2.185) — all at or
-under their sweep readings on a still-slow box (canary 0.85-0.99 vs
-r11's 0.70), box state + data drift, no code regression.
-
-r12 ATTRIBUTION of the joint-dedup in-sweep delta (r11 stretch #8:
-5.6 s in the r11 168-query full sweep vs 3.2 s headline): isolated
-5-run canary-bracketed A/B of multimodal_joint_dedup_survivors read
-MEDIAN 4.892 s in a FRESH session (first run 10.1 s) vs 2.975 s
-in-sequence in the same-day headline record — the delta runs the
-WRONG direction for a leaked persist (a leak would slow the in-sweep
-side), and tracks JVM/JIT warmup instead: the composition is CC-heavy
-(many small jobs), so a warmed JVM (80 queries of codegen/JIT before
-it) runs it ~1.6x faster than a cold one. Not order-sensitive, no
-leak; the r11 full-sweep 5.6 s reading was runs=2 neighbor contention
-on top of the same effect. CLOSED.
-
-r12 STRATEGY-CHANGE A/B of dedup_incremental_minhash (the one timed
-entry whose plan changed this round — minhash_cross_pairs now FORCES
-the batch side's broadcast instead of trusting AQE size estimation):
-isolated 5-run canary-bracketed median 1.915 s (canary 0.74-0.85) vs
-the r11 driver's 1.431 s (canary 0.70) — normalized ~1.19, inside the
-band and consistent with --compare not flagging it. At sf0.1 the hint
-costs nothing measurable (AQE was already choosing broadcast on the
-small fixture); what it buys is determinism at scale — a conservative
-store-side size stat can no longer flip the probe into shuffling the
-corpus-sized band store. KEPT.
-
-r14 CLOSURE of the r13 driver-record movers (r13 verdict "What's
-wrong" #1): sched-normalized --compare of the committed r12 driver
-record (canary 0.682, sched 1.909) vs the committed r13 driver record
-(canary 0.679→0.563, sched 2.079→1.159): canary_ratio 1.045,
-sched_ratio 0.995 pre-to-pre, normalized common-cohort median 1.071
-over 81 queries with 29 nominal movers — the broad shallow lift of a
-slower-sched box, not a code signature (all three git-verified-
-unchanged modules). Three survivors crossed the 0.5 s absolute bar
-and earned the isolated canary-bracketed 5-run A/B (canary 0.641/
-0.581, sched 1.713/1.538 — a faster box than either record):
-multimodal_joint_dedup_survivors median 4.429 s (10.34 warmup then
-4.64/4.43/4.21/4.36) — BETWEEN the r12 record's 3.14 and the r13
-record's 5.00, the same first-run-2.3x JVM/CC warmup signature as
-every prior joint-dedup A/B; corpus_prep_v3_pipeline 3.101 s
-(4.44 warmup then 3.25/3.10/3.06/2.95) vs r12 2.52 / r13 3.74 —
-again mid-envelope; media_pixel_dedup_survivors 1.946 s vs r12 1.98 /
-r13 2.59 — AT its r12 value. All three are the documented
-persist+CC/multi-stage sched-sensitive class; none reproduces its
-r13-record reading on a neutral box. CLOSED as record-box variance;
-corpus_prep_v3 also re-verifies in the r14 driver window by rotation.
-
-r14 kcenter_select RESHAPE (r13 verdict #3 asked for a loop-scope
-persist; measurement pushed further): naive per-round re-derivation
-5.357 s median at sf0.1/k=8 (8 parquet re-reads, round i re-codegens
-i 64-dim DECIMAL distance terms); + loop persist 4.39 s (the scan was
-only ~18% — the growing expression dominates); INCREMENTAL fold
-(persisted (id, vec, __d) chain, __d = least(prev __d, dist to newest
-center) — one constant-size expression per round, O(n*k) total evals,
-DECIMAL least() associativity keeps it bit-equal to the oracle's flat
-F.least) 1.847 s median (1.67-1.89 tail rounds), identical selected
-ids. 2.9x, and the shape now survives k and dim growth.
-
-r13 SCHED-NORMALIZED COMPARISON (r12 verdict #4 — the five r12 raw
-movers): driver r12 record (canary 0.682/0.507, sched 1.909/1.346) vs
-the r13 session record (canary 0.680/0.581, sched 2.090/1.538):
-canary_ratio 1.061, sched_ratio 1.115, normalized common-cohort
-median 1.003 over 81 queries — r13 code is dead flat. ALL FIVE r12
-watch-list movers CLOSED inside the band, most on the fast side:
-text_normalize 0.853, dedup_span_removal 0.764, dedup_bow_cosine_zipf
-1.033, dedup_incremental_embedding 1.144, ann_ivfpq_topk 0.876 —
-box state, exactly as the r12 evidence predicted; no A/B needed. The
-one NEW normalized mover, graph_personalized_pagerank (1.328 norm,
-+0.38 s absolute), earned the isolated canary-bracketed 5-run A/B:
-median 1.267 s (samples 5.17 warmup, then 1.61/1.27/1.26/1.18;
-canary 0.827→0.561 in-bracket — a 1.47x swing). Attribution: the
-query's committed-record history on UNCHANGED code reads 1.219,
-1.305, 0.962, 1.190, 1.289, 0.937 — the r12 driver's 0.937 was the
-fast tail of a bimodal ~0.94-1.31 envelope and the r13 1.320 sits
-inside it; the iterative power-rounds are scheduler-dominated (many
-small jobs), the same JVM/sched sensitivity class as the joint-dedup
-note below. CLOSED as record-to-record variance, no code change in
-any pagerank path this round (git-verified).
-
-r13 MID-ROUND SWEEP-TO-SWEEP COMPARISON (two same-day session records
-on near-identical code, 96.183 s vs 106.970 s over the same 82
-queries): canary_ratio 1.048, sched_ratio 0.926, normalized
-common-cohort median 1.035 — flat. Two movers survived normalization
-(dedup_incremental_embedding 2.45x sched-norm, +2.0 s;
-dedup_best_quality_survivors 2.41x, +2.9 s) and earned the isolated
-canary-bracketed 5-run A/B: medians 2.45 s (samples 6.19 warmup then
-2.92/2.45/2.20/2.35) and 3.86 s (12.79 warmup then 3.98/3.76/3.86/
-3.71) — each BETWEEN its two sweep readings (1.58/3.58 and 2.37/5.28)
-and at the r12 driver values (2.55 / 3.00 envelope), with NEITHER
-module changed this session (git-verified: the r13 session diff
-touches unigram/ann_stream/clusters-additive/prep_stream, not
-dedup.py or connected_clusters). Both are the documented
-persist+CC-heavy JVM/sched-sensitive class (first isolated run 2.5-3x
-the median — the same warmup signature as the joint-dedup note): the
-early sweep caught their fast tail, the late sweep their slow tail.
-CLOSED as sweep-position variance; watch in the r13 driver record.
-
-r15 CLOSURE of the seven r14 driver-record movers (r14 verdict #3):
-sched-normalized --compare of the committed r13 driver record (canary
-0.679/0.563, sched 2.079/1.159) vs the committed r14 driver record
-(canary 0.708/0.569, sched 2.110/1.257): canary_ratio 1.028,
-sched_ratio 1.04, normalized common-cohort median 0.904 over 85
-queries. dedup_best_quality_survivors and dedup_bow_cosine_zipf fall
-INSIDE the normalized band (closed by normalization alone); five
-survivors crossed 0.5 s absolute and earned the isolated
-canary-bracketed 5-run A/B (canary 0.673/0.565, sched 1.801/1.509 —
-a box matching the r13 record's): ann_pq_topk median 1.829 s (3.32
-warmup then 1.87/1.79/1.83/1.74) vs r13 1.535 / r14 2.784;
-ann_ivfpq_topk 3.388 vs 3.389 / 4.571 — EXACTLY its r13 reading;
-dedup_semantic_semdedup 2.594 vs 2.618 / 3.648; dedup_incremental_
-embedding 1.573 vs 1.567 / 2.456; ann_knn_join 1.534 vs 1.914 /
-2.476 — BELOW its r13 reading. All five revert to at-or-below their
-r13-record values on a neutral box; the only r14 diffs in their
-modules are O(1) driver-side artifact-read validations
-(frame_to_codebooks/frame_to_centroids expected-dims checks on
-already-collected rows — git-verified, not in the distributed path).
-CLOSED as record-box variance: the r14 record's slower sched canary
-(2.110/1.257) produced the broad shallow lift its own verdict
-predicted, the same persist+CC/ANN sched-sensitive class as every
-prior round's movers.
-
-r15 CLOSURE of the dedup_ngram_containment 100x alpha=1.12 flag (r14
-verdict #6): code inspection found the containment-specific cost the
-verdict hypothesized — the fwd/rev directional branches both read
-`wsz`, and since `inter` (the shared-shingle self-join + pair
-aggregation, the expensive core) was never persisted, the WHOLE
-intersection pipeline executed twice; its jaccard sibling (alpha
-0.96) runs the same core once. Fixed by emitting both directions from
-ONE pass (a 2-element explode of (fwd, rev) structs over wsz — no
-persist, no union, same output rows; oracle hash unchanged,
-driver-green at sf0.01). Re-measured at 100 copies: alpha 1.12 ->
-1.01 (t100x 424.2 -> 380.2 s, n=2) — the superlinear list is now
-EMPTY at both decades. Honest wall-clock note: the gain reads ~10%,
-not ~2x, because the duplicated union branches ran as concurrent
-jobs and local[32] had idle cores to absorb the second copy — the
-fix halves the CORE'S CPU WORK (what a saturated 1000-executor
-cluster pays), and removes the duplicated-branch term whose
-scheduling sensitivity produced the 1.12 reading.
-
-r14 v6 SHAPE A/B (does a 4th branch over `normed` flip the v4
-persist decision?): corpus_prep_v6_pipeline as shipped vs a
-tracked_persist(normed) variant, 5-run medians, BOTH orders. Order 1:
-current 5.235 / persist 4.588; order 2 REVERSED: persist 5.767 /
-current 4.797 (canary 0.62-0.65 both) — whichever runs second wins by
-the same ~0.6 s, i.e. pure JVM warmup, no shape signal. The v4 rule
-(per-row gate branches re-scan normalization; persisting the full
-text costs what it saves) holds at four branches — current shape KEPT.
-
-r14 FULL-SWEEP finding (SPARK_GRAFT_BENCH_ALL=1, runs=2, final r14
-code, 175 timed queries, 276.2 s total, canary 0.630/0.484, sched
-1.957/1.230 — 2.2 s more than the r13 sweep for 2 more queries on a
-comparable box): no new outlier class. The slowest set is unchanged —
-dedup_bow_cosine 98.6 s (the adversarial exact-form fixture; deployed
-shape dedup_bow_cosine_zipf in the same sweep), the honest in-query
-index build ann_ivfpq_incremental 7.1 s, the composed pipelines (the
-new corpus_prep_v6_pipeline reads 6.45 s in-sweep vs 4.13 headline —
-the documented in-sweep inflation class its v3/v4 siblings show), and
-the pytest-only instrumentation rows still timed by ALL mode.
-sample_kcenter_coreset reads 1.35 s in-sweep (5.6 s in the r13 sweep)
-— the incremental-fold reshape holding under sweep conditions. No
-regression candidates.
-
-r18 MOVER TRIAGE of the three r17 verdict movers the 8-core record
-could not clear (r17 verdict #2, established protocol), plus the one
-new above-band entry. Context records: the r18 ROUND-START sweep on
-r17-final code read 144.409 s / 100 q (canary 1.041/0.502, sched
-3.343/1.875 — the cleanest post-run canaries in three rounds), and
-the normalized --compare against the r17 end-of-round 32-core sweep
-(157.898 s) reads canary_ratio 1.189 / sched_ratio 1.046 /
-raw_median_ratio 0.899 with ONE entry above the 1.25 band:
-- sample_kcenter_coreset (r17 record 3.05): REAL fixed cost — k top-1
-  collect jobs — OPTIMIZED this round (batched candidate pool; see
-  sampling.kcenter_select). Interleaved A/B: all 7 pairs improved
-  (medians 5.08→3.63 under a decaying burst, clean tail 2.40→2.24);
-  isolated canary-bracketed median 2.233 vs the 3.05 record.
-- dedup_incremental_clusters (r16 3.02 → r17 3.77 raw): isolated
-  7-run median 2.642 on the round-start box — BELOW its r16 record on
-  code untouched since the r17 CC fuse (whose own isolated A/B read
-  3.20→2.91). CLOSED as record-box variance.
-- dedup_bow_cosine_zipf (r16 3.47 → r17 4.10 raw): round-start
-  in-sweep 3.006 — below r16 — and an isolated 7-run taken inside a
-  later co-tenancy burst decayed 13.89→5.01 while the sched canary
-  read 3.56/4.52: the reading tracks the sched canary, not the code
-  (unchanged since r16; the r17 reshape was reverted). CLOSED as
-  sched-sensitive box variance.
-- corpus_prep_v6_pipeline (the one above-band normalized mover,
-  5.83→10.92 in-sweep, sched_norm 1.79): isolated split-profile reads
-  median 5.55 (construct 1.88 / noop 4.15; samples 17.07-burst, 6.99,
-  5.55, 5.08, 5.55 as the sched canary fell 4.36→1.30) — AT its r17
-  record on a neutral box. The in-sweep 10.9 is burst contamination;
-  same verdict for the q3/sessionize/w1 OLD-side readings the compare
-  shows at raw 0.16-0.43 (the r17 sweep's own in-burst inflation,
-  documented in the r17 note below). No regression. v6's 1.88 s
-  CONSTRUCT cost was profiled (2,870 py4j round trips, eager
-  per-DataFrame Catalyst analysis of a deep composed plan) and
-  deliberately left: it is fixed per action and amortizes to noise at
-  cluster scale, and unlike the r18 BPE fold fix it does not grow
-  with any model artifact.
-
-r17 SESSION BENCH (two back-to-back full-headline runs, 100 queries):
-189.405 s (canary 0.784/0.680, sched 1.587/2.579 — degraded DURING
-the run, taken right after the 29-min pytest suite) then 183.471 s
-(canary 0.734/0.639, sched 2.102/1.602). The committed BENCH_DETAIL is
-the second, cleaner run. vs the r16 DRIVER record (150.2 s / 98 q) the
-normalized median ratio reads 1.164 with ~20 above-band movers — but
-the inflation is UNIFORM and lands on entries untouched for rounds
-(TPC-H q9/q18/q21, text_repetition 0.46→1.78, text_tfidf_topk,
-graph_pagerank), while every query whose code r17 actually touched is
-FLAT or better: sketch_kmv_intersection 0.434 vs 0.430 (strict-θ fix),
-multimodal_crossmodal_knn and the capped kNN entries absent from the
-mover list (bounded member-selection rewrite), sketch_histogram_
-quantiles absent (value_range plumb). Touched-code parity + untouched-
-code uniform inflation + the same testdata (mtime-checked, unchanged
-since the r16 record) = background box load during both session
-sweeps, not code; the canary's tight CPU loop under-detects memory-
-bandwidth co-tenancy, which is why the flag relies on the touched-path
-split. New-entry in-sweep costs: sketch_kmv_difference 0.408,
-sketch_kmv_grouped_algebra 0.969 (one-pass census split; the
-three-join shape read 3.75 s isolated and was rewritten before
-shipping, see the r17 scaling rows α 0.10/0.02). The grouped-algebra
-entry's persist-vs-recompute A/B (mins relations feed both the stats
-and tag sides, so the events scan runs twice per side): 5-run medians
-BOTH orders read recompute 1.011/0.833 vs persist 0.900/1.108 — a
-wash inside the noise of a degrading box (canary 0.814→1.031), so the
-recompute shape is KEPT per the v4/v6/simhash precedent; the α
-0.10/0.02 rows show the double scan stays immaterial at 100×
-(saturating distinct + fixed stage overhead dominate). r18 triage
-should compare the DRIVER's BENCH_r17 record against BENCH_r16 per
-protocol and treat this session record as the slow-box envelope.
-
-r17 MOVER TRIAGE of the seven r15→r16 record movers (r16 verdict #2,
-the established protocol): the sched-normalized --compare of the
-committed records (canary_ratio 1.155, sched_ratio 1.265) leaves only
-TWO entries above the 1.25 band — sketch_histogram_quantiles
-(normalized 1.392 but Δ=0.16 s absolute, below the 0.5 s A/B
-threshold; sched_normalized 1.271, marginal) and media_dedup_survivors
-(normalized 1.289, sched_normalized 1.177 — i.e. INSIDE the band under
-sched normalization; Δ=+1.04 s). The other five verdict-listed movers
-(ann_ivfpq_incremental, dedup_bow_cosine_zipf, corpus_prep_v4/v5,
-dedup_incremental_clusters, dedup_connected_clusters) normalize into
-the band: box variance. media_dedup_survivors got the full isolated
-treatment on one box (sched canary 1.77–2.31, the r16-record-class
-box): CURRENT code median 3.409 s (13.03 warmup/3.41/3.51/3.01/3.15)
-vs the R15 CODE run from a git worktree on the SAME box median
-3.466 s — r15 code is NOT faster, and the optimized plans of the
-uncapped simhash_near_pairs AND simhash_cross_pairs paths are
-structurally IDENTICAL r15-vs-r17 (23 nodes, expression-id-stripped
-diff empty), proving the max_bucket=None fast path adds zero plan
-nodes (r16 verdict's specific ask). Attribution: the +1.04 s is
-entirely box variance on the documented persist+CC/sched-sensitive
-class; zero code regression.
-
-r16 BASELINE PIN for the two winnowing entries (r15 verdict #4 — no
-record history before this round): isolated canary-bracketed 5-run
-A/B on a neutral box (canary 0.969/0.598 — the pre reading is the
-documented first-measurement JVM warmup skew; sched 1.920/1.593):
-dedup_winnowing_pairs median 8.877 s (samples 15.47 warmup then
-8.88/8.54/8.93/8.52) vs the r15 driver record 9.064; text_winnowing_
-fingerprints median 3.526 s (4.22 warmup then 3.55/3.53/3.44/3.43)
-vs 3.788. Both isolated medians sit AT-OR-BELOW their r15 driver
-readings, so those records ARE neutral-box baselines — future mover
-triage compares against 8.9 / 3.5 s envelopes, first isolated run
-~1.7x the median (the warmup signature of the multi-job dedup class).
-
-r16 SHAPE A/B for dedup_simhash_pairs_capped (does persisting the
-fingerprint relation beat recomputing it across the cap's branches?):
-the capped plan references the fingerprint subtree from the bucket
-counts, the marker join, and the star branch, so a tracked_persist(fp)
-variant was measured against the shipped recompute form — 5-run
-medians, BOTH orders, one session (canary 0.649/0.571, sched
-1.385/1.349): shipped 3.469 then 3.086; persisted 4.302 then 4.187.
-The persist LOSES ~1.1 s at every position: simhash fingerprints are
-one narrow map-side agg over the token stream, and materializing
-~500k (doc, fp) rows through the block manager costs more than
-running the agg twice — the same verdict as the v4/v6 persist-vs-
-rescan A/Bs. Shipped recompute shape KEPT; expected capped-vs-uncapped
-delta at sf0.1 is ~1.5 s (3.1-3.5 capped vs the 1.619 uncapped r15
-record) — the price of the counts agg + broadcast marker join, with
-alpha 0.54/0.47 at 10x/100x showing it buys the degenerate-bucket
-bound without a scale penalty.
-
-r13 FULL-SWEEP finding (SPARK_GRAFT_BENCH_ALL=1, runs=2, final r13
-code, 173 timed queries, 274.0 s total, canary 0.810/0.591 — a faster
-box than the r12 sweep's day, and 67 s LESS total for 4 MORE queries):
-no new outlier class. The slowest entries are the same documented set
-— dedup_bow_cosine 93.6 s (the adversarial exact-form fixture;
-deployed shape dedup_bow_cosine_zipf 2.5 s in the same sweep), the
-recall/accuracy instrumentation rows carrying brute-force ground
-truth by design, the composed pipelines, and the honest in-query
-index builds (ann_ivfpq_incremental 9.8 s in-sweep: trains + encodes
-+ appends + probes; the deployed query shape is the store-backed twin
-at ~0.4 s). The four r13 entries land mid-pack (unigram seed 1.99 s
-in-sweep vs 0.43 headline — neighbor variance; incremental clusters
-5.6 s; k-center 5.6 s — eight serial TakeOrdered scans, the
-documented scan-bound shape). No regression candidates.
-
-r12 FULL-SWEEP finding (SPARK_GRAFT_BENCH_ALL=1, runs=2, final r12
-code, 169 timed queries, 340.9 s total, canary 0.734/0.605 — a slower
-box than the r11 sweep's day): no new outlier class. The slowest
-entries are the same documented set — dedup_bow_cosine 122.3 s (the
-adversarial exact-form fixture; deployed shape dedup_bow_cosine_zipf
-2.2 s), the two recall-instrumentation entries carrying brute-force
-ground truth by design (7.9 / 4.5 s), the composed v3/v4/v5 pipelines
-(7.6 / 5.7 / 6.4 s in-sweep; v5 reads 3.3 s isolated in the scaling
-base — the same in-sweep inflation the joint entry shows, attributed
-below to JVM-warmup/neighbor effects, not plan shape), multiprobe and
-the joint composition. quality_gopher_gate read 0.439 s — fully
-recovered. No regression candidates.
-
-r11 FULL-SWEEP finding (SPARK_GRAFT_BENCH_ALL=1, runs=2, final r11
-code, 168 timed queries, 270.5 s total vs r9's 358 s on 165): the one
-outlier remains dedup_bow_cosine (99.7 s, down from r9's 157 s) — the
-documented adversarial exact-form fixture (31-term vocabulary, nothing
-for the df bound to prune; the deployed shape is the df-bounded
-dedup_bow_cosine_zipf at 2.7 s). Every other entry read under 6.3 s,
-the slowest being the two recall-instrumentation entries that carry
-brute-force ground truth by design and the new joint-dedup composition
-(5.6 s in-sweep vs 3.2 s in the headline record — in-sequence
-ordering, both well-shaped). No regression candidates.
-
-r11 ATTRIBUTION of q1_pricing_summary (r10 stretch #8: 2.0 s driver
-reading for a single-scan hash aggregate): isolated 5-run
-canary-bracketed A/B (canary 0.71-0.77). (a) isolated median 1.571 s
-(samples 1.35-1.6 after the 3.6 s first-run warmup) vs the driver's
-2.0 — the reading was box-inflated; (b) plan-compile floor is 0.2 s
-(5 runs of analyze+optimize+physical-plan only); (c) the sf0.1
-lineitem scan gets 3 input splits, so the unwidened stage reads
-~0.45 s/split — BELOW the recorded >=1 s/split fanout-widening bar;
-(d) the widening A/B confirms the bar: a repartition(32)-widened
-decimal aggregate read 1.01-1.14 s vs 0.85-0.95 s unwidened — the
-full-row shuffle costs more than the parallelism buys at 600k rows.
-CLOSED: correctly-shaped single-stage aggregate, not a widening
-candidate; ~0.2 s of its reading is plan compile, the rest tracks box
-state.
+- Every entry is a runner ``prepare(spark, sf_dir, scale) -> thunk``.
+  ``prepare`` does the untimed work (a fixture, a store or index build,
+  training); only the thunk and the write of its frame into the no-op
+  sink are timed. Registry entries have no untimed part. The no-op sink
+  runs the whole distributed plan without a driver collect, so the time
+  is scan, shuffle and aggregate work, not result serialization.
+- Per-entry time is the median of $SPARK_GRAFT_BENCH_RUNS (default 3)
+  runs: run 1 absorbs codegen and parquet-footer warm-up, and
+  run-to-run spread on a shared box is about 15 %, so one sample cannot
+  support a comparison between records.
+- Plan-level persists are released after every run
+  (caching.release_tracked), and each entry's untimed stores after its
+  last run, so every run measures the cold plan and nothing cached
+  leaks into later entries.
+- Three canaries bracket the sweep: CPU speed, per-job scheduling
+  overhead and memory bandwidth. They read no data, so they move only
+  with the state of the box; compare_records divides it out.
+- A sweep's stdout consumer keeps only a 2,000-byte tail, and 100
+  names with their values need about 3.4 KB. So stdout carries short
+  ``headline_queries_chunk`` lines, then every value as one
+  ``headline_queries_values`` array in chunk-key order, then the
+  ``headline_total_wall`` summary last: truncation can cost only whole
+  early chunks. The complete record goes to ``BENCH_DETAIL_c{cpus}.json``,
+  named for its core count so a run on one core count cannot overwrite
+  another's. The committed ``BENCH_DETAIL.json`` predates that naming:
+  it carries no ``cpus``, so the configuration it was taken on cannot
+  be named.
 """
 
 from __future__ import annotations
@@ -608,24 +42,67 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import statistics
 import sys
 import time
+from functools import partial
 
+from pyspark.sql import functions as F
 
-# r10 HEADLINE-SIZE DECISION (r9 verdict stretch #8 asked for a
-# recorded decision either way): the list stays COMPLETE (78 entries,
-# ~100-110 s per median-of-3 record) rather than capped at ~50.
-# Rationale: (a) BENCH_DETAIL.json's per-query series is the repo's
-# only cross-round regression record — a dropped query loses its
-# history exactly when a regression in it would go unnoticed; (b) the
-# real per-record cost driver is the ~15 multi-second dedup/ANN
-# queries, which are precisely the ones worth tracking every round —
-# pruning the cheap §2 tail saves little; (c) the canary
-# (canary_pre/post_sec) now absorbs the box-drift question that made
-# totals hard to compare, which was the actual pain the cap aimed at.
-# Revisit if the list passes ~90 entries or the record passes ~150 s
-# on a quiet box.
+from blockchair_etl_spark.caching import release_tracked, tracked_persist
+from blockchair_etl_spark.io.sources import load_table
+from blockchair_etl_spark.llmdata import multimodal as mm
+from blockchair_etl_spark.llmdata.clusters import connected_clusters
+from blockchair_etl_spark.llmdata.dedup import (
+    bow_cosine_pairs,
+    build_embedding_store,
+    incremental_embedding_dedup,
+    incremental_media_dedup,
+    incremental_minhash_dedup,
+    media_byte_fingerprints,
+    minhash_band_store,
+    minhash_pairs_from_store,
+    semantic_dedup_survivors_grouped,
+    simhash_near_pairs,
+)
+from blockchair_etl_spark.llmdata.ivf import seed_centroids
+from blockchair_etl_spark.llmdata.pq import (
+    ivfpq_adc_topk_from_index,
+    ivfpq_encode,
+    residual_frame,
+    seed_pq_codebooks,
+)
+from blockchair_etl_spark.llmdata.sampling import cluster_balanced_sample
+from blockchair_etl_spark.llmdata.similarity import adaptive_n_planes
+from blockchair_etl_spark.llmdata.text import (
+    incremental_winnowing_dedup,
+    winnowing_fingerprint_store,
+    winnowing_fingerprints,
+    winnowing_pairs_from_store,
+)
+from blockchair_etl_spark.llmdata.tokenizer import bpe_train
+from blockchair_etl_spark.llmdata.unigram import unigram_apply, unigram_train
+from blockchair_etl_spark.operators.approx import hll_estimate_grouped, hll_registers_grouped
+from blockchair_etl_spark.query.trace import trace_funds
+from blockchair_etl_spark.queryset import QUERIES, _trace_edges, joint_dedup_survivors
+from blockchair_etl_spark.session import get_session
+from blockchair_etl_spark.testing import zipfian_corpus
+
+REPO = os.path.dirname(os.path.abspath(__file__))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+# untimed fixtures and stores; emptied after every entry
+WORK = os.path.join(REPO, ".bench_tmp", "work")
+
+# Registry entries, timed in this order. The list is kept complete
+# rather than capped: the per-query series of the bench records is the
+# only record that shows a regression in one entry. Left out on
+# purpose: dedup_bow_cosine, whose exact pair form is quadratic on the
+# test corpus's 31-term vocabulary (dedup_bow_cosine_zipf times the
+# df-bounded form instead), and the *_recall entries, which carry
+# brute-force ground truth by design.
 HEADLINE = [
     "q1_pricing_summary",
     "p1_stg_projection",
@@ -651,22 +128,15 @@ HEADLINE = [
     "sample_hash_split",
     "pack_sequences",
     "text_quality",
-    # dedup_bow_cosine runs only in fixture mode (see below): the driver
-    # corpus has a 31-term vocab where every term is near-universal, so
-    # exact BoW cosine is inherently pair-quadratic here (sum df^2 ~ 6e8
-    # at sf0.1). The Zipfian fixture benches the df-bounded candidate
-    # path (bow_cosine_pairs(max_df=...)) on data where it prunes.
     "text_tfidf_topk",
     "rolling_active_users",
     "graph_triangle_count",
-    # round-2 surface (largest part of the contract) — tracked since r4
     "q9_profit_by_nation_year",
     "q21_sole_late_supplier",
     "q18_large_orders",
     "dedup_corpus_survivors",
     "winsorize_values",
     "text_chunking",
-    # round-4 additions
     "text_line_dedup",
     "sketch_cms_heavy_hitters",
     "sketch_histogram_quantiles",
@@ -675,7 +145,6 @@ HEADLINE = [
     "hopping_window_events",
     "corpus_prep_pipeline",
     "centroid_by_bucket",
-    # round-5 additions
     "dedup_embedding_multiprobe",
     "dedup_incremental_minhash",
     "embedding_quantize_int8",
@@ -694,7 +163,6 @@ HEADLINE = [
     "ann_ivfpq_topk",
     "graph_personalized_pagerank",
     "corpus_prep_v2_pipeline",
-    # round-6 additions
     "trace_recursive_cte",
     "corpus_token_budget",
     "sample_cluster_balanced",
@@ -702,104 +170,345 @@ HEADLINE = [
     "sample_leakage_safe_split",
     "dedup_semdedup_vectorized",
     "corpus_prep_v3_pipeline",
-    # round-8 additions (text_repetition joins after its r8 fix — the
-    # widened scan took its isolated median 4.16 -> 0.55 s, worth
-    # tracking; simhash_pairs covers the fingerprint+pigeonhole family)
     "quality_classifier_scores",
     "media_simhash_fingerprints",
     "corpus_embedding_curation_pipeline",
     "text_repetition",
     "dedup_simhash_pairs",
-    # round-9 additions (ann_lsh_recall stays off the headline list for
-    # the same reason ann_ivfpq_recall does: instrumentation entries
-    # carry their brute-force ground truth by design)
     "media_dedup_survivors",
     "corpus_prep_v4_pipeline",
     "dedup_span_removal",
-    # round-10 addition: the pixel-space (perceptual) media dedup twin
     "media_pixel_dedup_survivors",
-    # round-11 additions: cross-modal joint-survivor composition (text
-    # MinHash pairs ∪ pixel aHash pairs → one CC → min-id survivor)
-    # and the learned-vocab BPE apply step
     "multimodal_joint_dedup_survivors",
     "tokenizer_bpe_apply",
-    # round-12 addition: tokenize -> budget-select -> pack with BPE
-    # counts as the currency
     "corpus_prep_v5_pipeline",
-    # round-13 additions: the daily-ingest ANN maintenance path (frozen
-    # artifacts, store anti-join append, probe over the appended index),
-    # the unigram seed stage (the second tokenizer family's oracle'd
-    # Spark-side stage), the two-day star-edge CC fold, and the k-center
-    # coreset (k driver rounds — the scheduler-sensitive class worth a
-    # per-round series)
     "ann_ivfpq_incremental",
     "tokenizer_unigram_seed",
     "dedup_incremental_clusters",
     "sample_kcenter_coreset",
-    # round-14: the LM perplexity gate's SQL-expressible half — the
-    # distinct-word Arrow DP + token-stream join + integer-sum filter
-    # is the CCNet-gate query shape the prep loop runs per batch —
-    # and the v6 pipeline composing it as the third gate beside the
-    # classifier and Gopher (the full CCNet/FineWeb prep shape)
     "quality_unigram_ppl_gate",
     "corpus_prep_v6_pipeline",
-    # round-14: per-group KMV — the per-dimension A2 dashboard shape
-    # (one distinct shuffle + streaming per-group row_number cut)
     "sketch_kmv_grouped",
-    # round-15: the hot-bucket-capped LSH twin (per-band-key counts +
-    # representative collapse — the degenerate-bucket bound; its cost
-    # vs the uncapped form IS the number to track) and cross-modal
-    # retrieval (asymmetric probe-vs-index kNN over the shared space)
     "dedup_minhash_lsh_capped",
     "multimodal_crossmodal_knn",
-    # round-15: per-group CMS heavy hitters — the frequency half of the
-    # per-dimension dashboard pair beside sketch_kmv_grouped — and MOSS
-    # winnowing (the fingerprint selection runs entirely in array-space
-    # inside each document's row: per-position packed-string keys,
-    # per-window array_min over O(w) slices — a zero-shuffle narrow
-    # map, the text family's densest per-char fan-out)
     "sketch_cms_grouped_topk",
     "text_winnowing_fingerprints",
-    # round-15: the MOSS composition — pairs by Jaccard over winnowing
-    # fingerprint sets (the passage-level dedup query)
     "dedup_winnowing_pairs",
-    # round-16: the SimHash sibling of the hot-bucket cap — oversized
-    # pigeonhole buckets collapse per FULL fingerprint (lossless by
-    # identity: identical fingerprints ARE hamming 0); its cost vs the
-    # uncapped dedup_simhash_pairs IS the number to track
     "dedup_simhash_pairs_capped",
-    # round-16: HyperLogLog — the fixed-memory register-array distinct
-    # counter (one map-combined max-agg into <= 2^p rows; the integer-
-    # scaled harmonic sum keeps the oracle bit-exact where engine-native
-    # HLL++ is not); idempotent max-merge = the KMV replay class
     "sketch_hll_distinct",
-    # round-16: the grouped-CMS SERVING probe (fixed key set x every
-    # group — the sparse-zero LEFT-join estimate path the topk row
-    # cannot hit)
     "sketch_cms_grouped_served",
-    # round-16: KMV set-intersection (the Theta-sketch algebra beside
-    # sketch_kmv_union — two O(k) mins relations, one hv equi-join)
     "sketch_kmv_intersection",
-    # round-17: KMV a-not-b completes the Theta algebra (strict-theta
-    # anti-join form; same two O(k) mins relations, one hv anti-join)
     "sketch_kmv_difference",
-    # round-17: the per-dimension Theta algebra — one O(groups x k)
-    # pass over two grouped mins relations serving intersection, both
-    # differences, and Jaccard per group (viewers vs clickers per day)
     "sketch_kmv_grouped_algebra",
 ]
 
+# Extra runners timed after HEADLINE; EXTRAS below defines them.
+HEADLINE_EXTRAS = [
+    "dedup_bow_cosine_zipf",
+    "dedup_minhash_store_backed",
+    "dedup_winnowing_store_backed",
+    "ann_ivfpq_store_backed",
+]
+
+
+def _whole(fn):
+    """Runner of an entry with no untimed part: the thunk is the call."""
+    return lambda spark, sf_dir, scale: lambda: fn(spark, sf_dir)
+
+
+def _work(name: str) -> str:
+    return os.path.join(WORK, name)
+
+
+def _bow_cosine_zipf(spark, sf_dir, scale):
+    """df-bounded BoW cosine over a Zipf-vocabulary fixture of
+    10,000 x scale documents. The test corpus's 31-term vocabulary
+    makes every term near-universal, so the df bound has nothing to
+    prune there."""
+    zipfian_corpus(spark, n_docs=10_000 * scale, vocab=50_000).write.mode(
+        "overwrite"
+    ).parquet(_work("zipf_docs"))
+    docs = spark.read.parquet(_work("zipf_docs"))
+    return lambda: bow_cosine_pairs(docs, threshold=0.8, max_df=20, min_shared_terms=2)
+
+
+def _trace_3hop(spark, sf_dir):
+    """The dashboard's deep trace: 3 hops over the event-derived edge
+    graph, one action per hop. Each hop broadcasts its small frontier
+    against a full edge scan, so alpha near 1 is the pass."""
+    return trace_funds(_trace_edges(spark, sf_dir), source=7, max_hops=3)
+
+
+def _incr_emb_adaptive(spark, sf_dir):
+    """Incremental embedding dedup with the plane count sized to the
+    corpus, as the store is built in operation. The registry entry pins
+    4 planes for its SQL oracle; at a fixed fan-out the bucket join is
+    quadratic-in-waiting."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    p = adaptive_n_planes(emb.count())
+    store = build_embedding_store(emb.filter(F.col("vec_id") % 2 == 0), dim=64, n_planes=p)
+    day2 = emb.filter(F.col("vec_id") % 2 == 1)
+    return incremental_embedding_dedup(day2, store, dim=64, threshold=0.3, n_planes=p)[0]
+
+
+def _semdedup_adaptive(spark, sf_dir):
+    """SemDeDup at scale: k grows with the corpus (about 256 rows per
+    cluster) and assignment plus per-cluster gram pairs run vectorized.
+    The registry entry pins 8 centroids for its SQL oracle, and a fixed
+    cluster count means a growing occupancy. Codebook seeding is timed,
+    as in the registry entries."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = seed_centroids(emb, n_centroids=max(8, emb.count() // 256))
+    return semantic_dedup_survivors_grouped(emb, cents, threshold=0.3, dim=64)
+
+
+def _big_store(rows, key: str, build):
+    """The daily incremental shape: the batch is the rows with
+    ``key % 11 == 0`` and ``build`` makes a persisted store of the rest,
+    about 10x the batch. The store is yesterday's index, so building it
+    is untimed; the timed probe must stay about flat per batch as the
+    store grows."""
+    store = build(rows.filter(F.col(key) % 11 != 0)).persist()
+    store.count()
+    return rows.filter(F.col(key) % 11 == 0), store
+
+
+def _incr_emb_big_store(spark, sf_dir, scale):
+    emb = load_table(spark, sf_dir, "embeddings")
+    p = adaptive_n_planes(emb.count())
+    batch, store = _big_store(
+        emb, "vec_id", lambda df: build_embedding_store(df, dim=64, n_planes=p)
+    )
+    return lambda: incremental_embedding_dedup(batch, store, dim=64, threshold=0.3, n_planes=p)[0]
+
+
+def _incr_mh_big_store(spark, sf_dir, scale):
+    docs = load_table(spark, sf_dir, "documents")
+    batch, store = _big_store(docs, "doc_id", minhash_band_store)
+    return lambda: incremental_minhash_dedup(batch, store, threshold=0.5)[0]
+
+
+def _incr_media_big_store(spark, sf_dir, scale):
+    media = load_table(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("media_id"), F.col("text").cast("binary").alias("content")
+    )
+    batch, store = _big_store(media, "media_id", media_byte_fingerprints)
+    return lambda: incremental_media_dedup(batch, store)[0]
+
+
+def _incr_winnowing_big_store(spark, sf_dir, scale):
+    docs = load_table(spark, sf_dir, "documents")
+    batch, store = _big_store(docs, "doc_id", winnowing_fingerprint_store)
+    return lambda: incremental_winnowing_dedup(batch, store, max_df=50)[0]
+
+
+def _cluster_balanced_adaptive(spark, sf_dir):
+    """Cluster-balanced sampling with its default plane count, derived
+    from the corpus size, so per-bucket occupancy stays bounded (the
+    registry entry pins 4 planes for its SQL oracle)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return cluster_balanced_sample(emb, per_bucket=20, dim=64)
+
+
+def _minhash_store_backed(spark, sf_dir, scale):
+    """MinHash pairs read from a signature store written once (untimed:
+    the persisted corpus index). dedup_minhash_lsh is the cold twin that
+    re-shingles and re-hashes every run; the gap is what signature reuse
+    buys."""
+    minhash_band_store(load_table(spark, sf_dir, "documents")).write.mode(
+        "overwrite"
+    ).parquet(_work("mh_sig_store"))
+    store = spark.read.parquet(_work("mh_sig_store"))
+    return lambda: minhash_pairs_from_store(store, threshold=0.5)
+
+
+def _winnowing_store_backed(spark, sf_dir, scale):
+    """Winnowing pairs read from a fingerprint store written once
+    (untimed: the persisted MOSS index). dedup_winnowing_pairs is the
+    cold twin."""
+    docs = load_table(spark, sf_dir, "documents")
+    winnowing_fingerprints(docs).select("doc", "fp").distinct().write.mode(
+        "overwrite"
+    ).parquet(_work("winnow_fp_store"))
+    store = spark.read.parquet(_work("winnow_fp_store"))
+    return lambda: winnowing_pairs_from_store(store, min_shared=2, threshold=0.2, max_df=50)
+
+
+def _ivfpq_store_backed(spark, sf_dir, scale):
+    """The deployed ANN query path: centroids, codebooks and the encoded
+    index are built once (untimed); the timed run is the cluster-pruned
+    codes scan plus ADC lookups. The coarse centroid count grows with
+    the corpus so each probed list stays about the same size (the
+    registry's ann_ivfpq_topk pins 8 and builds the index in-query)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = seed_centroids(emb, n_centroids=max(8, emb.count() // 640))
+    books = seed_pq_codebooks(
+        residual_frame(emb, cents), dim=64, m=4, ksub=16, vec_col="residual"
+    )
+    ivfpq_encode(emb, cents, books).write.mode("overwrite").parquet(_work("ivfpq_index"))
+    index = spark.read.parquet(_work("ivfpq_index"))
+    qv = [float(v) for v in cents[0]]
+    return lambda: ivfpq_adc_topk_from_index(index, cents, books, qv, k=10, n_probe=2)
+
+
+def _hll_grouped(spark, sf_dir):
+    """Per-group HyperLogLog over events: one map-combined (g, bucket)
+    max-agg whose exchange is bounded by groups x 2^p rows, whatever the
+    stream length."""
+    ev = load_table(spark, sf_dir, "events")
+    registers = hll_registers_grouped(ev, "event_type", "user_id", p=10)
+    return hll_estimate_grouped(registers, "event_type")
+
+
+def _media_pixel_adaptive(spark, sf_dir):
+    """Perceptual media dedup at 64-bit aHash (8x8 grid): decode and
+    resize, aHash, pigeonhole pairs, connected components, min-id
+    survivors. The registry entry pins 32 bits for its SQL oracle, whose
+    random pigeonhole collisions grow quadratically with the corpus."""
+    docs = load_table(spark, sf_dir, "documents")
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.col("text").cast("binary").alias("content"),
+        (F.lit(4) + F.col("doc_id") % 13).cast("long").alias("width"),
+        (F.lit(4) + F.col("doc_id") % 11).cast("long").alias("height"),
+        F.lit("image").alias("kind"),
+    )
+    nonempty = media.filter(F.length("content") > 0)
+    resized = mm.resize_images(nonempty, width=8, height=8, decoder="bytegrid")
+    fp = tracked_persist(mm.ahash_fingerprints(resized))
+    clusters = connected_clusters(simhash_near_pairs(fp, max_hamming=3, bits=64))
+    removed = clusters.filter(F.col("doc") != F.col("cluster_id")).select("doc")
+    survivors = media.select("media_id").join(removed, media.media_id == removed.doc, "left_anti")
+    return survivors.join(fp.select(F.col("doc").alias("media_id"), "simhash"), "media_id", "left")
+
+
+def _joint_dedup_adaptive(spark, sf_dir):
+    """Cross-modal joint dedup with the shared body of
+    multimodal_joint_dedup_survivors at the 64-bit pixel width, so the
+    measured pipeline cannot drift from the verified one."""
+    docs = load_table(spark, sf_dir, "documents")
+    return joint_dedup_survivors(docs, width=8, height=8).select("doc_id")
+
+
+def _one_row(spark, column: str, values):
+    """A trained artifact as a 1-row frame for the no-op sink."""
+    return spark.createDataFrame([(";".join(values),)], f"{column} string")
+
+
+def _bpe_train(spark, sf_dir, **kw):
+    """BPE training: one corpus scan into the word table, then one
+    pair-agg, top-k collect and rewrite per round over the distinct
+    words, so alpha well under 1 is expected. The training loop runs
+    eagerly inside the timed call."""
+    merges = bpe_train(load_table(spark, sf_dir, "documents"), **kw)
+    return _one_row(spark, "merges", (f"{a}+{b}" for a, b in merges))
+
+
+def _unigram_train(spark, sf_dir):
+    """Unigram-LM training: one corpus scan into the word table, then
+    per EM round one forward-backward over distinct words; the same
+    never-rescan-the-corpus shape as BPE training."""
+    docs = load_table(spark, sf_dir, "documents")
+    pieces = unigram_train(docs, vocab_size=48, max_piece_len=3, em_iters=2, seed_size=2000)
+    return _one_row(spark, "pieces", (p for p, _ in pieces))
+
+
+def _unigram_apply(spark, sf_dir, scale):
+    """Unigram apply under a frozen vocabulary, trained (untimed) on the
+    run's base corpus $SPARK_GRAFT_SF_DIR and reused at every scale, so
+    alpha reads corpus growth alone."""
+    pieces = unigram_train(
+        load_table(spark, SF_DIR, "documents"),
+        vocab_size=48, max_piece_len=3, em_iters=1, seed_size=2000,
+    )
+    return lambda: unigram_apply(load_table(spark, sf_dir, "documents"), pieces).select(
+        "doc_id", "n_tokens"
+    )
+
+
+# Entries that are not registry queries, as runners. Those wrapped in
+# _whole are timed in full; the others build something untimed first.
+# dedup_semantic_semdedup and dedup_incremental_embedding here are the
+# scaling forms of the registry entries of the same name.
+EXTRAS = {
+    "dedup_bow_cosine_zipf": _bow_cosine_zipf,
+    "tokenizer_unigram_train": _whole(_unigram_train),
+    "tokenizer_unigram_apply": _unigram_apply,
+    "media_pixel_dedup_adaptive": _whole(_media_pixel_adaptive),
+    "multimodal_joint_dedup_adaptive": _whole(_joint_dedup_adaptive),
+    "tokenizer_bpe_train": _whole(partial(_bpe_train, n_merges=8)),
+    # the merge-count axis: 8x the vocabulary in the same ~8 rounds
+    "tokenizer_bpe_train_batched": _whole(partial(_bpe_train, n_merges=64, batch_k=8)),
+    "trace_funds_3hop": _whole(_trace_3hop),
+    "dedup_semantic_semdedup": _whole(_semdedup_adaptive),
+    "dedup_incremental_embedding": _whole(_incr_emb_adaptive),
+    "dedup_incremental_bigstore": _incr_emb_big_store,
+    "dedup_incremental_mh_bigstore": _incr_mh_big_store,
+    "dedup_incremental_media_bigstore": _incr_media_big_store,
+    "sample_cluster_balanced_adaptive": _whole(_cluster_balanced_adaptive),
+    "dedup_minhash_store_backed": _minhash_store_backed,
+    "ann_ivfpq_store_backed": _ivfpq_store_backed,
+    "dedup_winnowing_store_backed": _winnowing_store_backed,
+    "dedup_incremental_winnowing_bigstore": _incr_winnowing_big_store,
+    "sketch_hll_grouped": _whole(_hll_grouped),
+}
+
+
+def runners(registry: list[str], extras: list[str]) -> dict:
+    """Name -> runner, registry entries first, both in list order."""
+    return {
+        **{name: _whole(QUERIES[name].fn) for name in registry},
+        **{name: EXTRAS[name] for name in extras},
+    }
+
+
+def time_entries(spark, sf_dir: str, entries: dict, runs: int, scale: int) -> dict[str, float]:
+    """Median wall seconds of ``runs`` timed thunk runs per entry."""
+    timings = {}
+    for name, prepare in entries.items():
+        run = prepare(spark, sf_dir, scale)
+        samples = []
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            run().write.format("noop").mode("overwrite").save()
+            samples.append(time.perf_counter() - t0)
+            release_tracked()
+        timings[name] = round(statistics.median(samples), 3)
+        spark.catalog.clearCache()
+        shutil.rmtree(WORK, ignore_errors=True)
+    return timings
+
+
+def start_session(app_name: str):
+    spark = get_session(app_name=app_name, master=f"local[{CPUS}]")
+    spark.sparkContext.setLogLevel("ERROR")
+    # JVM, codegen and parquet-reader warm-up on trivial plans, so the
+    # first timed entry does not pay session start-up
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark.read.parquet(f"{SF_DIR}/region.parquet").count()
+    return spark
+
+
+def canary(spark, runs: int = 3) -> float:
+    """CPU canary: median wall time of a fixed, data-independent,
+    CPU-bound workload, sum(xxhash64(id)) over spark.range(4B): one
+    shuffle-free whole-stage-codegen scan over every local core. It
+    reads no files and allocates no caches, so it moves only with the
+    state of the box."""
+    samples = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        spark.range(4_000_000_000).selectExpr("sum(xxhash64(id)) as h").collect()
+        samples.append(time.perf_counter() - t0)
+    return round(statistics.median(samples), 3)
+
 
 def sched_canary(spark, jobs: int = 20, runs: int = 3) -> float:
-    """Scheduler-jitter canary (r11 methodology addendum): median wall
-    time of ``jobs`` SEQUENTIAL trivial actions (spark.range(1).count()
-    — one task each, no data work), i.e. ~pure per-job scheduling
-    overhead. The CPU canary above moves only with core speed; the r11
-    normalized comparison showed a broad per-query drift it could not
-    explain, concentrated in the multi-job driver-iterated dedup family
-    — exactly the component this canary reads. Interpretation: a
-    per-query move in a MULTI-JOB query that tracks sched_ratio while
-    the CPU canary is flat is scheduler contention, still box state."""
+    """Scheduler canary: median wall time of ``jobs`` sequential trivial
+    actions (one task each, no data work), i.e. per-job scheduling
+    overhead. The CPU canary reads core speed only; a move in a
+    multi-job entry that tracks this canary while the CPU canary is flat
+    is scheduler contention, still box state."""
     samples = []
     for _ in range(runs):
         t0 = time.perf_counter()
@@ -809,36 +518,13 @@ def sched_canary(spark, jobs: int = 20, runs: int = 3) -> float:
     return round(statistics.median(samples), 3)
 
 
-def canary(spark, runs: int = 3) -> float:
-    """Box-speed canary: median wall time of a FIXED data-independent
-    CPU-bound workload — sum(xxhash64(id)) over spark.range(4B), one
-    shuffle-free whole-stage-codegen scan saturating every local core.
-    No file IO, no caches, no shuffle: the reading moves only with box
-    state, so cross-record per-query comparisons can be normalized by
-    the canary ratio (see the r10 methodology note in the module
-    docstring)."""
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        spark.range(4_000_000_000).selectExpr("sum(xxhash64(id)) as h").collect()
-        samples.append(time.perf_counter() - t0)
-    return round(statistics.median(samples), 3)
-
-
 def mem_canary(spark, runs: int = 3) -> float:
-    """Memory-bandwidth canary (r17 methodology addendum): the CPU
-    canary's tight xxhash64 register loop under-detects MEMORY-BUS
-    co-tenancy — the r17 session sweeps read clean CPU/sched canaries
-    while real queries ran ~16% high across untouched families, the
-    signature of a co-tenant saturating memory bandwidth rather than
-    cores. This canary times a full aggregate scan over a ~2.5 GB
-    CACHED in-memory columnar relation (built once per call, dropped
-    after; the delta-encodable id/b columns compress away while the
-    random a and double d columns read at full width): the
-    block-manager columnar read is bandwidth-bound, so bus contention
-    moves THIS reading while leaving the CPU canary flat. Recorded as
-    canary_mem_pre/post_sec from r17 on; compare_records uses it as
-    diagnostic context only (older records lack it)."""
+    """Memory-bandwidth canary: an aggregate scan over a ~2.5 GB cached
+    columnar relation (built once per call, dropped after). The CPU
+    canary's register loop under-detects a co-tenant that saturates the
+    memory bus; this block-manager read is bandwidth-bound, so bus
+    contention moves it while the CPU canary stays flat. compare_records
+    reports it as context, never as a normalizer."""
     df = spark.range(128_000_000).selectExpr(
         "id", "id * 2654435761 AS a", "id + 7 AS b", "CAST(id AS DOUBLE) AS d"
     )
@@ -853,41 +539,48 @@ def mem_canary(spark, runs: int = 3) -> float:
     return round(statistics.median(samples), 3)
 
 
+def _median(rec: dict, *keys: str) -> float | None:
+    """Median of the record's readings under ``keys``; None if it has
+    none. ``is not None``, not truthiness: a 0.0 reading must reach the
+    callers' checks, not drop out of the median."""
+    vals = [rec[k] for k in keys if rec.get(k) is not None]
+    return statistics.median(vals) if vals else None
+
+
 def compare_records(old_path: str, new_path: str, flag_ratio: float = 1.25) -> dict:
-    """Canary-normalized cross-record comparison (module docstring, r11
-    methodology note): divide every per-query ratio by the canary ratio
-    before flagging. Returns (and `--compare` prints) a dict with the
-    canary ratio, the raw and normalized common-cohort medians, and the
-    movers whose NORMALIZED ratio leaves [1/flag_ratio, flag_ratio] —
-    only those earn an isolated A/B."""
+    """Canary-normalized comparison of two bench records.
+
+    1. canary_ratio = median(new CPU canaries) / median(old ones): the
+       change in box speed between the records.
+    2. Per common entry, normalized = (new_t / old_t) / canary_ratio.
+    3. The median normalized ratio is the record-over-record verdict; an
+       entry is a mover only when its normalized ratio leaves
+       [1/flag_ratio, flag_ratio]. Only movers earn an isolated A/B.
+
+    When both records carry the scheduler canary, a mover that falls
+    back inside the band divided by sched_ratio instead, and whose
+    absolute move is within that canary's own swing, is scheduler
+    contention and moves to ``sched_closed``. The memory canary ratio
+    is reported as context only."""
     with open(old_path) as fh:
         old = json.load(fh)
     with open(new_path) as fh:
         new = json.load(fh)
 
     def _canary(rec: dict) -> float:
-        # `is not None`, not truthiness: a legitimate 0.0 reading (or a
-        # null stored alongside a valid twin) must not be silently
-        # dropped from the median (advisor r11).
-        vals = [
-            rec.get(k)
-            for k in ("canary_pre_sec", "canary_post_sec")
-            if rec.get(k) is not None
-        ]
-        if not vals:
+        med = _median(rec, "canary_pre_sec", "canary_post_sec")
+        if med is None:
             raise ValueError(
                 "record carries no canary — normalized comparison needs "
                 "canary_pre_sec/canary_post_sec (records from r10 on)"
             )
-        med = statistics.median(vals)
         if med <= 0.0:
-            # mirror the sched-canary guard (advisor r12): a 0.0 CPU
-            # canary is a bogus reading (the workload cannot finish in
-            # 0 s) — name it instead of dying in the ratio division
+            # the workload cannot finish in 0 s: name the bogus reading
+            # instead of dying in the ratio division
             raise ValueError(
                 f"record carries a non-positive CPU canary median ({med}) "
-                f"from {vals} — bogus reading; re-record the benchmark "
-                "instead of normalizing against it"
+                "— bogus reading; re-record the benchmark instead of "
+                "normalizing against it"
             )
         return med
 
@@ -918,71 +611,28 @@ def compare_records(old_path: str, new_path: str, flag_ratio: float = 1.25) -> d
         "normalized_median_ratio": round(statistics.median(norm.values()), 3),
         "flag_band": [round(1.0 / flag_ratio, 3), flag_ratio],
     }
-    # Memory-bandwidth canary ratio (records from r17 on): DIAGNOSTIC
-    # context only, never a normalizer — the r17 session sweeps showed
-    # clean CPU/sched canaries with uniform ~16% query inflation, the
-    # memory-bus co-tenancy signature this third canary exists to name.
-    # When both records carry it, a high mem_ratio alongside flat
-    # canary_ratio says "bus contention, read the mover list as box
-    # state"; absent on either side it is simply omitted.
-    mem = [
-        [
-            rec.get(k)
-            for k in ("canary_mem_pre_sec", "canary_mem_post_sec")
-            if rec.get(k) is not None
-        ]
-        for rec in (old, new)
-    ]
-    if mem[0] and mem[1]:
-        old_mem = statistics.median(mem[0])
-        new_mem = statistics.median(mem[1])
-        if old_mem > 0 and new_mem > 0:
-            out["mem_ratio"] = round(new_mem / old_mem, 3)
-    # Scheduler-jitter canary ratio (records from r11 on): the CPU
-    # canary is ONE job and reads core speed only; sched_canary (20
-    # sequential one-task jobs) reads per-job scheduling overhead — the
-    # component the r11 record saw swing 1.5x WITHIN one record while
-    # the CPU canary moved 15%. APPLIED, not just reported (r11 verdict
-    # #2): a CPU-flagged mover whose ratio falls back inside the band
-    # when divided by sched_ratio instead is scheduler contention —
-    # still box state — and moves to `sched_closed` rather than earning
-    # an isolated A/B. Single-job queries can also close this way: the
-    # per-JOB overhead sched_canary reads is paid once per job
-    # regardless of fan-out, and it dominates exactly the sub-second
-    # queries where the raw movers concentrate.
-    sched = [
-        [
-            rec.get(k)
-            for k in ("canary_sched_pre_sec", "canary_sched_post_sec")
-            if rec.get(k) is not None
-        ]
-        for rec in (old, new)
-    ]
-    sched_ratio = None
-    if sched[0] and sched[1]:
-        # a 0.0 sched reading on EITHER side is bogus data, not a
-        # missing field — fail loudly at the ratio (the old-side zero
-        # divides here; the new-side zero would otherwise surface as a
-        # data-dependent ZeroDivision inside the mover loop, or not at
-        # all on a mover-free record)
-        if statistics.median(sched[1]) == 0:
+    old_mem, new_mem = (_median(r, "canary_mem_pre_sec", "canary_mem_post_sec") for r in (old, new))
+    if old_mem and new_mem and old_mem > 0 and new_mem > 0:
+        out["mem_ratio"] = round(new_mem / old_mem, 3)
+    old_sched, new_sched = (
+        _median(r, "canary_sched_pre_sec", "canary_sched_post_sec") for r in (old, new)
+    )
+    sched_closed = {}
+    if old_sched is not None and new_sched is not None:
+        # a 0.0 new-side reading is bogus data, not a missing field:
+        # fail here rather than in a data-dependent spot in the loop
+        if new_sched == 0:
             raise ZeroDivisionError(
                 "new record's sched canary medians to 0.0 — not a usable reading"
             )
-        sched_ratio = statistics.median(sched[1]) / statistics.median(sched[0])
+        sched_ratio = new_sched / old_sched
         out["sched_ratio"] = round(sched_ratio, 3)
-    sched_closed = {}
-    if sched_ratio is not None:
-        # Absolute-delta gate: per-job scheduling overhead is bounded —
-        # the sched canary runs 20 one-task jobs, the same order of
-        # magnitude as a multi-job registry query — so the canary's own
-        # absolute swing is the most scheduler contention can plausibly
-        # add. A mover whose absolute move exceeds that swing (e.g. a
-        # 10 s query up 9 s against a 0.8 s canary delta) stays flagged
-        # no matter what the ratio says; without this gate any record
-        # with a moved sched canary could silently close a real
-        # regression on a long query.
-        sched_abs = abs(statistics.median(sched[1]) - statistics.median(sched[0]))
+        # Absolute-delta gate: the sched canary runs 20 one-task jobs,
+        # the order of a multi-job entry, so its own absolute swing is
+        # the most scheduler contention can plausibly add. Without the
+        # gate a moved sched canary could close a real regression on a
+        # long entry (a 10 s entry up 9 s against a 0.8 s swing).
+        sched_abs = abs(new_sched - old_sched)
         for k in list(movers):
             s = raw[k] / sched_ratio
             movers[k]["sched_normalized"] = round(s, 3)
@@ -1001,262 +651,67 @@ def compare_records(old_path: str, new_path: str, flag_ratio: float = 1.25) -> d
     return out
 
 
+def _line(record: dict) -> None:
+    print(json.dumps(record, separators=(",", ":")))
+
+
 def main() -> None:
     if len(sys.argv) >= 2 and sys.argv[1] == "--compare":
         if len(sys.argv) < 4:
             sys.exit("usage: bench.py --compare OLD_RECORD.json NEW_RECORD.json")
         print(json.dumps(compare_records(sys.argv[2], sys.argv[3]), indent=1))
         return
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-    from blockchair_etl_spark.queryset import QUERIES
-    from blockchair_etl_spark.session import get_session
-
-    spark = get_session(app_name="blockchair-etl-spark-bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # JVM/codegen + parquet-reader warmup on trivial plans so the first
-    # timed query doesn't pay session startup costs. (Per-query plan
-    # pre-compilation at sf0.001 was measured and removed: run-to-run
-    # variance exceeds the ~1s codegen cost it saves.)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    canary_pre = canary(spark)
-    sched_pre = sched_canary(spark)
-    mem_pre = mem_canary(spark)
-    # SPARK_GRAFT_BENCH_ALL=1 times every registry entry (full-surface
-    # sweep for regression hunting); default is the curated headline list.
-    if os.environ.get("SPARK_GRAFT_BENCH_ALL"):
-        names = list(QUERIES)
-    else:
-        names = [n for n in HEADLINE if n in QUERIES]
-    from blockchair_etl_spark.caching import release_tracked
-
-    timings: dict[str, float] = {}
-    for name in names:
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            df = QUERIES[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-            # Release plan-level persists between runs so run 2+ re-pays
-            # the cached stages (median measures the full plan, not a
-            # warm cache) and no blocks leak into later queries.
-            release_tracked()
-        timings[name] = round(statistics.median(samples), 3)
-
-    # df-bounded BoW cosine on a Zipfian-vocabulary fixture: the driver
-    # corpus's 31-term vocab makes every term near-universal, so the
-    # rare-term candidate path has nothing to prune there. The fixture
-    # (deterministic, generated in-session, untimed) has a real Zipf
-    # tail; this benches the scale configuration of bow_cosine_pairs on
-    # data where the df bound actually does its job.
-    import shutil
-
-    from blockchair_etl_spark.llmdata.dedup import bow_cosine_pairs
-    from blockchair_etl_spark.testing import zipfian_corpus
-
-    zdir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_tmp", "zipf_docs")
-    zipfian_corpus(spark, n_docs=10_000, vocab=50_000).write.mode("overwrite").parquet(zdir)
-    zdocs = spark.read.parquet(zdir)
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        bow_cosine_pairs(zdocs, threshold=0.8, max_df=20, min_shared_terms=2).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-    timings["dedup_bow_cosine_zipf"] = round(statistics.median(samples), 3)
-    shutil.rmtree(zdir, ignore_errors=True)
-
-    # Store-backed MinHash pair detection (r6 verdict #8): signatures
-    # written once to parquet (untimed — the store is the persisted
-    # corpus index, not part of the per-query cost), pair detection
-    # reads it. Compare with dedup_minhash_lsh above, the cold twin
-    # that re-shingles + re-hashes the corpus every run — the delta is
-    # what signature reuse buys the production loop.
-    from blockchair_etl_spark.llmdata.dedup import (
-        minhash_band_store,
-        minhash_pairs_from_store,
-    )
-
-    mh_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".bench_tmp", "mh_sig_store"
-    )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    minhash_band_store(docs).write.mode("overwrite").parquet(mh_dir)
-    mh_store = spark.read.parquet(mh_dir)
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        minhash_pairs_from_store(mh_store, threshold=0.5).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        samples.append(time.perf_counter() - t0)
-    timings["dedup_minhash_store_backed"] = round(statistics.median(samples), 3)
-    shutil.rmtree(mh_dir, ignore_errors=True)
-
-    # Store-backed winnowing pair detection (r15 verdict stretch #7):
-    # fingerprint rows written once to parquet (untimed — the persisted
-    # MOSS index), df-bounded pair detection reads the store. Compare
-    # with dedup_winnowing_pairs above, the cold twin that re-normalizes
-    # + re-hashes + re-selects the corpus every run — the delta is what
-    # fingerprint reuse buys the production loop (the
-    # dedup_minhash_store_backed precedent for the MOSS family).
-    from blockchair_etl_spark.llmdata.text import (
-        winnowing_fingerprints,
-        winnowing_pairs_from_store,
-    )
-
-    wn_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".bench_tmp", "winnow_fp_store"
-    )
-    winnowing_fingerprints(docs).select("doc", "fp").distinct().write.mode(
-        "overwrite"
-    ).parquet(wn_dir)
-    wn_store = spark.read.parquet(wn_dir)
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        winnowing_pairs_from_store(
-            wn_store, min_shared=2, threshold=0.2, max_df=50
-        ).write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-    timings["dedup_winnowing_store_backed"] = round(statistics.median(samples), 3)
-    shutil.rmtree(wn_dir, ignore_errors=True)
-
-    # Index-backed IVF-PQ search: codebooks trained + vectors encoded
-    # ONCE (untimed — the persisted index of a deployed ANN service),
-    # each timed run is the pure query path: cluster-pruned codes scan
-    # + m BIGINT table lookups per row. Compare with ann_ivfpq_topk,
-    # which builds the whole index inside the query.
-    from blockchair_etl_spark.llmdata.ivf import seed_centroids
-    from blockchair_etl_spark.llmdata.pq import (
-        ivfpq_adc_topk_from_index,
-        ivfpq_encode,
-        residual_frame,
-        seed_pq_codebooks,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = seed_centroids(emb, n_centroids=8)
-    res = residual_frame(emb, cents)
-    books = seed_pq_codebooks(res, dim=64, m=4, ksub=16, vec_col="residual")
-    qv = [float(v) for v in cents[0]]
-    pq_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".bench_tmp", "ivfpq_index"
-    )
-    ivfpq_encode(emb, cents, books).write.mode("overwrite").parquet(pq_dir)
-    pq_index = spark.read.parquet(pq_dir)
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        ivfpq_adc_topk_from_index(
-            pq_index, cents, books, qv, k=10, n_probe=2
-        ).write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-    timings["ann_ivfpq_store_backed"] = round(statistics.median(samples), 3)
-    shutil.rmtree(pq_dir, ignore_errors=True)
-
-    canary_post = canary(spark)
-    sched_post = sched_canary(spark)
-    mem_post = mem_canary(spark)
-
-    m = re.search(r"sf([\d.]+)", sf_dir)
+    spark = start_session("blockchair-etl-spark-bench")
+    pre = canary(spark), sched_canary(spark), mem_canary(spark)
+    timings = time_entries(spark, SF_DIR, runners(HEADLINE, HEADLINE_EXTRAS), RUNS, scale=1)
+    post = canary(spark), sched_canary(spark), mem_canary(spark)
+    canaries = {
+        "canary_pre_sec": pre[0],
+        "canary_post_sec": post[0],
+        "canary_sched_pre_sec": pre[1],
+        "canary_sched_post_sec": post[1],
+        "canary_mem_pre_sec": pre[2],
+        "canary_mem_post_sec": post[2],
+    }
+    m = re.search(r"sf([\d.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
-    result = {
+    total = round(sum(timings.values()), 3)
+    record = {
         "metric": "headline_queries_total_wall",
-        "value": round(sum(timings.values()), 3),
+        "value": total,
         "unit": "sec",
         "queries": timings,
-        "n": runs,
+        "n": RUNS,
         "sf": sf,
-        "canary_pre_sec": canary_pre,
-        "canary_post_sec": canary_post,
-        "canary_sched_pre_sec": sched_pre,
-        "canary_sched_post_sec": sched_post,
-        "canary_mem_pre_sec": mem_pre,
-        "canary_mem_post_sec": mem_post,
+        "cpus": CPUS,
+        **canaries,
     }
-    # The driver tail-captures stdout with a HARD 2,000-byte cap, and
-    # ~74 per-query timings need ~3 KB — chunked stdout alone can never
-    # record them all (chunk 1, the whole §2 DAG family, was
-    # head-truncated in r6-r8). So the COMPLETE record is also written
-    # to BENCH_DETAIL.json at the repo root (overwritten per run,
-    # committed each round) — that file is the durable per-query
-    # record; the chunked stdout below stays as the driver-visible
-    # summary view.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as fh:
-        json.dump(result, fh, indent=1, sort_keys=False)
+    with open(os.path.join(REPO, f"BENCH_DETAIL_c{CPUS}.json"), "w") as fh:
+        json.dump(record, fh, indent=1)
         fh.write("\n")
-    # Emit the per-query detail as SEVERAL short self-describing chunk
-    # lines (compact separators, ~15 queries each) so truncation can
-    # only ever cost whole early chunks, then the scalar summary LAST
-    # so it always survives.
     keys = list(timings)
-    chunk_size = 15
-    n_chunks = (len(keys) + chunk_size - 1) // chunk_size
+    size = 15
+    n_chunks = (len(keys) + size - 1) // size
     for i in range(n_chunks):
-        chunk = {k: timings[k] for k in keys[i * chunk_size : (i + 1) * chunk_size]}
-        print(
-            json.dumps(
-                {
-                    "metric": "headline_queries_chunk",
-                    "chunk": i + 1,
-                    "of": n_chunks,
-                    "sf": sf,
-                    "queries": chunk,
-                },
-                separators=(",", ":"),
-            )
-        )
-    # r18 (verdict #8/hygiene): the driver's 2,000-byte tail cap cannot
-    # hold 100 name:value pairs (~3.4 KB — names alone exceed the cap),
-    # so the per-query VALUES also go out as ONE compact array in the
-    # exact key order of the chunk lines above (and of BENCH_DETAIL
-    # .json's "queries" map, committed every round — the name order is
-    # recoverable from either). ~0.7 KB, emitted immediately before the
-    # final summary so both always land inside the captured tail.
-    # ADDITION only: the chunk lines and the summary line are unchanged.
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_values",
-                "sf": sf,
-                "order": "chunk-line key order (= BENCH_DETAIL.json queries order)",
-                "values": [timings[k] for k in keys],
-            },
-            separators=(",", ":"),
-        )
-    )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total_wall",
-                "value": result["value"],
-                "unit": "sec",
-                "n": runs,
-                "sf": sf,
-                "queries_in_chunk_lines": len(timings),
-                "chunk_lines": n_chunks,
-                "canary_pre_sec": canary_pre,
-                "canary_post_sec": canary_post,
-                "canary_sched_pre_sec": sched_pre,
-                "canary_sched_post_sec": sched_post,
-                "canary_mem_pre_sec": mem_pre,
-                "canary_mem_post_sec": mem_post,
-            },
-            separators=(",", ":"),
-        )
-    )
+        chunk = {k: timings[k] for k in keys[i * size : (i + 1) * size]}
+        _line({"metric": "headline_queries_chunk", "chunk": i + 1, "of": n_chunks,
+               "sf": sf, "queries": chunk})
+    _line({
+        "metric": "headline_queries_values",
+        "sf": sf,
+        "order": "chunk-line key order (= BENCH_DETAIL.json queries order)",
+        "values": [timings[k] for k in keys],
+    })
+    _line({
+        "metric": "headline_total_wall",
+        "value": total,
+        "unit": "sec",
+        "n": RUNS,
+        "sf": sf,
+        "queries_in_chunk_lines": len(timings),
+        "chunk_lines": n_chunks,
+        **canaries,
+    })
     spark.stop()
 
 

@@ -13,11 +13,6 @@ Maps the reference's storage-side operators to a parquet lake:
   overwrite-by-partition idempotent re-loads.
 - Retention (`download_blockchair_data.py:218-246`, 3-day default) →
   partition drops by cutoff (S5).
-
-Scale notes: clustering keys double as the join/filter keys downstream,
-so a clustered write is also a bucketing opportunity — `materialize`
-exposes `buckets` to co-locate future joins (Spark bucketed tables skip
-the shuffle on equi-joins over the bucket key).
 """
 
 from __future__ import annotations
@@ -25,9 +20,11 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import warnings
 from dataclasses import dataclass
 from pathlib import Path
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -42,9 +39,6 @@ class Materialization:
 
     mode: str = "view"  # view | table
     cluster_by: tuple[str, ...] = ()
-    partition_by: tuple[str, ...] = ()
-    buckets: int = 0
-    bucket_by: tuple[str, ...] = ()
     cluster_algo: str = "linear"  # linear | zorder
 
 
@@ -58,13 +52,16 @@ def materialize(
 
     view  → register a temp view (lazy; Catalyst sees through it, so
             downstream predicates still push into the source scan).
-    table → clustered/partitioned parquet write, then read back (cuts
-            lineage and freezes the layout, like a dbt table model).
+    table → clustered parquet write to ``{base_path}/{name}``, then read
+            back (cuts lineage and freezes the layout, like a dbt table
+            model); ``base_path`` is required.
     """
     spark = df.sparkSession
     if config.mode == "view":
         df.createOrReplaceTempView(name)
         return df
+    if not base_path:
+        raise ValueError(f"{name}: a table model needs base_path to write to")
 
     writer_df = df
     if config.cluster_by and config.cluster_algo == "zorder":
@@ -75,36 +72,12 @@ def materialize(
         writer_df = df.repartition(*[df[c] for c in config.cluster_by]).sortWithinPartitions(
             *config.cluster_by
         )
-    if base_path:
-        if config.buckets:
-            # Path-based parquet writes carry no bucket metadata; a
-            # silent plain write would defeat the bucketing contract
-            # (downstream joins would still shuffle).
-            raise ValueError(
-                f"{name}: buckets={config.buckets} requires a catalog table "
-                "(saveAsTable) — bucketing cannot be expressed on a bare "
-                "path write; drop base_path or drop buckets"
-            )
-        path = f"{base_path}/{name}"
-        w = writer_df.write.mode("overwrite")
-        if config.partition_by:
-            w.partitionBy(*config.partition_by).parquet(path)
-            # partition columns come back from directory names
-            return spark.read.parquet(path)
-        w.parquet(path)
-        # Parquet stores every column as nullable and a file source reads
-        # a given schema as nullable, so this is the footer schema without
-        # the schema-inference job a bare read runs.
-        return spark.read.schema(writer_df.schema).parquet(path)
-    w = writer_df.write.mode("overwrite").format("parquet")
-    if config.partition_by:
-        w = w.partitionBy(*config.partition_by)
-    if config.buckets:
-        w = w.bucketBy(config.buckets, *config.bucket_by).sortBy(*config.bucket_by)
-        w.saveAsTable(name)
-    else:
-        w.saveAsTable(name)
-    return spark.table(name)
+    path = f"{base_path}/{name}"
+    writer_df.write.mode("overwrite").parquet(path)
+    # Parquet stores every column as nullable and a file source reads
+    # a given schema as nullable, so this is the footer schema without
+    # the schema-inference job a bare read runs.
+    return spark.read.schema(writer_df.schema).parquet(path)
 
 
 # The reference's per-model clustering configuration (§2 S8).
@@ -411,16 +384,7 @@ def _is_swap_window_error(exc: BaseException) -> bool:
         from pyspark.sql.utils import AnalysisException  # type: ignore
     is_analysis = isinstance(exc, AnalysisException)
     if is_analysis:
-        cond = None
-        for getter in ("getCondition", "getErrorClass"):
-            fn = getattr(exc, getter, None)
-            if callable(fn):
-                try:
-                    cond = fn()
-                except Exception:
-                    cond = None
-                if cond:
-                    break
+        cond = exc.getCondition() if hasattr(exc, "getCondition") else None
         if cond:
             return "PATH_NOT_FOUND" in str(cond)
         # conditionless analysis error: fall through to the text scan
@@ -436,8 +400,13 @@ def _is_swap_window_error(exc: BaseException) -> bool:
                     return True
                 cause = cause.getCause()
                 seen += 1
-        except Exception:
-            pass  # py4j gateway hiccup: fall back to the text scan
+        except Py4JError as err:
+            warnings.warn(
+                f"Java cause-chain walk failed ({type(err).__name__}: {err}); "
+                "classifying by message text",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     # fallback ONLY: class-qualified markers, never bare
     # 'does not exist' / 'No such file'. The third marker covers the
     # pyspark<3.4 layout the import fallback above claims to support

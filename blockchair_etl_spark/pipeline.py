@@ -55,23 +55,20 @@ from .transform.staging import (
 
 def run_transform_dag(
     raw: dict[str, DataFrame],
-    base_path: str | None = None,
-    materializations: dict[str, Materialization] | None = None,
+    base_path: str,
     with_checks: bool = True,
 ) -> tuple[dict[str, DataFrame], list[CheckResult]]:
     """Build the full staged → intermediate → mart DAG.
 
     `raw` maps {blocks, transactions, inputs, outputs, addresses} to
-    their raw DataFrames. With `base_path`, table-materialized models
-    are written (clustered parquet) and read back; otherwise everything
-    stays lazy — useful for pushdown-preserving ad-hoc analysis.
+    their raw DataFrames. Staged models stay lazy temp views; the
+    table-materialized models are written as clustered parquet under
+    `base_path` and read back.
     Independent branches run concurrently (see the module docstring); a
     failing branch's error is raised once every branch has returned.
     """
-    mats = materializations or REFERENCE_MATERIALIZATIONS
-
     def mat(name: str, df: DataFrame) -> DataFrame:
-        cfg = mats.get(name, Materialization("view"))
+        cfg = REFERENCE_MATERIALIZATIONS.get(name, Materialization("view"))
         return materialize(df, name, cfg, base_path=base_path)
 
     stg: dict[str, DataFrame] = {

@@ -1039,6 +1039,7 @@ def test_read_live_store_real_errors_surface_immediately(spark, tmp_path):
     assert read_live_store(spark, big, max_rows=50).count() == 50
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_swap_window_error_matching_is_typed_first(spark, tmp_path):
     """r15 advice: _is_swap_window_error classifies by exception
     class / error condition FIRST — broad text markers like 'does not
@@ -1078,6 +1079,21 @@ def test_swap_window_error_matching_is_typed_first(spark, tmp_path):
     if not (legacy.getCondition() if hasattr(legacy, "getCondition") else None):
         assert _is_swap_window_error(legacy)
     assert not _is_swap_window_error(Exception("Path does not exist: /x"))
+    # a Py4J failure while walking the Java cause chain warns and falls
+    # back to the class-qualified text scan
+    from py4j.protocol import Py4JError
+
+    class _ClosedGateway:
+        def getClass(self):
+            raise Py4JError("gateway closed")
+
+    class _Captured(Exception):
+        java_exception = _ClosedGateway()
+
+    with pytest.warns(RuntimeWarning, match="cause-chain walk failed"):
+        assert _is_swap_window_error(_Captured("java.io.FileNotFoundException: /s"))
+    with pytest.warns(RuntimeWarning, match="cause-chain walk failed"):
+        assert not _is_swap_window_error(_Captured("disk quota exceeded"))
 
 
 def test_kmv_estimate_grouped_input_contract(spark):

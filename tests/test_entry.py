@@ -22,15 +22,26 @@ def test_contract_key_consistency():
 
 
 def test_bench_headline_names_are_registered():
-    """Every curated bench.HEADLINE name must exist in the registry —
-    a renamed entry silently dropping out of the headline artifact is
-    exactly how a regression goes unmeasured."""
+    """Every headline, scaling and pair-gate name resolves to exactly
+    one runner, either a registry entry or an extra runner. A renamed
+    entry silently dropping out of a bench record is how a regression
+    goes unmeasured, and a name listed under both kinds times another
+    program than its list claims."""
     import bench
+    import bench_scaling
 
     from blockchair_etl_spark.queryset import QUERIES
 
-    missing = [n for n in bench.HEADLINE if n not in QUERIES]
-    assert not missing, missing
+    for registry, extras in (
+        (bench.HEADLINE, bench.HEADLINE_EXTRAS),
+        (bench_scaling.FAMILY, list(bench.EXTRAS)),
+    ):
+        names = registry + extras
+        assert sorted({n for n in names if names.count(n) > 1}) == []
+        assert [n for n in registry if n not in QUERIES] == []
+        assert [n for n in extras if n not in bench.EXTRAS] == []
+    scaling = set(bench_scaling.FAMILY) | set(bench.EXTRAS)
+    assert sorted(set(bench_scaling.PAIR_QUERIES) - scaling) == []
 
 
 def test_registry_rotation_window():

@@ -394,6 +394,8 @@ def test_materialize_modes(spark, tmp_path):
         df, "a_table", Materialization("table", cluster_by=("k",)), base_path=str(tmp_path)
     )
     assert t.count() == 100
+    with pytest.raises(ValueError, match="base_path"):
+        materialize(df, "no_lake", Materialization("table"))
     # clustered write produced sorted-within-file parquet
     import pyarrow.parquet as pq
     import glob
