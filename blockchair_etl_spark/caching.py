@@ -28,6 +28,9 @@ concurrent-query service should scope caches per job instead.
 
 from __future__ import annotations
 
+import warnings
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
@@ -59,7 +62,10 @@ def release_tracked(blocking: bool = False) -> int:
     Side channel: :data:`last_destructive_release` is rewritten with
     the labels of any checkpoint-backed entries freed by THIS call —
     those frames (and plans built over them) cannot be acted on again;
-    everything else recomputes safely."""
+    everything else recomputes safely.
+
+    A failed JVM call (a stopped session) warns and moves on to the next
+    entry; any other error propagates."""
     n = 0
     destructive: list[str] = []
     while _TRACKED:
@@ -69,8 +75,13 @@ def release_tracked(blocking: bool = False) -> int:
             n += 1
             if isinstance(df, _CheckpointHandle):
                 destructive.append(df.label)
-        except Exception:  # session already stopped — nothing to free
-            pass
+        except Py4JError as exc:
+            warnings.warn(
+                f"release_tracked: unpersist failed ({type(exc).__name__}: {exc}); "
+                "its blocks may leak unless the session is already stopped",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     last_destructive_release[:] = destructive
     return n
 
@@ -112,11 +123,10 @@ def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
     a materialized localCheckpoint's RDD reads memory+disk, a plain
     RDD-backed plan reads NONE).
 
-    Failures are WARNED, not swallowed silently: the only legitimate
-    failure here is a stopped session (teardown), and a leak with no
-    signal is exactly the bug this helper exists to fix."""
-    import warnings
-
+    A failed JVM call is WARNED, not swallowed silently: the only
+    legitimate failure here is a stopped session (teardown), and a leak
+    with no signal is exactly the bug this helper exists to fix. Any
+    other error propagates."""
     try:
         plan = jvm_plan(df)
         if plan.getClass().getSimpleName() == "LogicalRDD":
@@ -125,7 +135,7 @@ def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
                 plan.rdd().unpersist(blocking)
                 return True
         df.unpersist(blocking)
-    except Exception as exc:  # pragma: no cover — teardown path
+    except Py4JError as exc:
         warnings.warn(
             "release_local_checkpoint failed "
             f"({type(exc).__name__}: {exc}); checkpoint blocks may leak "

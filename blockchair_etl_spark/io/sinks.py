@@ -7,8 +7,9 @@ Maps the reference's storage-side operators to a parquet lake:
   intermediate/mart tables) → lazy DataFrame vs `.write` (S7).
 - `cluster_by` hints on every model (e.g. `stg_blocks.sql:4`,
   `fct_transaction_traces.sql:4`) → repartition + sortWithinPartitions
-  before write, giving parquet min/max row-group pruning the same
-  benefit Snowflake micro-partition clustering gives (S8).
+  before write (one sorted partition for a day-size model), giving
+  parquet min/max row-group pruning the same benefit Snowflake
+  micro-partition clustering gives (S8).
 - Daily dump feed → `date=YYYYMMDD` partitioned layout (S2) with
   overwrite-by-partition idempotent re-loads.
 - Retention (`download_blockchair_data.py:218-246`, 3-day default) →
@@ -26,6 +27,8 @@ from pathlib import Path
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources import one_partition_if_small
 
 
 @dataclass(frozen=True)
@@ -55,6 +58,18 @@ def materialize(
     table → clustered parquet write to ``{base_path}/{name}``, then read
             back (cuts lineage and freezes the layout, like a dbt table
             model); ``base_path`` is required.
+
+    Both ends of a table model go through
+    :func:`~blockchair_etl_spark.io.sources.one_partition_if_small`.
+    A linear-clustered model whose size estimate passes is written as
+    ``coalesce(1).sortWithinPartitions(*cluster_by)``, one sorted file
+    with no shuffle, instead of ``repartition(cluster_by)``; the zorder
+    layout is unchanged. The read-back is gated on the parquet bytes
+    just written, so queries over a day-size mart plan with no exchange.
+    The cost is that a join of gated relations runs in one task, for
+    inputs up to ``spark.sql.autoBroadcastJoinThreshold``; Spark's
+    broadcast join makes the same bet. Above the threshold both plans
+    are the partitioned ones.
     """
     spark = df.sparkSession
     if config.mode == "view":
@@ -69,15 +84,16 @@ def materialize(
 
         writer_df = zorder_layout(df, list(config.cluster_by))
     elif config.cluster_by:
-        writer_df = df.repartition(*[df[c] for c in config.cluster_by]).sortWithinPartitions(
-            *config.cluster_by
-        )
+        one = one_partition_if_small(df, name)
+        if one is df:  # not small: hash-partition on the keys
+            one = df.repartition(*[df[c] for c in config.cluster_by])
+        writer_df = one.sortWithinPartitions(*config.cluster_by)
     path = f"{base_path}/{name}"
     writer_df.write.mode("overwrite").parquet(path)
     # Parquet stores every column as nullable and a file source reads
     # a given schema as nullable, so this is the footer schema without
     # the schema-inference job a bare read runs.
-    return spark.read.schema(writer_df.schema).parquet(path)
+    return one_partition_if_small(spark.read.schema(writer_df.schema).parquet(path), name)
 
 
 # The reference's per-model clustering configuration (§2 S8).

@@ -17,12 +17,15 @@ from __future__ import annotations
 import functools
 import os
 import re
+import warnings
 from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..caching import jvm_plan
 from ..session import inheriting, prepare_session
 
 TESTDATA_TABLES = (
@@ -123,6 +126,57 @@ def read_tsv(
     return df
 
 
+_NO_STATS = (1 << 63) - 1  # Long.MaxValue: Spark's "no statistics" size
+_BYTE_UNITS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20, "g": 30, "gb": 30,
+               "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
+def _broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (-1: off). Spark
+    validates the value when it is set, so it always parses."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip().lower()
+    m = re.fullmatch(r"(-?)(\d+)\s*([a-z]*)", raw)
+    n = int(m.group(2)) << _BYTE_UNITS[m.group(3)]
+    return -n if m.group(1) else n
+
+
+def one_partition_if_small(df: DataFrame, name: str) -> DataFrame:
+    """``df.coalesce(1)`` when the optimizer's size estimate of ``df`` is
+    known and at most ``spark.sql.autoBroadcastJoinThreshold``; otherwise
+    ``df`` unchanged.
+
+    This is Spark's own broadcast rule, applied to planning: a relation
+    that passes is one Spark would broadcast whole. ``SinglePartition``
+    satisfies the distribution every aggregate, window and sort-merge
+    join requires, so its plan needs no exchange, and a plan with no
+    exchange runs as one job instead of one per shuffle map stage. The
+    cost is that a join of two gated relations runs in one task, for
+    inputs up to the threshold's size; a join with a larger relation
+    broadcasts the gated side, as it would anyway. The threshold's own
+    off value, -1, turns the gate off.
+
+    Fails safe towards today's plan: Spark's "no statistics" sentinel
+    (``Long.MaxValue``, e.g. a ``createDataFrame`` frame) counts as
+    large, and so does a failed JVM call, which also warns and names
+    ``name``. Unlike ``query.graph``'s persist gate, a wrong "small"
+    here would put a large relation in one task.
+    """
+    threshold = _broadcast_threshold(df.sparkSession)
+    if threshold < 0:
+        return df
+    try:
+        size = int(str(jvm_plan(df, "optimizedPlan").stats().sizeInBytes()))
+    except Py4JError as exc:
+        warnings.warn(
+            f"size estimate of {name} failed ({type(exc).__name__}: {exc}); "
+            "it keeps its partitioned plan",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return df
+    return df.coalesce(1) if size < _NO_STATS and size <= threshold else df
+
+
 # Filename convention of the daily dump feed:
 # blockchair_<coin>_<type>_<YYYYMMDD>.tsv.gz
 # (reference regex `download_blockchair_data.py:235`).
@@ -164,11 +218,13 @@ def _find_bad_files(
     `input_file_name()`. All files parse in parallel across executor
     threads — at 10k+ daily files this replaces 10k serial driver-side
     probe jobs, and at any file count it costs one scan-and-aggregate
-    instead of one per table. If the batch scan itself dies
-    (container-level failure — e.g. a truncated gzip aborts the whole
-    job before row-level tolerance applies), fall back to per-file
-    FAILFAST probes run concurrently, so one bad container still skips
-    only itself.
+    instead of one per table. When the files' on-disk bytes pass
+    :func:`one_partition_if_small`, the union is read in one task and
+    the per-file aggregate needs no shuffle: one job. If the batch scan
+    itself dies (container-level failure — e.g. a truncated gzip aborts
+    the whole job before row-level tolerance applies), fall back to
+    per-file FAILFAST probes run concurrently, so one bad container
+    still skips only itself.
     """
     routed = {t: paths for t, paths in routed.items() if paths}
     if not routed:
@@ -200,7 +256,9 @@ def _find_bad_files(
         )
     everything = [(p, schemas[t]) for t, paths in routed.items() for p in paths]
     try:
-        union = functools.reduce(DataFrame.unionByName, scans)
+        union = one_partition_if_small(
+            functools.reduce(DataFrame.unionByName, scans), "the corrupt-record scan"
+        )
         bad_rows = (
             union.groupBy("__file")
             .agg(F.max("__bad").alias("__bad"), F.count("__c0").alias("__n"))
@@ -252,6 +310,14 @@ def load_with_pattern_routing(
     still loads. Validation is one batched corrupt-record scan over every
     table's files (see :func:`_find_bad_files`), never a per-file driver
     loop; the data path is then one clean multi-file scan per table.
+
+    Each clean scan goes through :func:`one_partition_if_small` on its
+    files' on-disk bytes, the size Spark's broadcast rule also reads. A
+    day-size table is planned as one partition, so the stg views and
+    the quality suite over it plan with no exchange; the cost is that a
+    join of such tables runs in one task, for inputs up to
+    ``spark.sql.autoBroadcastJoinThreshold``. Larger tables keep their
+    split scan.
     """
     routed: dict[str, list[str]] = {t: [] for t in table_patterns}
     owner: dict[str, str] = {}
@@ -277,7 +343,9 @@ def load_with_pattern_routing(
     for table, paths in routed.items():
         good = [p for p in paths if p not in bad]
         if good:
-            out[table] = read_tsv(spark, good, schema=schemas[table])  # type: ignore[arg-type]
+            out[table] = one_partition_if_small(
+                read_tsv(spark, good, schema=schemas[table]), table  # type: ignore[arg-type]
+            )
     return out, report
 
 

@@ -7,8 +7,11 @@ as SELECTs expecting zero rows. Same contract here: each check returns a
 violations DataFrame; `run_checks` evaluates a suite and reports, through
 the one-action runner of quality/suite.py.
 
-At scale these are single-shuffle grouped counts; `not_null` is a
-scan-only filter with the predicate pushed to parquet.
+`unique` and the combination check are grouped counts: above the size
+gate (``io.sources.one_partition_if_small``) each shuffles once on its
+key; on a day-size input the gate has made one partition, so each runs
+in the scan's task with no shuffle. `not_null` is a scan-only filter
+with the predicate pushed to parquet on either side.
 """
 
 from __future__ import annotations

@@ -14,10 +14,17 @@ so the whole suite runs as one Spark action, not one count() per check.
 `quality.checks.run_checks` (the reference suite the DAG runs) is a
 thin adapter over it. One action is not one pass: no scan is shared.
 Each check is its own branch of the union and plans its own scan of its
-model plus up to two shuffles (its group-by or distinct, then its
-count); under AQE each shuffle stage is a job of its own, so the
-reference suite runs 16 jobs and 36 stages (skipped ones included) on
-a daily build.
+model. How many jobs that action runs depends on the size gate of
+``io.sources.one_partition_if_small``:
+
+- inputs above ``spark.sql.autoBroadcastJoinThreshold`` (or the gate
+  off): each check plans up to two shuffles (its group-by or distinct,
+  then its count), and under AQE each shuffle map stage is a job of its
+  own; the reference suite runs 16 jobs on a daily build with the
+  threshold at -1;
+- day-size inputs loaded through the gate are one partition, which
+  every check's grouping already satisfies: no check plans an exchange
+  and the whole suite runs as one job.
 
 Config sources: a Python dict, a JSON file, or a YAML file (PyYAML is
 present in this environment; the JSON path keeps the loader dependency-
@@ -111,7 +118,7 @@ def run_config_suite(
 ) -> DataFrame:
     """→ one relation (model, column, test, n_violations, passed),
     a single UNION-of-aggregates plan: one Spark action for the suite,
-    in which each check scans its model and shuffles on its own."""
+    in which each check scans its model on its own."""
     specs = (
         config_or_specs
         if isinstance(config_or_specs, list)

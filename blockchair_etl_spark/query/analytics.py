@@ -6,6 +6,14 @@ mart DataFrames plus the dashboard's parameters (date window, address,
 hop depth, caps) and returns a lazy DataFrame — filters push down
 through the mart/staging lineage into the parquet scans.
 
+Serving path: the marts arrive through ``io.sinks.materialize``, whose
+read-back is size-gated (``io.sources.one_partition_if_small``). A
+day-size mart is then one partition, so the grouped panels
+(`distinct_transaction_count`, `avg_nonzero_fee`, `most_active_address`)
+plan with no exchange and each request runs one Spark job, like the
+scan-only panels. A mart above ``spark.sql.autoBroadcastJoinThreshold``
+keeps its partitioned scan, and those panels shuffle as before.
+
 The `/*+ NO_INDEX */` hints sprinkled in the reference SQL are no-ops on
 Snowflake and are dropped; broadcast hints are applied where dims are
 provably small (SURVEY.md §4).

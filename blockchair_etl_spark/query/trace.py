@@ -35,6 +35,12 @@ rows, so the planner broadcasts it against a plain edge scan whenever the
 edges carry size statistics, as a parquet scan does. The union of all
 hops is checkpointed once more and the frontier checkpoints are then
 released, so a trace leaves one checkpoint behind.
+
+On the dashboard's day-size marts the edge scan is one partition (the
+size-gated read-back of ``io.sinks.materialize``), so the hop joins and
+``analytics.trace_from_address``'s per-transaction context aggregate
+plan with no exchange, one job fewer per trace than over a partitioned
+mart.
 """
 
 from __future__ import annotations

@@ -3,6 +3,10 @@ parity-harness query (the round-5 advice: registry pipelines persisted
 but never unpersisted, accumulating MEMORY_AND_DISK blocks across
 invocations in a long-lived session)."""
 
+import pytest
+from py4j.protocol import Py4JError
+
+from blockchair_etl_spark import caching
 from blockchair_etl_spark.caching import release_tracked, tracked_count, tracked_persist
 from blockchair_etl_spark.testing import check_query
 
@@ -123,3 +127,47 @@ def test_registry_invocation_releases_previous_caches(spark, sf_dir):
     assert tracked_count() >= 1  # signature relation still cached
     QUERIES["dedup_exact"].fn(spark, sf_dir)  # plan build alone releases
     assert tracked_count() == 0
+
+
+class _FailingUnpersist:
+    """A tracked entry whose release raises ``error``."""
+
+    def __init__(self, error: BaseException):
+        self.error = error
+
+    def persist(self, level):
+        return self
+
+    def unpersist(self, blocking=False):
+        raise self.error
+
+
+def test_release_tracked_warns_on_failed_jvm_call():
+    release_tracked()
+    tracked_persist(_FailingUnpersist(Py4JError("forced")))
+    with pytest.warns(RuntimeWarning, match="release_tracked: unpersist failed"):
+        assert release_tracked() == 0
+    assert tracked_count() == 0
+
+
+def test_release_local_checkpoint_warns_on_failed_jvm_call(spark, monkeypatch):
+    def broken(df, stage="analyzed"):
+        raise Py4JError("forced")
+
+    monkeypatch.setattr(caching, "jvm_plan", broken)
+    with pytest.warns(RuntimeWarning, match="release_local_checkpoint failed"):
+        assert caching.release_local_checkpoint(spark.range(3)) is False
+
+
+def test_release_paths_propagate_non_py4j_errors(spark, monkeypatch):
+    release_tracked()
+    tracked_persist(_FailingUnpersist(ValueError("not a JVM failure")))
+    with pytest.raises(ValueError, match="not a JVM failure"):
+        release_tracked()
+
+    def broken(df, stage="analyzed"):
+        raise RuntimeError("not a JVM failure either")
+
+    monkeypatch.setattr(caching, "jvm_plan", broken)
+    with pytest.raises(RuntimeError, match="not a JVM failure either"):
+        caching.release_local_checkpoint(spark.range(3))
