@@ -1,43 +1,46 @@
-"""Reusable Column-expression helpers — the engine's "macro" layer.
+"""The engine's "macro" layer: the reference's dbt macros as SQL text.
 
 The reference implements these as dbt Jinja macros that inline SQL text
 (`transaction_tracing/macros/convert_to_btc.sql:1-3`,
-`macros/calculate_cdd.sql:1-3`). Here they are plain Python functions
-returning Column expressions, so every call site stays inside Catalyst's
-whole-stage codegen — no UDFs, no SQL templating.
+`macros/calculate_cdd.sql:1-3`). Here they are Python functions that
+take a SQL expression and return one, spliced into the models' SQL in
+transform/. The text holds only expressions the models write themselves,
+never a value from outside the program. DataFrame code and SQL text
+plan through the same optimizer, so the expressions still run in
+whole-stage codegen with no UDF.
+
+The divisors are DOUBLE literals (`1e8`, `86400D`): Spark SQL reads
+`100000000.0` as a DECIMAL, and a bigint divided by a decimal is a
+decimal, not the double the `_btc` and `_days` columns hold.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-SATS_PER_BTC = 100_000_000.0
-SECONDS_PER_DAY = 86_400.0
+
+def convert_to_btc(value_sats: str) -> str:
+    """satoshis → BTC, float division (`convert_to_btc.sql:1-3` divides
+    by 100000000)."""
+    return f"({value_sats} / 1e8)"
 
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def convert_to_btc(value_sats: Column | str) -> Column:
-    """satoshis → BTC (float division, matching the reference macro
-    `convert_to_btc.sql:1-3` which divides by 100000000)."""
-    return _col(value_sats) / F.lit(SATS_PER_BTC)
-
-
-def seconds_to_days(seconds: Column | str) -> Column:
+def seconds_to_days(seconds: str) -> str:
     """seconds → days (`stg_inputs.sql:31` lifespan/86400.0)."""
-    return _col(seconds) / F.lit(SECONDS_PER_DAY)
+    return f"({seconds} / 86400D)"
 
 
-def calculate_cdd(lifespan_secs: Column | str, value_sats: Column | str) -> Column:
+def calculate_cdd(lifespan_secs: str, value_sats: str) -> str:
     """Coin-days-destroyed: (lifespan/86400) × (value/1e8)
     (`macros/calculate_cdd.sql:1-3`)."""
-    return seconds_to_days(lifespan_secs) * convert_to_btc(value_sats)
+    return f"({seconds_to_days(lifespan_secs)} * {convert_to_btc(value_sats)})"
 
 
 def exact_sum(c: Column | str, scale: int = 6) -> Column:
     """Order-insensitive exact sum of a fixed-point-valued double column.
+
+    The one macro that stays a Column: its callers (the registry
+    queries in queryset.py) are DataFrame code.
 
     Precision 18 (not higher) keeps Spark on long-backed Decimal
     arithmetic (~2x faster than Int128-backed); the SUM result type
@@ -49,5 +52,5 @@ def exact_sum(c: Column | str, scale: int = 6) -> Column:
     fixed-point (prices, quantities, fee amounts), summing as DECIMAL is
     exact and order-insensitive; the result is cast back to double.
     """
-    return F.sum(_col(c).cast(f"decimal(18,{scale})")).cast("double")
-
+    col = F.col(c) if isinstance(c, str) else c
+    return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")

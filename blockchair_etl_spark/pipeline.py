@@ -1,9 +1,11 @@
 """Pipeline orchestration: the transform DAG runner and the serving
 layer's cache/retry contract.
 
-§3.2: dbt's Jinja-rendered DAG becomes plain function composition —
-Catalyst sees the whole lineage, so cross-"model" optimization
-(predicate pushdown through staged views into raw scans) is automatic.
+§3.2: dbt's Jinja-rendered DAG becomes function composition over the
+same SQL — each model is one ``spark.sql`` statement whose parents are
+bound as frames, with the macros spliced in as SQL text. Catalyst sees
+the whole lineage, so cross-"model" optimization (predicate pushdown
+through staged views into raw scans) is automatic.
 `run_transform_dag` materializes per the reference's per-layer policy
 and runs the declared quality suite, like `dbt build`.
 

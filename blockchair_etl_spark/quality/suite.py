@@ -8,14 +8,14 @@ config shape — `models[].columns[].tests[]` with `unique`, `not_null`,
 `unique_combination_of_columns` — parsed into the executable checks of
 quality/checks.py.
 
-Execution model: `run_config_suite` builds ONE report relation — every
-check becomes a single-row count aggregate and the rows are unioned —
-so the whole suite runs as one Spark action, not one count() per check.
-`quality.checks.run_checks` (the reference suite the DAG runs) is a
-thin adapter over it. One action is not one pass: no scan is shared.
-Each check is its own branch of the union and plans its own scan of its
-model. How many jobs that action runs depends on the size gate of
-``io.sources.one_partition_if_small``:
+Execution model: `run_config_suite` renders the whole suite as ONE SQL
+statement, a UNION ALL with one single-row count per check over that
+check kind's fragment, so the suite runs as one Spark action, not one
+count() per check. `quality.checks.run_checks` (the reference suite the
+DAG runs) is a thin adapter over it. One action is not one pass: no
+scan is shared. Each check is its own branch of the union and plans its
+own scan of its model. How many jobs that action runs depends on the
+size gate of ``io.sources.one_partition_if_small``:
 
 - inputs above ``spark.sql.autoBroadcastJoinThreshold`` (or the gate
   off): each check plans up to two shuffles (its group-by or distinct,
@@ -28,32 +28,18 @@ model. How many jobs that action runs depends on the size gate of
 
 Config sources: a Python dict, a JSON file, or a YAML file (PyYAML is
 present in this environment; the JSON path keeps the loader dependency-
-free elsewhere).
+free elsewhere). Model and column names are quoted as identifiers and
+the report's strings bound as parameters (see quality/checks.py).
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from .checks import (
-    accepted_values_violations,
-    not_null_violations,
-    relationship_violations,
-    unique_combination_violations,
-    unique_violations,
-)
-
-
-@dataclass(frozen=True)
-class CheckSpec:
-    model: str
-    column: str  # "" for model-level tests
-    test: str
-    params: tuple  # hashable parameter payload
+from .checks import CheckSpec, Statement
 
 
 def parse_suite(config: dict) -> list[CheckSpec]:
@@ -99,26 +85,12 @@ def load_suite(path: str | Path) -> list[CheckSpec]:
     return parse_suite(json.loads(text))
 
 
-def _violations(spec: CheckSpec, tables: dict[str, DataFrame]) -> DataFrame:
-    df = tables[spec.model]
-    if spec.test == "unique":
-        return unique_violations(df, spec.column)
-    if spec.test == "not_null":
-        return not_null_violations(df, spec.column)
-    if spec.test == "accepted_values":
-        return accepted_values_violations(df, spec.column, list(spec.params))
-    if spec.test == "relationships":
-        to, field = spec.params
-        return relationship_violations(df, spec.column, tables[to], field)
-    return unique_combination_violations(df, list(spec.params))
-
-
 def run_config_suite(
     tables: dict[str, DataFrame], config_or_specs
 ) -> DataFrame:
     """→ one relation (model, column, test, n_violations, passed),
-    a single UNION-of-aggregates plan: one Spark action for the suite,
-    in which each check scans its model on its own."""
+    a single UNION ALL statement: one Spark action for the suite, in
+    which each check scans its model on its own."""
     specs = (
         config_or_specs
         if isinstance(config_or_specs, list)
@@ -126,26 +98,12 @@ def run_config_suite(
     )
     if not specs:
         raise ValueError("empty test suite")
-    rows = []
-    for s in specs:
-        missing = s.model not in tables or (
-            s.test == "relationships" and s.params[0] not in tables
+    st = Statement(tables)
+    return st.run(
+        "\nUNION ALL\n".join(
+            f"SELECT {st.bind(s.model)} AS model, {st.bind(s.column)} AS `column`, "
+            f"{st.bind(s.test)} AS test, n_violations, n_violations = 0 AS passed "
+            f"FROM (SELECT COUNT(1) AS n_violations FROM ({st.violations(s)}))"
+            for s in specs
         )
-        if missing:
-            raise KeyError(f"model {s.model!r} (or its relationship target) not provided")
-        cnt = _violations(s, tables).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_violations")
-        )
-        rows.append(
-            cnt.select(
-                F.lit(s.model).alias("model"),
-                F.lit(s.column).alias("column"),
-                F.lit(s.test).alias("test"),
-                "n_violations",
-                (F.col("n_violations") == 0).alias("passed"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    )

@@ -1,7 +1,8 @@
 """Intermediate layer: the two materialized transform tables.
 
 Re-expresses `models/intermediate/int_transaction_flows.sql` and
-`int_address_balances_with_history.sql` as DataFrame functions.
+`int_address_balances_with_history.sql` as the same SQL, one
+``spark.sql`` statement per model whose parents are bound as frames.
 
 Scale notes (100 TB design):
 
@@ -10,7 +11,7 @@ Scale notes (100 TB design):
   product per transaction by design (candidate flow edges). High-fan-out
   transactions make the composite join key heavily skewed — AQE skew-join
   splitting (enabled in session.py) handles the physical side; the blocks
-  dim join is an explicit broadcast (blocks ≈ 144 rows/day vs millions of
+  dim join carries a BROADCAST hint (blocks ≈ 144 rows/day vs millions of
   tx rows).
 - int_address_balances_with_history shuffles once on `address` and the
   window reuses that partitioning (Catalyst plans the left join and
@@ -19,7 +20,7 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 
 
 def int_transaction_flows(
@@ -34,72 +35,30 @@ def int_transaction_flows(
     |rows| = max(|inputs|,1) × max(|outputs|,1) (left joins keep
     tx rows with no inputs/outputs as single null rows).
     """
-    blocks = F.broadcast(
-        stg_blocks.select(
-            F.col("block_id").alias("b_block_id"),
-            "block_time",
-            F.col("cdd_total_days").alias("b_cdd_total_days"),
-            F.col("reward_btc").alias("b_reward_btc"),
-        )
-    )
-    tx = stg_transactions
-    inputs = stg_inputs.select(
-        F.col("transaction_hash").alias("in_transaction_hash"),
-        F.col("block_id").alias("in_block_id"),
-        F.col("recipient").alias("input_address"),
-        F.col("value_sats").alias("input_value_sats"),
-        F.col("value_btc").alias("input_value_btc"),
-        F.col("value_usd").alias("input_value_usd"),
-        F.col("cdd_days").alias("input_cdd_days"),
-        "lifespan_days",
-        "is_from_coinbase",
-    )
-    outputs = stg_outputs.select(
-        F.col("transaction_hash").alias("out_transaction_hash"),
-        F.col("block_id").alias("out_block_id"),
-        F.col("recipient").alias("output_address"),
-        F.col("value_sats").alias("output_value_sats"),
-        F.col("value_btc").alias("output_value_btc"),
-        F.col("value_usd").alias("output_value_usd"),
-    )
-    return (
-        tx.join(blocks, tx.block_id == blocks.b_block_id, "left")
-        .drop("b_block_id")
-        .join(
-            inputs,
-            (tx.transaction_hash == inputs.in_transaction_hash)
-            & (tx.block_id == inputs.in_block_id),
-            "left",
-        )
-        .join(
-            outputs,
-            (tx.transaction_hash == outputs.out_transaction_hash)
-            & (tx.block_id == outputs.out_block_id),
-            "left",
-        )
-        .select(
-            "transaction_hash",
-            "block_id",
-            F.col("block_time").alias("tx_time"),
-            "input_address",
-            "output_address",
-            "input_value_sats",
-            "input_value_btc",
-            "output_value_sats",
-            "output_value_btc",
-            "input_value_usd",
-            "output_value_usd",
-            "fee_sats",
-            "fee_btc",
-            "fee_usd",
-            "input_cdd_days",
-            F.col("b_cdd_total_days").alias("block_cdd_days"),
-            "lifespan_days",
-            F.when(F.col("is_from_coinbase") == 1, "coinbase")
-            .otherwise("standard")
-            .alias("tx_type"),
-            F.col("b_reward_btc").alias("block_reward_btc"),
-        )
+    return stg_transactions.sparkSession.sql(
+        """
+        SELECT /*+ BROADCAST(b) */
+               tx.transaction_hash, tx.block_id, b.block_time AS tx_time,
+               i.recipient AS input_address, o.recipient AS output_address,
+               i.value_sats AS input_value_sats, i.value_btc AS input_value_btc,
+               o.value_sats AS output_value_sats, o.value_btc AS output_value_btc,
+               i.value_usd AS input_value_usd, o.value_usd AS output_value_usd,
+               tx.fee_sats, tx.fee_btc, tx.fee_usd,
+               i.cdd_days AS input_cdd_days, b.cdd_total_days AS block_cdd_days,
+               i.lifespan_days,
+               CASE WHEN i.is_from_coinbase = 1 THEN 'coinbase' ELSE 'standard' END AS tx_type,
+               b.reward_btc AS block_reward_btc
+        FROM {tx} tx
+        LEFT JOIN {blocks} b ON tx.block_id = b.block_id
+        LEFT JOIN {inputs} i
+               ON tx.transaction_hash = i.transaction_hash AND tx.block_id = i.block_id
+        LEFT JOIN {outputs} o
+               ON tx.transaction_hash = o.transaction_hash AND tx.block_id = o.block_id
+        """,
+        tx=stg_transactions,
+        blocks=stg_blocks,
+        inputs=stg_inputs,
+        outputs=stg_outputs,
     )
 
 
@@ -114,39 +73,28 @@ def int_address_balances_with_history(
     units. Default window frame (RANGE UNBOUNDED PRECEDING..CURRENT ROW):
     ties on (address, time) share the running value, matching Snowflake.
     """
-    spends = stg_inputs.select(
-        F.col("recipient").alias("address"),
-        "time",
-        (-F.col("value_sats")).alias("value_change_sats"),
-        (-F.col("value_btc")).alias("value_change_btc"),
-        (-F.col("value_usd")).alias("value_change_usd"),
-        "transaction_hash",
-    )
-    receives = stg_outputs.select(
-        F.col("recipient").alias("address"),
-        "time",
-        F.col("value_sats").alias("value_change_sats"),
-        F.col("value_btc").alias("value_change_btc"),
-        F.col("value_usd").alias("value_change_usd"),
-        "transaction_hash",
-    )
-    changes = spends.unionByName(receives)
-
-    a = stg_addresses.alias("a")
-    c = changes.alias("c")
-    joined = a.join(c, F.col("a.address") == F.col("c.address"), "left")
-
-    w = Window.partitionBy(F.col("a.address")).orderBy(F.col("c.time"))
-    return joined.select(
-        F.col("a.address").alias("address"),
-        F.col("c.time").alias("time"),
-        F.col("c.transaction_hash").alias("transaction_hash"),
-        F.col("c.value_change_sats").alias("value_change_sats"),
-        F.col("c.value_change_btc").alias("value_change_btc"),
-        F.col("c.value_change_usd").alias("value_change_usd"),
-        F.sum(F.col("c.value_change_sats")).over(w).alias("running_balance_sats"),
-        F.sum(F.col("c.value_change_btc")).over(w).alias("running_balance_btc"),
-        F.sum(F.col("c.value_change_usd")).over(w).alias("running_balance_usd"),
-        F.col("a.balance_sats").alias("current_balance_sats"),
-        F.col("a.balance_btc").alias("current_balance_btc"),
+    return stg_addresses.sparkSession.sql(
+        """
+        WITH changes AS (
+          SELECT recipient AS address, time, -value_sats AS value_change_sats,
+                 -value_btc AS value_change_btc, -value_usd AS value_change_usd,
+                 transaction_hash
+          FROM {inputs}
+          UNION ALL
+          SELECT recipient, time, value_sats, value_btc, value_usd, transaction_hash
+          FROM {outputs}
+        )
+        SELECT a.address, c.time, c.transaction_hash, c.value_change_sats,
+               c.value_change_btc, c.value_change_usd,
+               SUM(c.value_change_sats) OVER w AS running_balance_sats,
+               SUM(c.value_change_btc) OVER w AS running_balance_btc,
+               SUM(c.value_change_usd) OVER w AS running_balance_usd,
+               a.balance_sats AS current_balance_sats,
+               a.balance_btc AS current_balance_btc
+        FROM {addresses} a LEFT JOIN changes c ON a.address = c.address
+        WINDOW w AS (PARTITION BY a.address ORDER BY c.time)
+        """,
+        addresses=stg_addresses,
+        inputs=stg_inputs,
+        outputs=stg_outputs,
     )
