@@ -347,30 +347,3 @@ def load_with_pattern_routing(
                 read_tsv(spark, good, schema=schemas[table]), table  # type: ignore[arg-type]
             )
     return out, report
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    keep_corrupt: bool = False,
-) -> DataFrame:
-    """JSON-lines scan with explicit malformed-record policy.
-
-    With a declared schema the scan is single-pass (no inference read).
-    PERMISSIVE mode routes unparseable lines into ``_corrupt_record``
-    instead of failing the job — the row-level analog of the
-    pattern-router's file-level skip: at corpus scale a few bad lines
-    must never kill a 100 TB ingest, and keeping them in-band lets a
-    downstream quality check count/quarantine them."""
-    reader = spark.read.option("mode", "PERMISSIVE")
-    if schema is not None:
-        if keep_corrupt:
-            from pyspark.sql.types import StringType, StructField
-
-            schema = StructType(
-                list(schema.fields) + [StructField("_corrupt_record", StringType())]
-            )
-        reader = reader.schema(schema)
-        reader = reader.option("columnNameOfCorruptRecord", "_corrupt_record")
-    return reader.json(path)

@@ -371,15 +371,13 @@ def incremental_connected_clusters(
 
     Fixed point on replay: if ``new_pairs`` is already inside the
     assignment's transitive closure (an at-least-once re-delivery), the
-    output equals ``assignments`` row-for-row — the replay-idempotence
-    the streaming updater leans on (dedup_stream.
-    make_cluster_assignment_updater), belt on top of its batch-id skip.
+    output equals ``assignments`` row-for-row, so a replayed day
+    leaves the assignment unchanged.
 
     ``assignments`` None (or empty) bootstraps: plain
     connected_clusters over the batch. Unlike the append-only signature
     stores, the assignment relation is REWRITTEN per cycle (cluster ids
-    can change when clusters merge) — it is O(docs), the same size
-    class the store-flatten maintenance already handles."""
+    can change when clusters merge) — it is O(docs)."""
     edges = new_pairs.select(F.col(id_a), F.col(id_b))
     if assignments is not None:
         star = assignments.select(

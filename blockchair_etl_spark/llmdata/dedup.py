@@ -1452,9 +1452,9 @@ def bench_shingle_set(
 ) -> DataFrame:
     """The benchmark's DISTINCT shingle relation (one ``feat`` column) —
     the broadcast side of every contamination check. Exposed so
-    repeated consumers (the streaming prep loop scores EVERY micro-batch
-    against the same eval set) compute and persist it once instead of
-    re-shingling the benchmark per batch."""
+    repeated consumers scoring several batches against the same eval
+    set compute and persist it once instead of re-shingling the
+    benchmark per batch."""
     return exploded_shingles(bench, text_col, id_col, n).select("feat").distinct()
 
 
@@ -1478,8 +1478,8 @@ def contamination_scores(
     (one exactly-rounded division), so thresholding is reproducible.
 
     ``bench_shingles``: precomputed :func:`bench_shingle_set` relation;
-    when given, ``bench`` is ignored (pass None) — the repeat-scoring
-    path (streaming loops) builds the set once and reuses it."""
+    when given, ``bench`` is ignored (pass None) — a repeat-scoring
+    caller builds the set once and reuses it."""
     train_sh = exploded_shingles(docs, text_col, id_col, n)
     if bench_shingles is not None:
         bench_sh = bench_shingles
@@ -2145,9 +2145,9 @@ def survivors_from_edges(
     (id_a, id_b): one connected-components pass, drop every doc that is
     not its cluster's minimum. The joint-cluster rule shared by the
     batch cross-modal composition (queryset.joint_dedup_survivors) and
-    the incremental/streaming joint twins — one body, so the survivor
-    semantics cannot drift between the oracle'd entry and the
-    store-backed paths."""
+    the incremental joint twin (incremental_joint_dedup) — one body, so
+    the survivor semantics cannot drift between the oracle'd entry and
+    the store-backed path."""
     from .clusters import connected_clusters
 
     clusters = connected_clusters(edges.select("id_a", "id_b"))
@@ -2170,13 +2170,12 @@ def joint_edge_set(
     """THE joint duplicate-edge rule over prebuilt modality relations:
     (id_a, id_b), distinct, the union across both modalities of
     within-batch pairs and batch-vs-store pairs (a None store
-    contributes no cross pairs — the bootstrap case). One body shared
-    by the incremental twin (incremental_joint_dedup) and the streaming
-    processor (streaming.dedup_stream.make_joint_batch_processor) so
-    their cumulative-parity contracts cannot drift apart — the edge
-    half of the same guarantee survivors_from_edges gives the survivor
-    half. ``distinct`` because a duplicate found by both modalities
-    must not ride the CC propagation joins twice.
+    contributes no cross pairs — the bootstrap case). The edge rule of
+    the incremental twin (incremental_joint_dedup), kept as its own
+    function so it is testable alone — the edge half of the guarantee
+    survivors_from_edges gives the survivor half. ``distinct`` because
+    a duplicate found by both modalities must not ride the CC
+    propagation joins twice.
 
     ``max_bucket`` forwards the degenerate-bucket cap to all four pair
     generators (minhash within/cross, simhash within/cross). The CROSS

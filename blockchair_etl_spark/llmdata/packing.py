@@ -3,7 +3,7 @@
 Pretraining pipelines concatenate documents into fixed-length training
 sequences; the batch-side primitive is assigning each document a
 (pack_id, offset) under a token budget. This is greedy CONTIGUOUS
-packing by stable id order — the streaming-chunk formulation: documents
+packing by stable id order — the chunked formulation: documents
 fill a bin until the cumulative count crosses the budget; a straddling
 document belongs to the bin where it starts (token-level splitting of
 the straddler happens downstream at tensorization). Deterministic,

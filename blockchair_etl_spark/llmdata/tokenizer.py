@@ -346,9 +346,7 @@ def _rewrite_syms_vectorized(
 # Default merge count per fold-chain projection in encode_words — the
 # PUBLIC face of the checkpoint trigger: a merge list longer than this
 # makes the fold path localCheckpoint per chunk (and register the last
-# one destructively). Callers that must avoid in-plan checkpoints (the
-# streaming prep loop) key their encoder routing off THIS constant, so
-# retuning it retunes them with it. Distinct from _MAX_FOLD_CHAIN (the
+# one destructively). Distinct from _MAX_FOLD_CHAIN (the
 # measured analyzer ceiling, a hard error bound): chunk can be lowered
 # below the ceiling for perf, never raised above it.
 DEFAULT_ENCODE_CHUNK = 64

@@ -383,8 +383,7 @@ def unigram_train(
     # scoped persist/unpersist, NOT the global release_tracked():
     # training may run while a caller holds tracked frames (or a
     # pending destructive checkpoint release from encode_words), and
-    # the global release would free those mid-plan — the hazard
-    # prep_stream.py documents for foreachBatch bodies
+    # the global release would free those mid-plan
     words = word_frequency_table(docs, text_col).select("word", "freq").persist()
     try:
         seeds = seed_pieces(words, max_piece_len, seed_size)

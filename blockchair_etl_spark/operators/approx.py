@@ -74,11 +74,8 @@ def kmv_distinct(
 
 def kmv_merge_mins(sketches: list[DataFrame], k: int = 64) -> DataFrame:
     """The lossless KMV merge on `mins` relations: union the min-hash
-    sets, dedup, re-take the k smallest. The ONE definition of the
-    merge — kmv_union's estimation and the streaming store maintainer
-    (streaming.incremental.make_kmv_updater) both call it, so the
-    streaming sketch can never drift from the batch semantics (r13
-    review)."""
+    sets, dedup, re-take the k smallest. The one definition of the
+    merge, which kmv_union's estimation calls."""
     merged = sketches[0]
     for s in sketches[1:]:
         merged = merged.unionByName(s)
@@ -236,9 +233,8 @@ def kmv_merge_mins_grouped(
 ) -> DataFrame:
     """The lossless grouped merge: union (g, hv) relations, dedup,
     re-take each group's k smallest — the per-group form of
-    kmv_merge_mins, and like it the ONE merge definition shared by any
-    batch or streaming maintainer (idempotent: re-merging the same
-    sketch changes nothing)."""
+    kmv_merge_mins (idempotent: re-merging the same sketch changes
+    nothing)."""
     from pyspark.sql import Window
 
     merged = sketches[0]
@@ -388,16 +384,6 @@ def cms_build_grouped(
     ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def cms_merge_grouped(*sketches: DataFrame) -> DataFrame:
-    """Merge grouped sketches built with the same params: cell-wise sum
-    within each group — the one merge definition any batch or streaming
-    maintainer shares (same algebra as cms_merge, keyed by g)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("g", "row_id", "col_id").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate_grouped(
     sketch: DataFrame,
     keys: DataFrame,
@@ -528,10 +514,8 @@ def histogram_bins(
     value_range: tuple[float, float] | None = None,
 ) -> DataFrame:
     """The sketch half of histogram_quantiles: the (g, bin, cnt) cell
-    relation. Exposed separately because this is the MERGEABLE state —
-    two sketches merge by summing cnt per (g, bin), which is what the
-    streaming maintainer (streaming.incremental.make_histogram_updater)
-    persists and cell-merges per trigger.
+    relation. Exposed separately because this is the MERGEABLE state:
+    two sketches merge by summing cnt per (g, bin).
 
     ``value_range`` is the RANGE CONTRACT (r16 verdict stretch #7):
     the fixed-bin sketch's state bound is O(groups × range × scale) —
@@ -578,16 +562,6 @@ def histogram_bins(
     )
 
 
-def histogram_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge fixed-bin histogram sketches: cell-wise cnt sum — the ONE
-    definition of the merge, shared by batch rollups and the streaming
-    store maintainer."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("g", "bin").agg(F.sum("cnt").alias("cnt"))
-
-
 def histogram_quantiles_from_bins(
     bins: DataFrame,
     group_col: str,
@@ -595,8 +569,8 @@ def histogram_quantiles_from_bins(
     bin_scale: int = 8,
 ) -> DataFrame:
     """The read half of histogram_quantiles: quantile estimates off a
-    (g, bin, cnt) cell relation — run it over the live streaming store
-    at any time without touching the raw events."""
+    (g, bin, cnt) cell relation — run it over a stored sketch at any
+    time without touching the raw events."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("g").orderBy("bin").rowsBetween(
@@ -731,11 +705,10 @@ def hll_intersect_estimate(
     reg_a: DataFrame, reg_b: DataFrame, p: int = HLL_P
 ) -> dict:
     """Serving-side HLL set-INTERSECTION estimate by inclusion-
-    exclusion over live register stores: |A∩B| ≈ est(A) + est(B) −
+    exclusion over register relations: |A∩B| ≈ est(A) + est(B) −
     est(A∪B), with the union sketch from the idempotent register-wise
     max merge (hll_merge) — three O(2^p) readouts, never a raw-data
-    join, the dashboard composition over the same stores the streaming
-    maintainers keep live (r16 verdict stretch #6).
+    join.
 
     ERROR CAVEAT vs the KMV θ-based estimate (kmv_intersect): each of
     the three HLL readouts carries ~1.04/√m relative error of ITS OWN
@@ -745,7 +718,7 @@ def hll_intersect_estimate(
     clamped at 0). kmv_intersect's error scales with the intersection
     itself (hashes are sampled uniformly below θ), so prefer it when
     the intersection may be small relative to the union; use this form
-    when only HLL register stores are live. Exact degenerations the
+    when only HLL register relations exist. Exact degenerations the
     algebra preserves: est(A∩A) = est(A) bit-identically (max-merge
     idempotence makes est(A∪A) = est(A)), and disjoint saturated sets
     read near 0.
@@ -1079,9 +1052,9 @@ def kmv_set_stats_grouped(
     broadcast_stats: bool = True,
 ) -> DataFrame:
     """Per-GROUP Theta-sketch set algebra — ONE O(groups × k) pass
-    over two grouped `mins` relations (kmv_mins_grouped or the grouped
-    streaming store) serving ALL the set reads per group: intersection,
-    both a-not-b differences, and the Jaccard ratio. The dashboard's
+    over two grouped `mins` relations (kmv_mins_grouped) serving ALL
+    the set reads per group: intersection, both a-not-b differences,
+    and the Jaccard ratio. The dashboard's
     per-dimension segment-overlap primitive (viewers ∩ clickers per
     day) without a raw-data join: state in, state out.
 

@@ -663,15 +663,14 @@ def t3_composite_unique_violations(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Streaming-shaped batch: tumbling window aggregation
+# Event-time windows: tumbling window aggregation
 # ---------------------------------------------------------------------------
 
 
 @register(
     "tumbling_hourly_events",
     survey="§2.10",
-    desc="tumbling 1h event-time window aggregate (batch form; the streaming "
-    "module runs the same plan with readStream + watermark)",
+    desc="tumbling 1h event-time window aggregate",
     oracle="""
 SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
        event_type,
@@ -1687,8 +1686,7 @@ def q5_region_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sessionize_events",
     survey="§2.10,W1",
     desc="gap-based sessionization (30 min inactivity) via lag + running "
-    "session counter; the batch twin of the stateful-streaming "
-    "sessionizer in streaming/sessionize.py",
+    "session counter",
     oracle="""
 WITH flagged AS (
   SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
@@ -3175,8 +3173,7 @@ _HLL_C = 1.7013287633207432e21  # alpha_1024 * 1024^2 * 2^51 (approx._hll_consta
     "engine-native HLL++ is not. raw_estimate uncorrected; the "
     "(m, zero_registers) sufficient statistics for the libm-variant "
     "small-range correction ride the row. Register-wise max merge is "
-    "idempotent (the KMV replay-safety class, unlike CMS cell sums); "
-    "streaming maintainer in streaming/incremental.make_hll_updater",
+    "idempotent (the KMV replay-safety class, unlike CMS cell sums)",
     oracle=f"""
 WITH h AS (
   SELECT ('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15))::BIGINT AS hv
@@ -5853,8 +5850,7 @@ def scd2_customer_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="§2.10 (hopping/sliding event-time window)",
     desc="1h window hopping every 30min over events — the F.window "
     "slide form, epoch-aligned, each event contributing to exactly 2 "
-    "overlapping windows; the identical groupBy(window(...)) plan runs "
-    "under readStream + watermark in the streaming module",
+    "overlapping windows",
     oracle="""
 WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events),
 w AS (
@@ -8554,7 +8550,7 @@ def joint_dedup_survivors(docs: DataFrame, width: int, height: int) -> DataFrame
     # one edge set across modalities; distinct so a pair both modalities
     # find contributes one edge (CC is idempotent to duplicates but the
     # propagation joins shouldn't carry them). Survivor rule shared
-    # with the incremental/streaming joint twins (dedup.py, r12).
+    # with the incremental joint twin (dedup.py, r12).
     edges = text_pairs.unionByName(pixel_pairs).distinct()
     return _dedup.survivors_from_edges(docs, edges, "doc_id")
 

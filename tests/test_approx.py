@@ -44,6 +44,17 @@ def test_kmv_sketch_accuracy_and_degeneracy(spark, sf_dir):
     # cardinality below k degenerates to the exact count
     row2 = kmv_distinct(li, "l_linestatus", k=64).first()
     assert row2.n_taken == row2.distinct_estimate == 2
+    # the merge: the sketches of two halves merge into the sketch of
+    # the whole, and merging a sketch with itself changes nothing
+    from blockchair_etl_spark.operators.approx import kmv_mins, kmv_union
+
+    halves = [
+        kmv_mins(li.filter(F.col("l_orderkey") % 2 == i), "l_partkey", k=64)
+        for i in (0, 1)
+    ]
+    assert kmv_union(halves, k=64).first() == row
+    whole = kmv_mins(li, "l_partkey", k=64)
+    assert kmv_union([whole, whole], k=64).first() == row
 
 
 def test_cms_never_undercounts_and_merges(spark, sf_dir):

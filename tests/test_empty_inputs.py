@@ -273,22 +273,6 @@ def test_round9_ops_on_empty(spark, empty_docs):
     assert row.logit_q == 7 and row.pred == 1
 
 
-def test_streaming_prep_processor_on_empty_batch(spark, empty_docs, tmp_path):
-    """An empty micro-batch (quiet trigger) must write nothing — no
-    empty batch_id partition directory, no store creation."""
-    import os
-
-    from blockchair_etl_spark.llmdata.classify import hashed_weights
-    from blockchair_etl_spark.streaming.prep_stream import (
-        make_prep_batch_processor,
-    )
-
-    out = str(tmp_path / "prep_empty_store")
-    proc = make_prep_batch_processor(hashed_weights(spark, n_features=64), out)
-    proc(empty_docs.select("doc_id", "text"), 0)
-    assert not os.path.exists(out)
-
-
 def test_r10_operators_on_empty_inputs(spark, empty_docs, docs):
     """Round-10 surface on degenerate inputs: decontamination with an
     empty corpus or empty eval set, the pixel-dedup stages on an empty

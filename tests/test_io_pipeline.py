@@ -20,6 +20,7 @@ from blockchair_etl_spark.io.extract import (
 )
 from blockchair_etl_spark.io.sinks import (
     Materialization,
+    incremental_batch_load,
     materialize,
     read_partitioned,
     retention_sweep,
@@ -32,10 +33,6 @@ from blockchair_etl_spark.io.sources import (
 )
 from blockchair_etl_spark.pipeline import QueryCache, run_transform_dag
 from blockchair_etl_spark.schema.registry import RAW_SCHEMAS, TABLE_FILE_PATTERNS
-from blockchair_etl_spark.streaming.incremental import (
-    incremental_batch_load,
-    stream_windowed_counts,
-)
 
 from blockchain_fixtures import generate, write_parquet
 
@@ -459,149 +456,6 @@ def test_query_cache_ttl_and_retry(spark):
         cache.run("dead", (), dead)
 
 
-def test_streaming_windowed_counts(spark, tmp_path):
-    from blockchair_etl_spark.io.sources import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    events_dir = str(tmp_path / "events_in")
-    ev.withColumn("ts", F.col("ts").cast("timestamp")).write.parquet(events_dir)
-    schema = spark.read.parquet(events_dir).schema
-    q = stream_windowed_counts(
-        spark,
-        events_dir,
-        schema,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        out_dir=str(tmp_path / "out"),
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(tmp_path / "out"))
-    # append mode emits exactly the FINALIZED windows: those whose end
-    # precedes the final watermark (max event time - 2h)
-    max_ts = ev.agg(F.max("ts")).head()[0]
-    import datetime
-
-    wm = max_ts - datetime.timedelta(hours=2)
-    finalized = (
-        ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("w"), "event_type")
-        .count()
-        .filter(F.col("w") + F.expr("INTERVAL 1 HOUR") <= F.lit(wm))
-        .count()
-    )
-    assert got.count() == finalized
-    # second drain with no new files adds nothing (exactly-once)
-    q2 = stream_windowed_counts(
-        spark, events_dir, schema,
-        checkpoint_dir=str(tmp_path / "ckpt"), out_dir=str(tmp_path / "out"),
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(str(tmp_path / "out")).count() == finalized
-
-
-def test_compact_small_files_preserves_rows_and_reduces_files(spark, tmp_path):
-    from blockchair_etl_spark.io.sinks import compact_small_files
-
-    path = str(tmp_path / "fragmented")
-    df = spark.range(0, 10_000).withColumnRenamed("id", "k")
-    df.repartition(64).write.parquet(path)
-    import pathlib
-
-    before = len(list(pathlib.Path(path).glob("*.parquet")))
-    assert before >= 32
-    after = compact_small_files(spark, path, target_file_bytes=10 * 1024 * 1024)
-    assert after < before
-    got = spark.read.parquet(path)
-    assert got.count() == 10_000
-    assert got.agg({"k": "sum"}).collect()[0][0] == sum(range(10_000))
-    # already-compact dirs are left alone
-    assert compact_small_files(spark, path, target_file_bytes=10 * 1024 * 1024) == after
-
-
-def test_read_jsonl_with_corrupt_record_routing(spark, tmp_path):
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from blockchair_etl_spark.io.sources import read_jsonl
-
-    p = tmp_path / "feed.jsonl"
-    p.write_text(
-        '{"id": 1, "name": "alpha"}\n'
-        '{"id": 2, "name": "beta"}\n'
-        "this is not json at all\n"
-        '{"id": 4, "name": "delta"}\n'
-    )
-    schema = StructType([StructField("id", LongType()), StructField("name", StringType())])
-    df = read_jsonl(spark, str(p), schema=schema, keep_corrupt=True)
-    rows = df.collect()
-    assert len(rows) == 4  # bad line kept in-band, not dropped, not fatal
-    good = [r for r in rows if r._corrupt_record is None]
-    bad = [r for r in rows if r._corrupt_record is not None]
-    assert {r.id for r in good} == {1, 2, 4}
-    assert len(bad) == 1 and "not json" in bad[0]._corrupt_record
-
-
-def test_tsv_export_round_trips_through_read_tsv(spark, tmp_path):
-    from blockchair_etl_spark.io.sinks import export_tsv
-    from blockchair_etl_spark.io.sources import read_tsv
-
-    df = spark.createDataFrame(
-        [(1, "a\tb escaped", 1.5), (2, "plain", -2.25)], "k bigint, s string, v double"
-    )
-    out = str(tmp_path / "dump")
-    export_tsv(df, out, compression="gzip", single_file=True)
-    import pathlib
-
-    files = list(pathlib.Path(out).glob("*.csv.gz"))
-    assert len(files) == 1  # single gzip'd dump part, like the reference feed
-    back = read_tsv(spark, out, schema=df.schema)
-    assert sorted((r.k, r.s, float(r.v)) for r in back.collect()) == sorted(
-        (r.k, r.s, float(r.v)) for r in df.collect()
-    )
-
-
-def test_columnar_write_orc_and_zstd_parquet(spark, tmp_path):
-    from blockchair_etl_spark.io.sinks import write_columnar
-
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).cast("double").alias("v")
-    )
-    orc_path = str(tmp_path / "t_orc")
-    write_columnar(df, orc_path, fmt="orc", compression="zstd")
-    assert spark.read.orc(orc_path).count() == 1000
-    pq_path = str(tmp_path / "t_pq")
-    write_columnar(df, pq_path, fmt="parquet", compression="zstd")
-    got = spark.read.parquet(pq_path)
-    assert got.count() == 1000
-    import pathlib
-
-    assert any("zstd" in f.name for f in pathlib.Path(pq_path).glob("*.parquet"))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        write_columnar(df, str(tmp_path / "t_avro"), fmt="avro")
-
-
-def test_range_sorted_write_files_are_disjoint(spark, tmp_path):
-    from blockchair_etl_spark.io.sinks import write_range_sorted
-
-    df = spark.range(0, 100_000).select(
-        (F.col("id") * 7919 % 100_000).alias("k"), F.col("id").alias("payload")
-    )
-    path = str(tmp_path / "range_sorted")
-    write_range_sorted(df, path, ["k"], num_files=6)
-    import pathlib
-
-    spans = []
-    for f in pathlib.Path(path).glob("*.parquet"):
-        part = spark.read.parquet(str(f))
-        lo, hi = part.agg(F.min("k"), F.max("k")).collect()[0]
-        rows = part.select("k").collect()
-        assert [r.k for r in rows] == sorted(r.k for r in rows)  # sorted within file
-        spans.append((lo, hi))
-    spans.sort()
-    for (l1, h1), (l2, h2) in zip(spans, spans[1:]):
-        assert h1 <= l2  # files cover disjoint key ranges → min/max pruning works
-    assert spark.read.parquet(path).count() == 100_000
-
-
 def test_observe_metrics_ride_the_batch_plan(spark):
     from pyspark.sql import Observation
 
@@ -617,44 +471,6 @@ def test_observe_metrics_ride_the_batch_plan(spark):
     # metrics accumulate during the SAME action — no second scan
     assert observed.filter(F.col("v").isNotNull()).count() == 9_900
     assert obs.get["rows_seen"] == 10_000 and obs.get["null_v"] == 100
-
-
-def test_streaming_hopping_windows_match_batch(spark, tmp_path):
-    from blockchair_etl_spark.io.sources import load_table
-    from blockchair_etl_spark.queryset import QUERIES
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    events_dir = str(tmp_path / "hop_in")
-    ev.withColumn("ts", F.col("ts").cast("timestamp")).write.parquet(events_dir)
-    schema = spark.read.parquet(events_dir).schema
-    q = stream_windowed_counts(
-        spark,
-        events_dir,
-        schema,
-        checkpoint_dir=str(tmp_path / "hop_ckpt"),
-        out_dir=str(tmp_path / "hop_out"),
-        slide="30 minutes",
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(tmp_path / "hop_out"))
-    # every emitted (finalized) window agrees exactly with the batch
-    # hopping query on the same data
-    batch = QUERIES["hopping_window_events"].fn(spark, "/root/testdata/sf0.001")
-    batch_rows = {
-        (r.window_start, r.event_type): (r.n_events, r.total_value)
-        for r in batch.collect()
-    }
-    emitted = got.collect()
-    assert len(emitted) > 0
-    for r in emitted:
-        key = (r.window_start.replace(tzinfo=None), r.event_type)
-        assert key in batch_rows
-        assert (r.n_events, r.total_value) == batch_rows[key]
-    # hopping windows: each finalized timestamp appears in ~2 windows →
-    # strictly more emitted windows than the tumbling drain produces
-    assert got.select("window_start").distinct().count() > got.select(
-        F.date_trunc("hour", "window_start")
-    ).distinct().count()
 
 
 def test_config_quality_suite_runs_as_one_relation(spark, tmp_path, sf_dir):
@@ -753,327 +569,3 @@ def test_parquet_merge_schema_across_daily_drift(spark, tmp_path):
     assert {(r.id, r.score) for r in widened.collect()} == {
         (1, None), (2, 9.5)
     }
-
-
-def test_batch_store_retention_and_flatten(spark, tmp_path):
-    """Streaming-store maintenance (the batch_id twin of the date-keyed
-    sweep): build a store through the real prep processor over three
-    batches, keep the newest two, then flatten the survivors into the
-    plain relation the corpus-global stages read."""
-    from blockchair_etl_spark.io.sinks import (
-        batch_store_retention,
-        flatten_batch_store,
-    )
-    from blockchair_etl_spark.io.sources import load_table
-    from blockchair_etl_spark.llmdata.classify import hashed_weights
-    from blockchair_etl_spark.streaming.prep_stream import (
-        make_prep_batch_processor,
-    )
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    store = str(tmp_path / "prep_store")
-    proc = make_prep_batch_processor(hashed_weights(spark, n_features=64), store)
-    for i in range(3):
-        proc(docs.filter(F.col("doc_id") % 3 == i), i)
-
-    full = spark.read.parquet(store)
-    keep_ids = {
-        r.doc_id for r in full.filter(F.col("batch_id") >= 1).collect()
-    }
-    assert batch_store_retention(store, keep_last=2) == ["batch_id=0"]
-    assert batch_store_retention(store, keep_last=2) == []  # idempotent
-
-    after = spark.read.parquet(store)
-    assert {r.doc_id for r in after.collect()} == keep_ids
-    assert set(after.select("batch_id").distinct().toPandas()["batch_id"]) == {1, 2}
-
-    out = str(tmp_path / "prep_flat")
-    n = flatten_batch_store(spark, store, out, n_files=2)
-    flat = spark.read.parquet(out)
-    assert n == len(keep_ids) and "batch_id" not in flat.columns
-    assert {r.doc_id for r in flat.collect()} == keep_ids
-    # re-flatten after more stream progress overwrites atomically
-    proc(docs.filter(F.col("doc_id") % 3 == 0), 3)
-    n2 = flatten_batch_store(spark, store, out, n_files=2)
-    assert n2 == spark.read.parquet(store).count()
-
-    # crash recovery: a failure between the two swap renames leaves
-    # out_dir absent and .old__flatten holding the only output — the
-    # next flatten must RESTORE it (not delete it) before rewriting,
-    # so a second crash during the rewrite still leaves output behind
-    import os
-
-    os.rename(out, out + ".old__flatten")
-    n3 = flatten_batch_store(spark, store, out, n_files=2)
-    assert n3 == n2
-    assert not os.path.exists(out + ".old__flatten")
-    assert not os.path.exists(out + ".tmp__flatten")
-    assert spark.read.parquet(out).count() == n2
-
-
-def test_media_store_flatten_retention_roundtrip(spark, tmp_path):
-    """Store maintenance over the MEDIA fingerprint store (r10 verdict
-    #5): a batch_id-partitioned store built by the real media stream
-    processor survives flatten + retention, and the flattened relation
-    is probe-equivalent — simhash_cross_pairs against the flattened
-    store finds exactly the pairs the partitioned store finds."""
-    from blockchair_etl_spark.io.sinks import (
-        batch_store_retention,
-        flatten_batch_store,
-    )
-    from blockchair_etl_spark.io.sources import load_table
-    from blockchair_etl_spark.llmdata.dedup import (
-        media_byte_fingerprints,
-        simhash_cross_pairs,
-    )
-    from blockchair_etl_spark.streaming.dedup_stream import (
-        make_media_batch_processor,
-    )
-    from pyspark.sql import functions as F
-
-    media = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").cast("binary").alias("content"),
-    )
-    store = str(tmp_path / "media_store")
-    pairs_dir = str(tmp_path / "media_pairs")
-    proc = make_media_batch_processor(store, pairs_dir, exactly_once=True)
-    for i in range(3):
-        proc(media.filter(F.col("media_id") % 3 == i), i)
-
-    # layout: same batch_id partitioning as the prep store
-    full = spark.read.parquet(store)
-    assert set(full.columns) == {"doc", "simhash", "batch_id"}
-
-    # flatten, then probe the flattened store: cross pairs of a fresh
-    # batch must equal the probe against the partitioned store
-    flat_dir = str(tmp_path / "media_flat")
-    n = flatten_batch_store(spark, store, flat_dir, n_files=2)
-    flat = spark.read.parquet(flat_dir)
-    assert n == full.count() and "batch_id" not in flat.columns
-    probe = media.filter(F.col("media_id") % 7 == 0)
-    probe_fp = media_byte_fingerprints(probe)
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in simhash_cross_pairs(probe_fp, flat).collect()
-    }
-    want = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in simhash_cross_pairs(probe_fp, full.drop("batch_id")).collect()
-    }
-    assert got == want and got
-
-    # retention drops the oldest batch; the flattened copy (taken
-    # before the sweep) still holds the full index — the documented
-    # "flatten first if the full index must survive" contract
-    keep_ids = {
-        r.doc for r in full.filter(F.col("batch_id") >= 1).collect()
-    }
-    assert batch_store_retention(store, keep_last=2) == ["batch_id=0"]
-    assert {r.doc for r in spark.read.parquet(store).collect()} == keep_ids
-    assert spark.read.parquet(flat_dir).count() == n
-
-
-def test_embedding_store_flatten_retention_roundtrip(spark, tmp_path):
-    """Store maintenance over the EMBEDDING LSH-bucket store (r10
-    verdict #5): the store carries bucket + norm columns beyond the
-    (id, payload) shape — flatten must preserve them all, and the
-    incremental probe against the flattened store must return
-    bit-identical pairs (bucket ids and exact-decimal norms survive the
-    parquet round-trip + compaction)."""
-    from blockchair_etl_spark.io.sinks import (
-        batch_store_retention,
-        flatten_batch_store,
-    )
-    from blockchair_etl_spark.io.sources import load_table
-    from blockchair_etl_spark.llmdata.dedup import (
-        build_embedding_store,
-        incremental_embedding_dedup,
-    )
-    from blockchair_etl_spark.streaming.dedup_stream import (
-        _overwrite_batch_partition,
-    )
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    store_dir = str(tmp_path / "emb_store")
-    # day-partitioned writes of the bucketed index (the batch-side
-    # store maintenance a daily incremental loop performs)
-    for i in range(3):
-        _overwrite_batch_partition(
-            build_embedding_store(
-                emb.filter(F.col("vec_id") % 3 == i), dim=64, n_planes=4
-            ),
-            i,
-            store_dir,
-        )
-    full = spark.read.parquet(store_dir)
-    assert set(full.columns) == {"id", "v", "blk", "norm", "norm_d", "batch_id"}
-
-    flat_dir = str(tmp_path / "emb_flat")
-    n = flatten_batch_store(spark, store_dir, flat_dir, n_files=2)
-    flat = spark.read.parquet(flat_dir)
-    assert n == emb.count()
-    assert set(flat.columns) == {"id", "v", "blk", "norm", "norm_d"}
-
-    # probe parity after compaction: bit-identical pairs (cosine is the
-    # exact-decimal rescore, so == comparison is legitimate)
-    probe = emb.filter(F.col("vec_id") % 11 == 0)
-    got_pairs, _ = incremental_embedding_dedup(
-        probe, flat, dim=64, threshold=0.3, n_planes=4
-    )
-    want_pairs, _ = incremental_embedding_dedup(
-        probe, full.drop("batch_id"), dim=64, threshold=0.3, n_planes=4
-    )
-    got = {(r.new_id, r.existing_id): r.cosine for r in got_pairs.collect()}
-    want = {(r.new_id, r.existing_id): r.cosine for r in want_pairs.collect()}
-    assert got == want and got
-
-    # retention: oldest batch partition dropped, newer two intact
-    keep_ids = {r.id for r in full.filter(F.col("batch_id") >= 1).collect()}
-    assert batch_store_retention(store_dir, keep_last=2) == ["batch_id=0"]
-    assert {r.id for r in spark.read.parquet(store_dir).collect()} == keep_ids
-
-
-def test_ann_index_store_flatten_retention_roundtrip(spark, tmp_path):
-    """Store maintenance over the exactly-once IVF-PQ index store
-    (r13): a batch_id-partitioned index built by the real streaming
-    processor survives flatten + retention, and the flattened relation
-    is PROBE-equivalent — ivfpq_adc_topk_from_index over the flattened
-    copy returns bit-identical top-k to the partitioned store."""
-    from pyspark.sql import functions as F
-
-    from blockchair_etl_spark.io.sinks import (
-        batch_store_retention,
-        flatten_batch_store,
-    )
-    from blockchair_etl_spark.io.sources import load_table
-    from blockchair_etl_spark.llmdata.ivf import seed_centroids
-    from blockchair_etl_spark.llmdata.pq import (
-        ivfpq_adc_topk_from_index,
-        residual_frame,
-        seed_pq_codebooks,
-    )
-    from blockchair_etl_spark.streaming.ann_stream import (
-        make_ivfpq_batch_processor,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = seed_centroids(emb, n_centroids=4)
-    res = residual_frame(emb, cents)
-    books = seed_pq_codebooks(res, dim=64, m=4, ksub=8, vec_col="residual")
-
-    store = str(tmp_path / "ann_store")
-    proc = make_ivfpq_batch_processor(store, cents, books, exactly_once=True)
-    for i in range(3):
-        proc(emb.filter(F.col("vec_id") % 3 == i), i)
-
-    full = spark.read.parquet(store)
-    assert set(full.columns) == {"vec_id", "ivf_cluster", "codes", "batch_id"}
-
-    flat_dir = str(tmp_path / "ann_flat")
-    n = flatten_batch_store(spark, store, flat_dir, n_files=2)
-    flat = spark.read.parquet(flat_dir)
-    assert n == full.count() and "batch_id" not in flat.columns
-
-    qv = [float(v) for v in cents[0]]
-    got = [
-        (r.vec_id, r.adc)
-        for r in ivfpq_adc_topk_from_index(flat, cents, books, qv, k=10).collect()
-    ]
-    want = [
-        (r.vec_id, r.adc)
-        for r in ivfpq_adc_topk_from_index(
-            full.drop("batch_id"), cents, books, qv, k=10
-        ).collect()
-    ]
-    assert got == want and len(got) == 10
-
-    # retention drops the oldest batch; the flattened copy still holds
-    # the full index (the "flatten first" contract)
-    keep_ids = {r.vec_id for r in full.filter(F.col("batch_id") >= 1).collect()}
-    assert batch_store_retention(store, keep_last=2) == ["batch_id=0"]
-    assert {r.vec_id for r in spark.read.parquet(store).collect()} == keep_ids
-    assert spark.read.parquet(flat_dir).count() == n
-
-
-def test_winnowing_store_flatten_retention_roundtrip(spark, tmp_path):
-    """Store maintenance over the WINNOWING fingerprint store (r16
-    verdict #3): a batch_id-partitioned store built by the real
-    winnowing stream processor survives flatten + retention. The
-    store's load-bearing denormalization — n_fp on every fingerprint
-    row, which is what lets the cross probe compute Jaccard
-    denominators without a store-wide per-doc aggregation — must
-    survive compaction bit-exactly, and a post-flatten cross probe
-    must return identical pairs to the partitioned store."""
-    from pyspark.sql import functions as F
-
-    from blockchair_etl_spark.io.sinks import (
-        batch_store_retention,
-        flatten_batch_store,
-    )
-    from blockchair_etl_spark.io.sources import load_table
-    from blockchair_etl_spark.llmdata.text import (
-        winnowing_cross_pairs,
-        winnowing_fingerprint_store,
-    )
-    from blockchair_etl_spark.streaming.dedup_stream import (
-        make_winnowing_batch_processor,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    store = str(tmp_path / "win_store")
-    pairs_dir = str(tmp_path / "win_pairs")
-    proc = make_winnowing_batch_processor(store, pairs_dir, exactly_once=True)
-    for i in range(3):
-        proc(docs.filter(F.col("doc_id") % 3 == i), i)
-
-    # layout: same batch_id partitioning as the sibling stores, with
-    # the winnowing-specific denormalized n_fp column
-    full = spark.read.parquet(store)
-    assert set(full.columns) == {"doc", "fp", "n_fp", "batch_id"}
-
-    flat_dir = str(tmp_path / "win_flat")
-    n = flatten_batch_store(spark, store, flat_dir, n_files=2)
-    flat = spark.read.parquet(flat_dir)
-    assert n == full.count()
-    assert set(flat.columns) == {"doc", "fp", "n_fp"}
-
-    # the denormalized n_fp survives compaction bit-exactly: on every
-    # flattened row it equals a recount of that doc's fingerprint rows
-    recount = flat.groupBy("doc").agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.min("n_fp").alias("__lo"),
-        F.max("n_fp").alias("__hi"),
-    )
-    assert (
-        recount.filter(
-            (F.col("__n") != F.col("__lo")) | (F.col("__lo") != F.col("__hi"))
-        ).count()
-        == 0
-    )
-
-    # probe parity after compaction: winnowing_cross_pairs against the
-    # flattened store returns exactly the pairs the partitioned store
-    # returns (jaccard is a deterministic bigint/bigint division, so
-    # exact comparison is legitimate)
-    probe = winnowing_fingerprint_store(docs.filter(F.col("doc_id") % 7 == 0))
-    got = {
-        (r.id_a, r.id_b, r.n_shared, r.jaccard)
-        for r in winnowing_cross_pairs(probe, flat).collect()
-    }
-    want = {
-        (r.id_a, r.id_b, r.n_shared, r.jaccard)
-        for r in winnowing_cross_pairs(probe, full.drop("batch_id")).collect()
-    }
-    assert got == want and got
-
-    # retention drops the oldest batch; the flattened copy (taken
-    # before the sweep) still holds the full index
-    keep = {(r.doc, r.fp) for r in full.filter(F.col("batch_id") >= 1).collect()}
-    assert batch_store_retention(store, keep_last=2) == ["batch_id=0"]
-    assert {(r.doc, r.fp) for r in spark.read.parquet(store).collect()} == keep
-    assert spark.read.parquet(flat_dir).count() == n

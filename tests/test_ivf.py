@@ -469,185 +469,6 @@ def test_ann_artifact_frames_roundtrip(spark, sf_dir, tmp_path):
         frame_to_codebooks(ragged)
 
 
-def test_streaming_ivfpq_index_matches_rebuild(spark, sf_dir, tmp_path):
-    """The streaming ANN-index maintenance loop: a prebuilt index plus a
-    3-micro-batch drain of arriving vectors (one batch deliberately
-    re-sending already-indexed ids) must leave the parquet store
-    row-for-row equal to re-encoding the FULL corpus against the same
-    frozen artifacts — loaded through their persisted relations, the
-    stream-lifetime contract — and the deployed query path must return
-    bit-identical probe results over it."""
-    from blockchair_etl_spark.llmdata.ivf import (
-        centroids_to_frame,
-        frame_to_centroids,
-        seed_centroids,
-    )
-    from blockchair_etl_spark.llmdata.pq import (
-        codebooks_to_frame,
-        frame_to_codebooks,
-        ivfpq_adc_topk_from_index,
-        ivfpq_encode,
-        residual_frame,
-        seed_pq_codebooks,
-    )
-    from blockchair_etl_spark.streaming.ann_stream import incremental_ivfpq_stream
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    initial = emb.filter(F.col("vec_id") % 4 != 0)
-    cents0 = seed_centroids(initial, n_centroids=8)
-    res = residual_frame(initial, cents0)
-    books0 = seed_pq_codebooks(res, dim=64, m=4, ksub=16, vec_col="residual")
-
-    # artifacts persisted once, reloaded once per stream lifetime
-    centroids_to_frame(spark, cents0).write.parquet(str(tmp_path / "cents"))
-    codebooks_to_frame(spark, books0).write.parquet(str(tmp_path / "books"))
-    cents = frame_to_centroids(spark.read.parquet(str(tmp_path / "cents")))
-    books = frame_to_codebooks(spark.read.parquet(str(tmp_path / "books")))
-
-    store_dir = str(tmp_path / "ivfpq_store")
-    ivfpq_encode(initial, cents, books).write.parquet(store_dir)
-
-    # 3 arrival files: two halves of the novel quarter, plus one file
-    # re-sending already-indexed ids (first-wins must drop them)
-    src = str(tmp_path / "vec_src")
-    arriving = emb.filter(F.col("vec_id") % 4 == 0)
-    arriving.filter(F.col("vec_id") % 8 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    arriving.filter(F.col("vec_id") % 8 != 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    initial.limit(7).coalesce(1).write.mode("append").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        incremental_ivfpq_stream(
-            stream,
-            store_dir=store_dir,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            centroids=cents,
-            codebooks=books,
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-
-    def rows(df):
-        return {(r.vec_id, r.ivf_cluster, tuple(r.codes)) for r in df.collect()}
-
-    got = spark.read.parquet(store_dir)
-    rebuilt = ivfpq_encode(emb, cents, books)
-    assert rows(got) == rows(rebuilt)
-    assert got.groupBy("vec_id").count().filter(F.col("count") > 1).count() == 0
-
-    qv = [float(v) for v in cents[0]]
-    probe = [
-        (r.vec_id, r.adc)
-        for r in ivfpq_adc_topk_from_index(got, cents, books, qv, k=10).collect()
-    ]
-    want = [
-        (r.vec_id, r.adc)
-        for r in ivfpq_adc_topk_from_index(rebuilt, cents, books, qv, k=10).collect()
-    ]
-    assert probe == want and len(probe) == 10
-
-
-def test_streaming_ivfpq_replay_and_modes(spark, sf_dir, tmp_path):
-    """Delivery contract: an at-least-once replay appends NOTHING (the
-    first-wins probe is the insurance — the store stays one-row-per-id
-    with no batch_id machinery); an exactly-once replay leaves the
-    store byte-identical; mixing modes against an existing store raises
-    the shared fixed-at-creation error."""
-    from blockchair_etl_spark.llmdata.ivf import seed_centroids
-    from blockchair_etl_spark.llmdata.pq import (
-        ivfpq_encode,
-        residual_frame,
-        seed_pq_codebooks,
-    )
-    from blockchair_etl_spark.streaming.ann_stream import (
-        make_ivfpq_batch_processor,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    cents = seed_centroids(emb, n_centroids=4)
-    res = residual_frame(emb, cents)
-    books = seed_pq_codebooks(res, dim=64, m=4, ksub=8, vec_col="residual")
-    b0 = emb.filter(F.col("vec_id") % 2 == 0)
-    b1 = emb.filter(F.col("vec_id") % 2 == 1)
-
-    def rows(path):
-        return {
-            (r.vec_id, r.ivf_cluster, tuple(r.codes))
-            for r in spark.read.parquet(path).collect()
-        }
-
-    want = {
-        (r.vec_id, r.ivf_cluster, tuple(r.codes))
-        for r in ivfpq_encode(emb, cents, books).collect()
-    }
-
-    alo = str(tmp_path / "store_alo")
-    proc = make_ivfpq_batch_processor(alo, cents, books)
-    proc(b0, 0)
-    proc(b1, 1)
-    proc(b1, 1)  # worst replay: rows already registered before the crash
-    assert rows(alo) == want
-    assert (
-        spark.read.parquet(alo)
-        .groupBy("vec_id")
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
-        == 0
-    )
-
-    xo = str(tmp_path / "store_xo")
-    proc_xo = make_ivfpq_batch_processor(xo, cents, books, exactly_once=True)
-    proc_xo(b0, 0)
-    proc_xo(b1, 1)
-    once = rows(xo)
-    proc_xo(b1, 1)
-    assert rows(xo) == once
-    assert {(v, c, co) for (v, c, co) in once} == want
-
-    with pytest.raises(ValueError, match="fixed at creation"):
-        make_ivfpq_batch_processor(alo, cents, books, exactly_once=True)(b0, 2)
-    with pytest.raises(ValueError, match="fixed at creation"):
-        make_ivfpq_batch_processor(xo, cents, books)(b0, 3)
-
-
-def test_novel_index_rows_plan_gate(spark, sf_dir):
-    """The index never shuffles: the first-wins probe must compile to
-    two BroadcastHashJoins (LeftSemi with the broadcast batch keys over
-    the streaming store scan, LeftAnti with the broadcast probe result)
-    — no SortMergeJoin anywhere in the per-trigger plan."""
-    from blockchair_etl_spark.llmdata.ivf import seed_centroids
-    from blockchair_etl_spark.llmdata.pq import (
-        ivfpq_encode,
-        residual_frame,
-        seed_pq_codebooks,
-    )
-    from blockchair_etl_spark.streaming.ann_stream import novel_index_rows
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = seed_centroids(emb, n_centroids=4)
-    res = residual_frame(emb, cents)
-    books = seed_pq_codebooks(res, dim=64, m=4, ksub=8, vec_col="residual")
-    store = ivfpq_encode(emb.filter(F.col("vec_id") % 4 != 0), cents, books)
-    batch = emb.filter(F.col("vec_id") % 4 == 0)
-    out = novel_index_rows(
-        ivfpq_encode(batch, cents, books), store, batch.select("vec_id"), "vec_id"
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2, plan[:2000]
-    assert "LeftSemi" in plan and "LeftAnti" in plan, plan[:2000]
-    assert "SortMergeJoin" not in plan, plan[:2000]
-
-
 def test_ann_artifact_reload_guards(spark, sf_dir, tmp_path):
     """Review fixes: a ragged centroid relation (missing cluster_id row
     shifts every later assignment index) and an EMPTY codebook relation
@@ -714,38 +535,6 @@ def test_ann_artifact_trailing_drop_guards(spark, sf_dir):
     assert np.allclose(
         frame_to_codebooks(bf, expected_m=2, expected_ksub=4), books
     )
-
-
-def test_streaming_ivfpq_in_batch_duplicate_ids(spark, sf_dir, tmp_path):
-    """A micro-batch carrying the same vec_id twice (duplicated source
-    file) must land ONE deterministic row in the store — the min-struct
-    collapse before the probe, not both rows through the anti-join."""
-    from blockchair_etl_spark.llmdata.ivf import seed_centroids
-    from blockchair_etl_spark.llmdata.pq import (
-        ivfpq_encode,
-        residual_frame,
-        seed_pq_codebooks,
-    )
-    from blockchair_etl_spark.streaming.ann_stream import (
-        make_ivfpq_batch_processor,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(40)
-    cents = seed_centroids(emb, n_centroids=4)
-    res = residual_frame(emb, cents)
-    books = seed_pq_codebooks(res, dim=64, m=4, ksub=8, vec_col="residual")
-
-    store = str(tmp_path / "dup_store")
-    proc = make_ivfpq_batch_processor(store, cents, books)
-    proc(emb.unionByName(emb), 0)  # every id arrives twice in one trigger
-    got = spark.read.parquet(store)
-    assert got.count() == 40
-    assert got.groupBy("vec_id").count().filter(F.col("count") > 1).count() == 0
-    want = {
-        (r.vec_id, r.ivf_cluster, tuple(r.codes))
-        for r in ivfpq_encode(emb, cents, books).collect()
-    }
-    assert {(r.vec_id, r.ivf_cluster, tuple(r.codes)) for r in got.collect()} == want
 
 
 def test_seed_pq_codebooks_residual_matches_spark_side(spark, sf_dir):

@@ -536,89 +536,6 @@ def test_incremental_winnowing_dedup(spark, docs):
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
 
-def test_streaming_incremental_winnowing_matches_batch(spark, docs, tmp_path):
-    """The winnowing foreachBatch loop: 3 micro-batches of documents
-    against a growing fingerprint store must emit, across all batches,
-    EXACTLY the pair set the one-shot MOSS operator finds on the full
-    corpus (max_df=None — the exact-parity configuration), with every
-    fingerprint row registered in the store."""
-    from blockchair_etl_spark.llmdata.text import (
-        winnowing_fingerprint_store,
-        winnowing_pairs,
-    )
-    from blockchair_etl_spark.streaming.dedup_stream import (
-        incremental_winnowing_stream,
-    )
-
-    src = str(tmp_path / "winnow_src")
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        incremental_winnowing_stream(
-            stream,
-            store_dir=str(tmp_path / "winnow_store2"),
-            pairs_dir=str(tmp_path / "winnow_pairs"),
-            checkpoint_dir=str(tmp_path / "winnow_ckpt"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-
-    got = {
-        (min(r.id_a, r.id_b), max(r.id_a, r.id_b), r.n_shared, r.jaccard)
-        for r in spark.read.parquet(str(tmp_path / "winnow_pairs")).collect()
-    }
-    want = {
-        (r.id_a, r.id_b, r.n_shared, r.jaccard)
-        for r in winnowing_pairs(docs).collect()
-    }
-    assert got == want and want
-    n_fp = winnowing_fingerprint_store(docs).count()
-    assert spark.read.parquet(str(tmp_path / "winnow_store2")).count() == n_fp
-
-    # exactly-once replay: re-processing the same (batch_df, batch_id)
-    # leaves both sinks byte-identical (the shared batch_id
-    # dynamic-overwrite machinery, replayed here on the winnowing path)
-    from blockchair_etl_spark.streaming.dedup_stream import (
-        make_winnowing_batch_processor,
-    )
-
-    store_dir = str(tmp_path / "xo_winnow_store")
-    pairs_dir = str(tmp_path / "xo_winnow_pairs")
-    proc = make_winnowing_batch_processor(store_dir, pairs_dir, exactly_once=True)
-    b0 = docs.filter(F.col("doc_id") % 2 == 0)
-    b1 = docs.filter(F.col("doc_id") % 2 == 1)
-    proc(b0, 0)
-    proc(b1, 1)
-
-    def pair_set():
-        return {
-            (min(r.id_a, r.id_b), max(r.id_a, r.id_b), r.n_shared, r.jaccard)
-            for r in spark.read.parquet(pairs_dir).collect()
-        }
-
-    once = pair_set()
-    store_once = {
-        (r.doc, r.fp, r.n_fp)
-        for r in spark.read.parquet(store_dir).collect()
-    }
-    proc(b1, 1)  # replay the last batch
-    assert pair_set() == once
-    assert {
-        (r.doc, r.fp, r.n_fp)
-        for r in spark.read.parquet(store_dir).collect()
-    } == store_once
-    # and the replayed union still equals the one-shot operator
-    assert once == want
-
-
 def test_quantize_embeddings_int8_error_bound(spark):
     from blockchair_etl_spark.llmdata.similarity import quantize_embeddings_int8
 
@@ -827,99 +744,6 @@ def test_minhash_max_bucket_bounds_megabucket(spark):
     assert {100, 101, 102} <= var_cluster
 
 
-def test_streaming_incremental_minhash_matches_batch(spark, docs, tmp_path):
-    """The foreachBatch daily-dedup loop (streaming/dedup_stream.py):
-    3 micro-batches of documents against a growing parquet band-store
-    must emit, across all batches, EXACTLY the pair set the one-shot
-    batch operator finds on the full corpus — every pair once, in the
-    batch where its later-arriving document lands — and leave every
-    signature in the store."""
-    from pyspark.sql import functions as F
-
-    from blockchair_etl_spark.streaming.dedup_stream import (
-        incremental_minhash_stream,
-    )
-
-    src = str(tmp_path / "stream_src")
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        incremental_minhash_stream(
-            stream,
-            store_dir=str(tmp_path / "store"),
-            pairs_dir=str(tmp_path / "pairs"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            threshold=0.5,
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-
-    got = {
-        (min(r.id_a, r.id_b), max(r.id_a, r.id_b), r.est_jaccard)
-        for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
-    }
-    want = {
-        (r.id_a, r.id_b, r.est_jaccard)
-        for r in minhash_lsh_pairs(docs, threshold=0.5).collect()
-    }
-    assert got == want and want
-    assert spark.read.parquet(str(tmp_path / "store")).count() == docs.count()
-
-
-def test_streaming_dedup_exactly_once_replay(spark, docs, tmp_path):
-    """r7 verdict #5 / ADVICE #2: with exactly_once=True both sinks are
-    batch_id-partitioned with dynamic overwrite, so REPLAYING a
-    micro-batch (a retry after a failure at ANY point — including after
-    the store write but before the checkpoint commit) yields byte-
-    identical pairs and store contents: no duplicate pairs, no
-    double-registered signatures, and no within-batch pair echoed back
-    as a cross-pair against the batch's own half-written signatures."""
-    from blockchair_etl_spark.streaming.dedup_stream import make_batch_processor
-
-    store_dir = str(tmp_path / "xo_store")
-    pairs_dir = str(tmp_path / "xo_pairs")
-    proc = make_batch_processor(
-        store_dir, pairs_dir, threshold=0.5, exactly_once=True
-    )
-    b0 = docs.filter(F.col("doc_id") % 2 == 0)
-    b1 = docs.filter(F.col("doc_id") % 2 == 1)
-    proc(b0, 0)
-    proc(b1, 1)
-
-    def pair_set():
-        return {
-            (min(r.id_a, r.id_b), max(r.id_a, r.id_b), r.est_jaccard)
-            for r in spark.read.parquet(pairs_dir).collect()
-        }
-
-    once = pair_set()
-    store_once = spark.read.parquet(store_dir).count()
-
-    # simulate the worst replay: batch 1's signatures are already in the
-    # store (previous attempt finished both writes, checkpoint didn't
-    # commit) and foreachBatch re-runs the same (batch_df, batch_id)
-    proc(b1, 1)
-
-    assert pair_set() == once
-    assert spark.read.parquet(store_dir).count() == store_once == docs.count()
-    # and the cumulative pair set still equals the one-shot batch op
-    want = {
-        (r.id_a, r.id_b, r.est_jaccard)
-        for r in minhash_lsh_pairs(docs, threshold=0.5).collect()
-    }
-    assert once == want and want
-
-
 def test_cross_pairs_never_emit_self_pairs(spark, docs):
     """At-least-once replay / re-ingest hazard: a doc present on BOTH
     sides of the cross probe (its earlier attempt already registered it
@@ -1026,83 +850,6 @@ def test_ahash_guards(spark):
     )
     with pytest.raises(ValueError, match="unknown decoder"):
         mm.resize_images(media, decoder="byte_grid")
-
-
-def test_streaming_incremental_media_matches_batch(spark, docs, tmp_path):
-    """The media foreachBatch loop: 3 micro-batches of payloads against
-    a growing fingerprint store must emit, across all batches, EXACTLY
-    the pair set the one-shot pigeonhole operator finds on the full
-    corpus — and a replayed batch in exactly-once mode leaves pairs and
-    store byte-identical."""
-    from blockchair_etl_spark.llmdata.dedup import (
-        media_byte_fingerprints,
-        simhash_near_pairs,
-    )
-    from blockchair_etl_spark.streaming.dedup_stream import (
-        incremental_media_stream,
-        make_media_batch_processor,
-    )
-
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").cast("binary").alias("content"),
-    )
-    src = str(tmp_path / "media_src")
-    for i in range(3):
-        media.filter(F.col("media_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        incremental_media_stream(
-            stream,
-            store_dir=str(tmp_path / "media_store"),
-            pairs_dir=str(tmp_path / "media_pairs"),
-            checkpoint_dir=str(tmp_path / "media_ckpt"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-
-    got = {
-        (min(r.id_a, r.id_b), max(r.id_a, r.id_b), r.hamming)
-        for r in spark.read.parquet(str(tmp_path / "media_pairs")).collect()
-    }
-    want = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in simhash_near_pairs(media_byte_fingerprints(media)).collect()
-    }
-    assert got == want and want
-    # every payload long enough to fingerprint is registered
-    n_fp = media_byte_fingerprints(media).count()
-    assert spark.read.parquet(str(tmp_path / "media_store")).count() == n_fp
-
-    # exactly-once replay: re-processing the same (batch_df, batch_id)
-    # leaves both sinks byte-identical (shared _check_mode_and_prune
-    # machinery with the MinHash loop, replayed here on the media path)
-    store_dir = str(tmp_path / "xo_media_store")
-    pairs_dir = str(tmp_path / "xo_media_pairs")
-    proc = make_media_batch_processor(store_dir, pairs_dir, exactly_once=True)
-    b0 = media.filter(F.col("media_id") % 2 == 0)
-    b1 = media.filter(F.col("media_id") % 2 == 1)
-    proc(b0, 0)
-    proc(b1, 1)
-
-    def pair_set():
-        return {
-            (min(r.id_a, r.id_b), max(r.id_a, r.id_b), r.hamming)
-            for r in spark.read.parquet(pairs_dir).collect()
-        }
-
-    once = pair_set()
-    store_once = spark.read.parquet(store_dir).count()
-    proc(b1, 1)  # worst replay: signatures already registered
-    assert pair_set() == once == want
-    assert spark.read.parquet(store_dir).count() == store_once == n_fp
 
 
 def test_simhash_conv_form_matches_md5_model_multiword(spark):
@@ -1987,107 +1734,6 @@ def test_incremental_joint_dedup_replay_idempotent(spark, sf_dir):
     assert with_replay == base
 
 
-def test_streaming_joint_loop_two_drain_and_replay(spark, docs, tmp_path):
-    """r11 verdict #6: the streaming joint loop. Drain 1 (3 micro-
-    batches) + drain 2 (a late 4th file through the SAME checkpoint)
-    must leave a pairs table whose survivors equal the batch joint
-    composition over the full corpus; replaying a micro-batch through
-    the exactly-once processor leaves pairs and BOTH stores
-    byte-identical (the standard two-drain replay matrix, now with two
-    stores per trigger)."""
-    from blockchair_etl_spark.llmdata.dedup import survivors_from_edges
-    from blockchair_etl_spark.queryset import joint_dedup_survivors
-    from blockchair_etl_spark.streaming.dedup_stream import (
-        incremental_joint_stream,
-        make_joint_batch_processor,
-    )
-
-    base = docs.select("doc_id", "text")
-    src = str(tmp_path / "jsrc")
-    for i in range(3):
-        base.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    dirs = {k: str(tmp_path / k) for k in ("jtext", "jmedia", "jpairs", "jckpt")}
-
-    def _drain():
-        stream = (
-            spark.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            incremental_joint_stream(
-                stream,
-                text_store_dir=dirs["jtext"],
-                media_store_dir=dirs["jmedia"],
-                pairs_dir=dirs["jpairs"],
-                checkpoint_dir=dirs["jckpt"],
-                media_view=_joint_media_view,
-                exactly_once=True,
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-
-    _drain()
-    part1 = base.filter(F.col("doc_id") % 4 < 3)
-    surv1 = {
-        r.doc_id
-        for r in survivors_from_edges(
-            part1, spark.read.parquet(dirs["jpairs"])
-        ).collect()
-    }
-    want1 = {
-        r.doc_id for r in joint_dedup_survivors(part1, width=4, height=8).collect()
-    }
-    assert surv1 == want1
-
-    # drain 2: a late file lands; the checkpointed query continues and
-    # processes ONLY it — cumulative parity must now hold corpus-wide
-    base.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode("append").parquet(
-        src
-    )
-    _drain()
-    edges = spark.read.parquet(dirs["jpairs"])
-    got = {r.doc_id for r in survivors_from_edges(base, edges).collect()}
-    want = {
-        r.doc_id for r in joint_dedup_survivors(base, width=4, height=8).collect()
-    }
-    assert got == want
-    # both stores hold exactly one row per key
-    assert spark.read.parquet(dirs["jtext"]).count() == base.count()
-    assert (
-        spark.read.parquet(dirs["jmedia"]).count()
-        == _joint_media_view(base).count()
-    )
-
-    # replay: re-run the LAST batch (its partitions already written)
-    # through the processor directly — pairs and BOTH stores must be
-    # byte-identical afterwards
-    def _snap(path):
-        return sorted(
-            tuple(x) for x in spark.read.parquet(path).drop("batch_id").collect()
-        )
-
-    before = {k: _snap(dirs[k]) for k in ("jtext", "jmedia", "jpairs")}
-    last_bid = int(
-        spark.read.parquet(dirs["jpairs"]).agg(F.max("batch_id")).first()[0]
-    )
-    proc = make_joint_batch_processor(
-        dirs["jtext"],
-        dirs["jmedia"],
-        dirs["jpairs"],
-        media_view=_joint_media_view,
-        exactly_once=True,
-    )
-    proc(base.filter(F.col("doc_id") % 4 == 3), last_bid)
-    for k in ("jtext", "jmedia", "jpairs"):
-        assert _snap(dirs[k]) == before[k], k
-
-
 def test_frame_sampling_plan(spark):
     media = spark.createDataFrame(
         [(1, "video", None, "video/fake", None, None, 3500, "u")],
@@ -2400,473 +2046,6 @@ def test_decontaminate_composes_into_prep(spark, docs):
     plan = survivors._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"BroadcastHashJoin \[feat#\d+", plan), plan[:2000]
     assert not re.search(r"SortMergeJoin \[feat#\d+", plan)
-
-
-def test_streaming_prep_decontamination_two_drain_replay(spark, docs, tmp_path):
-    """Decontamination composed into the streaming prep loop (r10
-    verdict #4): the eval-set shingle set is built once (normalized
-    space) and every micro-batch filters against it between
-    normalization and the classifier/gate. Matrix: (a) two drains of
-    the same checkpointed stream — new files arriving between drains
-    continue the batch_id sequence — union to exactly the batch-form
-    composition over the full corpus; (b) a replayed batch rewrites its
-    own partition byte-identically; (c) a contaminated doc that the
-    classifier+gate WOULD keep is dropped (the stage has teeth)."""
-    from blockchair_etl_spark.llmdata.classify import (
-        hashed_weights,
-        linear_classifier_scores,
-    )
-    from blockchair_etl_spark.llmdata.dedup import (
-        bench_shingle_set,
-        decontaminate,
-    )
-    from blockchair_etl_spark.llmdata.text import (
-        gopher_quality_gate,
-        normalize_text,
-    )
-    from blockchair_etl_spark.streaming.prep_stream import (
-        corpus_prep_stream,
-        make_prep_batch_processor,
-    )
-
-    weights = hashed_weights(spark, n_features=4096, scale=1024, seed="w1")
-    bench = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
-    src = str(tmp_path / "dsrc")
-    ckpt = str(tmp_path / "dckpt")
-    out = str(tmp_path / "dstore")
-
-    def drain():
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            corpus_prep_stream(
-                stream, weights, out, ckpt, bench=bench,
-                contamination_threshold=0.5,
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-
-    # drain 1: two files; drain 2: one more file on the same checkpoint
-    for i in range(2):
-        docs.select("doc_id", "text").filter(
-            F.col("doc_id") % 3 == i
-        ).coalesce(1).write.mode("append").parquet(src)
-    drain()
-    n_batches_first = (
-        spark.read.parquet(out).select("batch_id").distinct().count()
-    )
-    docs.select("doc_id", "text").filter(
-        F.col("doc_id") % 3 == 2
-    ).coalesce(1).write.mode("append").parquet(src)
-    drain()
-
-    got = {
-        (r.doc_id, r.norm_text, r.logit_q)
-        for r in spark.read.parquet(out).collect()
-    }
-    # batch-form expectation: normalize -> decontaminate (same
-    # normalized space) -> classifier -> gate
-    normed = normalize_text(docs)
-    bsh = bench_shingle_set(normalize_text(bench), text_col="norm_text")
-    clean = decontaminate(
-        normed, None, threshold=0.5, text_col="norm_text", bench_shingles=bsh
-    )
-    clf = linear_classifier_scores(clean, weights, text_col="norm_text")
-    gated = gopher_quality_gate(clean, text_col="norm_text")
-    want_df = (
-        clean.join(
-            clf.filter(F.col("logit_q") >= 0).select("doc_id", "logit_q"),
-            "doc_id",
-        )
-        .join(gated.filter("keep").select("doc_id"), "doc_id")
-        .select("doc_id", "norm_text", "logit_q")
-    )
-    want = {(r.doc_id, r.norm_text, r.logit_q) for r in want_df.collect()}
-    assert got == want and want
-    # the second drain really continued the batch sequence
-    assert (
-        spark.read.parquet(out).select("batch_id").distinct().count()
-        > n_batches_first
-    )
-
-    # (c) the stage has teeth: some doc passes classifier+gate but is
-    # contaminated (bench ⊂ corpus, so bench members self-contaminate)
-    no_decon = {
-        r.doc_id
-        for r in normed.join(
-            linear_classifier_scores(normed, weights, text_col="norm_text")
-            .filter(F.col("logit_q") >= 0).select("doc_id"), "doc_id")
-        .join(
-            gopher_quality_gate(normed, text_col="norm_text")
-            .filter("keep").select("doc_id"), "doc_id")
-        .collect()
-    }
-    dropped_by_decon = no_decon - {d for d, _, _ in got}
-    # every bench member that passed the gates must self-contaminate
-    # (overlap 1.0); near-duplicates of bench docs may drop too
-    bench_kept_by_gates = {d for d in no_decon if d % 5 == 0}
-    assert bench_kept_by_gates and bench_kept_by_gates <= dropped_by_decon
-
-    # (b) replay idempotence: reprocess batch 0's source rows under its
-    # batch_id through a processor built with the SAME persisted set
-    b0_ids = {
-        r.doc_id
-        for r in spark.read.parquet(out)
-        .filter(F.col("batch_id") == 0).select("doc_id").collect()
-    }
-    proc = make_prep_batch_processor(
-        weights, out, bench_shingles=bsh, contamination_threshold=0.5
-    )
-    proc(
-        docs.select("doc_id", "text").filter(
-            F.col("doc_id").isin(*b0_ids) if b0_ids else F.lit(False)
-        ),
-        0,
-    )
-    again = {
-        (r.doc_id, r.norm_text, r.logit_q)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert again == want
-
-
-def test_streaming_prep_v5_learned_token_currency(spark, docs, tmp_path):
-    """r12 verdict #3: the streaming prep loop carries the v5 currency —
-    each micro-batch's survivors land with their LEARNED (BPE) token
-    count, computed against a frozen vocabulary artifact loaded once
-    per stream lifetime, so the daily global budget/pack pass runs in
-    BPE tokens without re-tokenizing. Matrix: (a) two checkpointed
-    drains union to the batch composition of the same per-row stages
-    (normalize -> classify -> gate -> tokenize), n_tokens included;
-    (b) the GLOBAL v5 stages (quality_budget_select + assign_packs,
-    n_tokens currency) over the accumulated store match the batch v5
-    stages byte-for-byte; (c) a replayed batch rewrites its partition
-    byte-identically."""
-    from blockchair_etl_spark.llmdata.classify import (
-        hashed_weights,
-        linear_classifier_scores,
-    )
-    from blockchair_etl_spark.llmdata.packing import assign_packs
-    from blockchair_etl_spark.llmdata.sampling import quality_budget_select
-    from blockchair_etl_spark.llmdata.text import (
-        gopher_quality_gate,
-        normalize_text,
-    )
-    from blockchair_etl_spark.llmdata.tokenizer import (
-        bpe_apply,
-        bpe_train,
-        frame_to_merges,
-        merges_to_frame,
-    )
-    from blockchair_etl_spark.streaming.prep_stream import (
-        corpus_prep_stream,
-        make_prep_batch_processor,
-    )
-
-    sample = docs.limit(150).select("doc_id", "text")
-    weights = hashed_weights(spark, n_features=4096, scale=1024, seed="w5")
-
-    # the vocabulary ARTIFACT contract: train once, persist the merge
-    # relation, and every stream loads the ordered list back ONCE
-    vocab_path = str(tmp_path / "vocab")
-    merges_to_frame(spark, bpe_train(sample, n_merges=10)).write.parquet(vocab_path)
-    merges = frame_to_merges(spark.read.parquet(vocab_path))
-    assert len(merges) == 10
-
-    src = str(tmp_path / "v5src")
-    ckpt = str(tmp_path / "v5ckpt")
-    out = str(tmp_path / "v5store")
-
-    def drain():
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            corpus_prep_stream(stream, weights, out, ckpt, merges=merges)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-
-    for i in range(2):
-        sample.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    drain()
-    sample.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    drain()
-
-    store = spark.read.parquet(out)
-    got = {
-        (r.doc_id, r.norm_text, r.logit_q, r.n_tokens) for r in store.collect()
-    }
-
-    # (a) batch composition of the same per-row stages
-    normed = normalize_text(sample)
-    clf = linear_classifier_scores(normed, weights, text_col="norm_text")
-    gated = gopher_quality_gate(normed, text_col="norm_text")
-    kept = (
-        normed.join(
-            clf.filter(F.col("logit_q") >= 0).select("doc_id", "logit_q"),
-            "doc_id",
-        )
-        .join(gated.filter("keep").select("doc_id"), "doc_id")
-        .select("doc_id", "norm_text", "logit_q")
-    )
-    want_df = kept.join(
-        bpe_apply(kept, merges, text_col="norm_text").select("doc_id", "n_tokens"),
-        "doc_id",
-    )
-    want = {
-        (r.doc_id, r.norm_text, r.logit_q, r.n_tokens) for r in want_df.collect()
-    }
-    assert got == want and want
-    # learned counts for real (r13 review: the batch-parity check above
-    # is self-parity — both sides call bpe_apply): replay the merges
-    # with the test-local plain-python fold over each STORED row's
-    # normalized text and require every stored n_tokens to match, plus
-    # at least one doc where a merge actually fired (count < char sum)
-    import re as _re
-
-    _, _fold = _ref_bpe([], 0)
-
-    def _py_ntokens(text):
-        n = 0
-        for w in _re.split(r"[^a-z0-9]+", (text or "").lower()):
-            if not w:
-                continue
-            syms = list(w)
-            for l, r in merges:
-                syms = _fold(syms, l, r)
-            n += len(syms)
-        return n
-
-    stored = store.collect()
-    assert all(r.n_tokens == _py_ntokens(r.norm_text) for r in stored)
-    assert any(
-        r.n_tokens
-        < sum(
-            len(w)
-            for w in _re.split(r"[^a-z0-9]+", r.norm_text.lower())
-            if w
-        )
-        for r in stored
-    )
-
-    # (b) the daily GLOBAL pass over the store == batch v5 stages,
-    # byte-for-byte, in the learned currency
-    def select_pack(rel):
-        sel = quality_budget_select(
-            rel.select("doc_id", "logit_q", "n_tokens"),
-            score_col="logit_q",
-            budget_den=5,
-            n_tokens_col="n_tokens",
-        )
-        packed = assign_packs(sel, budget=256, n_shards=4, n_tokens_col="n_tokens")
-        return {
-            tuple(r)
-            for r in packed.join(
-                sel.select("doc_id", "score", "cum_before"), "doc_id"
-            ).collect()
-        }
-
-    assert select_pack(store) == select_pack(want_df)
-
-    # (c) replay byte-identity: reprocess batch 0's rows under its
-    # batch_id — the store must not change
-    b0 = {
-        r.doc_id
-        for r in store.filter(F.col("batch_id") == 0).select("doc_id").collect()
-    }
-    proc = make_prep_batch_processor(weights, out, merges=merges)
-    proc(
-        sample.filter(F.col("doc_id").isin(*b0) if b0 else F.lit(False)),
-        0,
-    )
-    again = {
-        (r.doc_id, r.norm_text, r.logit_q, r.n_tokens)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert again == want
-
-
-def test_streaming_prep_unigram_token_currency(spark, docs, tmp_path):
-    """r13 verdict #5: the batch side pinned unigram counts as a
-    drop-in budget/packing currency; the streaming prep loop must
-    accept the unigram piece artifact the same way the BPE merge list
-    rides (load once per stream lifetime, survivors-only n_tokens
-    join-back). Two checkpointed drains must equal the batch
-    composition normalize -> classify -> gate -> unigram_apply,
-    n_tokens included; a replayed batch rewrites its partition
-    byte-identically; merges+token_pieces together raise (one currency
-    per store)."""
-    from blockchair_etl_spark.llmdata.classify import (
-        hashed_weights,
-        linear_classifier_scores,
-    )
-    from blockchair_etl_spark.llmdata.text import (
-        gopher_quality_gate,
-        normalize_text,
-    )
-    from blockchair_etl_spark.llmdata.unigram import (
-        frame_to_pieces,
-        pieces_to_frame,
-        unigram_apply,
-        unigram_train,
-    )
-    from blockchair_etl_spark.streaming.prep_stream import (
-        corpus_prep_stream,
-        make_prep_batch_processor,
-    )
-
-    sample = docs.limit(120).select("doc_id", "text")
-    weights = hashed_weights(spark, n_features=4096, scale=1024, seed="w5u")
-
-    # artifact contract: train once, persist, load ONCE per stream
-    vocab_path = str(tmp_path / "uvocab")
-    pieces_to_frame(
-        spark, unigram_train(sample, vocab_size=48, max_piece_len=3)
-    ).write.parquet(vocab_path)
-    pieces = frame_to_pieces(spark.read.parquet(vocab_path))
-
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        make_prep_batch_processor(
-            weights, str(tmp_path / "x"), merges=[("a", "b")], token_pieces=pieces
-        )
-
-    src = str(tmp_path / "usrc")
-    ckpt = str(tmp_path / "uckpt")
-    out = str(tmp_path / "ustore")
-
-    def drain():
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            corpus_prep_stream(stream, weights, out, ckpt, token_pieces=pieces)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-
-    for i in range(2):
-        sample.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    drain()
-    sample.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    drain()
-
-    store = spark.read.parquet(out)
-    got = {
-        (r.doc_id, r.norm_text, r.logit_q, r.n_tokens) for r in store.collect()
-    }
-
-    normed = normalize_text(sample)
-    clf = linear_classifier_scores(normed, weights, text_col="norm_text")
-    gated = gopher_quality_gate(normed, text_col="norm_text")
-    kept = (
-        normed.join(
-            clf.filter(F.col("logit_q") >= 0).select("doc_id", "logit_q"),
-            "doc_id",
-        )
-        .join(gated.filter("keep").select("doc_id"), "doc_id")
-        .select("doc_id", "norm_text", "logit_q")
-    )
-    want_df = kept.join(
-        unigram_apply(kept, pieces, text_col="norm_text").select(
-            "doc_id", "n_tokens"
-        ),
-        "doc_id",
-    )
-    want = {
-        (r.doc_id, r.norm_text, r.logit_q, r.n_tokens) for r in want_df.collect()
-    }
-    assert got == want and want
-    # the learned currency is real: at least one multi-char piece fired
-    # (n_tokens under the alphanumeric char total for some doc)
-    import re as _re
-
-    assert any(
-        r.n_tokens
-        < sum(
-            len(w)
-            for w in _re.split(r"[^a-z0-9]+", r.norm_text.lower())
-            if w
-        )
-        for r in store.collect()
-        if r.norm_text
-    )
-
-    # replay byte-identity: reprocess batch 0's rows under its batch_id
-    b0 = {
-        r.doc_id
-        for r in store.filter(F.col("batch_id") == 0).select("doc_id").collect()
-    }
-    proc = make_prep_batch_processor(weights, out, token_pieces=pieces)
-    proc(
-        sample.filter(F.col("doc_id").isin(*b0) if b0 else F.lit(False)),
-        0,
-    )
-    again = {
-        (r.doc_id, r.norm_text, r.logit_q, r.n_tokens)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert again == want
-
-
-def test_streaming_prep_long_vocab_routes_off_the_checkpoint_path(
-    spark, docs, tmp_path
-):
-    """r13 review: a >_MAX_FOLD_CHAIN merge list under the fold encoder
-    would eagerly localCheckpoint the word table inside EVERY
-    micro-batch and register it with the global deferred-release
-    registry (a per-batch leak in a loop that never releases, and a
-    poisoning hazard if a sibling loop's release fires mid-plan). The
-    processor must route long vocabularies through the vectorized
-    encoder — bit-identical, checkpoint-free: after a batch, zero
-    tracked entries and zero surviving cached/checkpointed RDDs."""
-    from blockchair_etl_spark.caching import release_tracked, tracked_count
-    from blockchair_etl_spark.llmdata.classify import hashed_weights
-    from blockchair_etl_spark.streaming.prep_stream import (
-        make_prep_batch_processor,
-    )
-
-    release_tracked(blocking=True)
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    # 70 merges (> _MAX_FOLD_CHAIN=64): mostly inert pairs plus one
-    # that fires on real text, so the n_tokens path is exercised
-    long_merges = [("q", f"q{i}") for i in range(69)] + [("t", "h")]
-    out = str(tmp_path / "longvocab_store")
-    proc = make_prep_batch_processor(
-        hashed_weights(spark, n_features=64),
-        out,
-        n_features=64,
-        merges=long_merges,
-        encoder="fold",
-    )
-    proc(docs.limit(40).select("doc_id", "text"), 0)
-    assert tracked_count() == 0
-    leaked = set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before
-    assert not leaked
-    stored = spark.read.parquet(out)
-    assert "n_tokens" in stored.columns
 
 
 def _ref_bpe(texts, n_merges, min_pair_count=2):
@@ -4335,38 +3514,6 @@ def test_corpus_stats_ragged_vectors_raise(spark):
     assert st.dim == 2 and st.n_rows == 3
 
 
-def test_streaming_dedup_mode_mismatch_raises(spark, docs, tmp_path):
-    """r8 ADVICE #2: a signature store's delivery mode is fixed at
-    creation. exactly_once=True over an unpartitioned (append-mode)
-    store must fail with a clear message, and append mode over a
-    batch_id-partitioned store must refuse rather than silently mix
-    layouts."""
-    import pytest
-
-    from blockchair_etl_spark.streaming.dedup_stream import make_batch_processor
-
-    b0 = docs.filter(F.col("doc_id") % 2 == 0)
-    b1 = docs.filter(F.col("doc_id") % 2 == 1)
-
-    # append-mode store, then an exactly_once processor probes it
-    store_a = str(tmp_path / "mm_store_a")
-    make_batch_processor(store_a, str(tmp_path / "mm_pairs_a"))(b0, 0)
-    xo = make_batch_processor(
-        store_a, str(tmp_path / "mm_pairs_a2"), exactly_once=True
-    )
-    with pytest.raises(ValueError, match="exactly_once=False"):
-        xo(b1, 1)
-
-    # partitioned store, then an append-mode processor probes it
-    store_b = str(tmp_path / "mm_store_b")
-    make_batch_processor(store_b, str(tmp_path / "mm_pairs_b"), exactly_once=True)(
-        b0, 0
-    )
-    ap = make_batch_processor(store_b, str(tmp_path / "mm_pairs_b2"))
-    with pytest.raises(ValueError, match="exactly_once=True"):
-        ap(b1, 1)
-
-
 def test_containment_catches_inclusion_jaccard_misses(spark):
     """A short document quoted wholesale inside a long one must score
     containment ~1.0 while its Jaccard stays below any near-dup
@@ -4445,55 +3592,6 @@ def test_containment_df_bounded_scores_stay_exact(spark):
     assert (3, 4) in full and (3, 4) not in bounded
 
 
-def test_streaming_dedup_exactly_once_engine_path(spark, docs, tmp_path):
-    """exactly_once=True through the REAL foreachBatch engine (not the
-    exposed processor): cumulative pairs across micro-batches still
-    equal the one-shot batch operator, and the batch_id-partitioned
-    store holds exactly one signature row per document."""
-    from blockchair_etl_spark.streaming.dedup_stream import (
-        incremental_minhash_stream,
-    )
-
-    src = str(tmp_path / "xo_stream_src")
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        incremental_minhash_stream(
-            stream,
-            store_dir=str(tmp_path / "xo_store2"),
-            pairs_dir=str(tmp_path / "xo_pairs2"),
-            checkpoint_dir=str(tmp_path / "xo_ckpt2"),
-            threshold=0.5,
-            exactly_once=True,
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-
-    got = {
-        (min(r.id_a, r.id_b), max(r.id_a, r.id_b), r.est_jaccard)
-        for r in spark.read.parquet(str(tmp_path / "xo_pairs2")).collect()
-    }
-    want = {
-        (r.id_a, r.id_b, r.est_jaccard)
-        for r in minhash_lsh_pairs(docs, threshold=0.5).collect()
-    }
-    assert got == want and want
-    store = spark.read.parquet(str(tmp_path / "xo_store2"))
-    assert store.count() == docs.count()
-    assert store.select("doc").distinct().count() == docs.count()
-    assert "batch_id" in store.columns  # partition column materialized
-
-
 def test_lsh_recall_monotone_in_plane_count(spark, sf_dir):
     """_planes draws row-major from one seeded stream, so the p-plane
     bucket is a strict refinement of the (p-1)-plane bucket: the
@@ -4552,209 +3650,6 @@ def test_media_dedup_survivors_short_payload_and_dups(spark):
     assert 1 in got and got[1] is not None
     assert 3 in got and got[3] is None   # short payload survives, no fp
     assert 4 in got
-
-
-def test_streaming_corpus_prep_engine_path(spark, docs, tmp_path):
-    """The per-row prep stages (normalize -> classifier threshold ->
-    Gopher gate) through the REAL foreachBatch engine: the union of
-    survivors across micro-batches equals the batch-form filters
-    applied to the full corpus (every stage is per-row, so the split
-    into micro-batches cannot change any verdict), and a replayed
-    batch rewrites its own partition byte-identically."""
-    from blockchair_etl_spark.llmdata.classify import (
-        hashed_weights,
-        linear_classifier_scores,
-    )
-    from blockchair_etl_spark.llmdata.text import (
-        gopher_quality_gate,
-        normalize_text,
-    )
-    from blockchair_etl_spark.streaming.prep_stream import (
-        corpus_prep_stream,
-        make_prep_batch_processor,
-    )
-
-    weights = hashed_weights(spark, n_features=4096, scale=1024, seed="w1")
-    src = str(tmp_path / "prep_src")
-    for i in range(3):
-        docs.select("doc_id", "text").filter(
-            F.col("doc_id") % 3 == i
-        ).coalesce(1).write.mode("append").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = str(tmp_path / "prep_store")
-    q = (
-        corpus_prep_stream(
-            stream, weights, out, str(tmp_path / "prep_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-
-    got = {
-        (r.doc_id, r.norm_text, r.logit_q)
-        for r in spark.read.parquet(out).collect()
-    }
-    normed = normalize_text(docs)
-    clf = linear_classifier_scores(normed, weights, text_col="norm_text")
-    gated = gopher_quality_gate(normed, text_col="norm_text")
-    want = {
-        (r.doc_id, r.norm_text, r.logit_q)
-        for r in normed.join(
-            clf.filter(F.col("logit_q") >= 0).select("doc_id", "logit_q"),
-            "doc_id",
-        )
-        .join(gated.filter("keep").select("doc_id"), "doc_id")
-        .select("doc_id", "norm_text", "logit_q")
-        .collect()
-    }
-    assert got == want and want
-
-    # replay idempotence: re-process batch 0's ORIGINAL source rows
-    # under its batch_id (recovered from the store partition, so the
-    # test doesn't assume file->batch ordering) -- the store must not
-    # change
-    b0_ids = {
-        r.doc_id
-        for r in spark.read.parquet(out)
-        .filter(F.col("batch_id") == 0)
-        .select("doc_id")
-        .collect()
-    }
-    b0_src = docs.select("doc_id", "text").filter(
-        F.col("doc_id").isin(*b0_ids) if b0_ids else F.lit(False)
-    )
-    proc = make_prep_batch_processor(weights, out)
-    proc(b0_src, 0)
-    again = {
-        (r.doc_id, r.norm_text, r.logit_q)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert again == want
-
-
-def test_streaming_prep_lm_perplexity_gate(spark, docs, tmp_path):
-    """The CCNet-shaped LM gate in the streaming prep loop (r13): a
-    FROZEN unigram-LM artifact (persisted relation, loaded once per
-    stream lifetime) filters each micro-batch by perplexity and
-    survivors carry their ppl in the store row. Matrix: (a) two
-    checkpointed drains union to the batch composition of the same
-    per-row stages with the gate binding (it drops real rows);
-    (b) a replayed batch rewrites its partition byte-identically;
-    (c) a model without a threshold raises."""
-    import pytest
-
-    from blockchair_etl_spark.llmdata.classify import (
-        hashed_weights,
-        linear_classifier_scores,
-    )
-    from blockchair_etl_spark.llmdata.text import (
-        gopher_quality_gate,
-        normalize_text,
-    )
-    from blockchair_etl_spark.llmdata.unigram import (
-        frame_to_pieces,
-        pieces_to_frame,
-        unigram_doc_perplexity,
-        unigram_train,
-    )
-    from blockchair_etl_spark.streaming.prep_stream import (
-        corpus_prep_stream,
-        make_prep_batch_processor,
-    )
-
-    sample = docs.limit(150).select("doc_id", "text")
-    weights = hashed_weights(spark, n_features=4096, scale=1024, seed="wp")
-
-    vocab_path = str(tmp_path / "lm_vocab")
-    pieces_to_frame(
-        spark, unigram_train(sample, vocab_size=40, max_piece_len=3, em_iters=1)
-    ).write.parquet(vocab_path)
-    pieces = frame_to_pieces(spark.read.parquet(vocab_path))
-
-    # batch composition of the same per-row stages — also picks a
-    # BINDING threshold (the 40th percentile of gate-survivor ppl)
-    normed = normalize_text(sample)
-    clf = linear_classifier_scores(normed, weights, text_col="norm_text")
-    gated = gopher_quality_gate(normed, text_col="norm_text")
-    kept = (
-        normed.join(
-            clf.filter(F.col("logit_q") >= 0).select("doc_id", "logit_q"),
-            "doc_id",
-        )
-        .join(gated.filter("keep").select("doc_id"), "doc_id")
-        .select("doc_id", "norm_text", "logit_q")
-    )
-    lm = unigram_doc_perplexity(normed, pieces, text_col="norm_text")
-    ppls = sorted(
-        r.ppl for r in kept.join(lm, "doc_id").select("ppl").collect()
-    )
-    t = ppls[int(len(ppls) * 0.4)]
-    want_df = kept.join(
-        lm.filter(F.col("ppl") <= t).select("doc_id", "ppl"), "doc_id"
-    )
-    want = {
-        (r.doc_id, r.norm_text, r.logit_q, r.ppl) for r in want_df.collect()
-    }
-    assert 0 < len(want) < kept.count()  # the gate binds
-
-    src = str(tmp_path / "lmsrc")
-    ckpt = str(tmp_path / "lmckpt")
-    out = str(tmp_path / "lmstore")
-
-    def drain():
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            corpus_prep_stream(
-                stream, weights, out, ckpt, pieces=pieces, ppl_max=t
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-
-    for i in range(2):
-        sample.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    drain()
-    sample.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    drain()
-
-    store = spark.read.parquet(out)
-    got = {(r.doc_id, r.norm_text, r.logit_q, r.ppl) for r in store.collect()}
-    assert got == want
-
-    # (b) replay: same (batch_df, batch_id) twice → byte-identical
-    proc = make_prep_batch_processor(
-        weights, str(tmp_path / "xo_lm"), pieces=pieces, ppl_max=t
-    )
-    b0 = sample.filter(F.col("doc_id") % 2 == 0)
-    proc(b0, 0)
-    once = {
-        tuple(r) for r in spark.read.parquet(str(tmp_path / "xo_lm")).collect()
-    }
-    proc(b0, 0)
-    again = {
-        tuple(r) for r in spark.read.parquet(str(tmp_path / "xo_lm")).collect()
-    }
-    assert once == again and once
-
-    # (c) half-specified gate raises
-    with pytest.raises(ValueError, match="come together"):
-        make_prep_batch_processor(weights, str(tmp_path / "bad"), pieces=pieces)
 
 
 def test_kcenter_select_matches_python_greedy(spark, sf_dir):
