@@ -32,10 +32,16 @@ from .sources import one_partition_if_small, parse_dump_filename, read_tsv
 
 @dataclass(frozen=True)
 class Materialization:
-    """Per-model storage policy (the dbt config block equivalent)."""
+    """Per-model storage policy (the dbt config block equivalent).
+
+    cluster_algo: 'linear' repartitions+sorts lexicographically on
+    cluster_by (serves the first key); 'zorder' lays rows on a Morton
+    curve over cluster_by (operators/zorder.py) so file min/max pruning
+    serves EVERY clustered key."""
 
     mode: str = "view"  # view | table
     cluster_by: tuple[str, ...] = ()
+    cluster_algo: str = "linear"  # linear | zorder
 
 
 def materialize(
@@ -54,11 +60,11 @@ def materialize(
 
     Both ends of a table model go through
     :func:`~blockchair_etl_spark.io.sources.one_partition_if_small`.
-    A clustered model whose size estimate passes is written as
+    A linear-clustered model whose size estimate passes is written as
     ``coalesce(1).sortWithinPartitions(*cluster_by)``, one sorted file
-    with no shuffle, instead of ``repartition(cluster_by)``. The
-    read-back is gated on the parquet bytes just written, so queries
-    over a day-size mart plan with no exchange.
+    with no shuffle, instead of ``repartition(cluster_by)``; the zorder
+    layout is unchanged. The read-back is gated on the parquet bytes
+    just written, so queries over a day-size mart plan with no exchange.
     The cost is that a join of gated relations runs in one task, for
     inputs up to ``spark.sql.autoBroadcastJoinThreshold``; Spark's
     broadcast join makes the same bet. Above the threshold both plans
@@ -72,7 +78,11 @@ def materialize(
         raise ValueError(f"{name}: a table model needs base_path to write to")
 
     writer_df = df
-    if config.cluster_by:
+    if config.cluster_by and config.cluster_algo == "zorder":
+        from ..operators.zorder import zorder_layout
+
+        writer_df = zorder_layout(df, list(config.cluster_by))
+    elif config.cluster_by:
         one = one_partition_if_small(df, name)
         if one is df:  # not small: hash-partition on the keys
             one = df.repartition(*[df[c] for c in config.cluster_by])
