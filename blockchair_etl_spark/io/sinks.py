@@ -27,21 +27,22 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from .sources import one_partition_if_small, parse_dump_filename, read_tsv
+from .sources import (
+    _find_bad_files,
+    one_partition_if_small,
+    parse_dump_filename,
+    read_tsv,
+)
 
 
 @dataclass(frozen=True)
 class Materialization:
-    """Per-model storage policy (the dbt config block equivalent).
-
-    cluster_algo: 'linear' repartitions+sorts lexicographically on
-    cluster_by (serves the first key); 'zorder' lays rows on a Morton
-    curve over cluster_by (operators/zorder.py) so file min/max pruning
-    serves EVERY clustered key."""
+    """Per-model storage policy (the dbt config block equivalent):
+    a table model repartitions and sorts lexicographically on
+    cluster_by."""
 
     mode: str = "view"  # view | table
     cluster_by: tuple[str, ...] = ()
-    cluster_algo: str = "linear"  # linear | zorder
 
 
 def materialize(
@@ -60,11 +61,11 @@ def materialize(
 
     Both ends of a table model go through
     :func:`~blockchair_etl_spark.io.sources.one_partition_if_small`.
-    A linear-clustered model whose size estimate passes is written as
+    A clustered model whose size estimate passes is written as
     ``coalesce(1).sortWithinPartitions(*cluster_by)``, one sorted file
-    with no shuffle, instead of ``repartition(cluster_by)``; the zorder
-    layout is unchanged. The read-back is gated on the parquet bytes
-    just written, so queries over a day-size mart plan with no exchange.
+    with no shuffle, instead of ``repartition(cluster_by)``. The
+    read-back is gated on the parquet bytes just written, so queries
+    over a day-size mart plan with no exchange.
     The cost is that a join of gated relations runs in one task, for
     inputs up to ``spark.sql.autoBroadcastJoinThreshold``; Spark's
     broadcast join makes the same bet. Above the threshold both plans
@@ -78,11 +79,7 @@ def materialize(
         raise ValueError(f"{name}: a table model needs base_path to write to")
 
     writer_df = df
-    if config.cluster_by and config.cluster_algo == "zorder":
-        from ..operators.zorder import zorder_layout
-
-        writer_df = zorder_layout(df, list(config.cluster_by))
-    elif config.cluster_by:
+    if config.cluster_by:
         one = one_partition_if_small(df, name)
         if one is df:  # not small: hash-partition on the keys
             one = df.repartition(*[df[c] for c in config.cluster_by])
@@ -149,24 +146,36 @@ def incremental_batch_load(
     schemas: dict[str, StructType],
     base_path: str,
     retention_days_cutoff: str | None = None,
-) -> dict[str, list[str]]:
+) -> tuple[dict[str, list[str]], list[tuple[str, str]]]:
     """Route daily dump files into date partitions (one overwrite per
-    (table, day) — idempotent), then sweep expired partitions."""
-    loaded: dict[str, list[str]] = {}
+    (table, day) — idempotent), then sweep expired partitions.
+
+    → ({table: loaded days}, [(file, reason)] skipped). A file with any
+    unparseable row is skipped whole, as
+    :func:`~blockchair_etl_spark.io.sources.load_with_pattern_routing`
+    does, so it never lands as a partition of NULL rows."""
+    routed: dict[str, list[tuple[str, str]]] = {}
     for f in files:
         parsed = parse_dump_filename(f)
-        if not parsed:
-            continue
-        _, data_type, yyyymmdd = parsed
-        if data_type not in schemas:
-            continue
-        df = read_tsv(spark, f, schema=schemas[data_type])
-        write_daily_partition(df, base_path, data_type, yyyymmdd)
-        loaded.setdefault(data_type, []).append(yyyymmdd)
+        if parsed and parsed[1] in schemas:
+            routed.setdefault(parsed[1], []).append((f, parsed[2]))
+    bad = _find_bad_files(
+        spark, {t: [f for f, _ in days] for t, days in routed.items()}, schemas
+    )
+    loaded: dict[str, list[str]] = {}
+    skipped: list[tuple[str, str]] = []
+    for data_type, days in routed.items():
+        for f, yyyymmdd in days:
+            if f in bad:
+                skipped.append((f, bad[f]))
+                continue
+            df = read_tsv(spark, f, schema=schemas[data_type])
+            write_daily_partition(df, base_path, data_type, yyyymmdd)
+            loaded.setdefault(data_type, []).append(yyyymmdd)
     if retention_days_cutoff:
         for table in loaded:
             retention_sweep(base_path, table, retention_days_cutoff)
-    return loaded
+    return loaded, skipped
 
 
 def read_partitioned(spark: SparkSession, base_path: str, table: str) -> DataFrame:

@@ -34,6 +34,10 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, functions as F
 
 SCALE = 1_000_000_000_000  # rank 1.0 in fixed-point
+# Edge-input size estimate from which pagerank_fixed_point persists the
+# vertex set: the point where one cached pass clearly beats
+# iterations+1 re-scans even with free cores.
+VERTEX_PERSIST_MIN_BYTES = 256 * 1024 * 1024
 
 
 def pagerank_fixed_point(
@@ -77,14 +81,11 @@ def pagerank_fixed_point(
     # re-derivation is a full edge-table scan + two shuffles. The
     # persist is therefore gated on the optimizer's size estimate of
     # the edge input (r18, verdict #2): local fixtures stay on the
-    # fast no-persist path, anything past the threshold (conf
-    # spark.blockchair.graph.vertexPersistMinBytes, default 256 MB —
-    # the point where one cached pass clearly beats iterations+1
-    # re-scans even with free cores) caches the narrow vertex set
-    # once. Size estimation is best-effort: if the JVM call fails the
-    # gate warns and stays off, which only ever costs recompute, never
-    # correctness (persist does not change results); a malformed
-    # threshold warns and keeps the 256 MB default.
+    # fast no-persist path, anything past VERTEX_PERSIST_MIN_BYTES
+    # caches the narrow vertex set once. Size estimation is
+    # best-effort: if the JVM call fails the gate warns and stays off,
+    # which only ever costs recompute, never correctness (persist does
+    # not change results).
     try:
         est_bytes = int(jvm_plan(edges, "optimizedPlan").stats().sizeInBytes())
         if est_bytes >= (1 << 63) - 1:
@@ -100,19 +101,7 @@ def pagerank_fixed_point(
             stacklevel=2,
         )
         est_bytes = 0
-    min_bytes = 256 * 1024 * 1024
-    raw = edges.sparkSession.conf.get(
-        "spark.blockchair.graph.vertexPersistMinBytes", str(min_bytes)
-    )
-    try:
-        min_bytes = int(raw)
-    except ValueError:
-        warnings.warn(
-            f"spark.blockchair.graph.vertexPersistMinBytes={raw!r} is not an "
-            f"integer; using the default {min_bytes} bytes",
-            stacklevel=2,
-        )
-    if est_bytes >= min_bytes:
+    if est_bytes >= VERTEX_PERSIST_MIN_BYTES:
         vertices = tracked_persist(vertices)
 
     deg = ed.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))

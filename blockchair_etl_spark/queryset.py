@@ -5993,22 +5993,120 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pr.orderBy(F.desc("rank_s"), F.asc("vertex")).limit(20)
 
 
-def _corpus_prep_v2_oracle() -> str:
+# ---------------------------------------------------------------------------
+# Corpus prep. v2, v3, v4 and v6 share one head, normalize -> per-row
+# gates -> exact dedup, written once below for the plan
+# (_corpus_prep_survivors) and once for the oracle (_sql_prep_head);
+# each entry supplies only its tail. v1 (line dedup -> packing) and v5
+# (BPE -> budget -> packing) share only the budget window CTEs.
+
+
+@dataclass(frozen=True)
+class _PrepGate:
+    """A per-row gate of the corpus-prep head beside the Gopher gate.
+
+    ``frame`` maps the normalized corpus to its passing (doc_id, *cols)
+    rows; ``ctes`` is the oracle's form, ending in relation ``rel``,
+    which kept joins as ``alias``. ``before_gopher`` places the plan's
+    join ahead of the Gopher gate's; the oracle always joins gate
+    first, then the extra gates in order."""
+
+    frame: Callable[[DataFrame], DataFrame]
+    ctes: str
+    rel: str
+    alias: str
+    cols: tuple[str, ...]
+    before_gopher: bool
+
+
+def _corpus_prep_survivors(
+    spark: SparkSession,
+    sf_dir: str,
+    carry: str,
+    gates: tuple[_PrepGate, ...] = (),
+    cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """normalize -> Gopher gate (+ ``gates``) -> exact dedup (min-id
+    survivor) over the documents table. -> the persisted survivors:
+    doc_id, norm_text, the ``carry`` column and each gate's columns, or
+    only ``cols`` when given.
+
+    The corpus arrives as one parquet split, so it is repartitioned
+    before the per-row text work, which would otherwise run in one
+    task. The Gopher gate's output is persisted: a bare
+    ``filter("keep")`` lets Catalyst substitute the gate expression
+    into the predicate and push it below the repartition into the file
+    scan, re-running the tokenizer per row on the single split. The
+    gates are all per-row predicates on the normalized text, so they
+    evaluate independently and intersect in one join round. kept and
+    the survivors each feed several branches, so both persist; without
+    that the normalize+gate prefix re-executes per branch.
+    """
+    from .caching import tracked_persist
+
+    par = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents").repartition(par)
+    normed = _text.normalize_text(docs).join(docs.select("doc_id", carry), "doc_id")
+    before = [g.frame(normed) for g in gates if g.before_gopher]
+    gated = tracked_persist(_text.gopher_quality_gate(normed, text_col="norm_text"))
+    after = [g.frame(normed) for g in gates if not g.before_gopher]
+    kept = normed
+    for passed in [*before, gated.filter("keep").select("doc_id"), *after]:
+        kept = kept.join(passed, "doc_id")
+    kept = tracked_persist(kept)
+    groups = _dedup.exact_duplicate_groups(kept, text_col="norm_text")
+    survivors = kept.join(groups.select(F.col("canonical_id").alias("doc_id")), "doc_id")
+    return tracked_persist(survivors.select(*cols) if cols else survivors)
+
+
+def _prep_budget(survivors: DataFrame) -> DataFrame:
+    """The best half of the survivors' tokens, ranked by n_chars."""
+    return _sampling.quality_budget_select(
+        survivors, score_col="n_chars", budget_den=2, text_col="norm_text"
+    )
+
+
+def _sql_norm_text() -> str:
+    """llmdata.text.normalize_text's norm_text as a DuckDB expression
+    over ``text``."""
     from .llmdata.text import ACCENT_DST, ACCENT_SRC
 
-    norm = (
+    return (
         "trim(regexp_replace(translate(lower(regexp_replace("
         "text, '[\\x00-\\x1f\\x7f-\\x9f]', ' ', 'g')), "
         f"'{ACCENT_SRC}', '{ACCENT_DST}'), "
         "'\\s+', ' ', 'g'))"
     )
+
+
+def _sql_prep_head(carry: str, gates: tuple[_PrepGate, ...] = ()) -> str:
+    """The oracle's corpus-prep head: CTEs norm, tk, each gate's CTEs,
+    st, gate, kept, grp and surv, ending with "surv AS (...),"."""
     toks_norm = _SQL_TOKS.replace("lower(text)", "lower(norm_text)")
-    return f"""
-WITH norm AS (
-  SELECT doc_id, source, {norm} AS norm_text FROM documents
+    gate_ctes = "".join(g.ctes + ",\n" for g in gates)
+    if gates:
+        scores = "".join(f", {g.alias}.{c}" for g in gates for c in g.cols)
+        joins = "\n       ".join(f"JOIN {g.rel} {g.alias} USING (doc_id)" for g in gates)
+        carried = "".join(f", k.{c}" for g in gates for c in g.cols)
+        kept = f"""kept AS (
+  SELECT n.*{scores}
+  FROM norm n JOIN gate USING (doc_id) {joins}
+)"""
+        surv = f"""surv AS (
+  SELECT k.doc_id, k.{carry}{carried}
+  FROM kept k JOIN grp ON k.doc_id = grp.canonical
+)"""
+    else:
+        kept = "kept AS (SELECT n.* FROM norm n JOIN gate USING (doc_id))"
+        surv = (
+            f"surv AS (SELECT k.doc_id, k.{carry} "
+            "FROM kept k JOIN grp ON k.doc_id = grp.canonical)"
+        )
+    return f"""WITH norm AS (
+  SELECT doc_id, {carry}, {_sql_norm_text()} AS norm_text FROM documents
 ),
 tk AS (SELECT doc_id, {toks_norm} AS toks FROM norm),
-st AS (
+{gate_ctes}st AS (
   SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS nd,
          list_max(list_transform(list_distinct(toks),
                   w -> len(list_filter(toks, x -> x = w)))) AS topc,
@@ -6029,13 +6127,99 @@ gate AS (
               THEN CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE) / len(grams)
               ELSE 0.0 END) > 0.08)
 ),
-kept AS (SELECT n.* FROM norm n JOIN gate USING (doc_id)),
+{kept},
 grp AS (
   SELECT md5(regexp_replace(lower(norm_text), '\\s+', ' ', 'g')) AS h,
          MIN(doc_id) AS canonical
   FROM kept GROUP BY 1
 ),
-surv AS (SELECT k.doc_id, k.source FROM kept k JOIN grp ON k.doc_id = grp.canonical),
+{surv},"""
+
+
+def _sql_budget_window(den: int, name: str = "c", extra: str = "") -> str:
+    """CTEs b (the token budget: 1/den of t's tokens) and ``name`` (t
+    plus cum_before, the tokens ranked ahead by score DESC, doc_id)."""
+    return f"""b AS (SELECT CAST(SUM(n_tokens) // {den} AS BIGINT) AS budget FROM t),
+{name} AS (
+  SELECT doc_id, score, n_tokens{extra},
+         CAST(COALESCE(SUM(n_tokens) OVER (
+              ORDER BY score DESC, doc_id ASC
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           AS BIGINT) AS cum_before
+  FROM t
+)"""
+
+
+def _sql_prep_budget(gates: tuple[_PrepGate, ...] = ()) -> str:
+    """_prep_budget's oracle: CTEs t, b and c over surv, carrying each
+    gate's columns."""
+    extra = "".join(f", {c}" for g in gates for c in g.cols)
+    scores = extra.replace(", ", ", s.")
+    return f"""t AS (
+  SELECT s.doc_id, s.n_chars AS score{scores},
+         CAST(len(tk.toks) AS BIGINT) AS n_tokens
+  FROM surv s JOIN tk USING (doc_id)
+),
+{_sql_budget_window(2, extra=extra)}"""
+
+
+@register(
+    "corpus_prep_v3_pipeline",
+    survey="LLM end-to-end (round-6 operator composition)",
+    desc="training-corpus prep v3 — the round-6 ops composed END-TO-END "
+    "in one plan: canonical normalization -> Gopher gate on the "
+    "normalized text -> exact dedup (min-id survivor) -> quality-"
+    "ranked TOKEN-BUDGET selection of the surviving corpus (best half "
+    "of surviving tokens, two-phase cumulative sum) -> deterministic "
+    "epoch shuffle of the selection into 4 training shards; every "
+    "stage is an already-verified operator — this entry checks the "
+    "composition, like corpus_prep_v2_pipeline does for round 5",
+    oracle=f"""
+{_sql_prep_head("n_chars")}
+{_sql_prep_budget()},
+sel AS (SELECT c.* FROM c, b WHERE c.cum_before < b.budget),
+h AS (
+  SELECT doc_id, md5(concat(CAST(doc_id AS VARCHAR), 'ep0')) AS hh FROM sel
+),
+sh AS (
+  SELECT doc_id, hh,
+         CAST(((instr('0123456789abcdef', substr(hh, 1, 1)) - 1) * 16
+               + (instr('0123456789abcdef', substr(hh, 2, 1)) - 1)) % 4
+           AS BIGINT) AS shard
+  FROM h
+)
+SELECT sel.doc_id, sel.score, sel.n_tokens, sel.cum_before, sh.shard,
+       CAST(ROW_NUMBER() OVER (PARTITION BY sh.shard ORDER BY sh.hh, sh.doc_id)
+            AS BIGINT) AS pos
+FROM sel JOIN sh USING (doc_id)
+""",
+)
+def corpus_prep_v3_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .caching import tracked_persist
+
+    survivors = _corpus_prep_survivors(spark, sf_dir, "n_chars")
+    selected = tracked_persist(_prep_budget(survivors))
+    shards = _sampling.shuffle_shards(selected, n_shards=4, salt="ep0")
+    return selected.join(shards, "doc_id").select(
+        "doc_id", "score", "n_tokens", "cum_before", "shard", "pos"
+    )
+
+
+@register(
+    "corpus_prep_v2_pipeline",
+    driver=False,  # r16 window-budget retirement step 1 — see decision note
+    survey="LLM end-to-end (round-5 operator composition)",
+    desc="training-corpus prep v2, the round-5 ops composed END-TO-END "
+    "in one plan: canonical normalization -> Gopher composite gate on "
+    "the normalized text -> exact dedup of normalized content "
+    "(min-id canonical survivor) -> temperature-balanced domain "
+    "mixture of the survivors (budget derived from the surviving "
+    "corpus itself, so the same docs replicate at any scale factor); "
+    "every stage is the already-verified operator — this entry checks "
+    "the composition, like corpus_prep_pipeline does for the round-4 "
+    "stages",
+    oracle=f"""
+{_sql_prep_head("source")}
 cnt AS (SELECT source, COUNT(*) AS n_d FROM surv GROUP BY source),
 w AS (
   SELECT source, n_d,
@@ -6067,180 +6251,15 @@ sized AS (
 )
 SELECT doc_id, source, unnest(generate_series(1, n_copies)) AS copy_id
 FROM sized
-"""
-
-
-def _corpus_prep_v3_oracle() -> str:
-    from .llmdata.text import ACCENT_DST, ACCENT_SRC
-
-    norm = (
-        "trim(regexp_replace(translate(lower(regexp_replace("
-        "text, '[\\x00-\\x1f\\x7f-\\x9f]', ' ', 'g')), "
-        f"'{ACCENT_SRC}', '{ACCENT_DST}'), "
-        "'\\s+', ' ', 'g'))"
-    )
-    toks_norm = _SQL_TOKS.replace("lower(text)", "lower(norm_text)")
-    return f"""
-WITH norm AS (
-  SELECT doc_id, n_chars, {norm} AS norm_text FROM documents
-),
-tk AS (SELECT doc_id, {toks_norm} AS toks FROM norm),
-st AS (
-  SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS nd,
-         list_max(list_transform(list_distinct(toks),
-                  w -> len(list_filter(toks, x -> x = w)))) AS topc,
-         list_transform(generate_series(1, len(toks) - 1),
-                        i -> toks[i] || ' ' || toks[i + 1]) AS grams,
-         len(list_filter(toks,
-             x -> list_contains(['the','and','of','to','in','is','a'], x))) AS n_stop
-  FROM tk
-),
-gate AS (
-  SELECT doc_id
-  FROM st
-  WHERE NOT (n < 25)
-    AND NOT ((CASE WHEN n > 0 THEN CAST(n_stop AS DOUBLE) / n ELSE 0.0 END) < 0.02)
-    AND NOT ((CASE WHEN n > 0 THEN CAST(n - nd AS DOUBLE) / n ELSE 0.0 END) > 0.6)
-    AND NOT ((CASE WHEN n > 0 THEN CAST(topc AS DOUBLE) / n ELSE 0.0 END) > 0.15)
-    AND NOT ((CASE WHEN len(grams) > 0
-              THEN CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE) / len(grams)
-              ELSE 0.0 END) > 0.08)
-),
-kept AS (SELECT n.* FROM norm n JOIN gate USING (doc_id)),
-grp AS (
-  SELECT md5(regexp_replace(lower(norm_text), '\\s+', ' ', 'g')) AS h,
-         MIN(doc_id) AS canonical
-  FROM kept GROUP BY 1
-),
-surv AS (SELECT k.doc_id, k.n_chars FROM kept k JOIN grp ON k.doc_id = grp.canonical),
-t AS (
-  SELECT s.doc_id, s.n_chars AS score,
-         CAST(len(tk.toks) AS BIGINT) AS n_tokens
-  FROM surv s JOIN tk USING (doc_id)
-),
-b AS (SELECT CAST(SUM(n_tokens) // 2 AS BIGINT) AS budget FROM t),
-c AS (
-  SELECT doc_id, score, n_tokens,
-         CAST(COALESCE(SUM(n_tokens) OVER (
-              ORDER BY score DESC, doc_id ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS BIGINT) AS cum_before
-  FROM t
-),
-sel AS (SELECT c.* FROM c, b WHERE c.cum_before < b.budget),
-h AS (
-  SELECT doc_id, md5(concat(CAST(doc_id AS VARCHAR), 'ep0')) AS hh FROM sel
-),
-sh AS (
-  SELECT doc_id, hh,
-         CAST(((instr('0123456789abcdef', substr(hh, 1, 1)) - 1) * 16
-               + (instr('0123456789abcdef', substr(hh, 2, 1)) - 1)) % 4
-           AS BIGINT) AS shard
-  FROM h
-)
-SELECT sel.doc_id, sel.score, sel.n_tokens, sel.cum_before, sh.shard,
-       CAST(ROW_NUMBER() OVER (PARTITION BY sh.shard ORDER BY sh.hh, sh.doc_id)
-            AS BIGINT) AS pos
-FROM sel JOIN sh USING (doc_id)
-"""
-
-
-@register(
-    "corpus_prep_v3_pipeline",
-    survey="LLM end-to-end (round-6 operator composition)",
-    desc="training-corpus prep v3 — the round-6 ops composed END-TO-END "
-    "in one plan: canonical normalization -> Gopher gate on the "
-    "normalized text -> exact dedup (min-id survivor) -> quality-"
-    "ranked TOKEN-BUDGET selection of the surviving corpus (best half "
-    "of surviving tokens, two-phase cumulative sum) -> deterministic "
-    "epoch shuffle of the selection into 4 training shards; every "
-    "stage is an already-verified operator — this entry checks the "
-    "composition, like corpus_prep_v2_pipeline does for round 5",
-    oracle=_corpus_prep_v3_oracle(),
-)
-def corpus_prep_v3_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .caching import tracked_persist
-    from .llmdata.dedup import exact_duplicate_groups
-    from .llmdata.sampling import quality_budget_select, shuffle_shards
-    from .llmdata.text import gopher_quality_gate, normalize_text
-
-    # same plan discipline as v2: repartition the single-split corpus
-    # before the heavy text stages, persist the gate output so the
-    # 'keep' filter can't be substituted+pushed into the serial scan,
-    # persist the stages that feed multiple branches
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").repartition(par)
-    normed = normalize_text(docs).join(docs.select("doc_id", "n_chars"), "doc_id")
-    gated = tracked_persist(gopher_quality_gate(normed, text_col="norm_text"))
-    kept = tracked_persist(
-        normed.join(gated.filter("keep").select("doc_id"), "doc_id")
-    )
-    groups = exact_duplicate_groups(kept, text_col="norm_text")
-    survivors = tracked_persist(
-        kept.join(groups.select(F.col("canonical_id").alias("doc_id")), "doc_id")
-    )
-    selected = tracked_persist(
-        quality_budget_select(
-            survivors, score_col="n_chars", budget_den=2, text_col="norm_text"
-        )
-    )
-    shards = shuffle_shards(selected, n_shards=4, salt="ep0")
-    return selected.join(shards, "doc_id").select(
-        "doc_id", "score", "n_tokens", "cum_before", "shard", "pos"
-    )
-
-
-@register(
-    "corpus_prep_v2_pipeline",
-    driver=False,  # r16 window-budget retirement step 1 — see decision note
-    survey="LLM end-to-end (round-5 operator composition)",
-    desc="training-corpus prep v2, the round-5 ops composed END-TO-END "
-    "in one plan: canonical normalization -> Gopher composite gate on "
-    "the normalized text -> exact dedup of normalized content "
-    "(min-id canonical survivor) -> temperature-balanced domain "
-    "mixture of the survivors (budget derived from the surviving "
-    "corpus itself, so the same docs replicate at any scale factor); "
-    "every stage is the already-verified operator — this entry checks "
-    "the composition, like corpus_prep_pipeline does for the round-4 "
-    "stages",
-    oracle=_corpus_prep_v2_oracle(),
+""",
 )
 def corpus_prep_v2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .caching import tracked_persist
-    from .llmdata.dedup import exact_duplicate_groups
-    from .llmdata.sampling import temperature_resample
-    from .llmdata.text import gopher_quality_gate, normalize_text
-
-    # Two plan hazards fixed here (r6, measured on the now-honest cold
-    # bench): (1) the corpus arrives as one parquet split, so without a
-    # repartition the heavy per-row text work runs in ONE task; (2) a
-    # bare `gate(...).filter("keep")` lets Catalyst substitute the full
-    # gate expression into the predicate and push it BELOW the
-    # repartition into the file scan — re-inlining the tokenizer ~29x
-    # per row AND serializing the whole gate onto the single input
-    # split (9.8s of the 10.7s cold pipeline). Persisting the gate
-    # output pins it as a relation boundary: the filter applies to the
-    # cached rows, and the gate evaluates once, post-repartition,
-    # across all cores.
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").repartition(par)
-    normed = normalize_text(docs).join(docs.select("doc_id", "source"), "doc_id")
-    gated = tracked_persist(gopher_quality_gate(normed, text_col="norm_text"))
-    # kept feeds two branches (dedup groups + join-back) and survivors
-    # feeds three (domain counts, remainder ranking, the count job in
-    # temperature_resample) — without persists the normalize+gate
-    # prefix re-executes per branch (measured 4x wall at sf0.1).
-    # tracked_persist → released after collection (caching.py), so
-    # repeated invocations in one session don't accumulate blocks.
-    kept = tracked_persist(
-        normed.join(gated.filter("keep").select("doc_id"), "doc_id")
+    survivors = _corpus_prep_survivors(
+        spark, sf_dir, "source", cols=("doc_id", "source")
     )
-    groups = exact_duplicate_groups(kept, text_col="norm_text")
-    survivors = tracked_persist(
-        kept.join(groups.select(F.col("canonical_id").alias("doc_id")), "doc_id")
-        .select("doc_id", "source")
+    return _sampling.temperature_resample(
+        survivors, domain_col="source", id_col="doc_id"
     )
-    return temperature_resample(survivors, domain_col="source", id_col="doc_id")
 
 
 @register(
@@ -6481,8 +6500,6 @@ FROM cum
 """,
 )
 def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .llmdata.text import line_dedup
-
     from .caching import tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
@@ -6490,7 +6507,7 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation (r6 verdict #2: a driver-side docs.count() here was one
     # extra full corpus scan per invocation; at 100 TB, a wasted pass)
     rel_df = docs.agg(F.expr("(count(1) + 19) div 20").alias("max_line_df"))
-    cleaned = line_dedup(docs, line_tokens=2, max_line_df=rel_df)
+    cleaned = _text.line_dedup(docs, line_tokens=2, max_line_df=rel_df)
     # quality feeds two branches (canonical-hash groups + the semi-join
     # back); without a persist the whole line_dedup subplan executes
     # twice per action
@@ -6621,14 +6638,7 @@ def mixture_domain_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_normalize_oracle() -> str:
-    from .llmdata.text import ACCENT_DST, ACCENT_SRC
-
-    norm = (
-        "trim(regexp_replace(translate(lower(regexp_replace("
-        "text, '[\\x00-\\x1f\\x7f-\\x9f]', ' ', 'g')), "
-        f"'{ACCENT_SRC}', '{ACCENT_DST}'), "
-        "'\\s+', ' ', 'g'))"
-    )
+    norm = _sql_norm_text()
     return f"""
 SELECT doc_id,
        {norm} AS norm_text,
@@ -7357,15 +7367,7 @@ WITH t AS (
          CAST(len({_SQL_TOKS}) AS BIGINT) AS n_tokens
   FROM documents
 ),
-b AS (SELECT CAST(SUM(n_tokens) // 5 AS BIGINT) AS budget FROM t),
-c AS (
-  SELECT doc_id, score, n_tokens,
-         CAST(COALESCE(SUM(n_tokens) OVER (
-              ORDER BY score DESC, doc_id ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS BIGINT) AS cum_before
-  FROM t
-)
+{_sql_budget_window(5)}
 SELECT c.doc_id, c.score, c.n_tokens, c.cum_before
 FROM c, b WHERE c.cum_before < b.budget
 """,
@@ -8555,24 +8557,33 @@ def joint_dedup_survivors(docs: DataFrame, width: int, height: int) -> DataFrame
     return _dedup.survivors_from_edges(docs, edges, "doc_id")
 
 
-def _corpus_prep_v4_oracle() -> str:
-    from .llmdata.text import ACCENT_DST, ACCENT_SRC
-
-    norm = (
-        "trim(regexp_replace(translate(lower(regexp_replace("
-        "text, '[\\x00-\\x1f\\x7f-\\x9f]', ' ', 'g')), "
-        f"'{ACCENT_SRC}', '{ACCENT_DST}'), "
-        "'\\s+', ' ', 'g'))"
+def _classifier_passed(normed: DataFrame) -> DataFrame:
+    weights = _classify.hashed_weights(
+        normed.sparkSession, n_features=4096, scale=1024, seed="w1"
     )
-    toks_norm = _SQL_TOKS.replace("lower(text)", "lower(norm_text)")
-    feat16 = _sql_md5_16bits("md5(token)")
-    w16 = _sql_md5_16bits("md5(concat('w1|', CAST(id AS STRING)))")
-    return f"""
-WITH norm AS (
-  SELECT doc_id, n_chars, {norm} AS norm_text FROM documents
-),
-tk AS (SELECT doc_id, {toks_norm} AS toks FROM norm),
-occ AS (SELECT doc_id, unnest(toks) AS token FROM tk),
+    clf = _classify.linear_classifier_scores(
+        normed, weights, n_features=4096, bias_q=0, text_col="norm_text"
+    )
+    return clf.filter(F.col("logit_q") >= 0).select("doc_id", "logit_q")
+
+
+def _lm_passed(normed: DataFrame) -> DataFrame:
+    from .llmdata.unigram import unigram_doc_qtotals
+
+    # the shared unigram_doc_qtotals core (distinct-word DP against the
+    # frozen pieces artifact, integer per-doc sums), thresholded in
+    # quantized mean-log space
+    lm = unigram_doc_qtotals(normed, _UNIGRAM_GATE_PIECES, text_col="norm_text")
+    return lm.filter(
+        F.col("q_total") >= F.lit(_UNIGRAM_GATE_MIN_QLOGP) * F.col("n_words")
+    ).select("doc_id", "q_total", "n_words")
+
+
+# The hashed linear classifier: keep logit_q >= 0. Its oracle's occ
+# token stream is also the LM gate's input.
+_CLASSIFIER_GATE = _PrepGate(
+    frame=_classifier_passed,
+    ctes="""occ AS (SELECT doc_id, unnest(toks) AS token FROM tk),
 featid AS (
   SELECT token, CAST(({feat16} % 4096) AS BIGINT) AS feature
   FROM (SELECT DISTINCT token FROM occ)
@@ -8589,58 +8600,39 @@ clf AS (
   LEFT JOIN wts w ON o.feature = w.feature
   GROUP BY o.doc_id
 ),
-mkept AS (SELECT doc_id, logit_q FROM clf WHERE logit_q >= 0),
-st AS (
-  SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS nd,
-         list_max(list_transform(list_distinct(toks),
-                  w -> len(list_filter(toks, x -> x = w)))) AS topc,
-         list_transform(generate_series(1, len(toks) - 1),
-                        i -> toks[i] || ' ' || toks[i + 1]) AS grams,
-         len(list_filter(toks,
-             x -> list_contains(['the','and','of','to','in','is','a'], x))) AS n_stop
-  FROM tk
-),
-gate AS (
-  SELECT doc_id
-  FROM st
-  WHERE NOT (n < 25)
-    AND NOT ((CASE WHEN n > 0 THEN CAST(n_stop AS DOUBLE) / n ELSE 0.0 END) < 0.02)
-    AND NOT ((CASE WHEN n > 0 THEN CAST(n - nd AS DOUBLE) / n ELSE 0.0 END) > 0.6)
-    AND NOT ((CASE WHEN n > 0 THEN CAST(topc AS DOUBLE) / n ELSE 0.0 END) > 0.15)
-    AND NOT ((CASE WHEN len(grams) > 0
-              THEN CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE) / len(grams)
-              ELSE 0.0 END) > 0.08)
-),
-kept AS (
-  SELECT n.*, mk.logit_q
-  FROM norm n JOIN gate USING (doc_id) JOIN mkept mk USING (doc_id)
-),
-grp AS (
-  SELECT md5(regexp_replace(lower(norm_text), '\\s+', ' ', 'g')) AS h,
-         MIN(doc_id) AS canonical
-  FROM kept GROUP BY 1
-),
-surv AS (
-  SELECT k.doc_id, k.n_chars, k.logit_q
-  FROM kept k JOIN grp ON k.doc_id = grp.canonical
-),
-t AS (
-  SELECT s.doc_id, s.n_chars AS score, s.logit_q,
-         CAST(len(tk.toks) AS BIGINT) AS n_tokens
-  FROM surv s JOIN tk USING (doc_id)
-),
-b AS (SELECT CAST(SUM(n_tokens) // 2 AS BIGINT) AS budget FROM t),
-c AS (
-  SELECT doc_id, score, n_tokens, logit_q,
-         CAST(COALESCE(SUM(n_tokens) OVER (
-              ORDER BY score DESC, doc_id ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS BIGINT) AS cum_before
-  FROM t
+mkept AS (SELECT doc_id, logit_q FROM clf WHERE logit_q >= 0)""".format(
+        feat16=_sql_md5_16bits("md5(token)"),
+        w16=_sql_md5_16bits("md5(concat('w1|', CAST(id AS STRING)))"),
+    ),
+    rel="mkept",
+    alias="mk",
+    cols=("logit_q",),
+    before_gopher=True,
 )
-SELECT c.doc_id, c.score, c.n_tokens, c.cum_before, c.logit_q
-FROM c, b WHERE c.cum_before < b.budget
-"""
+
+# The CCNet unigram-LM gate: quantized mean word log-prob >= -14. The
+# oracle joins the quality_unigram_ppl_gate constant (word, q_logp)
+# relation against the classifier's occ token stream and sums integers
+# per document.
+_LM_GATE = _PrepGate(
+    frame=_lm_passed,
+    ctes="""lmtab(word, q_logp) AS (VALUES {vals}),
+lmk AS (
+  SELECT doc_id,
+         CAST(COUNT(*) AS BIGINT) AS n_words,
+         CAST(SUM(l.q_logp) AS BIGINT) AS q_total
+  FROM occ JOIN lmtab l ON occ.token = l.word
+  GROUP BY doc_id
+  HAVING CAST(SUM(l.q_logp) AS BIGINT) >= {qmin} * CAST(COUNT(*) AS BIGINT)
+)""".format(
+        vals=", ".join(f"('{w}', {q})" for w, q in _UNIGRAM_GATE_QLOGP),
+        qmin=_UNIGRAM_GATE_MIN_QLOGP,
+    ),
+    rel="lmk",
+    alias="lk",
+    cols=("q_total", "n_words"),
+    before_gopher=False,
+)
 
 
 @register(
@@ -8655,98 +8647,20 @@ FROM c, b WHERE c.cum_before < b.budget
     "dedup (min-id survivor) -> quality-ranked token-budget selection "
     "(best half of surviving tokens); survivors carry their logit so "
     "the output exposes the model scores the selection ran behind",
-    oracle=_corpus_prep_v4_oracle(),
+    oracle=f"""
+{_sql_prep_head("n_chars", (_CLASSIFIER_GATE,))}
+{_sql_prep_budget((_CLASSIFIER_GATE,))}
+SELECT c.doc_id, c.score, c.n_tokens, c.cum_before, c.logit_q
+FROM c, b WHERE c.cum_before < b.budget
+""",
 )
 def corpus_prep_v4_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .caching import tracked_persist
-    from .llmdata.dedup import exact_duplicate_groups
-    from .llmdata.sampling import quality_budget_select
-    from .llmdata.text import gopher_quality_gate, normalize_text
-
-    # same plan discipline as v2/v3 (see corpus_prep_v2_pipeline): the
-    # single-split corpus repartitions before the heavy text stages and
-    # the gate output persists so its 'keep' filter can't be
-    # substituted+pushed into the serial scan. The classifier and the
-    # gate are BOTH per-row predicates on the normalized text, so they
-    # evaluate independently over the full corpus and intersect in one
-    # join round — a persisted model_kept stage between them (the first
-    # v4 shape) re-materialized the full text a second time and cost
-    # +2.5 s isolated for zero semantic difference (r9 A/B in bench.py)
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").repartition(par)
-    normed = normalize_text(docs).join(docs.select("doc_id", "n_chars"), "doc_id")
-    weights = _classify.hashed_weights(spark, n_features=4096, scale=1024, seed="w1")
-    clf = _classify.linear_classifier_scores(
-        normed, weights, n_features=4096, bias_q=0, text_col="norm_text"
+    survivors = _corpus_prep_survivors(spark, sf_dir, "n_chars", (_CLASSIFIER_GATE,))
+    return (
+        _prep_budget(survivors)
+        .join(survivors.select("doc_id", "logit_q"), "doc_id")
+        .select("doc_id", "score", "n_tokens", "cum_before", "logit_q")
     )
-    gated = tracked_persist(gopher_quality_gate(normed, text_col="norm_text"))
-    kept = tracked_persist(
-        normed.join(
-            clf.filter(F.col("logit_q") >= 0).select("doc_id", "logit_q"), "doc_id"
-        ).join(gated.filter("keep").select("doc_id"), "doc_id")
-    )
-    groups = exact_duplicate_groups(kept, text_col="norm_text")
-    survivors = tracked_persist(
-        kept.join(groups.select(F.col("canonical_id").alias("doc_id")), "doc_id")
-    )
-    selected = quality_budget_select(
-        survivors, score_col="n_chars", budget_den=2, text_col="norm_text"
-    )
-    return selected.join(
-        survivors.select("doc_id", "logit_q"), "doc_id"
-    ).select("doc_id", "score", "n_tokens", "cum_before", "logit_q")
-
-
-def _corpus_prep_v5_oracle() -> str:
-    """v5 oracle: the BPE-apply encoding CTE (per-doc LEARNED-token
-    counts — the same delimiter-safe replace chain as the
-    tokenizer_bpe_apply oracle, generated from the same
-    _BPE_DEMO_MERGES constant so the two entries cannot drift)
-    composed with the corpus_token_budget window and the
-    pack_split_straddlers pack-assignment arithmetic."""
-    enc = _sql_bpe_enc_expr(_BPE_DEMO_MERGES)
-    return f"""
-WITH ws AS (SELECT doc_id, {_SQL_TOKS} AS w FROM documents),
-occ AS (SELECT doc_id, unnest(w) AS word FROM ws),
-encw AS (
-  SELECT word,
-         CAST(len(string_split(substr(e, 2, length(e) - 2), '^|')) AS BIGINT) AS n
-  FROM (SELECT word, {enc} AS e
-        FROM (SELECT DISTINCT word FROM occ))
-),
-cnt AS (
-  SELECT o.doc_id, CAST(SUM(e.n) AS BIGINT) AS n_tokens
-  FROM occ o JOIN encw e USING (word) GROUP BY 1
-),
-t AS (
-  SELECT d.doc_id, d.n_chars AS score,
-         CAST(COALESCE(c.n_tokens, 0) AS BIGINT) AS n_tokens
-  FROM documents d LEFT JOIN cnt c USING (doc_id)
-),
-b AS (SELECT CAST(SUM(n_tokens) // 5 AS BIGINT) AS budget FROM t),
-cum AS (
-  SELECT doc_id, score, n_tokens,
-         CAST(COALESCE(SUM(n_tokens) OVER (
-              ORDER BY score DESC, doc_id ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS BIGINT) AS cum_before
-  FROM t
-),
-sel AS (SELECT cum.* FROM cum, b WHERE cum.cum_before < b.budget),
-p AS (
-  SELECT doc_id, score, n_tokens, cum_before,
-         CAST(doc_id % 8 AS BIGINT) AS shard,
-         CAST(COALESCE(SUM(n_tokens) OVER (
-              PARTITION BY doc_id % 8 ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS BIGINT) AS pcum
-  FROM sel
-)
-SELECT doc_id, score, n_tokens, cum_before, shard,
-       CAST(pcum // 2048 AS BIGINT) AS pack_id,
-       CAST(pcum % 2048 AS BIGINT) AS pack_offset
-FROM p
-"""
 
 
 @register(
@@ -8763,12 +8677,43 @@ FROM p
     "shards. The oracle composes the tokenizer_bpe_apply replace-chain "
     "CTE (same merge-list constant) with the corpus_token_budget "
     "window and the packing arithmetic",
-    oracle=_corpus_prep_v5_oracle(),
+    oracle=f"""
+WITH ws AS (SELECT doc_id, {_SQL_TOKS} AS w FROM documents),
+occ AS (SELECT doc_id, unnest(w) AS word FROM ws),
+encw AS (
+  SELECT word,
+         CAST(len(string_split(substr(e, 2, length(e) - 2), '^|')) AS BIGINT) AS n
+  FROM (SELECT word, {_sql_bpe_enc_expr(_BPE_DEMO_MERGES)} AS e
+        FROM (SELECT DISTINCT word FROM occ))
+),
+cnt AS (
+  SELECT o.doc_id, CAST(SUM(e.n) AS BIGINT) AS n_tokens
+  FROM occ o JOIN encw e USING (word) GROUP BY 1
+),
+t AS (
+  SELECT d.doc_id, d.n_chars AS score,
+         CAST(COALESCE(c.n_tokens, 0) AS BIGINT) AS n_tokens
+  FROM documents d LEFT JOIN cnt c USING (doc_id)
+),
+{_sql_budget_window(5, "cum")},
+sel AS (SELECT cum.* FROM cum, b WHERE cum.cum_before < b.budget),
+p AS (
+  SELECT doc_id, score, n_tokens, cum_before,
+         CAST(doc_id % 8 AS BIGINT) AS shard,
+         CAST(COALESCE(SUM(n_tokens) OVER (
+              PARTITION BY doc_id % 8 ORDER BY doc_id
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           AS BIGINT) AS pcum
+  FROM sel
+)
+SELECT doc_id, score, n_tokens, cum_before, shard,
+       CAST(pcum // 2048 AS BIGINT) AS pack_id,
+       CAST(pcum % 2048 AS BIGINT) AS pack_offset
+FROM p
+""",
 )
 def corpus_prep_v5_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .caching import tracked_persist
-    from .llmdata.packing import assign_packs
-    from .llmdata.sampling import quality_budget_select
     from .llmdata.tokenizer import bpe_apply
 
     docs = load_table(spark, sf_dir, "documents")
@@ -8778,124 +8723,18 @@ def corpus_prep_v5_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.select("doc_id", "n_chars").join(tok, "doc_id")
     # selected feeds both the pack assignment and the score join-back
     selected = tracked_persist(
-        quality_budget_select(
+        _sampling.quality_budget_select(
             scored, score_col="n_chars", budget_den=5, n_tokens_col="n_tokens"
         )
     )
-    packed = assign_packs(selected, budget=2048, n_shards=8, n_tokens_col="n_tokens")
+    packed = _packing.assign_packs(
+        selected, budget=2048, n_shards=8, n_tokens_col="n_tokens"
+    )
     return packed.join(
         selected.select("doc_id", "score", "cum_before"), "doc_id"
     ).select(
         "doc_id", "score", "n_tokens", "cum_before", "shard", "pack_id", "pack_offset"
     )
-
-
-def _corpus_prep_v6_oracle() -> str:
-    """v6 oracle: the v4 CTE chain (normalize -> classifier + Gopher
-    gates -> exact dedup -> budget) with the CCNet LM gate as a third
-    per-row predicate — the quality_unigram_ppl_gate constant (word,
-    q_logp) relation joined against the SAME occ token stream the
-    classifier featurizes, integer per-doc sums, quantized mean-log
-    threshold, and the survivors' mean_logp exposed by one final IEEE
-    division (no engine-variant exp, the bigram_fluency idiom)."""
-    from .llmdata.text import ACCENT_DST, ACCENT_SRC
-
-    norm = (
-        "trim(regexp_replace(translate(lower(regexp_replace("
-        "text, '[\\x00-\\x1f\\x7f-\\x9f]', ' ', 'g')), "
-        f"'{ACCENT_SRC}', '{ACCENT_DST}'), "
-        "'\\s+', ' ', 'g'))"
-    )
-    toks_norm = _SQL_TOKS.replace("lower(text)", "lower(norm_text)")
-    feat16 = _sql_md5_16bits("md5(token)")
-    w16 = _sql_md5_16bits("md5(concat('w1|', CAST(id AS STRING)))")
-    lm_vals = ", ".join(f"('{w}', {q})" for w, q in _UNIGRAM_GATE_QLOGP)
-    return f"""
-WITH norm AS (
-  SELECT doc_id, n_chars, {norm} AS norm_text FROM documents
-),
-tk AS (SELECT doc_id, {toks_norm} AS toks FROM norm),
-occ AS (SELECT doc_id, unnest(toks) AS token FROM tk),
-featid AS (
-  SELECT token, CAST(({feat16} % 4096) AS BIGINT) AS feature
-  FROM (SELECT DISTINCT token FROM occ)
-),
-wts AS (
-  SELECT CAST(id AS BIGINT) AS feature,
-         CAST(({w16} % 2049) - 1024 AS BIGINT) AS w_q
-  FROM range(4096) t(id)
-),
-clf AS (
-  SELECT o.doc_id,
-         CAST(COALESCE(SUM(w.w_q), 0) AS BIGINT) AS logit_q
-  FROM (SELECT occ.doc_id, f.feature FROM occ JOIN featid f USING (token)) o
-  LEFT JOIN wts w ON o.feature = w.feature
-  GROUP BY o.doc_id
-),
-mkept AS (SELECT doc_id, logit_q FROM clf WHERE logit_q >= 0),
-lmtab(word, q_logp) AS (VALUES {lm_vals}),
-lmk AS (
-  SELECT doc_id,
-         CAST(COUNT(*) AS BIGINT) AS n_words,
-         CAST(SUM(l.q_logp) AS BIGINT) AS q_total
-  FROM occ JOIN lmtab l ON occ.token = l.word
-  GROUP BY doc_id
-  HAVING CAST(SUM(l.q_logp) AS BIGINT) >= {_UNIGRAM_GATE_MIN_QLOGP} * CAST(COUNT(*) AS BIGINT)
-),
-st AS (
-  SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS nd,
-         list_max(list_transform(list_distinct(toks),
-                  w -> len(list_filter(toks, x -> x = w)))) AS topc,
-         list_transform(generate_series(1, len(toks) - 1),
-                        i -> toks[i] || ' ' || toks[i + 1]) AS grams,
-         len(list_filter(toks,
-             x -> list_contains(['the','and','of','to','in','is','a'], x))) AS n_stop
-  FROM tk
-),
-gate AS (
-  SELECT doc_id
-  FROM st
-  WHERE NOT (n < 25)
-    AND NOT ((CASE WHEN n > 0 THEN CAST(n_stop AS DOUBLE) / n ELSE 0.0 END) < 0.02)
-    AND NOT ((CASE WHEN n > 0 THEN CAST(n - nd AS DOUBLE) / n ELSE 0.0 END) > 0.6)
-    AND NOT ((CASE WHEN n > 0 THEN CAST(topc AS DOUBLE) / n ELSE 0.0 END) > 0.15)
-    AND NOT ((CASE WHEN len(grams) > 0
-              THEN CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE) / len(grams)
-              ELSE 0.0 END) > 0.08)
-),
-kept AS (
-  SELECT n.*, mk.logit_q, lk.q_total, lk.n_words
-  FROM norm n JOIN gate USING (doc_id) JOIN mkept mk USING (doc_id)
-       JOIN lmk lk USING (doc_id)
-),
-grp AS (
-  SELECT md5(regexp_replace(lower(norm_text), '\\s+', ' ', 'g')) AS h,
-         MIN(doc_id) AS canonical
-  FROM kept GROUP BY 1
-),
-surv AS (
-  SELECT k.doc_id, k.n_chars, k.logit_q, k.q_total, k.n_words
-  FROM kept k JOIN grp ON k.doc_id = grp.canonical
-),
-t AS (
-  SELECT s.doc_id, s.n_chars AS score, s.logit_q, s.q_total, s.n_words,
-         CAST(len(tk.toks) AS BIGINT) AS n_tokens
-  FROM surv s JOIN tk USING (doc_id)
-),
-b AS (SELECT CAST(SUM(n_tokens) // 2 AS BIGINT) AS budget FROM t),
-c AS (
-  SELECT doc_id, score, n_tokens, logit_q, q_total, n_words,
-         CAST(COALESCE(SUM(n_tokens) OVER (
-              ORDER BY score DESC, doc_id ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS BIGINT) AS cum_before
-  FROM t
-)
-SELECT c.doc_id, c.score, c.n_tokens, c.cum_before, c.logit_q,
-       CAST(c.q_total AS DOUBLE) / CAST(c.n_words * 1048576 AS DOUBLE)
-         AS mean_logp
-FROM c, b WHERE c.cum_before < b.budget
-"""
 
 
 @register(
@@ -8912,48 +8751,22 @@ FROM c, b WHERE c.cum_before < b.budget
     "frozen quality_unigram_ppl_gate pieces artifact and fixture-"
     "derived oracle constants, drift-gated by "
     "test_gate_entry_constants_match_dp)",
-    oracle=_corpus_prep_v6_oracle(),
+    oracle=f"""
+{_sql_prep_head("n_chars", (_CLASSIFIER_GATE, _LM_GATE))}
+{_sql_prep_budget((_CLASSIFIER_GATE, _LM_GATE))}
+SELECT c.doc_id, c.score, c.n_tokens, c.cum_before, c.logit_q,
+       CAST(c.q_total AS DOUBLE) / CAST(c.n_words * 1048576 AS DOUBLE)
+         AS mean_logp
+FROM c, b WHERE c.cum_before < b.budget
+""",
 )
 def corpus_prep_v6_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .caching import tracked_persist
-    from .llmdata.dedup import exact_duplicate_groups
-    from .llmdata.sampling import quality_budget_select
-    from .llmdata.text import gopher_quality_gate, normalize_text
-    from .llmdata.unigram import unigram_doc_qtotals
-
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").repartition(par)
-    normed = normalize_text(docs).join(docs.select("doc_id", "n_chars"), "doc_id")
-    weights = _classify.hashed_weights(spark, n_features=4096, scale=1024, seed="w1")
-    clf = _classify.linear_classifier_scores(
-        normed, weights, n_features=4096, bias_q=0, text_col="norm_text"
+    survivors = _corpus_prep_survivors(
+        spark, sf_dir, "n_chars", (_CLASSIFIER_GATE, _LM_GATE)
     )
-    gated = tracked_persist(gopher_quality_gate(normed, text_col="norm_text"))
-    # the LM gate: the shared unigram_doc_qtotals core (distinct-word
-    # DP against the frozen pieces artifact, integer per-doc sums),
-    # threshold in quantized mean-log space — per-row like the
-    # classifier/Gopher branches, intersects with them
-    lm = unigram_doc_qtotals(
-        normed, _UNIGRAM_GATE_PIECES, text_col="norm_text"
-    )
-    lm_kept = lm.filter(
-        F.col("q_total") >= F.lit(_UNIGRAM_GATE_MIN_QLOGP) * F.col("n_words")
-    )
-    kept = tracked_persist(
-        normed.join(
-            clf.filter(F.col("logit_q") >= 0).select("doc_id", "logit_q"), "doc_id"
-        )
-        .join(gated.filter("keep").select("doc_id"), "doc_id")
-        .join(lm_kept.select("doc_id", "q_total", "n_words"), "doc_id")
-    )
-    groups = exact_duplicate_groups(kept, text_col="norm_text")
-    survivors = tracked_persist(
-        kept.join(groups.select(F.col("canonical_id").alias("doc_id")), "doc_id")
-    )
-    selected = quality_budget_select(
-        survivors, score_col="n_chars", budget_den=2, text_col="norm_text"
-    )
-    return selected.join(
+    # mean_logp is one final IEEE division (no engine-variant exp, the
+    # bigram_fluency idiom)
+    return _prep_budget(survivors).join(
         survivors.select("doc_id", "logit_q", "q_total", "n_words"), "doc_id"
     ).select(
         "doc_id",
@@ -8966,6 +8779,7 @@ def corpus_prep_v6_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n_words") * F.lit(1048576)).cast("double")
         ).alias("mean_logp"),
     )
+
 
 
 def _lsh_recall_topk_cte(p: int) -> str:
@@ -9061,78 +8875,22 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # permanently rotated out. `_DRIVER_VERIFIED_FALLBACK` (the r1-r4 keys) is
 # used only if the JSON files are unreadable.
 #
-# Window-budget decision (r12 verdict stretch #8, EXECUTED r14): at
-# 166 entries and a 50-slot window, steady-state staleness was ~3.3
-# rounds; r13 grew the registry to 170 and the r14 verdict called the
-# documented trigger (~180 entries or any cohort >4 rounds stale) one
-# normal round away. ACTION TAKEN (r14): the four instrumentation
-# twins whose oracles restate another entry's CTE stack
-# (dedup_minhash_accuracy / dedup_simhash_accuracy / ann_ivfpq_recall /
-# ann_lsh_recall) are retired to pytest-only via `driver=False` —
-# they stay in QUERIES, so tests/test_oracle_parity.py still
-# hash-checks each against its full DuckDB oracle every pytest run
-# (the distinct approximation-drift failure mode they monitor is NOT
-# lost, it moves from the driver gate to the pytest gate), but they no
-# longer consume driver-window slots. Their operator rows
-# (dedup_minhash_lsh, dedup_simhash*, ann_ivfpq_topk, ann_lsh_topk)
-# keep the machinery driver-verified. Net: driver surface back to
-# ~166 + r14 additions; revisit again at ~180 DRIVER-VISIBLE entries.
-#
-# r15 PLAN (r14 verdict #5 — name the next cohort BEFORE the trigger
-# binds; COUNT CORRECTED r16: r15 added FIVE driver-visible entries —
-# dedup_minhash_lsh_capped, text_winnowing_fingerprints,
-# dedup_winnowing_pairs, multimodal_crossmodal_knn,
-# sketch_cms_grouped_topk — landing at 174, not the 170 this note
-# originally claimed, putting the ~180 trigger ONE round out). When
-# the ~180 trigger binds (or any cohort ages past 4 rounds), retire in
-# this order, same driver=False mechanism (entries stay in QUERIES;
-# test_oracle_parity keeps hash-checking them):
-#   1. corpus_prep_pipeline (v1) and corpus_prep_v2_pipeline — their
-#      stage coverage is a strict subset of v3+v6 (normalize → gates →
-#      exact-dedup → budget chain); keep corpus_prep_v3_pipeline as
-#      the early-version regression anchor (it is also the
-#      long-standing scaling-family member) and v4/v5/v6 for their
-#      distinct compositions (classifier join / BPE budget-packing /
-#      LM gate).
-#
-# r16 ACTION (r15 verdict #3 — executed): step 1 above is DONE —
-# corpus_prep_pipeline (v1) and corpus_prep_v2_pipeline flipped to
-# driver=False (both stay hash-checked by test_oracle_parity every
-# pytest run; every STAGE they compose keeps its own driver row:
-# text_line_dedup, text_quality/gopher gates, dedup_exact,
-# pack_sequences, text_normalize, sample_temperature_mixture — and
-# v3–v6 keep composition coverage driver-visible). Net driver-visible
-# surface: 174 − 2 retired + 4 r16 additions (dedup_simhash_pairs_
-# capped, sketch_cms_grouped_served, sketch_hll_distinct,
-# sketch_kmv_intersection) = 176; steady-state staleness
-# ceil(176/50) = 3.6 rounds, inside the ≤4 bound, but the ~180
-# trigger is now ONE normal round out — r17 should either hold
-# additions ≤2 or execute retirement step 2 (embedding_quantize_int8's
-# error-audit row to pytest-only) per the documented order below.
-#
-# r17 ACTION: held additions to TWO driver-visible entries —
-# sketch_kmv_difference (a-not-b, completing the flat Theta-sketch
-# algebra: union / intersection / difference / jaccard) and
-# sketch_kmv_grouped_algebra (the per-dimension form: one
-# O(groups × k) pass serving all the set reads per group). Net
-# driver-visible surface: 176 + 2 = 178, at the documented ≤2 bound
-# and still below the ~180 trigger; steady-state staleness
-# ceil(178/50) = 3.6 rounds, inside the ≤4 bound. The 26-entry r13
-# cohort leads the r17 window automatically under the oldest-first
-# rotation. r18 MUST either hold additions ≤1 or execute retirement
-# step 2 (embedding_quantize_int8 → pytest-only, order below) — the
-# trigger is now at most one normal round out.
-#   2. embedding_quantize_int8's companion ERROR-AUDIT columns are
-#      instrumentation riding an operator row — if a slot is still
-#      needed, split mentality applies: the operator (quantize) is
-#      covered by ann_pq_topk's fixed-point path, so the row can go
-#      pytest-only whole.
-#   3. dedup_embedding_multiprobe — the recall-lever twin of
-#      dedup_embedding_lsh_blocked (same blocking machinery, rotated
-#      seeds); the machinery keeps a driver row via the blocked form.
-# Rationale for order: restated-CTE redundancy first (the r14
-# precedent), instrumentation second, recall-lever twins last — each
-# step keeps at least one driver-green row per operator family.
+# Window-budget rule: steady-state staleness is ceil(N/50) rounds for
+# N driver-visible entries. When N reaches ~180, or any cohort goes
+# more than 4 rounds without a driver check, retire entries to
+# pytest-only with driver=False: they stay in QUERIES, and
+# tests/test_oracle_parity.py keeps hash-checking each against its
+# oracle. Retirement order:
+#   1. entries whose oracle restates another entry's CTE stack (done:
+#      dedup_minhash_accuracy, dedup_simhash_accuracy, ann_ivfpq_recall,
+#      ann_lsh_recall, corpus_prep_pipeline, corpus_prep_v2_pipeline);
+#   2. embedding_quantize_int8, an error-audit row whose operator
+#      ann_pq_topk covers;
+#   3. dedup_embedding_multiprobe, the recall-lever twin of
+#      dedup_embedding_lsh_blocked.
+# Restated-CTE redundancy goes first, instrumentation second and
+# recall-lever twins last, so each step keeps at least one driver-green
+# row per operator family.
 # ---------------------------------------------------------------------------
 
 _DRIVER_VERIFIED_FALLBACK = frozenset({

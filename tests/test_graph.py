@@ -4,6 +4,7 @@ budget degradation."""
 import pytest
 from pyspark.sql import functions as F
 
+from blockchair_etl_spark.query import graph
 from blockchair_etl_spark.query.graph import SCALE, pagerank_fixed_point
 from blockchair_etl_spark.query.trace import (
     TraceBudgetExceeded,
@@ -23,7 +24,7 @@ def test_pagerank_star_center_wins(spark):
     assert leaves[0] == SCALE * 15 // 100
 
 
-def test_pagerank_vertex_persist_gate(spark, tmp_path):
+def test_pagerank_vertex_persist_gate(spark, tmp_path, monkeypatch):
     """r18: the vertex-set persist is size-gated — local-scale inputs
     stay on the no-persist fast path (no extra InMemoryTableScan for
     the vertex relation), forcing the threshold down flips the persist
@@ -37,7 +38,6 @@ def test_pagerank_vertex_persist_gate(spark, tmp_path):
         [(i, (i * 7 + 3) % 20) for i in range(40)], ["src", "dst"]
     ).write.mode("overwrite").parquet(str(tmp_path / "edges"))
     edges = spark.read.parquet(str(tmp_path / "edges"))
-    key = "spark.blockchair.graph.vertexPersistMinBytes"
 
     def run():
         df = pagerank_fixed_point(edges, iterations=3)
@@ -47,32 +47,12 @@ def test_pagerank_vertex_persist_gate(spark, tmp_path):
         return rows, plan.count("InMemoryTableScan")
 
     default_rows, default_inmem = run()
-    spark.conf.set(key, "1")
-    try:
-        gated_rows, gated_inmem = run()
-    finally:
-        spark.conf.unset(key)
+    monkeypatch.setattr(graph, "VERTEX_PERSIST_MIN_BYTES", 1)
+    gated_rows, gated_inmem = run()
     # default path: only the edd persist caches (per-iteration joins);
     # gated path adds the vertex-relation cache on top
     assert gated_inmem > default_inmem
     assert gated_rows == default_rows
-
-
-def test_pagerank_malformed_persist_threshold_warns_and_ranks(spark):
-    """A non-integer vertex-persist threshold must not fail the query:
-    the gate warns and keeps its 256 MB default, so the ranks match the
-    unset-conf run."""
-    edges = spark.createDataFrame([(i, (i * 7 + 3) % 20) for i in range(40)], ["src", "dst"])
-    want = {r.vertex: r.rank_s for r in pagerank_fixed_point(edges, iterations=2).collect()}
-    key = "spark.blockchair.graph.vertexPersistMinBytes"
-    spark.conf.set(key, "abc")
-    try:
-        with pytest.warns(UserWarning, match="vertexPersistMinBytes"):
-            df = pagerank_fixed_point(edges, iterations=2)
-        got = {r.vertex: r.rank_s for r in df.collect()}
-    finally:
-        spark.conf.unset(key)
-    assert got == want
 
 
 def test_pagerank_size_estimate_failure_warns_and_keeps_gate_off(
@@ -103,13 +83,9 @@ def test_pagerank_size_estimate_failure_warns_and_keeps_gate_off(
         raise Py4JError("plan API unavailable")
 
     monkeypatch.setattr(caching, "jvm_plan", broken_plan)
-    key = "spark.blockchair.graph.vertexPersistMinBytes"
-    spark.conf.set(key, "1")
-    try:
-        with pytest.warns(RuntimeWarning, match="edge size estimate failed"):
-            got_rows, got_inmem = run()
-    finally:
-        spark.conf.unset(key)
+    monkeypatch.setattr(graph, "VERTEX_PERSIST_MIN_BYTES", 1)
+    with pytest.warns(RuntimeWarning, match="edge size estimate failed"):
+        got_rows, got_inmem = run()
     assert got_rows == want_rows
     assert got_inmem == want_inmem
 

@@ -372,15 +372,32 @@ def test_daily_partitions_and_retention(spark, tmp_path):
 
 def test_incremental_batch_load(spark, tsv_files, tmp_path):
     base = str(tmp_path / "lake2")
-    loaded = incremental_batch_load(
+    loaded, skipped = incremental_batch_load(
         spark, tsv_files[:3], RAW_SCHEMAS, base, retention_days_cutoff="20250811"
     )
     assert loaded == {"blocks": ["20250810", "20250811", "20250812"]}
+    assert skipped == []
     df = read_partitioned(spark, base, "blocks")
     assert sorted(r["date"] for r in df.select("date").distinct().collect()) == [
         20250811,
         20250812,
     ]
+
+
+def test_incremental_batch_load_skips_malformed_file(spark, tsv_files, tmp_path):
+    """The malformed 20250813 dump is skipped whole, as the pattern-routed
+    load skips it, instead of landing as a partition of NULL-id rows."""
+    base = tmp_path / "lake3"
+    loaded, skipped = incremental_batch_load(spark, tsv_files, RAW_SCHEMAS, str(base))
+    assert loaded == {"blocks": ["20250810", "20250811", "20250812"]}
+    assert [f for f, _ in skipped] == [tsv_files[3]]
+    assert sorted(p.name for p in (base / "blocks").iterdir() if p.is_dir()) == [
+        "date=20250810",
+        "date=20250811",
+        "date=20250812",
+    ]
+    df = read_partitioned(spark, str(base), "blocks")
+    assert df.filter(F.col("id").isNull()).count() == 0
 
 
 def test_materialize_modes(spark, tmp_path):
