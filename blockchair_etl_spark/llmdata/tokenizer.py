@@ -1,11 +1,8 @@
 """Learned-vocabulary tokenizer: distributed BPE training + apply.
 
-The one LLM-pipeline capability the engine previously lacked (r10
-verdict stretch #7): `text.token_stats` counts tokens with a fixed
-heuristic, but nothing LEARNS a vocabulary. Byte-pair encoding
-(Sennrich et al., ACL'16) is the standard: start from characters,
-repeatedly merge the most frequent adjacent symbol pair, and the
-ordered merge list IS the vocabulary artifact.
+Byte-pair encoding (Sennrich et al., ACL'16): start from characters,
+repeatedly merge the most frequent adjacent symbol pair; the ordered
+merge list IS the vocabulary artifact.
 
 Scale shape — the classic scalable-BPE factoring:
 
@@ -13,24 +10,23 @@ Scale shape — the classic scalable-BPE factoring:
   WORD FREQUENCY TABLE (distinct word → count); natural-language
   corpora have ~10^7-10^8 distinct words at 100 TB, so the word table
   is the small relation every merge round works on. Each round is one
-  pair-explode + hash-agg over the word table plus a top-1 collect
-  (O(1) driver rows — the same driver-loop contract as Lloyd
+  pair-explode + hash-agg over the word table plus a top-k collect
+  (O(k) driver rows — the same driver-loop contract as Lloyd
   iterations in ivf.py and the CC rounds in clusters.py), then one
-  column rewrite of the symbol arrays. Symbol arrays shrink
-  monotonically, so rounds get cheaper as training proceeds.
-- The merge fold is a JVM-side `aggregate` over the symbol array (no
-  Python stage): greedy left-to-right, the original BPE semantics —
+  rewrite of the symbol arrays. Symbol arrays shrink monotonically, so
+  rounds get cheaper as training proceeds.
+- Apply encodes DISTINCT words only and joins the encodings back to
+  the token stream — repeated words are never re-encoded, the same
+  distinct-side trick the classifier's featurizer uses. Document
+  reassembly is one ordered hash-agg per doc (array_sort over
+  collected (pos, toks) structs, then flatten).
+- Both apply a merge list by one rule, chosen by its length
+  (:func:`_apply_merges`): up to FOLD_MERGE_LIMIT merges run as one
+  JVM-side projection (:func:`_merge_fold_all`, no Python stage),
+  longer lists as an Arrow-batched Python fold (:func:`_py_fold_merges`).
+  Both folds are greedy left-to-right, the original BPE semantics —
   [a a a] under merge (a,a) becomes [aa a], because after a merge the
-  accumulator tail is the merged symbol and no longer matches `l`.
-- Apply encodes DISTINCT words only (ONE doubly-nested aggregate per
-  projection folding the merge list as data — JVM-side but INTERPRETED:
-  higher-order functions are CodegenFallback, a fact measured in r12's
-  jstack and the reason the vectorized mapInPandas twin exists for
-  production vocabularies) and joins the
-  encodings back to the token stream — repeated words are never
-  re-encoded, the same distinct-side trick the classifier's
-  featurizer uses. Document reassembly is one ordered hash-agg per
-  doc (array_sort over collected (pos, toks) structs, then flatten).
+  tail is the merged symbol and no longer matches the left operand.
 
 Determinism: ties on pair count break by (left, right) lexicographic
 ascending — a total order, so the learned merge list is identical
@@ -41,10 +37,11 @@ python reference).
 from __future__ import annotations
 
 import re
+import sys
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..caching import release_local_checkpoint, tracked_checkpoint_release
+from ..caching import release_local_checkpoint
 from .text import tokens_col
 
 # chars -> symbol array; (?!^)(?!$) splits between every pair of
@@ -52,6 +49,17 @@ from .text import tokens_col
 # also matches at end-of-string, and Java split's -1 limit then keeps
 # the trailing empty symbol)
 _SYMS = "split(word, '(?!^)(?!$)')"
+
+# Longest merge list applied as one _merge_fold_all projection; longer
+# lists take the Arrow-batched Python fold. Higher-order functions are
+# CodegenFallback (interpreted), so the projection's per-row cost grows
+# with every merge, while the Python fold skips merges whose symbols a
+# word lacks. Measured on the 48,021 distinct words of zipfian_corpus,
+# local[4], median of 3: one projection 27.8 s at 128 merges and 84.0 s
+# at 512, the Python fold 1.0 s and 2.2 s. Every registry, bench and
+# oracle merge list is at or below the limit, so those plans carry no
+# Python stage.
+FOLD_MERGE_LIMIT = 64
 
 
 def word_frequency_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -66,54 +74,22 @@ def word_frequency_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _merge_fold(syms: Column, left: str, right: str) -> Column:
-    """Greedy left-to-right merge of adjacent (left, right) into
-    left+right — one JVM-side aggregate, no Python. This is the
-    single-merge REFERENCE form; production paths fold the whole merge
-    list as data in one expression (_merge_fold_all, r18) — same inner
-    fold, constant-depth analysis. Overlapping runs
-    merge non-overlapping from the left ([a a a] -> [aa a]) because the
-    merged tail symbol no longer equals `left` (left+right != left for
-    nonempty right).
-
-    The empty-accumulator guard is F.get (0-indexed, NULL on any
-    out-of-range index in EVERY mode) rather than element_at(acc, -1):
-    Spark's AND does not short-circuit and element_at throws
-    INVALID_ARRAY_INDEX under ANSI mode (the Spark 4 default), so the
-    element_at form only worked under this repo's pinned
-    ansi.enabled=false session (advisor r11). NULL == left is NULL and
-    `when` treats NULL as false, so the first symbol of every word
-    falls through to the append branch with no size() predicate at
-    all — one fewer comparison per fold step, which matters when a
-    production merge list chains thousands of steps."""
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.get(acc, F.size(acc) - 1) == F.lit(left))
-            & (x == F.lit(right)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(left + right))
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
 def _merge_fold_all(syms: Column, merges: list[tuple[str, str]]) -> Column:
     """Every merge of ``merges`` applied IN ORDER with ONE doubly-nested
     aggregate: the merge list enters the plan as DATA — an
     array<struct<l,r,o>> literal the outer lambda folds over, running
-    the same greedy inner fold as :func:`_merge_fold` per element
-    (o = left+right, precomputed so the hot branch appends a plain
-    field instead of concatenating). Chaining one nested ``aggregate``
-    per merge instead costs Catalyst a fixed-point Resolution iteration
-    PER NESTING LEVEL, so analysis grows superlinearly with the merge
-    count — measured r18 on the driver word table: analyze 0.47 s at
-    depth 8 / 2.95 s at depth 64 chained, vs 0.08-0.14 s at ANY depth
-    here, with the end-to-end encode action 0.43 s → 0.17 s at the
-    8-merge oracle depth. Bit-identical to the chained form (same
-    per-merge fold, same order; pytest parity + the fuzz test vs
-    _py_fold_merges).
+    one greedy left-to-right inner fold per element (o = left+right,
+    precomputed so the hot branch appends a plain field instead of
+    concatenating). Chaining one nested ``aggregate`` per merge instead
+    costs Catalyst a fixed-point Resolution iteration PER NESTING
+    LEVEL; this form analyzes at constant depth.
+
+    The empty-accumulator guard is F.get (0-indexed, NULL on any
+    out-of-range index in EVERY mode) rather than element_at(acc, -1),
+    which throws INVALID_ARRAY_INDEX under ANSI mode (Spark's AND does
+    not short-circuit). NULL == l is NULL and `when` treats NULL as
+    false, so the first symbol of every word falls through to the
+    append branch.
 
     The literal is ONE parsed expression (the lit_double_array
     precedent — F.lit per symbol costs a py4j round trip each); symbols
@@ -161,6 +137,140 @@ def _merge_fold_all(syms: Column, merges: list[tuple[str, str]]) -> Column:
 # symbols that embed verbatim in a SQL string literal; the token
 # contract is [a-z0-9]+ so real vocabularies always pass
 _SQL_SAFE_SYM = re.compile(r"[a-z0-9]+")
+
+
+def _py_fold_merges(
+    syms: list[str], merges: list[tuple[str, str]]
+) -> list[str]:
+    """The sequential-greedy merge fold in plain python — bit-identical
+    to :func:`_merge_fold_all` (pytest parity), with a cheap
+    applicability screen (skip merges whose symbols aren't in the
+    current symbol set; stale set entries only cost a scan, never a
+    wrong result)."""
+    present = set(syms)
+    for l, r in merges:
+        if l not in present or r not in present:
+            continue
+        out: list[str] = []
+        for x in syms:
+            if out and out[-1] == l and x == r:
+                out[-1] = l + r
+            else:
+                out.append(x)
+        syms = out
+        present = set(syms)
+    return syms
+
+
+def _py_rank_priority_merges(
+    syms: list[str], ranks: dict[tuple[str, str], int]
+) -> list[str]:
+    """HF/GPT-2-style BPE encode: repeatedly merge the LOWEST-RANK
+    adjacent pair present anywhere in the word (all non-overlapping
+    occurrences, left to right) until no ranked pair remains. Unlike
+    the sequential fold (:func:`_py_fold_merges`, one pass per merge in
+    merge order), this re-applies an EARLY merge to adjacencies a later
+    merge creates — the semantics of the GPT-2 `bpe()` loop and HF
+    tokenizers. The two strategies agree on every merge list a
+    bpe_train run can produce on a word where each merge's operands
+    predate it, but diverge on crafted/imported rank tables (pytest
+    pins a divergence fixture).
+
+    Cost shape: O(passes × word length) with a dict probe per
+    adjacency — the same per-word working set as the sequential fold;
+    rank lookup is O(1) so a production-size rank table costs nothing
+    per pair."""
+    while len(syms) > 1:
+        best_rank: int | None = None
+        best: tuple[str, str] | None = None
+        for i in range(len(syms) - 1):
+            r = ranks.get((syms[i], syms[i + 1]))
+            if r is not None and (best_rank is None or r < best_rank):
+                best_rank, best = r, (syms[i], syms[i + 1])
+        if best is None:
+            break
+        l, r = best
+        out: list[str] = []
+        i = 0
+        while i < len(syms):
+            if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
+                out.append(l + r)
+                i += 2
+            else:
+                out.append(syms[i])
+                i += 1
+        syms = out
+    return syms
+
+
+def ship_by_value(module_name: str) -> None:
+    """Pickle the functions of ``module_name`` by value inside Spark
+    tasks, so Python workers run them without importing this package
+    (a driver started outside the repository). The registration is
+    idempotent but process-global cloudpickle state, so callers make it
+    when they build a Python stage, never at import."""
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[module_name])
+
+
+def map_array_column(df: DataFrame, src: str, dst: str, fn) -> DataFrame:
+    """Set the array<string> column ``dst`` (replaced or appended) to
+    ``fn`` of each non-NULL value of column ``src``, computed by an
+    Arrow-batched Python loop (mapInPandas); NULL stays NULL. The
+    module defining ``fn`` ships by value (:func:`ship_by_value`)."""
+    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    ship_by_value(fn.__module__)
+    fields = list(df.schema.fields)
+    if dst not in df.columns:
+        fields.append(StructField(dst, ArrayType(StringType())))
+
+    def _go(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf[dst] = [None if v is None else fn(v) for v in pdf[src]]
+            yield pdf
+
+    return df.mapInPandas(_go, schema=StructType(fields))
+
+
+def _apply_merges(
+    df: DataFrame,
+    col: str,
+    merges: list[tuple[str, str]],
+    strategy: str = "sequential",
+) -> DataFrame:
+    """Replace the symbol-array column ``col`` with its encoding under
+    ``merges``: at most FOLD_MERGE_LIMIT merges under the sequential
+    strategy run as one :func:`_merge_fold_all` projection, anything
+    else as the Arrow-batched Python fold. ``rank_priority`` always
+    takes the Python fold — a fixed-point loop has no bounded fold
+    depth, so only the Python fold computes it."""
+    if strategy not in ("sequential", "rank_priority"):
+        raise ValueError(
+            f"unknown strategy {strategy!r}: use 'sequential' or 'rank_priority'"
+        )
+    if strategy == "sequential" and len(merges) <= FOLD_MERGE_LIMIT:
+        return df.withColumn(col, _merge_fold_all(F.col(col), merges))
+    if strategy == "rank_priority":
+        # only this strategy reads a rank table, so the sequential
+        # closure ships none. First occurrence wins on a duplicated
+        # pair — the lowest rank is the one rank-priority must honor.
+        ranks: dict[tuple[str, str], int] = {}
+        for i, pair in enumerate(merges):
+            ranks.setdefault(pair, i)
+
+        def fold(syms):
+            return _py_rank_priority_merges(list(syms), ranks)
+
+    else:
+        ms = list(merges)
+
+        def fold(syms):
+            return _py_fold_merges(list(syms), ms)
+
+    return map_array_column(df, col, col, fold)
 
 
 def _pair_counts(words: DataFrame) -> DataFrame:
@@ -220,7 +330,6 @@ def bpe_train(
     text_col: str = "text",
     min_pair_count: int = 2,
     batch_k: int = 1,
-    rewriter: str = "fold",
 ) -> list[tuple[str, str]]:
     """Learn an ordered BPE merge list from the corpus.
 
@@ -229,10 +338,12 @@ def bpe_train(
     rewritten word table so lineage stays O(1) across rounds (the CC
     loop's contract); the table is tiny relative to the corpus, so the
     checkpoint cost is the explicit round barrier, not data volume.
+    Each round rewrites the symbol arrays with its picks by the
+    length rule of :func:`_apply_merges`.
 
-    ``batch_k`` (r11 verdict #3 — the standard fast-BPE factoring):
-    merge up to k mutually-independent pairs per round instead of one,
-    collapsing a production 32k-vocab train from ~32k sequential
+    ``batch_k`` (the standard fast-BPE factoring): merge up to k
+    mutually-independent pairs per round instead of one, collapsing a
+    production 32k-vocab train from ~32k sequential
     pair-agg/collect/rewrite job rounds to ~32k/k. Per round the top
     ``batch_k * CANDIDATE_FACTOR`` snapshot pairs are collected
     (O(k) driver rows — still the Lloyd-iteration contract) and up to k
@@ -252,42 +363,14 @@ def bpe_train(
     later pick in the same batch and ≥ min_pair_count (pytest pins both
     the bound and exact parity against a batched python reference).
 
-    ``rewriter``: how each round rewrites the word table's symbol
-    arrays. "fold" (default) chains k _merge_fold expressions — no
-    Python stage, right at oracle scales; "vectorized" applies the
-    round's picks with the shared python fold over Arrow batches
-    (_py_fold_merges — bit-identical, pytest parity). Measured r12 at
-    100k distinct words: the expression rewrite is interpreted
-    ArrayAggregate eval and costs ~8 s/round, the dominant term of a
-    506 s 1024-merge train; the vectorized rewrite is the same >10×
-    win as encode_words_vectorized. batch_k is capped at
-    _MAX_FOLD_CHAIN for the fold rewriter (deeper chains fail Catalyst
-    ANALYSIS — measured; the vectorized rewriter has no such ceiling).
-
-    _pair_counts DECISION (r12 verdict #5, measured r13 on the same
-    100k-word hex corpus, 1024 merges, batch_k=16, vectorized
-    rewriter, canary 0.714/0.554): 81 rounds total ~82 s, split
-    pair-count+top-k-collect 35.6 s vs rewrite+checkpoint 44.4 s —
-    the per-round pair aggregation is ~44% of round time, ROUGHLY
-    BALANCED with the rewrite, not dominant. An Arrow-batched
-    pair-count twin could at best halve its share (~20% end-to-end)
-    while adding a second python path to keep bit-identical with the
-    explode+hash-agg the oracles pin — not built; re-measure if the
-    word table's symbol arrays ever get long enough (document-level
-    BPE, not word-level) to move the explode cost superlinearly."""
+    The per-round pair count is not Arrow-batched: measured on a
+    100k-word hex corpus (1024 merges, batch_k=16) it was ~44% of round
+    time, balanced with the rewrite, so a Python twin could at best
+    halve its share while adding a second path to keep bit-identical
+    with the explode+hash-agg the oracles pin. Re-measure if symbol
+    arrays ever get long (document-level rather than word-level BPE)."""
     if batch_k < 1:
         raise ValueError(f"batch_k must be >= 1, got {batch_k}")
-    if rewriter not in ("fold", "vectorized"):
-        raise ValueError(f"unknown rewriter {rewriter!r}: use 'fold' or 'vectorized'")
-    # the rewrite chain's depth is min(batch_k, n_merges) picks per
-    # round at most — a large batch_k over a small total is shallow
-    if rewriter == "fold" and min(batch_k, n_merges) > _MAX_FOLD_CHAIN:
-        raise ValueError(
-            f"batch_k={batch_k} would chain >{_MAX_FOLD_CHAIN} merge folds "
-            "per round — past the analyzer ceiling (measured r12: nested "
-            "higher-order aggregates past ~100 fail Catalyst's Resolution "
-            "fixed point); use rewriter='vectorized' for larger batches"
-        )
     words = word_frequency_table(docs, text_col).localCheckpoint()
     merges: list[tuple[str, str]] = []
     try:
@@ -304,13 +387,7 @@ def bpe_train(
                 break
             picked = select_disjoint([(t.l, t.r, t.cnt) for t in top], k)
             merges.extend(picked)
-            if rewriter == "vectorized":
-                rewritten = _rewrite_syms_vectorized(words, picked)
-            else:
-                rewritten = words.withColumn(
-                    "syms", _merge_fold_all(F.col("syms"), picked)
-                )
-            nxt = rewritten.localCheckpoint()
+            nxt = _apply_merges(words, "syms", picked).localCheckpoint()
             # release_local_checkpoint, NOT DataFrame.unpersist: the
             # latter never frees checkpoint blocks (caching.py), so the
             # swap would pin every round's word table until JVM GC
@@ -321,280 +398,28 @@ def bpe_train(
     return merges
 
 
-def _rewrite_syms_vectorized(
-    words: DataFrame, merges: list[tuple[str, str]]
-) -> DataFrame:
-    """One train round's symbol-array rewrite as an Arrow-batched
-    python fold (schema-preserving mapInPandas over the word table) —
-    bit-identical to the chained _merge_fold expressions via the shared
-    _py_fold_merges body."""
-    ms = list(merges)
-    schema = words.schema
-
-    def _go(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["syms"] = [
-                None if s is None else _py_fold_merges(list(s), ms)
-                for s in pdf["syms"]
-            ]
-            yield pdf
-
-    return words.mapInPandas(_go, schema=schema)
-
-
-# Default merge count per fold-chain projection in encode_words — the
-# PUBLIC face of the checkpoint trigger: a merge list longer than this
-# makes the fold path localCheckpoint per chunk (and register the last
-# one destructively). Distinct from _MAX_FOLD_CHAIN (the
-# measured analyzer ceiling, a hard error bound): chunk can be lowered
-# below the ceiling for perf, never raised above it.
-DEFAULT_ENCODE_CHUNK = 64
-
-
 def encode_words(
-    words: DataFrame, merges: list[tuple[str, str]], chunk: int = DEFAULT_ENCODE_CHUNK
+    words: DataFrame, merges: list[tuple[str, str]], strategy: str = "sequential"
 ) -> DataFrame:
     """Add `toks` (the BPE encoding) to a relation carrying a `word`
-    column: character split, then every merge applied IN ORDER.
+    column: character split, then ``merges`` applied by the length rule
+    of :func:`_apply_merges`. The input is the DISTINCT-word table
+    (bpe_apply's contract), so either fold runs once per word.
 
-    Each ``chunk``-sized slice of the merge list is applied as ONE
-    data-driven fold (_merge_fold_all, r18) — constant-depth analysis,
-    so the old nested-per-merge Catalyst blowup no longer applies to a
-    slice. The chunk/checkpoint machinery is RETAINED as the pinned
-    contract for >chunk lists (runtime per-row cost still grows with
-    the merge count — the vectorized encoder stays the production-vocab
-    answer) and every ``chunk`` merges the partial encoding is
-    localCheckpointed — a real optimizer barrier. The
-    checkpointed relation is the DISTINCT-WORD table (bpe_apply's
-    contract), so the materialization cost is vocabulary-sized, not
-    corpus-sized; with merges <= chunk (the common case and every
-    oracle path) no checkpoint happens and the encoding stays one pure
-    expression projection (no Python stage; interpreted eval — see the
-    module docstring and encode_words_vectorized for where that
-    ceases to be the right trade).
-
-    Each localCheckpoint is EAGER, so once the next chunk's checkpoint
-    materializes its predecessor's blocks are dead weight — they are
-    unpersisted immediately (bpe_train's words/nxt swap; advisor r11:
-    without this a k-merge list pinned ceil(k/chunk)-1 block-manager
-    copies of the word table until session end). The LAST checkpoint
-    backs the returned frame, so it registers with the deferred-release
-    registry instead (caching.tracked_checkpoint_release): the harness
-    release after the caller's terminal action frees it — with the
-    documented checkpoint edge that the frame cannot be re-collected
-    after that release.
-
-    A >chunk merge list also REPARTITIONS the word table first
-    (measured r12, jstack on a 100k-word × 1024-merge encode): the
-    distinct-word shuffle is small, so AQE coalesces it to ONE
-    partition — and the fold chain is compute-dominated (interpreted
-    ArrayAggregate.eval at this nesting depth — nested higher-order
-    functions are CodegenFallback, not codegen), so the whole encode
-    serialized onto a single core (1000+ s of CPU on one task). This is
-    exactly the recorded fanout-widening bar (≳1 s per input split,
-    compute-dominated single scan). At ≤chunk merges (every oracle
-    path) nothing changes — no shuffle, no barrier, one projection.
-
-    CHUNK POLICY (r12 recorded A/B, 99,705 distinct words × 1024
-    merges, widened, local[32], canary 0.75): chunk=32 read 78–85 s
-    and chunk=64 77–84 s — within noise of each other — while
-    chunk=128 FAILED ANALYSIS outright under the then-chained fold
-    ("Max iterations (100) reached for batch Resolution"). The r18
-    data-driven fold removed that analyzer wall, but 64 stays the
-    default and the _MAX_FOLD_CHAIN guard stays the pinned contract
-    (the registry is frozen and nothing needs deeper slices): the real
-    production-vocab decision is not chunk at all —
-    encode_words_vectorized ran the same workload in 6.2 s (≈13×) —
-    use it past ~hundreds of merges."""
-    if chunk < 1:
-        raise ValueError(f"chunk must be >= 1, got {chunk}")
-    # the actual per-projection depth is min(chunk, len(merges)) — a
-    # large chunk over a small merge list builds a shallow, safe chain
-    if min(chunk, len(merges)) > _MAX_FOLD_CHAIN:
-        raise ValueError(
-            f"chunk={chunk} with {len(merges)} merges would build a "
-            f">{_MAX_FOLD_CHAIN}-deep fold chain — past the analyzer "
-            "ceiling (measured r12: a 128-deep chain fails Catalyst "
-            "Resolution); use encode_words_vectorized for production "
-            "vocabularies instead of raising chunk"
-        )
-    if len(merges) > chunk:
-        words = words.repartition(words.sparkSession.sparkContext.defaultParallelism)
-    out = words.withColumn("toks", F.expr(_SYMS))
-    prev_ckpt: DataFrame | None = None
-    for i in range(0, len(merges), chunk):
-        # merge-list-as-data fold (_merge_fold_all): constant-depth
-        # analysis regardless of the slice length (r18; the chained
-        # per-merge form cost Catalyst a Resolution iteration per level)
-        out = out.withColumn("toks", _merge_fold_all(F.col("toks"), merges[i : i + chunk]))
-        if i + chunk < len(merges):
-            out = out.localCheckpoint()
-            if prev_ckpt is not None:
-                release_local_checkpoint(prev_ckpt)
-            prev_ckpt = out
-    if prev_ckpt is not None:
-        # labeled so caching.last_destructive_release names this entry
-        # after the harness release — the ONE registry path whose
-        # released frame cannot be re-collected (advisor r12)
-        tracked_checkpoint_release(prev_ckpt, label="encode_words>chunk")
-    return out
-
-
-# Ceiling on merges applied per projection. Historically an ANALYZER
-# hard wall (measured r12: a 128-deep chained higher-order aggregate
-# failed Resolution — each nested lambda cost the analyzer a fixed-point
-# iteration); the r18 merge-list-as-data fold (_merge_fold_all) analyzes
-# at constant depth, so the ceiling is now a RETAINED compatibility
-# bound (pinned by tests, harmless at 64, and the error message's
-# advice — use the vectorized encoder for production vocabularies —
-# remains the right runtime call regardless of analysis cost).
-_MAX_FOLD_CHAIN = 64
-
-
-def _py_fold_merges(
-    syms: list[str], merges: list[tuple[str, str]]
-) -> list[str]:
-    """The sequential-greedy merge fold in plain python — bit-identical
-    to chained _merge_fold expressions (pytest parity), with a cheap
-    applicability screen (skip merges whose symbols aren't in the
-    current symbol set; stale set entries only cost a scan, never a
-    wrong result). Shared by the vectorized encoder and the vectorized
-    train rewriter so the two python paths cannot drift."""
-    present = set(syms)
-    for l, r in merges:
-        if l not in present or r not in present:
-            continue
-        out: list[str] = []
-        for x in syms:
-            if out and out[-1] == l and x == r:
-                out[-1] = l + r
-            else:
-                out.append(x)
-        syms = out
-        present = set(syms)
-    return syms
-
-
-def _py_rank_priority_merges(
-    syms: list[str], ranks: dict[tuple[str, str], int]
-) -> list[str]:
-    """HF/GPT-2-style BPE encode: repeatedly merge the LOWEST-RANK
-    adjacent pair present anywhere in the word (all non-overlapping
-    occurrences, left to right) until no ranked pair remains. Unlike
-    the sequential fold (:func:`_py_fold_merges`, one pass per merge in
-    merge order), this re-applies an EARLY merge to adjacencies a later
-    merge creates — the semantics of the GPT-2 `bpe()` loop and HF
-    tokenizers. The two strategies agree on every merge list a
-    bpe_train run can produce on a word where each merge's operands
-    predate it, but diverge on crafted/imported rank tables (pytest
-    pins a divergence fixture).
-
-    Cost shape: O(passes × word length) with a dict probe per
-    adjacency — the same per-word working set as the sequential fold;
-    rank lookup is O(1) so a production-size rank table costs nothing
-    per pair."""
-    while len(syms) > 1:
-        best_rank: int | None = None
-        best: tuple[str, str] | None = None
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank, best = r, (syms[i], syms[i + 1])
-        if best is None:
-            break
-        l, r = best
-        out: list[str] = []
-        i = 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-                out.append(l + r)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    return syms
-
-
-def encode_words_vectorized(
-    words: DataFrame,
-    merges: list[tuple[str, str]],
-    strategy: str = "sequential",
-) -> DataFrame:
-    """The PRODUCTION-VOCABULARY twin of :func:`encode_words`: the same
-    sequential-greedy fold, computed by an Arrow-batched python loop
-    over the distinct-word table (mapInPandas) instead of a chained
-    Catalyst expression — bit-identical output (pytest parity).
-
-    Why it exists (measured r12, jstack mid-run): at ~1k merges the
-    expression chain evaluates as INTERPRETED ``ArrayAggregate.eval``
-    (nested higher-order functions are CodegenFallback — the depth-32
-    recursive eval frames are visible in the thread dump), costing
-    1000+ s of CPU for 100k words × 1024 merges. The python fold does
-    the identical work at honest interpreter speed with a cheap
-    per-merge applicability screen (skip merges whose symbols aren't in
-    the word's symbol set — at production vocab sizes almost every
-    merge is skipped per word), distributed over Arrow batches. The
-    expression path stays the default for ≤~hundreds of merges: no
-    Python stage, no Arrow boundary, and every SQL-oracle path uses it.
-
-    Strategy (r12 verdict #3 — a DOCUMENTED variant, not a silent
-    semantic):
+    ``strategy``:
 
     - ``"sequential"`` (default): replay merges IN ORDER, one greedy
-      left-to-right pass per merge — the fold the expression chain
-      computes and every oracle path pins. An early merge never sees
-      an adjacency a later merge creates.
+      left-to-right pass per merge — the fold every oracle path pins.
+      An early merge never sees an adjacency a later merge creates.
     - ``"rank_priority"``: the HF/GPT-2 encode — repeatedly apply the
       lowest-rank pair present anywhere in the word until fixed point
       (:func:`_py_rank_priority_merges`). Matches production BPE
       libraries on imported vocabularies; diverges from sequential on
       rank tables where an early-rank merge consumes a token a
-      later-rank merge creates (pytest divergence fixture). Vectorized
-      path only — the expression chain does not support it (a
-      fixed-point loop has no bounded fold depth)."""
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
-    if strategy not in ("sequential", "rank_priority"):
-        raise ValueError(
-            f"unknown strategy {strategy!r}: use 'sequential' or 'rank_priority'"
-        )
-    ms = list(merges)
-    rank_priority = strategy == "rank_priority"
-    # rank table only for the strategy that reads it — the sequential
-    # closure must not ship a second O(vocab) structure to every task
-    # (r13 review). First occurrence wins on a (malformed) duplicated
-    # pair — the lowest rank is the one rank-priority must honor.
-    ranks: dict[tuple[str, str], int] = {}
-    if rank_priority:
-        for i, pair in enumerate(ms):
-            ranks.setdefault(pair, i)
-    schema = StructType(
-        list(words.schema.fields) + [StructField("toks", ArrayType(StringType()))]
+      later-rank merge creates (pytest divergence fixture)."""
+    return _apply_merges(
+        words.withColumn("toks", F.expr(_SYMS)), "toks", merges, strategy
     )
-
-    def _encode_batches(batches):
-        # no memo dict: the documented input is the DISTINCT-word
-        # table, where a cache can never hit and only doubles the
-        # partition's resident encoding memory (r12 review)
-
-        def enc(word):
-            if word is None:
-                return None
-            # split('', '(?!^)(?!$)') yields [''] — match the
-            # expression path's empty-word form exactly
-            syms = list(word) if word else [""]
-            if rank_priority:
-                return _py_rank_priority_merges(syms, ranks)
-            return _py_fold_merges(syms, ms)
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["toks"] = [enc(w) for w in pdf["word"]]
-            yield pdf
-
-    return words.mapInPandas(_encode_batches, schema=schema)
 
 
 def merges_to_frame(spark, merges: list[tuple[str, str]]) -> DataFrame:
@@ -627,7 +452,6 @@ def bpe_apply(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    encoder: str = "fold",
     strategy: str = "sequential",
 ) -> DataFrame:
     """Tokenize the corpus with a learned merge list →
@@ -639,40 +463,13 @@ def bpe_apply(
     ordered hash-agg (array_sort over (pos, toks) structs — dense
     posexplode positions make row order recoverable without a window).
 
-    ``encoder``: "fold" (default — the Catalyst expression chain, no
-    Python stage; right for the ≤~hundreds-of-merges vocabularies every
-    oracle path uses) or "vectorized" (the Arrow-batched python fold —
-    the production-vocabulary path; see encode_words_vectorized for the
-    measured crossover). Both are bit-identical (pytest parity).
-
     ``strategy``: "sequential" (default — the fold semantics every
-    oracle pins) or "rank_priority" (HF/GPT-2 fixed-point encode;
-    vectorized only — see encode_words_vectorized). Every registry
-    entry uses sequential; rank_priority exists for imported
-    production vocabularies whose published semantics are the
-    fixed-point loop.
+    oracle pins) or "rank_priority" (the HF/GPT-2 fixed-point encode
+    for imported production vocabularies); see :func:`encode_words`.
     """
-    if encoder not in ("fold", "vectorized"):
-        raise ValueError(f"unknown encoder {encoder!r}: use 'fold' or 'vectorized'")
-    # strategy VALUE first, compatibility second (r13 review: a typo'd
-    # strategy under the default encoder used to earn the misleading
-    # "switch to vectorized" advice, then fail again there)
-    if strategy not in ("sequential", "rank_priority"):
-        raise ValueError(
-            f"unknown strategy {strategy!r}: use 'sequential' or 'rank_priority'"
-        )
-    if strategy != "sequential" and encoder != "vectorized":
-        raise ValueError(
-            f"strategy {strategy!r} needs encoder='vectorized' — the "
-            "expression chain only computes the sequential fold"
-        )
-    if encoder == "fold":
-        encode = lambda words: encode_words(words, merges)  # noqa: E731
-    else:
-        encode = lambda words: encode_words_vectorized(  # noqa: E731
-            words, merges, strategy=strategy
-        )
-    return apply_word_encoder(docs, encode, text_col, id_col)
+    return apply_word_encoder(
+        docs, lambda words: encode_words(words, merges, strategy), text_col, id_col
+    )
 
 
 def apply_word_encoder(

@@ -61,44 +61,22 @@ byte-fallback convention, so apply never drops a row.
 from __future__ import annotations
 
 import math
-import sys
 
 from pyspark.sql import DataFrame, functions as F
 
 from .text import tokens_col
-from .tokenizer import apply_word_encoder, word_frequency_table
+from .tokenizer import (
+    apply_word_encoder,
+    map_array_column,
+    ship_by_value,
+    word_frequency_table,
+)
 
 # This module's Arrow-batched workers (forward-backward E-step/scorer,
-# Viterbi/sampling encoders) call the module-level DP helpers — which
-# cloudpickle would normally serialize BY REFERENCE, requiring the
-# package importable on every Python worker. The rest of the codebase
-# meets that bar with self-contained closures (multimodal.py note);
-# here the DP bodies are the pytest-pinned reference implementations
-# and duplicating them into each closure would fork the pinned logic.
-# Registering the module for BY-VALUE pickling ships the code objects
-# with the task instead (pure stdlib + pandas inside), so an external
-# driver (the verification harness runs from /tmp) needs nothing on
-# worker sys.path. Registration is idempotent; the vendored
-# pyspark.cloudpickle always has the API on Spark 4.x.
-#
-# The registration mutates process-global cloudpickle state (every UDF
-# that references this module serializes by value afterwards), so it is
-# NOT an import side effect (r14 review): the Arrow-batched entry
-# points call _ensure_by_value() lazily on first use — importing the
-# module for its pure-Python DP helpers (pytest, the oracle harness)
-# changes nothing globally.
-_BY_VALUE_REGISTERED = False
-
-
-def _ensure_by_value() -> None:
-    """Register this module for by-value cloudpickle serialization —
-    called by every closure-building entry point, never at import."""
-    global _BY_VALUE_REGISTERED
-    if not _BY_VALUE_REGISTERED:
-        from pyspark import cloudpickle as _cloudpickle
-
-        _cloudpickle.register_pickle_by_value(sys.modules[__name__])
-        _BY_VALUE_REGISTERED = True
+# Viterbi/sampling encoders) call the module-level DP helpers, the
+# pytest-pinned reference implementations; each stage ships this module
+# by value (tokenizer.ship_by_value), so an external driver needs
+# nothing on the Python workers' sys.path.
 
 # expected-count quantum: counts are exact multiples of 2^-20 before
 # the cross-word sum (same fixed-point idiom as FIXED_SCALE in pq.py)
@@ -265,7 +243,7 @@ def _model_from_counts(counts: dict[str, int]) -> dict[str, float]:
 def _expected_count_rows(words: DataFrame, model: dict[str, float]) -> DataFrame:
     """E-step: per-(word, piece) quantized expected counts, Arrow-
     batched; the exact cross-word piece totals as ONE decimal hash-agg."""
-    _ensure_by_value()
+    ship_by_value(__name__)
     max_len = max(len(p) for p in model)
 
     def _estep(batches):
@@ -381,9 +359,8 @@ def unigram_train(
             " or 'loss' (Kudo likelihood-drop ranking)"
         )
     # scoped persist/unpersist, NOT the global release_tracked():
-    # training may run while a caller holds tracked frames (or a
-    # pending destructive checkpoint release from encode_words), and
-    # the global release would free those mid-plan
+    # training may run while a caller holds tracked frames, and the
+    # global release would free those mid-plan
     words = word_frequency_table(docs, text_col).select("word", "freq").persist()
     try:
         seeds = seed_pieces(words, max_piece_len, seed_size)
@@ -464,37 +441,16 @@ def _model_geometry(
     return model, max(len(p) for p in model), min(model.values()) - 10.0
 
 
-def _map_word_encoder(words: DataFrame, enc) -> DataFrame:
-    """(word, ...) → (word, ..., toks array<string>) via an
-    Arrow-batched loop over the distinct-word table: the shared
-    mapInPandas scaffolding for every unigram encode path (``enc`` is
-    word → list[str]; NULL words pass through as NULL toks)."""
-    _ensure_by_value()
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
-    schema = StructType(
-        list(words.schema.fields) + [StructField("toks", ArrayType(StringType()))]
-    )
-
-    def _go(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["toks"] = [None if w is None else enc(w) for w in pdf["word"]]
-            yield pdf
-
-    return words.mapInPandas(_go, schema=schema)
-
-
 def unigram_encode_words(
     words: DataFrame, pieces: list[tuple[str, float]]
 ) -> DataFrame:
     """(word) → (word, toks array<string>): Arrow-batched Viterbi over
     the distinct-word table (the unigram analog of
-    encode_words_vectorized). Unknown characters fall back to
+    tokenizer.encode_words). Unknown characters fall back to
     single-char tokens at min(logp) - 10."""
     model, max_len, unk_logp = _model_geometry(pieces)
-    return _map_word_encoder(
-        words, lambda w: _py_viterbi(w, model, max_len, unk_logp)
+    return map_array_column(
+        words, "word", "toks", lambda w: _py_viterbi(w, model, max_len, unk_logp)
     )
 
 
@@ -522,7 +478,7 @@ def unigram_word_logprobs(
     2^-20 so downstream per-document sums are exact integers. Unknown
     characters participate as penalized single-char pieces (min logp -
     10), so unseen corpora always score finitely."""
-    _ensure_by_value()
+    ship_by_value(__name__)
     model, max_len, unk_logp = _model_geometry(pieces)
 
     def _score(batches):
@@ -691,8 +647,10 @@ def unigram_sample_apply(
     model, max_len, unk_logp = _model_geometry(pieces)
     return apply_word_encoder(
         docs,
-        lambda words: _map_word_encoder(
+        lambda words: map_array_column(
             words,
+            "word",
+            "toks",
             lambda w: _py_sample_segmentation(
                 w, model, max_len, alpha, unk_logp, seed
             ),

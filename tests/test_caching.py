@@ -100,21 +100,6 @@ def test_release_tracked_reports_destructive_entries(spark):
     assert caching.last_destructive_release == []
 
 
-def test_encode_words_destructive_release_is_labeled(spark):
-    """The one registry path whose released frame cannot be
-    re-collected (>chunk encode_words) must surface through the
-    destructive-release report."""
-    from blockchair_etl_spark import caching
-    from blockchair_etl_spark.llmdata.tokenizer import encode_words
-
-    release_tracked(blocking=True)
-    words = spark.createDataFrame([("abab",), ("bb",)], "word string")
-    out = encode_words(words, [("a", "b"), ("b", "b"), ("ab", "ab")], chunk=2)
-    assert out.count() == 2
-    release_tracked(blocking=True)
-    assert caching.last_destructive_release == ["encode_words>chunk"]
-
-
 def test_registry_invocation_releases_previous_caches(spark, sf_dir):
     """The register() wrapper is the backstop for harnesses that never
     call release_tracked (the verification driver): building the NEXT

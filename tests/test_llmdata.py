@@ -2142,20 +2142,6 @@ def test_bpe_train_apply_parity(spark, docs):
     )
     assert "EvalPython" not in plan and "InPandas" not in plan
 
-    # the depth-capped (localCheckpoint) branch of encode_words must be
-    # semantically invisible: chunk=2 forces checkpoint barriers inside
-    # the 12-merge chain — encodings must equal the single-projection
-    # form, including across chunk-boundary merges
-    words = spark.createDataFrame(
-        [("thequickbrown",), ("aaaa",), ("zzz",), ("a",)], "word string"
-    )
-    unchunked = {r.word: list(r.toks) for r in encode_words(words, got_merges).collect()}
-    chunked = {
-        r.word: list(r.toks)
-        for r in encode_words(words, got_merges, chunk=2).collect()
-    }
-    assert chunked == unchunked
-
     # artifact round-trip: the merge list survives a parquet write/read
     # with ORDER intact (order is the model), and applying the reloaded
     # vocabulary is identical
@@ -2285,86 +2271,75 @@ def test_bpe_train_batched_rounds(spark, docs):
     assert s3 != b3 and set(s3) == set(b3)  # order-only divergence here
 
 
-def test_bpe_vectorized_encoder_parity(spark, docs):
-    """r12 (measured finding behind it: nested higher-order aggregate
-    is interpreted CodegenFallback eval, so at production vocab sizes
-    the expression chain is the wrong trade): the Arrow-batched python
-    encoder must be bit-identical to the expression fold — over the
-    real corpus vocabulary, the empty word, overlapping runs, and
-    chunk-boundary merges — and bpe_apply(encoder='vectorized') must
-    match bpe_apply(encoder='fold') document-for-document."""
+def test_bpe_vectorized_encoder_parity(spark):
+    """The merge-list length picks the fold: up to FOLD_MERGE_LIMIT
+    merges run as one JVM projection, a longer list as the
+    Arrow-batched Python fold. Both sides of the limit must equal
+    _py_fold_merges word for word (a seeded random vocabulary, the
+    empty word, NULL, overlapping runs) and bpe_apply must equal
+    folding each document by hand; bpe_train with batch_k above the
+    limit must match the batched python reference."""
+    import random
+    import re
+
     from blockchair_etl_spark.llmdata.tokenizer import (
+        FOLD_MERGE_LIMIT,
+        _py_fold_merges,
         bpe_apply,
         bpe_train,
         encode_words,
-        encode_words_vectorized,
     )
 
-    sample = docs.limit(120).select("doc_id", "text")
-    merges = bpe_train(sample, n_merges=12)
+    # the documents fixture has 31 distinct words, too few for a
+    # merge list past the limit
+    rng = random.Random(14)
+    vocab = [
+        "".join(rng.choice("abcdefghij") for _ in range(rng.randint(2, 9)))
+        for _ in range(400)
+    ]
+    texts = [" ".join(rng.choice(vocab) for _ in range(20)) for _ in range(60)]
+    texts += ["", None]
+    sample = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id bigint, text string"
+    )
+    n_long = 2 * FOLD_MERGE_LIMIT
+    want_big_k, _ = _ref_bpe_batched(texts, n_merges=n_long, batch_k=n_long)
+    merges = bpe_train(sample, n_merges=n_long, batch_k=n_long)
+    assert merges == want_big_k and len(merges) == n_long
+
     words = sample.select(
         F.explode(F.split(F.lower("text"), "[^a-z0-9]+")).alias("word")
+    ).union(
+        spark.createDataFrame([("aaa",), ("",), (None,)], "word string")
     ).distinct()
-    fold = {
-        r.word: list(r.toks) for r in encode_words(words, merges).collect()
-    }
-    vec = {
-        r.word: list(r.toks)
-        for r in encode_words_vectorized(words, merges).collect()
-    }
-    assert vec == fold
-    # '' and overlapping-run forms pinned explicitly (the fold path's
-    # split('') -> [''] shape must be matched exactly)
+
+    def by_hand(word, ms):
+        return None if word is None else _py_fold_merges(list(word) or [""], ms)
+
+    for n in (FOLD_MERGE_LIMIT, n_long):
+        ms = merges[:n]
+        enc = encode_words(words, ms)
+        plan = enc._jdf.queryExecution().executedPlan().toString()
+        assert ("InPandas" in plan) == (n > FOLD_MERGE_LIMIT), n
+        got = {r.word: r.toks and list(r.toks) for r in enc.collect()}
+        assert got == {w: by_hand(w, ms) for w in got}, n
+
+        applied = {r.doc_id: list(r.tokens) for r in bpe_apply(sample, ms).collect()}
+        for r in sample.collect():
+            toks = []
+            for w in re.split(r"[^a-z0-9]+", (r.text or "").lower()):
+                if w:
+                    toks.extend(by_hand(w, ms))
+            assert applied[r.doc_id] == toks, (n, r.doc_id)
+
+    # overlapping runs and the empty word on the Python side of the
+    # limit: the split('') -> [''] shape must be matched exactly
     tiny = spark.createDataFrame([("aaa",), ("",)], "word string")
     got = {
         r.word: list(r.toks)
-        for r in encode_words_vectorized(tiny, [("a", "a")]).collect()
+        for r in encode_words(tiny, [("a", "a")] * (FOLD_MERGE_LIMIT + 1)).collect()
     }
     assert got == {"aaa": ["aa", "a"], "": [""]}
-
-    a = bpe_apply(sample, merges).collect()
-    b = bpe_apply(sample, merges, encoder="vectorized").collect()
-    assert {(r.doc_id, tuple(r.tokens), r.n_tokens) for r in a} == {
-        (r.doc_id, tuple(r.tokens), r.n_tokens) for r in b
-    }
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown encoder"):
-        bpe_apply(sample, merges, encoder="pandas")
-
-    # the vectorized train REWRITER shares the same python fold: the
-    # learned merge list must be bit-identical at k=1 and batched k
-    assert bpe_train(sample, n_merges=12, rewriter="vectorized") == merges
-    assert bpe_train(
-        sample, n_merges=12, batch_k=4, rewriter="vectorized"
-    ) == bpe_train(sample, n_merges=12, batch_k=4)
-
-    # measured r12 analyzer ceiling: deep fold chains must fail with
-    # the named guard, not Catalyst's Resolution error — but ONLY when
-    # the actual depth min(chunk, len(merges)) exceeds it (a defensive
-    # large chunk over a short merge list built a safe shallow chain
-    # before the guard existed and must keep working)
-    with pytest.raises(ValueError, match="analyzer ceiling"):
-        encode_words(words, [("a", "b")] * 128, chunk=128)
-    shallow = {
-        r.word: list(r.toks)
-        for r in encode_words(words, merges, chunk=128).collect()
-    }
-    assert shallow == fold
-    with pytest.raises(ValueError, match="analyzer ceiling"):
-        bpe_train(sample, n_merges=200, batch_k=128)
-    with pytest.raises(ValueError, match="unknown rewriter"):
-        bpe_train(sample, n_merges=2, rewriter="arrow")
-    # ...and the escape hatch the ceiling error names must actually
-    # work there: the vectorized rewriter has no chain, so a >64
-    # batch_k runs — and still matches the batched python reference
-    # (k is min(batch_k, n_merges) per round in both)
-    texts = [r.text for r in sample.collect()]
-    want_big_k, _ = _ref_bpe_batched(texts, n_merges=12, batch_k=128)
-    assert (
-        bpe_train(sample, n_merges=12, batch_k=128, rewriter="vectorized")
-        == want_big_k
-    )
 
 
 def _ref_hf_bpe(word: str, merges: list[tuple[str, str]]) -> list[str]:
@@ -2413,7 +2388,7 @@ def test_bpe_rank_priority_strategy(spark, docs):
         _py_rank_priority_merges,
         bpe_apply,
         bpe_train,
-        encode_words_vectorized,
+        encode_words,
     )
 
     # (a) divergence fixture: merge 0 = (a, bc) references the token
@@ -2426,8 +2401,8 @@ def test_bpe_rank_priority_strategy(spark, docs):
         ["a", "b", "c"], {p: i for i, p in enumerate(crafted)}
     ) == ["abc"]
     tiny = spark.createDataFrame([("abc",)], "word string")
-    seq = encode_words_vectorized(tiny, crafted).collect()[0]
-    rp = encode_words_vectorized(tiny, crafted, strategy="rank_priority").collect()[0]
+    seq = encode_words(tiny, crafted).collect()[0]
+    rp = encode_words(tiny, crafted, strategy="rank_priority").collect()[0]
     assert list(seq.toks) == ["a", "bc"]
     assert list(rp.toks) == ["abc"]
 
@@ -2454,7 +2429,7 @@ def test_bpe_rank_priority_strategy(spark, docs):
     for ms in merge_lists:
         got = {
             r.word: list(r.toks)
-            for r in encode_words_vectorized(
+            for r in encode_words(
                 wdf, ms, strategy="rank_priority"
             ).collect()
         }
@@ -2469,34 +2444,76 @@ def test_bpe_rank_priority_strategy(spark, docs):
     ).distinct()
     a = {
         r.word: list(r.toks)
-        for r in encode_words_vectorized(corpus_words, trained).collect()
+        for r in encode_words(corpus_words, trained).collect()
     }
     b = {
         r.word: list(r.toks)
-        for r in encode_words_vectorized(
+        for r in encode_words(
             corpus_words, trained, strategy="rank_priority"
         ).collect()
     }
     assert a == b
 
-    # (d) plumbing: end-to-end apply agrees on the trained list; the
-    # fold encoder refuses the strategy it cannot compute
-    x = bpe_apply(sample, trained, encoder="vectorized").collect()
-    y = bpe_apply(
-        sample, trained, encoder="vectorized", strategy="rank_priority"
-    ).collect()
+    # (d) plumbing: end-to-end apply agrees on the trained list, and an
+    # unknown strategy is refused
+    x = bpe_apply(sample, trained).collect()
+    y = bpe_apply(sample, trained, strategy="rank_priority").collect()
     assert {(r.doc_id, tuple(r.tokens)) for r in x} == {
         (r.doc_id, tuple(r.tokens)) for r in y
     }
-    with pytest.raises(ValueError, match="needs encoder='vectorized'"):
-        bpe_apply(sample, trained, strategy="rank_priority")
     with pytest.raises(ValueError, match="unknown strategy"):
-        encode_words_vectorized(tiny, crafted, strategy="greedy")
-    # strategy VALUE is validated before encoder compatibility (r13
-    # review: a typo'd strategy under the default fold encoder used to
-    # get "switch to vectorized" advice that then failed again there)
+        encode_words(tiny, crafted, strategy="greedy")
     with pytest.raises(ValueError, match="unknown strategy"):
         bpe_apply(sample, trained, strategy="greedy")
+
+
+def test_python_folds_run_where_workers_cannot_import_the_package(tmp_path):
+    """A driver started outside the repository, with the package only on
+    its own sys.path, leaves Spark's Python workers unable to import
+    it. The BPE Python fold (past FOLD_MERGE_LIMIT merges, and
+    rank_priority) and the unigram encoder must still run there, so
+    their modules ship by value."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from pyspark.sql import SparkSession
+        from blockchair_etl_spark.llmdata.tokenizer import (
+            FOLD_MERGE_LIMIT, bpe_apply, encode_words,
+        )
+        from blockchair_etl_spark.llmdata.unigram import unigram_apply
+
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false")
+                 .config("spark.sql.shuffle.partitions", "1").getOrCreate())
+        words = spark.createDataFrame([("aaa",), ("",)], "word string")
+        long = [("a", "a")] * (FOLD_MERGE_LIMIT + 1)
+        got = {{r.word: list(r.toks) for r in encode_words(words, long).collect()}}
+        assert got == {{"aaa": ["aa", "a"], "": [""]}}, got
+        docs = spark.createDataFrame([(1, "abc ab")], "doc_id bigint, text string")
+        rp = bpe_apply(docs, [("a", "bc"), ("b", "c")], strategy="rank_priority")
+        assert [list(r.tokens) for r in rp.collect()] == [["abc", "a", "b"]]
+        ug = unigram_apply(docs, [("ab", -1.0), ("a", -2.0), ("b", -2.0), ("c", -2.0)])
+        assert [list(r.tokens) for r in ug.collect()] == [["ab", "c", "ab"]]
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
 
 
 def test_bpe_fold_ansi_mode_safe(spark):
@@ -2586,16 +2603,18 @@ def test_merge_fold_all_empty_merge_list_is_identity(spark):
 
 
 def test_encode_words_releases_superseded_checkpoints(spark):
-    """Advisor r11 + r12 review: the chunked path must unpersist each
-    superseded localCheckpoint once its successor materializes — a
-    12-merge/chunk-2 chain takes 5 checkpoint barriers but pins only
-    the LAST one (backing the returned frame) until the harness's
-    release_tracked, after which NOTHING remains. Also pins that
-    bpe_train's words/nxt swap really frees each round's table
-    (DataFrame.unpersist never freed checkpoint blocks — the r12
-    measured finding behind caching.release_local_checkpoint)."""
+    """bpe_train's words/nxt swap must really free each round's
+    localCheckpointed table (DataFrame.unpersist never frees checkpoint
+    blocks — the reason for caching.release_local_checkpoint), and an
+    encode past FOLD_MERGE_LIMIT merges must leave nothing persisted or
+    tracked behind it."""
+    from blockchair_etl_spark import caching
     from blockchair_etl_spark.caching import release_tracked
-    from blockchair_etl_spark.llmdata.tokenizer import bpe_train, encode_words
+    from blockchair_etl_spark.llmdata.tokenizer import (
+        FOLD_MERGE_LIMIT,
+        bpe_train,
+        encode_words,
+    )
 
     release_tracked(blocking=True)
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
@@ -2615,11 +2634,10 @@ def test_encode_words_releases_superseded_checkpoints(spark):
 
     assert leaked() == set()  # the train loop frees every round's table
     words = spark.createDataFrame([("thequickbrown",), ("aaaa",)], "word string")
-    out = encode_words(words, merges, chunk=2)
-    out.collect()
-    assert len(leaked()) == 1  # only the final barrier stays pinned
-    release_tracked(blocking=True)
-    assert leaked() == set()  # ...and the registry release frees it
+    long_merges = (merges * (FOLD_MERGE_LIMIT // len(merges) + 2))[: 2 * FOLD_MERGE_LIMIT]
+    encode_words(words, long_merges).collect()
+    assert leaked() == set()
+    assert caching.tracked_count() == 0
 
 
 def test_winsorize_bounds_and_idempotence(spark):
