@@ -91,10 +91,11 @@ def tracked_count() -> int:
 
 
 def jvm_plan(df: DataFrame, stage: str = "analyzed"):
-    """The JVM logical plan behind ``df`` at ``stage`` (``"analyzed"``
-    or ``"optimizedPlan"``): the one call into Spark's private
-    ``QueryExecution`` API. A failing JVM call raises ``Py4JError``;
-    callers that fall back on it say so with a warning."""
+    """The JVM plan behind ``df`` at ``stage`` (``"analyzed"``,
+    ``"optimizedPlan"`` or the physical ``"executedPlan"``): the one
+    call into Spark's private ``QueryExecution`` API. A failing JVM call
+    raises ``Py4JError``; callers that fall back on it say so with a
+    warning."""
     return getattr(df._jdf.queryExecution(), stage)()
 
 

@@ -21,12 +21,15 @@ from __future__ import annotations
 
 import re
 import shutil
+import warnings
 from dataclasses import dataclass
 from pathlib import Path
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..caching import jvm_plan
 from .sources import (
     _find_bad_files,
     one_partition_if_small,
@@ -63,9 +66,12 @@ def materialize(
     :func:`~blockchair_etl_spark.io.sources.one_partition_if_small`.
     A clustered model whose size estimate passes is written as
     ``coalesce(1).sortWithinPartitions(*cluster_by)``, one sorted file
-    with no shuffle, instead of ``repartition(cluster_by)``. The
-    read-back is gated on the parquet bytes just written, so queries
-    over a day-size mart plan with no exchange.
+    with no shuffle, instead of ``repartition(cluster_by)``. So is a
+    model whose physical plan already outputs one partition, such as a
+    join of gated relations: without CBO the optimizer estimates a
+    join's size as the product of its inputs', so the gate alone would
+    shuffle it. The read-back is gated on the parquet bytes just
+    written, so queries over a day-size mart plan with no exchange.
     The cost is that a join of gated relations runs in one task, for
     inputs up to ``spark.sql.autoBroadcastJoinThreshold``; Spark's
     broadcast join makes the same bet. Above the threshold both plans
@@ -81,7 +87,7 @@ def materialize(
     writer_df = df
     if config.cluster_by:
         one = one_partition_if_small(df, name)
-        if one is df:  # not small: hash-partition on the keys
+        if one is df and not _plans_one_partition(df, name):
             one = df.repartition(*[df[c] for c in config.cluster_by])
         writer_df = one.sortWithinPartitions(*config.cluster_by)
     path = f"{base_path}/{name}"
@@ -90,6 +96,26 @@ def materialize(
     # a given schema as nullable, so this is the footer schema without
     # the schema-inference job a bare read runs.
     return one_partition_if_small(spark.read.schema(writer_df.schema).parquet(path), name)
+
+
+def _plans_one_partition(df: DataFrame, name: str) -> bool:
+    """Whether the physical plan of ``df`` outputs exactly one partition.
+    Read from the plan AQE starts from (its own node reports no
+    partitioning), so no job runs. A failed JVM call counts as no and
+    warns, naming ``name``."""
+    try:
+        plan = jvm_plan(df, "executedPlan")
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.inputPlan()
+        return plan.outputPartitioning().numPartitions() == 1
+    except Py4JError as exc:
+        warnings.warn(
+            f"physical partitioning of {name} failed ({type(exc).__name__}: {exc}); "
+            "it is hash-partitioned on its cluster keys",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return False
 
 
 # The reference's per-model clustering configuration (§2 S8).

@@ -12,12 +12,23 @@ Two entry points:
 - :func:`prepare_session` — apply the runtime-settable subset of the
   same tuning to an externally-provided session (e.g. the verification
   driver's). Idempotent and cheap; every public query function calls it.
+
+One static conf is set only at build time: the size of Spark's
+generated-class cache, ``spark.sql.codegen.cache.maxEntries``. The
+cache is LRU and defaults to 100 classes, fewer than one day's DAG
+compiles, so at that size every class is evicted before the next day
+asks for it and each warm day recompiles all of its generated code.
+:data:`CODEGEN_CACHE_ENTRIES` holds the whole plan set. A live session
+cannot change a static conf, so :func:`prepare_session` only warns,
+once per session, when it finds a smaller cache.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import warnings
+import weakref
 from collections.abc import Callable
 from typing import Any
 
@@ -47,6 +58,20 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Size of Spark's generated-class cache (static conf, LRU, default 100).
+# Counted with CodegenMetrics on the daily_build workload (4-core VM):
+# one day of inference, load, DAG and checks compiles ~160 distinct
+# classes, a five-day session with its day generation 330, and each
+# fresh dashboard window 2 more. At 100 entries warm days recompiled
+# 159-163 classes each; at 1000 they compile none.
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = 1000
+
+# sessions whose codegen cache size prepare_session has already checked
+_cache_checked: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+_cache_checked_lock = threading.Lock()
+
+
 def default_shuffle_partitions() -> int:
     """Match shuffle parallelism to available cores for local runs.
 
@@ -67,7 +92,9 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     ``CANNOT_MODIFY_STATIC_CONFIG``) is skipped with a warning naming it:
     every conf here is an optimization or compat shim, not a correctness
     requirement (except nanosAsLong, which will surface loudly at read
-    time if missing)."""
+    time if missing). A codegen cache smaller than
+    :data:`CODEGEN_CACHE_ENTRIES` warns too, once per session."""
+    _check_codegen_cache(spark)
     confs = {**RUNTIME_CONFS, "spark.sql.shuffle.partitions": str(default_shuffle_partitions())}
     for k, v in confs.items():
         try:
@@ -75,6 +102,27 @@ def prepare_session(spark: SparkSession) -> SparkSession:
         except AnalysisException as e:
             warnings.warn(f"prepare_session: cannot set {k}: {e}", RuntimeWarning, stacklevel=2)
     return spark
+
+
+def _codegen_cache_entries(spark: SparkSession) -> int:
+    return int(spark.conf.get(CODEGEN_CACHE_CONF))
+
+
+def _check_codegen_cache(spark: SparkSession) -> None:
+    with _cache_checked_lock:
+        if spark in _cache_checked:
+            return
+        _cache_checked.add(spark)
+    entries = _codegen_cache_entries(spark)
+    if entries < CODEGEN_CACHE_ENTRIES:
+        warnings.warn(
+            f"prepare_session: {CODEGEN_CACHE_CONF} is {entries} in this session, "
+            f"below the engine's {CODEGEN_CACHE_ENTRIES}; it is a static conf, so "
+            "warm plans recompile their generated code unless the session is "
+            "built with it",
+            RuntimeWarning,
+            stacklevel=3,
+        )
 
 
 def get_session(
@@ -90,6 +138,7 @@ def get_session(
         builder = builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
     builder = builder.config("spark.ui.enabled", "false")
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+    builder = builder.config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     if extra_confs:

@@ -7,13 +7,14 @@ threshold off, keeps its partitioned plan."""
 import pytest
 from py4j.protocol import Py4JError
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from blockchair_etl_spark.caching import jvm_plan
-from blockchair_etl_spark.io import sources
+from blockchair_etl_spark.io import sinks, sources
 from blockchair_etl_spark.io.sinks import REFERENCE_MATERIALIZATIONS, materialize
 from blockchair_etl_spark.quality.checks import REFERENCE_SUITE, run_checks
 from blockchair_etl_spark.query.analytics import distinct_transaction_count
-from blockchair_etl_spark.transform import staging
+from blockchair_etl_spark.transform import intermediate, staging
 
 from blockchain_fixtures import generate, write_parquet
 
@@ -108,3 +109,42 @@ def test_reference_suite_runs_one_job_on_day_size_inputs(spark, tmp_path):
     assert len(jobs) == 1, jobs
     assert [c.name for c in checks] == [f"{t}.{k}.{c}" for t, k, c in REFERENCE_SUITE]
     assert all(c.passed for c in checks), [c.name for c in checks if not c.passed]
+
+
+def test_single_partition_join_writes_without_a_shuffle(spark, tmp_path, monkeypatch):
+    """Without CBO a join's size estimate is the product of its inputs',
+    so the gate declines int_transaction_flows at day size; its plan
+    over gated inputs is already one partition, and the write sorts it
+    in place instead of hash-partitioning it first."""
+    paths = write_parquet(generate(), str(tmp_path))
+    raw = {n: sources.one_partition_if_small(spark.read.parquet(p), n) for n, p in paths.items()}
+    flows = intermediate.int_transaction_flows(
+        *(getattr(staging, f"stg_{n}")(raw[n]) for n in ("blocks", "transactions", "inputs", "outputs"))
+    )
+    assert sources.one_partition_if_small(flows, "flows") is flows
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(_executed(self._df))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    name = "int_transaction_flows"
+    out = materialize(flows, name, REFERENCE_MATERIALIZATIONS[name], str(tmp_path / "lake"))
+    assert "REPARTITION_BY_COL" not in written[0]
+    assert len(list((tmp_path / "lake" / name).glob("*.parquet"))) == 1
+    assert out.count() == flows.count()
+
+
+def test_partitioned_or_unreadable_plan_is_not_one_partition(spark, monkeypatch):
+    df = spark.range(0, 100, 1, 4)
+    assert not sinks._plans_one_partition(df, "four slices")
+    assert sinks._plans_one_partition(df.coalesce(1), "one slice")
+
+    def broken(df, stage="analyzed"):
+        raise Py4JError("forced")
+
+    monkeypatch.setattr(sinks, "jvm_plan", broken)
+    with pytest.warns(RuntimeWarning, match="physical partitioning of the probe relation failed"):
+        assert not sinks._plans_one_partition(df.coalesce(1), "the probe relation")
