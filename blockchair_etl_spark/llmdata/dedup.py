@@ -683,7 +683,7 @@ def embedding_dup_pairs(
     (#distinct vectors)² + h star edges. Embedding dedup usually runs
     AFTER exact dedup, but the operator contract must not rely on
     that (the cap is the in-operator guarantee)."""
-    from .similarity import adaptive_n_planes, lsh_bucket_col
+    from .similarity import _fast_dot, adaptive_n_planes, lsh_bucket_col
 
     if dim is None and stats is not None:
         dim = stats.dim
@@ -704,15 +704,8 @@ def embedding_dup_pairs(
     # fresh plan by ~2.5s of analysis/codegen. For truly pair-heavy
     # scale configurations use semantic_dedup_survivors_grouped, which
     # replaces the pair join with per-cluster BLAS gram matrices.
-    def _fdot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-
     vec = F.col(vec_col)
-    fast_cosine = _fdot(F.col("va"), F.col("vb")) / (F.col("norm_a") * F.col("norm_b"))
+    fast_cosine = _fast_dot(F.col("va"), F.col("vb")) / (F.col("norm_a") * F.col("norm_b"))
 
     if block_col is not None:
         blks = [F.col(block_col)]
@@ -756,7 +749,7 @@ def embedding_dup_pairs(
         F.col(id_col).alias("id"),
         vec.alias("v"),
         F.posexplode(F.array(*blks)).alias("seed_idx", "blk"),
-        F.sqrt(_fdot(vec, vec)).alias("norm"),  # once per ROW, not per pair
+        F.sqrt(_fast_dot(vec, vec)).alias("norm"),  # once per ROW, not per pair
         # exact-decimal norm, ALSO once per row: the rescore below then
         # pays one decimal dot per surviving pair instead of three
         # (cosine_expr recomputes both norms per pair — measured 3x the
@@ -1996,21 +1989,14 @@ def build_embedding_store(
     (same operational contract as any partitioned index; a store
     written before the norm_d column can be upgraded by re-running
     build_embedding_store over its (id, v) projection)."""
-    from .similarity import dot_expr, lsh_bucket_col
-
-    def _fdot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
+    from .similarity import _fast_dot, dot_expr, lsh_bucket_col
 
     vec = F.col(vec_col)
     return emb.select(
         F.col(id_col).alias("id"),
         vec.alias("v"),
         lsh_bucket_col(vec, dim, n_planes=n_planes, seed=seed).alias("blk"),
-        F.sqrt(_fdot(vec, vec)).alias("norm"),
+        F.sqrt(_fast_dot(vec, vec)).alias("norm"),
         F.sqrt(dot_expr(vec, vec)).alias("norm_d"),
     )
 
@@ -2055,13 +2041,6 @@ def incremental_embedding_dedup(
     prefilter + exact-decimal rescore mirrors embedding_dup_pairs, so
     scores are bit-identical to the one-shot path."""
 
-    def _fdot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-
     # tracked (caching.py): same store-write-back contract as
     # incremental_minhash_dedup above.
     new_store = tracked_persist(
@@ -2083,7 +2062,7 @@ def incremental_embedding_dedup(
         )
         return empty, new_store
 
-    from .similarity import dot_expr
+    from .similarity import _fast_dot, dot_expr
 
     a = new_store.select(
         F.col("id").alias("new_id"), F.col("v").alias("va"),
@@ -2115,7 +2094,7 @@ def incremental_embedding_dedup(
             )
         )
         b = small.unionByName(reps.select(*bcols))
-    fast = _fdot(F.col("va"), F.col("vb")) / (F.col("norm_a") * F.col("norm_b"))
+    fast = _fast_dot(F.col("va"), F.col("vb")) / (F.col("norm_a") * F.col("norm_b"))
     # rescore with the store-carried exact norms: one decimal dot per
     # surviving pair (cosine_expr would recompute both norms per pair);
     # bit-identical quotient — same subexpressions, evaluated per row

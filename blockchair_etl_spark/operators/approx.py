@@ -2,19 +2,50 @@
 
 Exact COUNT DISTINCT shuffles every distinct value; exact percentiles
 shuffle every row. At 100 TB the sketch forms trade bounded error for
-O(1) state per group: HyperLogLog++ for cardinality
+O(1) state per group. Two wrappers pin the engine's accuracy defaults
+for Spark's own sketches: HyperLogLog++ for cardinality
 (`approx_count_distinct`, rsd-tunable) and the Greenwald-Khanna /
-KLL-style quantile sketch (`percentile_approx`). These wrappers pin the
-engine's accuracy defaults; error bounds are asserted in
-tests/test_approx.py.
+KLL-style quantile sketch (`percentile_approx`); error bounds are
+asserted in tests/test_approx.py. Their results depend on Spark
+internals, so the rest of the module is a family of DETERMINISTIC
+sketches that a DuckDB oracle checks bit for bit: KMV (k minimum
+values) with its θ set algebra, HyperLogLog registers, count-min and a
+fixed-bin histogram.
+
+The family's contract:
+
+- One hash. KMV and HLL hash a value's string form to the first 60
+  bits (15 hex digits) of its md5 (``_hash60``): both engines print md5
+  as the same lowercase hex, a 60-bit value fits a BIGINT exactly, and
+  the hash space is 2^60 for every estimate.
+- Each formula is written once, as a builder over zero or more group
+  keys. The flat HLL registers, merge and readout, the flat count-min
+  build and probe and the flat KMV estimate are the grouped builders
+  over no keys (``df.groupBy().agg(...)`` is the plan ``df.agg(...)``
+  builds). The flat and grouped public functions differ only where
+  their behaviour does: which null keys they keep and whether they
+  broadcast.
+- KMV mins keep two algorithms: the flat k smallest distinct hashes as
+  one top-k, and per group a two-level window cut salted on the hash
+  (:func:`kmv_mins_grouped`).
+- The θ set algebra (intersection, difference, Jaccard and the grouped
+  one-pass form) shares one θ rule and one inclusion scaling
+  n · 2^60 / θ.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+import math
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 DEFAULT_RSD = 0.02  # ~2% relative standard deviation (HLL++ precision)
 DEFAULT_QUANTILE_ACCURACY = 10_000  # 1/accuracy max rank error
+
+_HASH_BITS = 60  # width of the family's md5-prefix hash
+_SPACE = 1 << _HASH_BITS  # the hash space: θ of a complete sketch
+_KMV_SALTS = 16  # level-1 windows per group in kmv_mins_grouped
 
 
 def approx_distinct(c: Column | str, rsd: float = DEFAULT_RSD) -> Column:
@@ -30,18 +61,70 @@ def approx_quantiles(
     )
 
 
-def kmv_distinct(
-    df: DataFrame, c: Column | str, k: int = 64, hash_bits: int = 60
-) -> DataFrame:
+def _hash60(col: Column) -> Column:
+    """The family's one hash: the first 60 bits of md5(string form) as a
+    non-negative BIGINT."""
+    return F.conv(
+        F.substring(F.md5(col.cast("string")), 1, _HASH_BITS // 4), 16, 10
+    ).cast("bigint")
+
+
+def _require(rel: DataFrame, fn: str, kind: str, cols: tuple[str, ...]) -> None:
+    """Fail loudly when a stored grouped relation lacks its columns,
+    instead of grouping a coincidental column."""
+    missing = [c for c in cols if c not in rel.columns]
+    if missing:
+        raise ValueError(
+            f"{fn} expects a grouped {kind} relation with columns {cols}; "
+            f"missing {missing} in {rel.columns} — pass in_col= for a "
+            "store whose group column is named differently"
+        )
+
+
+# ---------------------------------------------------------------------------
+# KMV: the k minimum distinct hashes
+# ---------------------------------------------------------------------------
+
+
+def _kmv_estimate(mins: DataFrame, k: int, *keys: Column) -> DataFrame:
+    """The KMV estimator over zero or more group keys: (n_taken,
+    kth_min_hash, distinct_estimate) with D ≈ (k-1) · 2^60 / h_(k),
+    the exact count below k."""
+    n_taken = F.count(F.lit(1))
+    kth = F.max("hv")
+    return mins.groupBy(*keys).agg(
+        n_taken.cast("bigint").alias("n_taken"),
+        kth.alias("kth_min_hash"),
+        F.when(n_taken < k, n_taken.cast("double"))
+        .otherwise(F.lit(float(k - 1)) * F.lit(float(_SPACE)) / kth.cast("double"))
+        .alias("distinct_estimate"),
+    )
+
+
+def _min_k(hv: DataFrame, k: int) -> DataFrame:
+    return hv.distinct().orderBy(F.asc("hv")).limit(k)
+
+
+def _min_k_per(rel: DataFrame, k: int, *partition) -> DataFrame:
+    """Rows of ``rel`` whose hv is among the k smallest of their window
+    partition."""
+    w = Window.partitionBy(*partition).orderBy(F.asc("hv"))
+    return (
+        rel.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= int(k))
+        .drop("rn")
+    )
+
+
+def kmv_distinct(df: DataFrame, c: Column | str, k: int = 64) -> DataFrame:
     """K-minimum-values distinct-count sketch — the *deterministic*
     cardinality estimator (HLL++ above is cheaper but its result depends
     on Spark's internal hash, so it cannot be oracle-checked cross-engine).
 
-    Hash each value to a uniform 60-bit integer (first 15 hex chars of
-    md5 — both Spark and DuckDB produce identical lowercase-hex md5, and
-    60 bits fits a BIGINT exactly), keep the k smallest *distinct*
-    hashes, and estimate D ≈ (k-1) · 2^60 / h_(k). With fewer than k
-    distinct values the sketch degenerates to the exact count.
+    Hash each value with the family's 60-bit hash, keep the k smallest
+    *distinct* hashes (:func:`kmv_mins`), and estimate
+    D ≈ (k-1) · 2^60 / h_(k). With fewer than k distinct values the
+    sketch degenerates to the exact count.
 
     Scale shape: one hash-distinct shuffle over D values (map-side
     partial dedup), then TakeOrderedAndProject — each partition forwards
@@ -49,42 +132,17 @@ def kmv_distinct(
     O(k · partitions), independent of row count. Returns a 1-row frame
     (n_taken, kth_min_hash, distinct_estimate).
     """
-    col = F.col(c) if isinstance(c, str) else c
-    space = float(1 << hash_bits)
-    hv = F.conv(F.substring(F.md5(col.cast("string")), 1, hash_bits // 4), 16, 10).cast(
-        "bigint"
-    )
-    mins = (
-        df.filter(col.isNotNull())
-        .select(hv.alias("hv"))
-        .distinct()
-        .orderBy(F.asc("hv"))
-        .limit(k)
-    )
-    n_taken = F.count(F.lit(1))
-    kth = F.max("hv")
-    return mins.agg(
-        n_taken.cast("bigint").alias("n_taken"),
-        kth.alias("kth_min_hash"),
-        F.when(n_taken < k, n_taken.cast("double"))
-        .otherwise(F.lit(float(k - 1)) * F.lit(space) / kth.cast("double"))
-        .alias("distinct_estimate"),
-    )
+    return _kmv_estimate(kmv_mins(df, c, k), k)
 
 
 def kmv_merge_mins(sketches: list[DataFrame], k: int = 64) -> DataFrame:
     """The lossless KMV merge on `mins` relations: union the min-hash
     sets, dedup, re-take the k smallest. The one definition of the
     merge, which kmv_union's estimation calls."""
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    return merged.distinct().orderBy(F.asc("hv")).limit(k)
+    return _min_k(reduce(DataFrame.unionByName, sketches), k)
 
 
-def kmv_union(
-    sketches: list[DataFrame], k: int = 64, hash_bits: int = 60
-) -> DataFrame:
+def kmv_union(sketches: list[DataFrame], k: int = 64) -> DataFrame:
     """Merge KMV sketches: union their min-hash sets, re-take the k
     smallest, re-estimate. This is the property that makes KMV a proper
     distributed sketch — per-partition (or per-day, per-source) sketches
@@ -92,44 +150,18 @@ def kmv_union(
     can be sketched incrementally and combined at O(k) cost per merge.
     Inputs are `mins` relations of kmv_mins(); returns the same 1-row
     estimate frame as kmv_distinct."""
-    space = float(1 << hash_bits)
-    mins = kmv_merge_mins(sketches, k)
-    n_taken = F.count(F.lit(1))
-    kth = F.max("hv")
-    return mins.agg(
-        n_taken.cast("bigint").alias("n_taken"),
-        kth.alias("kth_min_hash"),
-        F.when(n_taken < k, n_taken.cast("double"))
-        .otherwise(F.lit(float(k - 1)) * F.lit(space) / kth.cast("double"))
-        .alias("distinct_estimate"),
-    )
+    return _kmv_estimate(kmv_merge_mins(sketches, k), k)
 
 
-def kmv_mins(
-    df: DataFrame, c: Column | str, k: int = 64, hash_bits: int = 60
-) -> DataFrame:
+def kmv_mins(df: DataFrame, c: Column | str, k: int = 64) -> DataFrame:
     """The reusable half of kmv_distinct: the k smallest distinct 60-bit
     md5 hashes of a column, as a (hv) relation suitable for kmv_union."""
     col = F.col(c) if isinstance(c, str) else c
-    hv = F.conv(F.substring(F.md5(col.cast("string")), 1, hash_bits // 4), 16, 10).cast(
-        "bigint"
-    )
-    return (
-        df.filter(col.isNotNull())
-        .select(hv.alias("hv"))
-        .distinct()
-        .orderBy(F.asc("hv"))
-        .limit(k)
-    )
+    return _min_k(df.filter(col.isNotNull()).select(_hash60(col).alias("hv")), k)
 
 
 def kmv_mins_grouped(
-    df: DataFrame,
-    group_col: str,
-    c: Column | str,
-    k: int = 64,
-    hash_bits: int = 60,
-    n_salts: int = 16,
+    df: DataFrame, group_col: str, c: Column | str, k: int = 64
 ) -> DataFrame:
     """Per-GROUP KMV sketch state: the k smallest distinct 60-bit md5
     hashes of ``c`` within each group, as a (g, hv) relation — the
@@ -142,46 +174,25 @@ def kmv_mins_grouped(
     min-k cut. A single per-group window would pull every distinct
     hash of a hot group through one task's sort (a 1B-distinct-user
     group = a 1B-row single-task sort at corpus scale), so level 1
-    cuts min-k within (g, hv % n_salts) — n_salts parallel windows per
-    group, each bounded by its salt share — and level 2 takes the
-    per-group min-k of the surviving n_salts*k rows. Min-k union is
-    lossless (the kmv_merge_mins theorem), so the two-level result is
-    IDENTICAL to the direct cut — the oracle computes the direct form
-    and hash-matches. Never a per-group collect_set. The salt derives
-    from hv itself (already uniform), purely internal."""
+    cuts min-k within (g, hv % 16) — 16 parallel windows per group,
+    each bounded by its salt share — and level 2 takes the per-group
+    min-k of the surviving 16·k rows. Min-k union is lossless (the
+    kmv_merge_mins theorem), so the two-level result is IDENTICAL to the
+    direct cut — the oracle computes the direct form and hash-matches.
+    Never a per-group collect_set. The salt derives from hv itself
+    (already uniform)."""
     col = F.col(c) if isinstance(c, str) else c
-    hv = F.conv(
-        F.substring(F.md5(col.cast("string")), 1, hash_bits // 4), 16, 10
-    ).cast("bigint")
-    from pyspark.sql import Window
-
     distinct = (
         df.filter(col.isNotNull())
-        .select(F.col(group_col).alias("g"), hv.alias("hv"))
+        .select(F.col(group_col).alias("g"), _hash60(col).alias("hv"))
         .distinct()
     )
-    w1 = Window.partitionBy("g", F.pmod(F.col("hv"), F.lit(int(n_salts)))).orderBy(
-        F.asc("hv")
-    )
-    pruned = (
-        distinct.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= int(k))
-        .drop("rn")
-    )
-    w2 = Window.partitionBy("g").orderBy(F.asc("hv"))
-    return (
-        pruned.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= int(k))
-        .drop("rn")
-    )
+    pruned = _min_k_per(distinct, k, "g", F.pmod(F.col("hv"), F.lit(_KMV_SALTS)))
+    return _min_k_per(pruned, k, "g")
 
 
 def kmv_distinct_grouped(
-    df: DataFrame,
-    group_col: str,
-    c: Column | str,
-    k: int = 64,
-    hash_bits: int = 60,
+    df: DataFrame, group_col: str, c: Column | str, k: int = 64
 ) -> DataFrame:
     """Per-group distinct-count estimates off the grouped KMV sketch:
     → (group, n_taken, kth_min_hash, distinct_estimate) — one row per
@@ -189,64 +200,29 @@ def kmv_distinct_grouped(
     kmv_distinct. The read half is :func:`kmv_estimate_grouped`, so a
     maintained (g, hv) store serves the same relation without
     rescanning the corpus."""
-    return kmv_estimate_grouped(
-        kmv_mins_grouped(df, group_col, c, k, hash_bits), group_col, k, hash_bits
-    )
+    return kmv_estimate_grouped(kmv_mins_grouped(df, group_col, c, k), group_col, k)
 
 
 def kmv_estimate_grouped(
-    mins: DataFrame,
-    group_col: str,
-    k: int = 64,
-    hash_bits: int = 60,
-    in_col: str = "g",
+    mins: DataFrame, group_col: str, k: int = 64, in_col: str = "g"
 ) -> DataFrame:
     """Estimation read-half over a grouped mins relation (``in_col``,
-    hv): D_g ≈ (k-1) · 2^60 / h_(k) per group, exact count below k.
-    ``group_col`` names the OUTPUT group column; ``in_col`` names the
-    input relation's group column (default 'g', the kmv_mins_grouped /
-    kmv_merge_mins_grouped contract) — a store built with a different
-    column name passes it explicitly, and a wrong name fails loudly
-    here instead of grouping a coincidental 'g' column (r14 review)."""
-    missing = [c for c in (in_col, "hv") if c not in mins.columns]
-    if missing:
-        raise ValueError(
-            f"kmv_estimate_grouped expects a grouped mins relation with "
-            f"columns ({in_col!r}, 'hv'); missing {missing} in "
-            f"{mins.columns} — pass in_col= for a store whose group "
-            "column is named differently"
-        )
-    space = float(1 << hash_bits)
-    n_taken = F.count(F.lit(1))
-    kth = F.max("hv")
-    return mins.groupBy(F.col(in_col).alias(group_col)).agg(
-        n_taken.cast("bigint").alias("n_taken"),
-        kth.alias("kth_min_hash"),
-        F.when(n_taken < k, n_taken.cast("double"))
-        .otherwise(F.lit(float(k - 1)) * F.lit(space) / kth.cast("double"))
-        .alias("distinct_estimate"),
-    )
+    hv): the kmv_distinct estimator per group. ``group_col`` names the
+    OUTPUT group column; ``in_col`` names the input relation's group
+    column (default 'g', the kmv_mins_grouped / kmv_merge_mins_grouped
+    contract) — a store built with a different column name passes it
+    explicitly, and a wrong name fails loudly here instead of grouping a
+    coincidental 'g' column."""
+    _require(mins, "kmv_estimate_grouped", "mins", (in_col, "hv"))
+    return _kmv_estimate(mins, k, F.col(in_col).alias(group_col))
 
 
-def kmv_merge_mins_grouped(
-    sketches: list[DataFrame], k: int = 64
-) -> DataFrame:
+def kmv_merge_mins_grouped(sketches: list[DataFrame], k: int = 64) -> DataFrame:
     """The lossless grouped merge: union (g, hv) relations, dedup,
     re-take each group's k smallest — the per-group form of
     kmv_merge_mins (idempotent: re-merging the same sketch changes
     nothing)."""
-    from pyspark.sql import Window
-
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    w = Window.partitionBy("g").orderBy(F.asc("hv"))
-    return (
-        merged.distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .drop("rn")
-    )
+    return _min_k_per(reduce(DataFrame.unionByName, sketches).distinct(), k, "g")
 
 
 def winsorize(
@@ -280,11 +256,15 @@ def winsorize(
     )
 
 
-# Count-min sketch: pairwise-independent-style integer hash rows
-# ((a*k + b) mod p) mod width with p prime. Every operation is exact
-# 64-bit integer arithmetic, so the sketch — unlike HLL++ — is
-# bit-identical across engines and oracle-checkable. a*k stays in
-# int64 because k is reduced mod p first (a < p ≈ 1e9 → product < 1e18).
+# ---------------------------------------------------------------------------
+# Count-min sketch
+# ---------------------------------------------------------------------------
+
+# Pairwise-independent-style integer hash rows ((a*k + b) mod p) mod
+# width with p prime. Every operation is exact 64-bit integer
+# arithmetic, so the sketch — unlike HLL++ — is bit-identical across
+# engines and oracle-checkable. a*k stays in int64 because k is reduced
+# mod p first (a < p ≈ 1e9 → product < 1e18).
 CMS_PRIME = 1_000_000_007
 CMS_PARAMS: tuple[tuple[int, int], ...] = (
     (3, 17),
@@ -307,64 +287,15 @@ def _cms_col(key: Column, a: int, b: int, width: int) -> Column:
     )
 
 
-def cms_build(
-    df: DataFrame, key_col: str, width: int = 256
+def _cms_cells(
+    df: DataFrame, key_col: str, width: int, group_col: str | None = None
 ) -> DataFrame:
-    """Count-min sketch of a key column as a (row_id, col_id, cnt)
-    relation — depth = len(CMS_PARAMS) rows × ``width`` counters.
-
-    The sketch IS a DataFrame, which makes it mergeable the
-    map-reduce way: union two sketches and re-aggregate
-    (``cms_merge``) — the per-source/per-day rollup shape. Build cost
-    is one map-side explode (depth cells per row) plus one hash-agg on
-    (row, col): fixed O(depth × width) state per source regardless of
-    key cardinality, which is the entire point at 100 TB."""
+    """The count-min build over zero or one group key: explode each row
+    into its depth (row_id, col_id) cells and count per cell."""
     key = F.col(key_col)
+    g = [] if group_col is None else ["g"]
     cells = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row_id"),
-                        _cms_col(key, a, b, width).alias("col_id"),
-                    )
-                    for i, (a, b) in enumerate(CMS_PARAMS)
-                ]
-            )
-        ).alias("cell")
-    )
-    return cells.groupBy(
-        F.col("cell.row_id").alias("row_id"), F.col("cell.col_id").alias("col_id")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketches built with the same params: cell-wise sum."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row_id", "col_id").agg(F.sum("cnt").alias("cnt"))
-
-
-def cms_build_grouped(
-    df: DataFrame, group_col: str, key_col: str, width: int = 256
-) -> DataFrame:
-    """Per-GROUP count-min sketch as a (g, row_id, col_id, cnt)
-    relation — the grouped sibling of cms_build and the heavy-hitters
-    half of the per-dimension dashboard pair (kmv_mins_grouped is the
-    cardinality half): top users per event type / per day / per source
-    at O(groups × depth × width) state instead of an exact per-group
-    key count.
-
-    Scale shape: one map-side explode (depth cells per row) and ONE
-    hash-aggregation on (g, row, col) — partial aggregation bounds the
-    exchange at O(groups × depth × width) rows regardless of stream
-    length, and unlike a per-group top-k window there is no sort and
-    no hot-group single-task hazard: a group receiving ~all events
-    still occupies exactly depth × width cells."""
-    key = F.col(key_col)
-    cells = df.filter(key.isNotNull()).select(
-        F.col(group_col).alias("g"),
+        *[F.col(group_col).alias(n) for n in g],
         F.explode(
             F.array(
                 *[
@@ -378,10 +309,94 @@ def cms_build_grouped(
         ).alias("cell"),
     )
     return cells.groupBy(
-        "g",
-        F.col("cell.row_id").alias("row_id"),
-        F.col("cell.col_id").alias("col_id"),
+        *g, F.col("cell.row_id").alias("row_id"), F.col("cell.col_id").alias("col_id")
     ).agg(F.count(F.lit(1)).alias("cnt"))
+
+
+def _cms_probe(
+    sketch: DataFrame,
+    keys: DataFrame,
+    key_col: str,
+    width: int,
+    group_col: str | None,
+    in_col: str,
+    broadcast: bool,
+) -> DataFrame:
+    """Point estimates over zero or one group key: the min over the
+    depth rows of each probe row's addressed counters, joined one depth
+    row at a time on (group, column)."""
+    key = F.col(key_col)
+    g = [] if group_col is None else ["__g"]
+    addressed = keys.select(
+        *[F.col(group_col).alias(n) for n in g],
+        key.alias("__k"),
+        *[
+            _cms_col(key, a, b, width).alias(f"__c{i}")
+            for i, (a, b) in enumerate(CMS_PARAMS)
+        ],
+    )
+    # left join + coalesce 0: a probed key whose addressed cell was
+    # never touched (true count 0 — the sketch relation is sparse) must
+    # still return an estimate, not vanish from the output.
+    for i in range(len(CMS_PARAMS)):
+        s = sketch.filter(F.col("row_id") == i).select(
+            *[F.col(in_col).alias(n) for n in g],
+            F.col("col_id").alias(f"__c{i}"),
+            F.col("cnt").alias(f"__cnt{i}"),
+        )
+        addressed = addressed.join(
+            F.broadcast(s) if broadcast else s, [*g, f"__c{i}"], "left"
+        )
+    est = F.least(
+        *[F.coalesce(F.col(f"__cnt{i}"), F.lit(0)) for i in range(len(CMS_PARAMS))]
+    )
+    return addressed.select(
+        *[F.col(n).alias(group_col) for n in g],
+        F.col("__k").alias(key_col),
+        est.cast("bigint").alias("est_count"),
+    )
+
+
+def cms_build(df: DataFrame, key_col: str, width: int = 256) -> DataFrame:
+    """Count-min sketch of a key column as a (row_id, col_id, cnt)
+    relation — depth = len(CMS_PARAMS) rows × ``width`` counters. NULL
+    keys are counted, in a NULL-column cell of each depth row.
+
+    The sketch IS a DataFrame, which makes it mergeable the
+    map-reduce way: union two sketches and re-aggregate
+    (``cms_merge``) — the per-source/per-day rollup shape. Build cost
+    is one map-side explode (depth cells per row) plus one hash-agg on
+    (row, col): fixed O(depth × width) state per source regardless of
+    key cardinality, which is the entire point at 100 TB."""
+    return _cms_cells(df, key_col, width)
+
+
+def cms_merge(*sketches: DataFrame) -> DataFrame:
+    """Merge sketches built with the same params: cell-wise sum."""
+    return (
+        reduce(DataFrame.unionByName, sketches)
+        .groupBy("row_id", "col_id")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+
+
+def cms_build_grouped(
+    df: DataFrame, group_col: str, key_col: str, width: int = 256
+) -> DataFrame:
+    """Per-GROUP count-min sketch as a (g, row_id, col_id, cnt)
+    relation — the grouped sibling of cms_build and the heavy-hitters
+    half of the per-dimension dashboard pair (kmv_mins_grouped is the
+    cardinality half): top users per event type / per day / per source
+    at O(groups × depth × width) state instead of an exact per-group
+    key count. NULL keys are dropped.
+
+    Scale shape: one map-side explode (depth cells per row) and ONE
+    hash-aggregation on (g, row, col) — partial aggregation bounds the
+    exchange at O(groups × depth × width) rows regardless of stream
+    length, and unlike a per-group top-k window there is no sort and
+    no hot-group single-task hazard: a group receiving ~all events
+    still occupies exactly depth × width cells."""
+    return _cms_cells(df.filter(F.col(key_col).isNotNull()), key_col, width, group_col)
 
 
 def cms_estimate_grouped(
@@ -399,76 +414,19 @@ def cms_estimate_grouped(
     as kmv_estimate_grouped). The probe joins on (g, col) per depth
     row — never broadcast: the grouped sketch is O(groups × depth ×
     width) and groups can be many."""
-    missing = [c for c in (in_col, "row_id", "col_id", "cnt") if c not in sketch.columns]
-    if missing:
-        raise ValueError(
-            f"cms_estimate_grouped expects a grouped sketch relation "
-            f"with columns ({in_col!r}, 'row_id', 'col_id', 'cnt'); "
-            f"missing {missing} in {sketch.columns}"
-        )
-    key = F.col(key_col)
-    addressed = keys.select(
-        F.col(group_col).alias("__g"),
-        key.alias("__k"),
-        *[
-            _cms_col(key, a, b, width).alias(f"__c{i}")
-            for i, (a, b) in enumerate(CMS_PARAMS)
-        ],
-    )
-    # left join + coalesce 0, as in cms_estimate: an untouched cell is
-    # a sparse zero, not a missing probe row
-    for i in range(len(CMS_PARAMS)):
-        s = sketch.filter(F.col("row_id") == i).select(
-            F.col(in_col).alias("__g"),
-            F.col("col_id").alias(f"__c{i}"),
-            F.col("cnt").alias(f"__cnt{i}"),
-        )
-        addressed = addressed.join(s, ["__g", f"__c{i}"], "left")
-    est = F.least(
-        *[
-            F.coalesce(F.col(f"__cnt{i}"), F.lit(0))
-            for i in range(len(CMS_PARAMS))
-        ]
-    )
-    return addressed.select(
-        F.col("__g").alias(group_col),
-        F.col("__k").alias(key_col),
-        est.cast("bigint").alias("est_count"),
-    )
+    _require(sketch, "cms_estimate_grouped", "sketch", (in_col, "row_id", "col_id", "cnt"))
+    return _cms_probe(sketch, keys, key_col, width, group_col, in_col, broadcast=False)
 
 
 def cms_estimate(
     sketch: DataFrame, keys: DataFrame, key_col: str, width: int = 256
 ) -> DataFrame:
     """Point-estimate counts for ``keys``: min over the depth rows of
-    the addressed counters. CMS never under-counts; collisions only
-    inflate, bounded by ε = e/width of the total stream length with
-    probability 1 - (1/e)^depth."""
-    key = F.col(key_col)
-    addressed = keys.select(
-        key.alias("__k"),
-        *[
-            _cms_col(key, a, b, width).alias(f"__c{i}")
-            for i, (a, b) in enumerate(CMS_PARAMS)
-        ],
-    )
-    # left join + coalesce 0: a probed key whose addressed cell was
-    # never touched (true count 0 — the sketch relation is sparse) must
-    # still return an estimate, not vanish from the output.
-    for i in range(len(CMS_PARAMS)):
-        s = sketch.filter(F.col("row_id") == i).select(
-            F.col("col_id").alias(f"__c{i}"), F.col("cnt").alias(f"__cnt{i}")
-        )
-        addressed = addressed.join(F.broadcast(s), f"__c{i}", "left")
-    est = F.least(
-        *[
-            F.coalesce(F.col(f"__cnt{i}"), F.lit(0))
-            for i in range(len(CMS_PARAMS))
-        ]
-    )
-    return addressed.select(
-        F.col("__k").alias(key_col), est.cast("bigint").alias("est_count")
-    )
+    the addressed counters, each depth row of the sketch broadcast.
+    CMS never under-counts; collisions only inflate, bounded by
+    ε = e/width of the total stream length with probability
+    1 - (1/e)^depth."""
+    return _cms_probe(sketch, keys, key_col, width, None, "g", broadcast=True)
 
 
 def histogram_quantiles(
@@ -517,8 +475,8 @@ def histogram_bins(
     relation. Exposed separately because this is the MERGEABLE state:
     two sketches merge by summing cnt per (g, bin).
 
-    ``value_range`` is the RANGE CONTRACT (r16 verdict stretch #7):
-    the fixed-bin sketch's state bound is O(groups × range × scale) —
+    ``value_range`` is the RANGE CONTRACT: the fixed-bin sketch's state
+    bound is O(groups × range × scale) —
     it holds only while production values stay inside the scale the
     bins were sized for. When the contract is declared, a value outside
     [lo, hi] raises IN-PLAN with the offending value in the message
@@ -571,8 +529,6 @@ def histogram_quantiles_from_bins(
     """The read half of histogram_quantiles: quantile estimates off a
     (g, bin, cnt) cell relation — run it over a stored sketch at any
     time without touching the raw events."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("g").orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -605,26 +561,16 @@ def histogram_quantiles_from_bins(
 HLL_P = 10  # 2^10 = 1024 registers — the production default precision
 
 
-def _hll_hash(col: Column) -> Column:
-    """The shared 60-bit md5 hash (identical to kmv_mins' — one hash
-    definition across the sketch family, so HLL and KMV sketches built
-    from the same column are derived from the same hash stream)."""
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
-
-
 def _bitlen_tree(col: Column, width: int) -> Column:
     """Bit length of a positive integer in [1, 2^width) as a
     binary-search CASE tree over power-of-two thresholds — ~log2(width)
-    codegen'd int64 comparisons per row, no string allocation. Replaces
-    the conv-to-binary-string form (r18, guide §1.2 per-task work:
-    conv() parses the value through a decimal string and builds an up
-    to ``width``-char binary string per row — two allocations the
-    driver entry paid ~0.6 s for at sf0.1). Exact-integer comparisons
-    only, so the value is identical to length(bin(x)) for every input
-    in range — the bit-portability contract is untouched (parity pinned
-    over all 1024 live registers and by the register property tests)."""
+    codegen'd int64 comparisons per row, no string allocation (conv()
+    to a binary string would parse each value through a decimal string
+    and build an up to ``width``-char string per row). Exact-integer
+    comparisons only, so the value is identical to length(bin(x)) for
+    every input in range — the bit-portability contract is untouched
+    (parity pinned over all 1024 live registers and by the register
+    property tests)."""
     def tree(lo: int, hi: int) -> Column:
         if lo == hi:
             return F.lit(lo)
@@ -637,23 +583,88 @@ def _bitlen_tree(col: Column, width: int) -> Column:
     return tree(1, width)
 
 
-def _hll_bucket_r(hv: Column, p: int) -> tuple[Column, Column, int]:
+def _hll_bucket_r(hv: Column, p: int) -> tuple[Column, Column]:
     """(bucket, rank) registers from a 60-bit hash: bucket = top p
     bits; rank = position of the first 1-bit in the remaining w = 60-p
     bits (1-based), w+1 when they are all zero — Flajolet's rho. The
     bit-length is computed by exact integer comparisons (_bitlen_tree;
     value-identical to the minimal-binary-string length both engines
     produce) — no log2, no libm variance."""
-    w = 60 - p
+    w = _HASH_BITS - p
     bucket = F.shiftright(hv, w)
     rest = hv.bitwiseAND(F.lit((1 << w) - 1))
-    bitlen = _bitlen_tree(rest, w)
     r = (
         F.when(rest == 0, F.lit(w + 1))
-        .otherwise(F.lit(w + 1) - bitlen)
+        .otherwise(F.lit(w + 1) - _bitlen_tree(rest, w))
         .cast("bigint")
     )
-    return bucket, r, w
+    return bucket, r
+
+
+def _hll_max(rel: DataFrame, *keys: str) -> DataFrame:
+    """Register-wise MAX over zero or one group key: the register build
+    and the HLL union law."""
+    return rel.groupBy(*keys, "bucket").agg(F.max("r").alias("r"))
+
+
+def _hll_registers(
+    df: DataFrame, c: Column | str, p: int, group_col: str | None = None
+) -> DataFrame:
+    """The register build over zero or one group key; a grouped build
+    drops NULL groups as well as NULL values."""
+    col = F.col(c) if isinstance(c, str) else c
+    bucket, r = _hll_bucket_r(_hash60(col), p)
+    g = [] if group_col is None else ["g"]
+    keep = col.isNotNull()
+    if group_col is not None:
+        keep = keep & F.col(group_col).isNotNull()
+    rows = df.filter(keep).select(
+        *[F.col(group_col).alias(n) for n in g], bucket.alias("bucket"), r.alias("r")
+    )
+    return _hll_max(rows, *g)
+
+
+def _hll_constant(p: int) -> float:
+    """alpha_m * m^2 * 2^(w+1) — the raw-estimate numerator, computed
+    driver-side ONCE so both engines divide the SAME double literal by
+    the integer harmonic sum (one exactly-rounded IEEE division ⇒
+    bit-identical estimates)."""
+    m = 1 << p
+    w = _HASH_BITS - p
+    alpha = 0.7213 / (1.0 + 1.079 / m)
+    return alpha * m * m * float(1 << (w + 1))
+
+
+def _hll_readout(
+    registers: DataFrame, p: int, group_col: str | None = None, in_col: str = "g"
+) -> DataFrame:
+    """The HLL readout over zero or one group key; see hll_estimate."""
+    m = 1 << p
+    w = _HASH_BITS - p
+    g = [] if group_col is None else ["__g"]
+    agg = registers.groupBy(*[F.col(in_col).alias(n) for n in g]).agg(
+        F.count(F.lit(1)).alias("__n_present"),
+        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {w + 1} - r)")).alias(
+            "__s_present"
+        ),
+    )
+    zeros = F.lit(m) - F.col("__n_present")
+    # the global aggregate of an empty relation sums to NULL
+    s = F.coalesce(F.col("__s_present"), F.lit(0)) + zeros * F.lit(1 << (w + 1))
+    raw = F.lit(_hll_constant(p)) / s.cast("double")
+    return agg.select(
+        *[F.col(n).alias(group_col) for n in g],
+        F.lit(m).cast("bigint").alias("m"),
+        zeros.cast("bigint").alias("zero_registers"),
+        s.cast("bigint").alias("s_scaled"),
+        raw.alias("raw_estimate"),
+        # the standard regime test (Flajolet: linear counting when
+        # E_raw <= 5m/2 and zero registers exist) — a double-vs-literal
+        # comparison, engine-exact; the correction itself is
+        # m·ln(m/zero_registers), applied serving-side from the emitted
+        # statistics because ln is not bit-portable
+        ((raw <= F.lit(2.5 * m)) & (zeros > 0)).alias("use_linear_counting"),
+    )
 
 
 def hll_registers(df: DataFrame, c: Column | str, p: int = HLL_P) -> DataFrame:
@@ -665,14 +676,7 @@ def hll_registers(df: DataFrame, c: Column | str, p: int = HLL_P) -> DataFrame:
     max over repeated keys is the key's own rho — which is also what
     makes the merge (register-wise max) IDEMPOTENT, the KMV-class
     replay-safety the CMS cell sums lack."""
-    col = F.col(c) if isinstance(c, str) else c
-    bucket, r, _ = _hll_bucket_r(_hll_hash(col), p)
-    return (
-        df.filter(col.isNotNull())
-        .select(bucket.alias("bucket"), r.alias("r"))
-        .groupBy("bucket")
-        .agg(F.max("r").alias("r"))
-    )
+    return _hll_registers(df, c, p)
 
 
 def hll_merge(sketches: list[DataFrame]) -> DataFrame:
@@ -680,10 +684,7 @@ def hll_merge(sketches: list[DataFrame]) -> DataFrame:
     HLL union law (sketch of the union of the streams), and a
     semantic no-op on re-merge: per-shard / per-day registers combine
     at O(2^p) cost on a 100 TB corpus, replay-safe."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("bucket").agg(F.max("r").alias("r"))
+    return _hll_max(reduce(DataFrame.unionByName, sketches))
 
 
 def hll_corrected_estimate(row) -> float:
@@ -694,11 +695,19 @@ def hll_corrected_estimate(row) -> float:
     bit-portability contract) — this is the documented driver/dashboard
     step that consumes the emitted (m, zero_registers, raw_estimate,
     use_linear_counting) sufficient statistics."""
-    import math
-
     if row.use_linear_counting:
         return row.m * math.log(row.m / row.zero_registers)
     return row.raw_estimate
+
+
+def _inclusion_exclusion(ea: float, eb: float, eu: float) -> dict:
+    """|A∩B| ≈ est(A) + est(B) − est(A∪B), clamped at 0."""
+    return {
+        "est_a": ea,
+        "est_b": eb,
+        "est_union": eu,
+        "intersection_estimate": max(0.0, ea + eb - eu),
+    }
 
 
 def hll_intersect_estimate(
@@ -725,17 +734,12 @@ def hll_intersect_estimate(
 
     Returns a dict (est_a, est_b, est_union, intersection_estimate),
     each after the serving-side linear-counting correction."""
-    ea = hll_corrected_estimate(hll_estimate(reg_a, p).first())
-    eb = hll_corrected_estimate(hll_estimate(reg_b, p).first())
-    eu = hll_corrected_estimate(
-        hll_estimate(hll_merge([reg_a, reg_b]), p).first()
+    return _inclusion_exclusion(
+        *(
+            hll_corrected_estimate(hll_estimate(regs, p).first())
+            for regs in (reg_a, reg_b, hll_merge([reg_a, reg_b]))
+        )
     )
-    return {
-        "est_a": ea,
-        "est_b": eb,
-        "est_union": eu,
-        "intersection_estimate": max(0.0, ea + eb - eu),
-    }
 
 
 def hll_intersect_estimate_grouped(
@@ -756,46 +760,19 @@ def hll_intersect_estimate_grouped(
     ONE side only reads exactly 0 (est_a + 0 − est_a), and A∩A reads
     est(A_g) bit-identically. Returns {g: {est_a, est_b, est_union,
     intersection_estimate}}."""
-    ea = {
-        r.g: hll_corrected_estimate(r)
-        for r in hll_estimate_grouped(reg_a, "g", p).collect()
-    }
-    eb = {
-        r.g: hll_corrected_estimate(r)
-        for r in hll_estimate_grouped(reg_b, "g", p).collect()
-    }
-    eu = {
-        r.g: hll_corrected_estimate(r)
-        for r in hll_estimate_grouped(
-            hll_merge_grouped([reg_a, reg_b]), "g", p
-        ).collect()
-    }
+    ea, eb, eu = (
+        {r.g: hll_corrected_estimate(r) for r in hll_estimate_grouped(regs, "g", p).collect()}
+        for regs in (reg_a, reg_b, hll_merge_grouped([reg_a, reg_b]))
+    )
     return {
-        g: {
-            "est_a": ea.get(g, 0.0),
-            "est_b": eb.get(g, 0.0),
-            "est_union": u,
-            "intersection_estimate": max(
-                0.0, ea.get(g, 0.0) + eb.get(g, 0.0) - u
-            ),
-        }
+        g: _inclusion_exclusion(ea.get(g, 0.0), eb.get(g, 0.0), u)
         for g, u in eu.items()
     }
 
 
-def _hll_constant(p: int) -> float:
-    """alpha_m * m^2 * 2^(w+1) — the raw-estimate numerator, computed
-    driver-side ONCE so both engines divide the SAME double literal by
-    the integer harmonic sum (one exactly-rounded IEEE division ⇒
-    bit-identical estimates)."""
-    m = 1 << p
-    w = 60 - p
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    return alpha * m * m * float(1 << (w + 1))
-
-
 def hll_estimate(registers: DataFrame, p: int = HLL_P) -> DataFrame:
-    """One-row HLL readout: (m, zero_registers, s_scaled, raw_estimate).
+    """One-row HLL readout: (m, zero_registers, s_scaled, raw_estimate,
+    use_linear_counting).
 
     The harmonic sum Σ 2^(-r_j) is kept EXACT as the scaled BIGINT
     S = Σ 2^(w+1-r_j) (absent registers contribute 2^(w+1) each;
@@ -808,31 +785,7 @@ def hll_estimate(registers: DataFrame, p: int = HLL_P) -> DataFrame:
     NOT bit-portable — serving layers apply it from the emitted
     (m, zero_registers) pair, exactly the reason those sufficient
     statistics ride the output row."""
-    m = 1 << p
-    w = 60 - p
-    agg = registers.agg(
-        F.count(F.lit(1)).alias("__n_present"),
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {w + 1} - r)")).alias(
-            "__s_present"
-        ),
-    )
-    zeros = F.lit(m) - F.col("__n_present")
-    s = F.coalesce(F.col("__s_present"), F.lit(0)) + zeros * F.lit(
-        1 << (w + 1)
-    )
-    raw = F.lit(_hll_constant(p)) / s.cast("double")
-    return agg.select(
-        F.lit(m).cast("bigint").alias("m"),
-        zeros.cast("bigint").alias("zero_registers"),
-        s.cast("bigint").alias("s_scaled"),
-        raw.alias("raw_estimate"),
-        # the standard regime test (Flajolet: linear counting when
-        # E_raw <= 5m/2 and zero registers exist) — a double-vs-literal
-        # comparison, engine-exact; the correction itself is
-        # m·ln(m/zero_registers), applied serving-side from the emitted
-        # statistics because ln is not bit-portable
-        ((raw <= F.lit(2.5 * m)) & (zeros > 0)).alias("use_linear_counting"),
-    )
+    return _hll_readout(registers, p)
 
 
 def hll_distinct(df: DataFrame, c: Column | str, p: int = HLL_P) -> DataFrame:
@@ -849,24 +802,12 @@ def hll_registers_grouped(
     state, the per-dimension dashboard shape; same single
     map-combined hash-agg, no sort, no hot-group hazard (a group
     receiving ~all keys still occupies ≤ 2^p registers)."""
-    col = F.col(c) if isinstance(c, str) else c
-    bucket, r, _ = _hll_bucket_r(_hll_hash(col), p)
-    return (
-        df.filter(col.isNotNull() & F.col(group_col).isNotNull())
-        .select(
-            F.col(group_col).alias("g"), bucket.alias("bucket"), r.alias("r")
-        )
-        .groupBy("g", "bucket")
-        .agg(F.max("r").alias("r"))
-    )
+    return _hll_registers(df, c, p, group_col)
 
 
 def hll_merge_grouped(sketches: list[DataFrame]) -> DataFrame:
     """Register-wise max within each group — the grouped union law."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("g", "bucket").agg(F.max("r").alias("r"))
+    return _hll_max(reduce(DataFrame.unionByName, sketches), "g")
 
 
 def hll_estimate_grouped(
@@ -875,43 +816,73 @@ def hll_estimate_grouped(
     p: int = HLL_P,
     in_col: str = "g",
 ) -> DataFrame:
-    """Per-group HLL readout. ``in_col`` names the register relation's
-    group column (default 'g', the hll_registers_grouped contract —
-    same loud-failure rule as kmv_estimate_grouped)."""
-    missing = [c for c in (in_col, "bucket", "r") if c not in registers.columns]
-    if missing:
-        raise ValueError(
-            f"hll_estimate_grouped expects a grouped register relation "
-            f"with columns ({in_col!r}, 'bucket', 'r'); missing "
-            f"{missing} in {registers.columns}"
-        )
-    m = 1 << p
-    w = 60 - p
-    agg = registers.groupBy(F.col(in_col).alias("__g")).agg(
-        F.count(F.lit(1)).alias("__n_present"),
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {w + 1} - r)")).alias(
-            "__s_present"
-        ),
-    )
-    zeros = F.lit(m) - F.col("__n_present")
-    s = F.col("__s_present") + zeros * F.lit(1 << (w + 1))
-    raw = F.lit(_hll_constant(p)) / s.cast("double")
-    return agg.select(
-        F.col("__g").alias(group_col),
-        F.lit(m).cast("bigint").alias("m"),
-        zeros.cast("bigint").alias("zero_registers"),
-        s.cast("bigint").alias("s_scaled"),
-        raw.alias("raw_estimate"),
-        ((raw <= F.lit(2.5 * m)) & (zeros > 0)).alias("use_linear_counting"),
+    """Per-group HLL readout: the hll_estimate row per group, led by the
+    group column. ``in_col`` names the register relation's group column
+    (default 'g', the hll_registers_grouped contract — same loud-failure
+    rule as kmv_estimate_grouped)."""
+    _require(registers, "hll_estimate_grouped", "register", (in_col, "bucket", "r"))
+    return _hll_readout(registers, p, group_col, in_col)
+
+
+# ---------------------------------------------------------------------------
+# The KMV θ set algebra
+# ---------------------------------------------------------------------------
+
+
+def _side_stats(mins: DataFrame, side: str, *keys: str) -> DataFrame:
+    """(__n_<side>, __kth_<side>) of a mins relation per group."""
+    return mins.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias(f"__n_{side}"), F.max("hv").alias(f"__kth_{side}")
     )
 
 
-def kmv_intersect(
-    mins_a: DataFrame,
-    mins_b: DataFrame,
-    k: int = 64,
-    hash_bits: int = 60,
+def _theta(k: int, n_a: Column, n_b: Column) -> Column:
+    """θ = min over the sides' thresholds: a saturated side (n ≥ k) is
+    a complete census below its kth min, an unsaturated one everywhere
+    (θ = the hash space)."""
+    def side(n: Column, s: str) -> Column:
+        return F.when(n >= k, F.col(f"__kth_{s}")).otherwise(F.lit(_SPACE))
+
+    return F.least(side(n_a, "a"), side(n_b, "b")).cast("bigint").alias("theta")
+
+
+def _flat_theta(mins_a: DataFrame, mins_b: DataFrame, k: int) -> DataFrame:
+    """The one-row θ relation of two flat mins relations."""
+    return _side_stats(mins_a, "a").crossJoin(_side_stats(mins_b, "b")).select(
+        _theta(k, F.col("__n_a"), F.col("__n_b"))
+    )
+
+
+def _scaled(n: str) -> Column:
+    """Inclusion scaling of a below-θ census count: n · 2^60 / θ, and
+    n itself when θ is the whole space."""
+    return F.when(
+        F.col("theta") >= F.lit(_SPACE), F.col(n).cast("double")
+    ).otherwise(
+        F.col(n).cast("double") * F.lit(float(_SPACE)) / F.col("theta").cast("double")
+    )
+
+
+def _count_below(hv: DataFrame, stats: DataFrame, name: str) -> DataFrame:
+    """Hashes strictly below θ, counted."""
+    return hv.join(F.broadcast(stats), F.col("hv") < F.col("theta")).agg(
+        F.count(F.lit(1)).alias(name)
+    )
+
+
+def _flat_set_op(
+    mins_a: DataFrame, mins_b: DataFrame, k: int, how: str, n: str, est: str
 ) -> DataFrame:
+    """(n, theta, est): A's hashes joined to B's with ``how``, counted
+    strictly below θ and scaled by the inclusion fraction."""
+    stats = _flat_theta(mins_a, mins_b, k)
+    hv = mins_a.select("hv").join(mins_b.select("hv"), "hv", how)
+    return _count_below(hv, stats, n).crossJoin(stats).select(
+        F.col(n).cast("bigint").alias(n), "theta", _scaled(n).alias(est)
+    )
+
+
+def kmv_intersect(mins_a: DataFrame, mins_b: DataFrame, k: int = 64) -> DataFrame:
     """KMV set-INTERSECTION estimate — the Theta-sketch capability that
     completes the sketch set algebra beside kmv_union: distinct keys in
     BOTH of two segments (users who viewed AND clicked) from two O(k)
@@ -923,7 +894,7 @@ def kmv_intersect(
     common hashes STRICTLY below θ are the intersection's hashes in
     that range, and the estimate scales by the inclusion fraction
     θ/space: estimate = n_common·space/θ. The strict bound keeps the
-    family's (k-1)/kth convention (r16 advice): when θ is a saturated
+    family's (k-1)/kth convention: when θ is a saturated
     sketch's kth min, the kth value itself is the boundary and is
     EXCLUDED — so est(A∩A) on a saturated sketch reads (k-1)·space/kth,
     bit-identical to kmv_distinct(A), with no k/(k-1) upward bias.
@@ -936,51 +907,11 @@ def kmv_intersect(
     kmv_union arithmetic contract).
 
     Inputs are kmv_mins()/kmv_merge_mins() relations built with the
-    SAME k and hash family (the module's shared 60-bit md5). Output:
-    one row (n_common, theta, intersection_estimate)."""
-    space = 1 << hash_bits
-    sat_a = F.when(
-        F.col("__n_a") >= k, F.col("__kth_a")
-    ).otherwise(F.lit(space))
-    sat_b = F.when(
-        F.col("__n_b") >= k, F.col("__kth_b")
-    ).otherwise(F.lit(space))
-    stats = (
-        mins_a.agg(
-            F.count(F.lit(1)).alias("__n_a"), F.max("hv").alias("__kth_a")
-        )
-        .crossJoin(
-            mins_b.agg(
-                F.count(F.lit(1)).alias("__n_b"), F.max("hv").alias("__kth_b")
-            )
-        )
-        .select(F.least(sat_a, sat_b).cast("bigint").alias("theta"))
-    )
-    common = mins_a.select("hv").join(mins_b.select("hv"), "hv")
-    c_agg = (
-        common.join(F.broadcast(stats), F.col("hv") < F.col("theta"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    est = F.when(
-        F.col("theta") >= F.lit(space), F.col("n_common").cast("double")
-    ).otherwise(
-        F.col("n_common").cast("double")
-        * F.lit(float(space))
-        / F.col("theta").cast("double")
-    )
-    return c_agg.crossJoin(stats).select(
-        F.col("n_common").cast("bigint").alias("n_common"),
-        "theta",
-        est.alias("intersection_estimate"),
-    )
+    SAME k. Output: one row (n_common, theta, intersection_estimate)."""
+    return _flat_set_op(mins_a, mins_b, k, "inner", "n_common", "intersection_estimate")
 
 
-def kmv_a_not_b(
-    mins_a: DataFrame,
-    mins_b: DataFrame,
-    k: int = 64,
-    hash_bits: int = 60,
-) -> DataFrame:
+def kmv_a_not_b(mins_a: DataFrame, mins_b: DataFrame, k: int = 64) -> DataFrame:
     """KMV set-DIFFERENCE estimate (a-not-b) — the third Theta-sketch
     set operation, completing the serving algebra beside kmv_union and
     kmv_intersect: distinct keys in A but NOT in B (users who viewed
@@ -1003,53 +934,12 @@ def kmv_a_not_b(
     contract.
 
     Inputs are kmv_mins()/kmv_merge_mins() relations built with the
-    SAME k and hash family (the module's shared 60-bit md5). Output:
-    one row (n_diff, theta, difference_estimate)."""
-    space = 1 << hash_bits
-    sat_a = F.when(
-        F.col("__n_a") >= k, F.col("__kth_a")
-    ).otherwise(F.lit(space))
-    sat_b = F.when(
-        F.col("__n_b") >= k, F.col("__kth_b")
-    ).otherwise(F.lit(space))
-    stats = (
-        mins_a.agg(
-            F.count(F.lit(1)).alias("__n_a"), F.max("hv").alias("__kth_a")
-        )
-        .crossJoin(
-            mins_b.agg(
-                F.count(F.lit(1)).alias("__n_b"), F.max("hv").alias("__kth_b")
-            )
-        )
-        .select(F.least(sat_a, sat_b).cast("bigint").alias("theta"))
-    )
-    only_a = mins_a.select("hv").join(
-        mins_b.select("hv"), "hv", "left_anti"
-    )
-    d_agg = (
-        only_a.join(F.broadcast(stats), F.col("hv") < F.col("theta"))
-        .agg(F.count(F.lit(1)).alias("n_diff"))
-    )
-    est = F.when(
-        F.col("theta") >= F.lit(space), F.col("n_diff").cast("double")
-    ).otherwise(
-        F.col("n_diff").cast("double")
-        * F.lit(float(space))
-        / F.col("theta").cast("double")
-    )
-    return d_agg.crossJoin(stats).select(
-        F.col("n_diff").cast("bigint").alias("n_diff"),
-        "theta",
-        est.alias("difference_estimate"),
-    )
+    SAME k. Output: one row (n_diff, theta, difference_estimate)."""
+    return _flat_set_op(mins_a, mins_b, k, "left_anti", "n_diff", "difference_estimate")
 
 
 def kmv_set_stats_grouped(
-    mins_a: DataFrame,
-    mins_b: DataFrame,
-    k: int = 64,
-    hash_bits: int = 60,
-    broadcast_stats: bool = True,
+    mins_a: DataFrame, mins_b: DataFrame, k: int = 64
 ) -> DataFrame:
     """Per-GROUP Theta-sketch set algebra — ONE O(groups × k) pass
     over two grouped `mins` relations (kmv_mins_grouped) serving ALL
@@ -1072,35 +962,24 @@ def kmv_set_stats_grouped(
     exact-below-k degeneration) holds group-wise.
 
     Scale shape: two O(groups) aggregates over O(groups × k) rows,
-    ONE full-outer (g, hv)-keyed join splitting the census, the stats
-    relation joined back per group — no raw-data scan, no per-group
-    window. ``broadcast_stats`` (default True) hints the O(groups)
-    stats side into a broadcast hash join, right for the bounded group
-    domains dashboards use (days, event types, sources); for an
-    UNBOUNDED group domain (per-user, per-document) pass False and let
-    Spark/AQE pick the join — the g-keyed shuffle is then the honest
-    cost and the broadcast would be the scale hazard. Inputs must
-    share k and the module's 60-bit md5 hash family. Output: one row
-    per group present in EITHER relation — (g, theta, n_common,
-    n_only_a, n_only_b, intersection_estimate, a_not_b_estimate,
-    b_not_a_estimate, jaccard_estimate)."""
-    space = 1 << hash_bits
-
-    def side_stats(mins, n_name, kth_name):
-        return mins.groupBy("g").agg(
-            F.count(F.lit(1)).alias(n_name), F.max("hv").alias(kth_name)
+    ONE full-outer (g, hv)-keyed join splitting the census, the
+    O(groups) stats relation broadcast back per group — no raw-data
+    scan, no per-group window. The broadcast suits the bounded group
+    domains dashboards use (days, event types, sources). Inputs must
+    share k. Output: one row per group present in EITHER relation —
+    (g, theta, n_common, n_only_a, n_only_b, intersection_estimate,
+    a_not_b_estimate, b_not_a_estimate, jaccard_estimate)."""
+    stats = (
+        _side_stats(mins_a, "a", "g")
+        .join(_side_stats(mins_b, "b", "g"), "g", "full_outer")
+        .select(
+            "g",
+            _theta(
+                k,
+                F.coalesce(F.col("__n_a"), F.lit(0)),
+                F.coalesce(F.col("__n_b"), F.lit(0)),
+            ),
         )
-
-    sa = side_stats(mins_a, "__n_a", "__kth_a")
-    sb = side_stats(mins_b, "__n_b", "__kth_b")
-    theta_a = F.when(
-        F.coalesce(F.col("__n_a"), F.lit(0)) >= k, F.col("__kth_a")
-    ).otherwise(F.lit(space))
-    theta_b = F.when(
-        F.coalesce(F.col("__n_b"), F.lit(0)) >= k, F.col("__kth_b")
-    ).otherwise(F.lit(space))
-    stats = sa.join(sb, "g", "full_outer").select(
-        "g", F.least(theta_a, theta_b).cast("bigint").alias("theta")
     )
 
     # ONE full-outer (g, hv) join + ONE aggregation splits the below-θ
@@ -1111,58 +990,36 @@ def kmv_set_stats_grouped(
     # not data).
     a_tag = mins_a.select("g", "hv", F.lit(True).alias("__in_a"))
     b_tag = mins_b.select("g", "hv", F.lit(True).alias("__in_b"))
-    stats_join = F.broadcast(stats) if broadcast_stats else stats
+    in_a, in_b = F.col("__in_a"), F.col("__in_b")
+
+    def n_where(cond: Column) -> Column:
+        return F.sum(F.when(cond, 1).otherwise(0))
+
     counted = (
         a_tag.join(b_tag, ["g", "hv"], "full_outer")
-        .join(stats_join, "g")
+        .join(F.broadcast(stats), "g")
         .filter(F.col("hv") < F.col("theta"))
         .groupBy("g")
         .agg(
-            F.sum(
-                F.when(
-                    F.col("__in_a").isNotNull() & F.col("__in_b").isNotNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_common"),
-            F.sum(
-                F.when(
-                    F.col("__in_a").isNotNull() & F.col("__in_b").isNull(), 1
-                ).otherwise(0)
-            ).alias("n_only_a"),
-            F.sum(
-                F.when(
-                    F.col("__in_b").isNotNull() & F.col("__in_a").isNull(), 1
-                ).otherwise(0)
-            ).alias("n_only_b"),
+            n_where(in_a.isNotNull() & in_b.isNotNull()).alias("n_common"),
+            n_where(in_a.isNotNull() & in_b.isNull()).alias("n_only_a"),
+            n_where(in_b.isNotNull() & in_a.isNull()).alias("n_only_b"),
         )
     )
+    counts = ("n_common", "n_only_a", "n_only_b")
     out = stats.join(counted, "g", "left").select(
         "g",
         "theta",
-        F.coalesce(F.col("n_common"), F.lit(0)).cast("bigint").alias("n_common"),
-        F.coalesce(F.col("n_only_a"), F.lit(0)).cast("bigint").alias("n_only_a"),
-        F.coalesce(F.col("n_only_b"), F.lit(0)).cast("bigint").alias("n_only_b"),
+        *[F.coalesce(F.col(n), F.lit(0)).cast("bigint").alias(n) for n in counts],
     )
-
-    def scaled(n_col):
-        return F.when(
-            F.col("theta") >= F.lit(space), F.col(n_col).cast("double")
-        ).otherwise(
-            F.col(n_col).cast("double")
-            * F.lit(float(space))
-            / F.col("theta").cast("double")
-        )
-
     n_union = F.col("n_common") + F.col("n_only_a") + F.col("n_only_b")
     return out.select(
         "g",
         "theta",
-        "n_common",
-        "n_only_a",
-        "n_only_b",
-        scaled("n_common").alias("intersection_estimate"),
-        scaled("n_only_a").alias("a_not_b_estimate"),
-        scaled("n_only_b").alias("b_not_a_estimate"),
+        *counts,
+        _scaled("n_common").alias("intersection_estimate"),
+        _scaled("n_only_a").alias("a_not_b_estimate"),
+        _scaled("n_only_b").alias("b_not_a_estimate"),
         F.when(
             n_union > 0,
             F.col("n_common").cast("double") / n_union.cast("double"),
@@ -1170,12 +1027,7 @@ def kmv_set_stats_grouped(
     )
 
 
-def kmv_jaccard(
-    mins_a: DataFrame,
-    mins_b: DataFrame,
-    k: int = 64,
-    hash_bits: int = 60,
-) -> DataFrame:
+def kmv_jaccard(mins_a: DataFrame, mins_b: DataFrame, k: int = 64) -> DataFrame:
     """KMV Jaccard-similarity estimate — the serving-side ratio the
     Theta-sketch algebra makes exact-by-construction: below
     θ = min(θ_a, θ_b) both sketches are complete censuses, so
@@ -1190,36 +1042,12 @@ def kmv_jaccard(
     not 0 — the caller decides). Output: one row (n_common, n_union,
     theta, jaccard_estimate); determinism is one exactly-rounded
     BIGINT/BIGINT double division."""
-    space = 1 << hash_bits
-    sat_a = F.when(
-        F.col("__n_a") >= k, F.col("__kth_a")
-    ).otherwise(F.lit(space))
-    sat_b = F.when(
-        F.col("__n_b") >= k, F.col("__kth_b")
-    ).otherwise(F.lit(space))
-    stats = (
-        mins_a.agg(
-            F.count(F.lit(1)).alias("__n_a"), F.max("hv").alias("__kth_a")
-        )
-        .crossJoin(
-            mins_b.agg(
-                F.count(F.lit(1)).alias("__n_b"), F.max("hv").alias("__kth_b")
-            )
-        )
-        .select(F.least(sat_a, sat_b).cast("bigint").alias("theta"))
-    )
+    stats = _flat_theta(mins_a, mins_b, k)
     union_hv = mins_a.select("hv").unionByName(mins_b.select("hv")).distinct()
     common_hv = mins_a.select("hv").join(mins_b.select("hv"), "hv")
-    u_agg = (
-        union_hv.join(F.broadcast(stats), F.col("hv") < F.col("theta"))
-        .agg(F.count(F.lit(1)).alias("n_union"))
-    )
-    c_agg = (
-        common_hv.join(F.broadcast(stats), F.col("hv") < F.col("theta"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     return (
-        c_agg.crossJoin(u_agg)
+        _count_below(common_hv, stats, "n_common")
+        .crossJoin(_count_below(union_hv, stats, "n_union"))
         .crossJoin(stats)
         .select(
             F.col("n_common").cast("bigint").alias("n_common"),

@@ -73,6 +73,11 @@ def trace_funds(
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
 
+    # Re-alias the edge columns so none keeps the qualifier of a view
+    # it passed through: a checkpoint matches attributes by qualifier,
+    # and a filter's inferred constraints carry none (a mart's bare
+    # pass-through column failed with "key not found").
+    edges = edges.select(*[F.col(c).alias(c) for c in _OUT_COLS])
     frontier = edges.filter(F.col("src") == F.lit(source)).select(
         F.lit(1).alias("hop"), *_OUT_COLS
     )

@@ -21,7 +21,11 @@ def fct_transaction_traces(int_transaction_flows: DataFrame) -> DataFrame:
     qualifier of the flows relation, while constraints inferred from
     the flows alias do not; Spark's ``localCheckpoint`` matches the two
     by qualifier and fails on a trace frontier filtered on ``tx_time``.
-    The alias makes ``tx_time`` an unqualified attribute of this model."""
+    The alias makes ``tx_time`` an unqualified attribute of this model.
+    ``trace_funds`` re-aliases its edge columns too, which is enough for
+    a mart made by ``selectExpr`` over the flows, but not for this one:
+    with a bare ``tx_time`` under the ``ROW_NUMBER`` window the trace
+    still fails at the checkpoint of its union of hops."""
     return int_transaction_flows.sparkSession.sql(
         """
         SELECT input_address AS source_address,

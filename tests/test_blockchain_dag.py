@@ -395,6 +395,31 @@ JOIN dim_blocks b ON tb.block_id = b.block_id
     assert (got["hop"] == 3).any()
 
 
+def test_trace_on_user_built_mart_matches_model_trace(dag, spark):
+    """A mart built by hand over the flows keeps ``tx_time`` as a bare
+    pass-through of a ``spark.sql`` relation: the trace must still
+    checkpoint its frontiers and return the model mart's rows."""
+    start, end = WINDOW
+    mart = spark.sql("SELECT * FROM {f}", f=dag["int_transaction_flows"]).selectExpr(
+        "input_address AS source_address",
+        "output_address AS destination_address",
+        "transaction_hash",
+        "block_id",
+        "tx_time",
+        "input_value_btc AS transferred_value_btc",
+    )
+
+    def trace(fct):
+        return analytics.trace_from_address(
+            fct, dag["dim_blocks"], "addr0000", start, end, max_hops=3, limit=None
+        ).toPandas()
+
+    got, want = trace(mart), trace(dag["fct_transaction_traces"])
+    r = compare_frames("trace3_user_mart", got, want, float_tol=FLOAT_TOL)
+    assert r.ok, r.mismatches[:5]
+    assert (got["hop"] == 3).any()
+
+
 def test_flow_fanout_survives_hot_transaction(spark, tmp_path):
     """Skew stress: one transaction with 150 inputs × 150 outputs
     (22,500-row fan-out from a single join key) — the J2 hazard AQE's

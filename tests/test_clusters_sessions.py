@@ -889,3 +889,51 @@ def test_hll_grouped_matches_flat_slices(spark):
     assert all(e.m == 1024 and e.s_scaled > 0 for e in est.values())
     with pytest.raises(ValueError, match="grouped register relation"):
         hll_estimate_grouped(grouped.withColumnRenamed("g", "seg_key"), "segment")
+
+
+def test_cms_grouped_matches_flat_slices(spark):
+    """Grouped count-min == per-group flat count-min: for every group,
+    the grouped probe of non-null keys reads what the flat probe reads
+    off a sketch of that group's slice (the NULL keys the flat build
+    counts and the grouped build drops address no probed cell); a
+    renamed sketch relation is read through in_col= and fails loud
+    without it."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from blockchair_etl_spark.operators.approx import (
+        cms_build,
+        cms_build_grouped,
+        cms_estimate,
+        cms_estimate_grouped,
+    )
+
+    rows = [(i % 3, None if i % 11 == 0 else (i * 7) % 41) for i in range(600)]
+    df = spark.createDataFrame(rows, "seg int, user_id bigint")
+    probes = spark.createDataFrame(
+        [(s, u) for s in (0, 1, 2) for u in range(-2, 45)], "seg int, user_id bigint"
+    )
+    sketch = cms_build_grouped(df, "seg", "user_id", width=16)
+
+    def grouped(sk, **kw):
+        est = cms_estimate_grouped(sk, probes, "seg", "user_id", width=16, **kw)
+        return {(r.seg, r.user_id): r.est_count for r in est.collect()}
+
+    got = grouped(sketch)
+    assert len(got) == 3 * 47
+    flat = [
+        cms_estimate(
+            cms_build(df.filter(F.col("seg") == seg), "user_id", width=16),
+            probes.filter(F.col("seg") == seg).select("user_id"),
+            "user_id",
+            width=16,
+        ).select(F.lit(seg).alias("seg"), "user_id", "est_count")
+        for seg in (0, 1, 2)
+    ]
+    want = reduce(DataFrame.unionByName, flat).collect()
+    assert got == {(r.seg, r.user_id): r.est_count for r in want}
+    renamed = sketch.withColumnRenamed("g", "seg_key")
+    assert grouped(renamed, in_col="seg_key") == got
+    with pytest.raises(ValueError, match="grouped sketch relation"):
+        grouped(renamed)
